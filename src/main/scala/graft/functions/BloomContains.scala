@@ -1,9 +1,10 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Bloom-membership probe against a BROADCAST filter — the
@@ -23,6 +24,8 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 case class BloomContains(child: Expression, bc: Broadcast[BloomFilter])
     extends UnaryExpression with CodegenFallback {
+  override def checkInputDataTypes(): TypeCheckResult =
+    org.apache.spark.sql.graft.GraftShim.checkInputTypes(children, Seq(LongType))
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = child.nullable
   override def prettyName: String = "bloom_contains"

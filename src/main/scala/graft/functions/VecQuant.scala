@@ -1,9 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.GraftShim
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType}
 
 /** Codegen'd scalar-quantization kernels over `array<double>` / `binary`
@@ -25,7 +27,6 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, 
   * oracles depend on it); the doc on each expression pins the edge cases.
   */
 object VecQuant {
-  import org.apache.spark.sql.graft.GraftShim
 
   /** max |xᵢ| with `greatest` fold semantics — exactly
     * `aggregate(v, lit(0.0), (a, x) => greatest(a, abs(x)))`:
@@ -111,6 +112,8 @@ object VecQuant {
 
 /** See [[VecQuant.maxAbs]]. */
 case class MaxAbsFold(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(children, Seq(ArrayType(DoubleType)))
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = child.nullable
   override def prettyName: String = "max_abs_fold"
@@ -157,6 +160,8 @@ case class MaxAbsFold(child: Expression) extends UnaryExpression {
 /** See [[VecQuant.sqPack]]. */
 case class SqPackBytes(left: Expression, right: Expression)
     extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(children, Seq(ArrayType(DoubleType), DoubleType))
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
   override def prettyName: String = "sq_pack_bytes"
@@ -294,6 +299,8 @@ case class SqQuantLongs(left: Expression, right: Expression)
 /** See [[VecQuant.byteDot]]. */
 case class ByteDot(left: Expression, right: Expression)
     extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(children, Seq(BinaryType, BinaryType))
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "byte_dot"
@@ -364,6 +371,8 @@ case class UnpackBytes(child: Expression) extends UnaryExpression {
 /** See [[VecQuant.sub]]. */
 case class VecSub(left: Expression, right: Expression)
     extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(children, Seq(ArrayType(DoubleType), ArrayType(DoubleType)))
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = true
   override def prettyName: String = "vec_sub"
@@ -416,6 +425,9 @@ case class SqReconstruct(first: Expression, second: Expression,
                          third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(children,
+      Seq(ArrayType(DoubleType), BinaryType, DoubleType))
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = true
   override def prettyName: String = "sq_reconstruct"

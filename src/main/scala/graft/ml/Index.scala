@@ -2,6 +2,7 @@ package graft.ml
 
 import graft.functions.{VecFold, VecQuant}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graft.GraftShim
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,20 +16,48 @@ import org.apache.spark.sql.functions._
   * template library (`trend/Wdt.scala` save/load) and binned intermediates
   * (`Tables.saveBinned`), extended to the vector-index surface.
   *
-  * On-disk layout (all parquet under `path/`):
-  *   - `centroids/` (cid, cv array<double>, cn): the deterministic seed
-  *     centroids — O(nCells·dim), broadcast at query time.
-  *   - `postings/`  (vec_id, v, norm) PARTITIONED BY cell: the assigned
-  *     corpus. Partitioning by cell is the scale decision — a query
-  *     batch probing P distinct cells reads exactly those P directories
-  *     (static partition pruning via the collected probe list; the probe
-  *     list is bounded by nq·nProbe, query-side cardinality, never
-  *     corpus-side).
-  *   - `pq_codes/`  (vec_id, sub, code) PARTITIONED BY cell: the
-  *     compressed twin — 8 int64 codes per vector instead of 64 doubles,
-  *     so the serving scan touches ~6% of the flat postings bytes and
-  *     never reads a raw vector at all.
-  *   - `codewords/` (sub, code, cw): the PQ codebook — nSub·nCode rows.
+  * On-disk layout (all parquet under `path/`). The coarse quantizer is
+  * shared: `centroids/` (cid, cv array<double>, cn) — O(nCells·dim),
+  * broadcast at query time — plus, for PQ, `codewords/` (sub, code, cw),
+  * nSub·nCode rows. Each data CODING (FAISS's index factory: coarse
+  * quantizer × coding × optional refine) is one directory PARTITIONED BY
+  * cell, whose rows carry `ins_seq` and the caller's `metaCols` next to
+  * the core columns, with its build configuration in a one-row marker:
+  *
+  * | coding              | data kind    | core (+ vec_id) | marker     | owns cells  |
+  * |---------------------|--------------|-----------------|------------|-------------|
+  * | flat (raw)          | `postings/`  | v, norm         | `ivf_meta` | if no codes |
+  * | SQ8 abs / residual  | `sq_codes/`  | qb, r           | `sq_meta`  | if no PQ    |
+  * | PQ seed/train/resid | `pq_codes/`  | sub, code       | `meta`     | always      |
+  * | MRL raw / int8      | `mrl_codes/` | vp, vpn / qb, r | `mrl_meta` | never       |
+  *
+  * Partitioning by cell is the scale decision: a query batch probing P
+  * distinct cells reads exactly those P directories (static partition
+  * pruning via the collected probe list, bounded by nq·nProbe —
+  * query-side cardinality, never corpus-side). The PQ twin stores 8
+  * int64 codes per vector instead of 64 doubles, so its serving scan
+  * never reads a raw vector; SQ stores 1 byte per dimension.
+  *
+  * Markers: `ivf_meta` (trained, train_iters, flat), `sq_meta` (the same
+  * plus residual), `meta` (residual, trained, n_sub, n_code, train_iters,
+  * flat), `mrl_meta` (prefix_dims, quantized). A COMBINED store (PQ
+  * and/or SQ codes plus the raw refine flavor, or MRL, which always
+  * carries raw) shares one set of centroids, so ONE marker owns their
+  * `trained` and assignment-mode `flat` fields (the "owns cells" column):
+  * `meta` if present, else `sq_meta`, else `ivf_meta`. Appends route by
+  * it ([[storedFlat]]); a rebuild re-trains from it and rewrites a
+  * combined store's `sq_meta` to match.
+  *
+  * Mutation and publication state beside the data:
+  *   - `tombstones/` (vec_id, del_seq) and `seq/` (the mutation counter
+  *     as marker-file names) — [[Tombstones]];
+  *   - `<kind>_v<n>/` — a later generation of any kind above (the flat
+  *     directory is v0), committed by its own `_SUCCESS` ([[compact]])
+  *     or by a store-level `commit_v<n>` file that flips every kind of a
+  *     [[rebuild]] at once;
+  *   - `_rebuild_stage/` — a rebuild's output before publication,
+  *     invisible to the generation listing;
+  *   - `_writer_lease` — the single-writer [[Lease]].
   *
   * Query-side coarse ranking is the exact FLAT scan over the stored
   * centroids: per query it costs O(nCells·dim), and at serving time
@@ -130,10 +159,27 @@ object Index {
     else committed.maxBy(_._1)._2.toString
   }
 
-  private def postingsPath(path: String) = s"$path/$PostingsKind"
-  private def pqCodesPath(path: String) = s"$path/$PqCodesKind"
+  /** The kinds with a committed generation at `path`, from ONE listing
+    * of the store root — what every store-wide operation dispatches on.
+    */
+  private def committedKinds(spark: SparkSession, path: String): Set[String] = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = fsOf(spark, root)
+    if (!fs.exists(root)) Set.empty
+    else {
+      val dirs = fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
+      AllKinds.filter(k => dirs.exists(p =>
+        versionOf(k, p.getName).isDefined && isCommitted(spark, p))).toSet
+    }
+  }
+
+  /** The kind a store-wide scan reads: the raw flavor if present, else
+    * the PQ codes, else the SQ codes (an MRL store always carries raw).
+    */
+  private def scanKind(kinds: Set[String]): Option[String] =
+    Seq(PostingsKind, PqCodesKind, SqCodesKind).find(kinds)
+
   private def metaPath(path: String) = s"$path/meta"
-  private def ivfMetaPath(path: String) = s"$path/ivf_meta"
 
   /** LIVE quantizer directories — every read resolves through the
     * generation machinery (a rebuilt store's quantizers live in
@@ -196,9 +242,6 @@ object Index {
           get("flat", false)(row.getBoolean))
     }
 
-  private def readBuildMeta(spark: SparkSession, dir: String): BuildMeta =
-    buildMetaOf(readMetaRow(spark, dir))
-
   /** The store's recorded assignment mode — flat (`forceFlat` build) or
     * two-level past [[Similarity.twoLevelMinCells]]. Appends and the
     * rebuild must route arriving vectors the way the build routed the
@@ -208,20 +251,15 @@ object Index {
     * fixture, SCALING.md). Marker ownership mirrors [[rebuild]]'s:
     * the PQ marker if present, else SQ, else IVF.
     */
-  private def storedFlat(spark: SparkSession, path: String): Boolean = {
-    def exists(dir: String) = {
-      val p = new org.apache.hadoop.fs.Path(dir)
+  private def storedFlat(spark: SparkSession, path: String,
+                         markers: Markers): Boolean = {
+    val owner = Seq("meta", "sq_meta").find { name =>
+      val p = new org.apache.hadoop.fs.Path(s"$path/$name")
       fsOf(spark, p).exists(p)
-    }
-    val markerDir =
-      if (exists(metaPath(path))) metaPath(path)
-      else if (exists(sqMetaPath(path))) sqMetaPath(path)
-      else ivfMetaPath(path)
+    }.getOrElse("ivf_meta")
     // ONE marker read serves both the legacy-column check and the meta
-    // row (reading it twice doubled the per-op marker cost on every
-    // append/rebuild path — the round-14 lifecycle regression's prime
-    // suspect)
-    val meta = readMetaRow(spark, markerDir)
+    // row, shared with the coding that reads the same marker
+    val meta = markers.row(owner)
     // LEGACY-STORE migration warning: markers written before the `flat`
     // column record nothing about the assignment mode, so this defaults
     // to two-level — which is only WRONG if the store was flat-built
@@ -242,13 +280,6 @@ object Index {
         "(recall collapse). Rebuild the store to stamp its mode.")
     buildMetaOf(meta).flat
   }
-
-  /** The `twoLevelMin` an append's frozen-centroid assignment must use
-    * so it routes exactly like the build did.
-    */
-  private def appendTwoLevelMin(spark: SparkSession, path: String): Int =
-    if (storedFlat(spark, path)) Int.MaxValue
-    else Similarity.twoLevelMinCells
 
   /** The non-metadata columns of each store flavor — everything else in a
     * stored schema is caller metadata persisted via `metaCols`.
@@ -298,42 +329,277 @@ object Index {
     stored
   }
 
-  /** The corpus assignment both index flavors persist: (vec_id, v, norm,
-    * cell) from the shared coarse-quantizer pass ([[Similarity.ivfAssign]]
-    * semantics: two-level past the activation threshold unless
-    * `forceFlat`).
+  /** The assignment every coding derives its rows from: (vec_id, v, norm,
+    * cell) from the shared coarse pass ([[Similarity.ivfAssign]]
+    * semantics: two-level past `twoLevelMin` cells), against the STORED
+    * centroids `seeds` (a trained build, every append) or else the
+    * `cells` smallest-id vectors. `cells` is already resolved — counting
+    * here again doubled the build's full-corpus scans.
     */
-  /** `cells` is the RESOLVED cell count — every caller already computed
-    * `autoCells(emb.count(), …)` to write its markers, and re-counting
-    * here doubled the build's full-corpus scans (profiled: two `count`
-    * jobs per save*).
-    */
-  private def assigned(emb: DataFrame, cells: Int, forceFlat: Boolean,
-                       superProbe: Int): DataFrame = {
-    val e = Similarity.normed(emb)
-    Similarity.withCellRanks(e, cells, 1,
-      twoLevelMin = if (forceFlat) Int.MaxValue else Similarity.twoLevelMinCells,
-      superProbe = superProbe)
+  private def assigned(emb: DataFrame, cells: Int, twoLevelMin: Int,
+                       superProbe: Int,
+                       seeds: Array[(Long, Array[Double], Double)] = null)
+      : DataFrame =
+    Similarity.withCellRanks(Similarity.normed(emb), cells, 1,
+      twoLevelMin = twoLevelMin, superProbe = superProbe, seedArr = seeds)
       .select(col("vec_id"), col("v"), col("norm"),
         element_at(col("cells"), 1).as("cell"))
+
+  /** A store's frozen quantizers, read lazily (a build reads them only
+    * after writing them) and at most once per call.
+    */
+  private final class Quantizers(spark: SparkSession, dir: String) {
+    lazy val cents: DataFrame = spark.read.parquet(centroidsDir(spark, dir))
+    lazy val codewords: DataFrame = spark.read.parquet(codewordsDir(spark, dir))
   }
 
-  /** Corpus assignment against the JUST-PERSISTED centroid table (the
-    * trained-build path: centroids are not corpus rows, so the
-    * assignment must rank against the stored table — the same
-    * `seedFrom` pass every append uses).
+  /** A store's marker tables as one call sees them: each read at most
+    * once ([[readMetaRow]]) however many codings consult it.
     */
-  private def assignedTo(emb: DataFrame, path: String, forceFlat: Boolean,
-                         superProbe: Int): DataFrame = {
-    val spark = emb.sparkSession
-    val cents = Similarity.collectCentroids(
-      spark.read.parquet(centroidsDir(spark, path)))
-    Similarity.withCellRanks(Similarity.normed(emb), cents.length, 1,
-      twoLevelMin = if (forceFlat) Int.MaxValue else Similarity.twoLevelMinCells,
-      superProbe = superProbe, seedArr = cents)
-      .select(col("vec_id"), col("v"), col("norm"),
-        element_at(col("cells"), 1).as("cell"))
+  private final class Markers(spark: SparkSession, val path: String) {
+    private val cache = scala.collection.mutable.Map[String,
+      Option[(Set[String], org.apache.spark.sql.Row)]]()
+    def row(name: String): Option[(Set[String], org.apache.spark.sql.Row)] =
+      cache.getOrElseUpdate(name, readMetaRow(spark, s"$path/$name"))
+    def config(name: String): BuildMeta = buildMetaOf(row(name))
   }
+
+  /** One data CODING of a dense store (the layout table above): the
+    * directory `kind` it writes, its `core` (non-metadata) columns, the
+    * `marker` recording its configuration, and `rows` — the (vec_id, v,
+    * norm, cell) assignment mapped to its stored rows (vec_id, cell,
+    * coded columns). Every build, append, upsert and staged rebuild
+    * writes each coding through [[build]] / [[appendTo]].
+    */
+  private sealed abstract class Coding(val kind: String, val core: Set[String],
+                                       val marker: String) {
+    def rows(a: DataFrame, q: Quantizers): DataFrame
+    /** Build only: train + persist the coding's own quantizer under
+      * `dir`, after the assignment and before any rows are derived.
+      */
+    def train(emb: DataFrame, a: DataFrame, q: Quantizers, dir: String): Unit = ()
+    /** Build only: derive the rows from the just-written raw postings
+      * (which already carry the metadata) instead of the assignment.
+      */
+    def fromPostings: Boolean = false
+  }
+
+  /** IVF-Flat: the assignment itself — raw vectors, the refine flavor. */
+  private case object Flat extends Coding(PostingsKind, postingsCore, "ivf_meta") {
+    def rows(a: DataFrame, q: Quantizers): DataFrame = a
+  }
+
+  /** SQ8 — per-vector int8 codes with [[sqRows]]' conventions (per-vector
+    * scales: no corpus-level quantizer to train), derived from the
+    * assignment, whose v/norm ARE `normed(emb)`'s columns. Absolute: `r`
+    * is the rescale factor of a rank-only integer-dot score. RESIDUAL
+    * (FAISS's by_residual): quantize x − c[cell], so the int8 step shrinks
+    * from max|x|/127 (corpus scale) to max|resid|/127 (CELL scale) — on
+    * any clustered corpus an order of magnitude finer for the same byte,
+    * and unlike residual PQ with NO trained codebook; `r` is the residual
+    * scale (reconstruction x̂ = c + qb·r/127).
+    */
+  private final case class Sq(residual: Boolean)
+      extends Coding(SqCodesKind, sqCodesCore, "sq_meta") {
+    def rows(a: DataFrame, q: Quantizers): DataFrame =
+      if (residual) int8Rows(residuals(a, q.cents), col("v"), col("scale"),
+        Seq(col("vec_id"), col("cell")))
+      else int8Rows(a, col("v"), rescale(col("norm")),
+        Seq(col("vec_id"), col("cell")))
+  }
+
+  /** PQ codes — seeded, trained or residual (`cfg`). At build the
+    * codebook is trained and persisted first: trained = pqTrain's
+    * dequantized Lloyd output, over residuals when residual coding is
+    * on, absolute vectors otherwise; seeded = the nCode smallest-id
+    * corpus vectors sliced per subspace, encoded with the oracle-pinned
+    * seed kernel. Otherwise (every append) the batch is encoded against
+    * the FROZEN stored codebook. Either way the encode input is the
+    * assignment's rows — no corpus re-scan, no re-attach join.
+    */
+  private final case class Pq(cfg: BuildMeta, atBuild: Boolean = false)
+      extends Coding(PqCodesKind, pqCodesCore, "meta") {
+    def rows(a: DataFrame, q: Quantizers): DataFrame =
+      if (atBuild && !cfg.trained) pqSeedCodesWithCell(a, cfg.nSub, cfg.nCode)
+      else encodeCells(a.sparkSession,
+        if (cfg.residual) residuals(a, q.cents) else a, q.codewords)
+    override def train(emb: DataFrame, a: DataFrame, q: Quantizers,
+                       dir: String): Unit = if (atBuild) {
+      val spark = emb.sparkSession
+      import spark.implicits._
+      val codebook =
+        if (cfg.residual) Similarity.pqTrainCodebook(
+          residuals(a, q.cents).withColumnRenamed("v", "embedding"),
+          cfg.nSub, cfg.nCode, cfg.trainIters)
+        else if (cfg.trained)
+          Similarity.pqTrainCodebook(emb, cfg.nSub, cfg.nCode, cfg.trainIters)
+        else {
+          val seeds: Array[(Long, Array[Double])] = Similarity.normed(emb)
+            .orderBy("vec_id").limit(cfg.nCode)
+            .select("vec_id", "v").collect()
+            .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+          val sub = (if (seeds.nonEmpty) seeds(0)._2.length else 0) / cfg.nSub
+          spark.createDataset(for {
+            m <- 0 until cfg.nSub
+            (cid, cv) <- seeds
+          } yield (m.toLong, cid, cv.slice(m * sub, (m + 1) * sub).toSeq))
+            .toDF("sub", "code", "cw")
+        }
+      codebook.write.mode("overwrite").parquet(codewordsPath(dir))
+    }
+  }
+
+  /** The matryoshka prefix flavor: the first `dims` dimensions of `v` —
+    * exactly the truncation [[Similarity.matryoshkaRecall]] evaluates —
+    * with their norm (raw), or int8-packed with [[sqRows]]' conventions
+    * over the prefix (`quantized`, the MRL × SQ8 tier). The build slices
+    * the just-written postings (one pruned re-read yields cell, prefix
+    * AND metadata), an append slices its assignment; the source's
+    * metadata columns ride through.
+    */
+  private final case class Mrl(dims: Int, quantized: Boolean) extends Coding(
+      MrlCodesKind, if (quantized) sqCodesCore else mrlCodesCore, "mrl_meta") {
+    override def fromPostings: Boolean = true
+    def rows(src: DataFrame, q: Quantizers): DataFrame = {
+      val keep = Seq(col("vec_id"), col("cell"))
+      val meta = src.columns.filterNot(postingsCore.contains).toSeq.map(col)
+      val p = src.withColumn("pv", slice(col("v"), 1, dims))
+        .withColumn("pn", sqrt(VecFold.dot(col("pv"), col("pv"))))
+      if (quantized) int8Rows(p, col("pv"), rescale(col("pn")), keep, meta)
+      else p.select(keep ++ Seq(col("pv").as("vp"), col("pn").as("vpn")) ++ meta: _*)
+    }
+  }
+
+  /** The coding a store's `kind` directory holds, configured from its
+    * marker.
+    */
+  private def codingOf(kind: String, m: Markers): Coding =
+    kind match {
+      case PostingsKind => Flat
+      case PqCodesKind => Pq(m.config("meta"))
+      case SqCodesKind => Sq(m.config("sq_meta").residual)
+      case MrlCodesKind => mrlOf(m.row("mrl_meta"), m.path)
+    }
+
+  /** (vec_id, v − c[cell], cell): the residual codings' encode input. */
+  private def residuals(a: DataFrame, cents: DataFrame): DataFrame =
+    a.join(broadcast(cents.select(col("cid").as("cell"), col("cv"))), "cell")
+      .select(col("vec_id"), VecQuant.sub(col("v"), col("cv")).as("v"),
+        col("cell"))
+
+  /** Re-attach the metadata columns `meta` from `src` to coded rows. */
+  private def withMeta(rows: DataFrame, src: DataFrame,
+                       meta: Seq[String]): DataFrame =
+    if (meta.isEmpty) rows
+    else rows.join(src.select((col("vec_id") +: meta.map(col)): _*), "vec_id")
+
+  /** The ONE cell-partitioned write every coding goes through: stamp the
+    * call's mutation seq (`ins_seq`; 0 for a fresh build), then
+    * repartition BY THE PARTITION COLUMN before writing: partitionBy
+    * alone emits one file per (task × cell) — 12,800 ~65 KB files for
+    * 400 cells at the 1000× corpus (measured), 2B files at 200k cells.
+    * Hash-clustering on cell makes it one file per cell per write; at a
+    * build that full-corpus shuffle is the right trade for a store read
+    * for weeks. (An over-large cell can still be split via
+    * spark.sql.files.maxRecordsPerFile.)
+    */
+  private def writeCells(rows: DataFrame, seq: Long, dir: String,
+                         mode: String): Unit =
+    rows.withColumn("ins_seq", lit(seq))
+      .repartition(col("cell"))
+      .write.mode(mode).partitionBy("cell")
+      .parquet(dir)
+
+  /** The BUILD half of the lifecycle — every save* and the staged
+    * rebuild: write the `markers`, the coarse centroids (kmeans when
+    * `trained`, else the deterministic smallest-id seeds), ONE
+    * assignment, each coding's own quantizer, then every coding's rows
+    * in `codings` order (metadata re-attached once per coding) through
+    * [[writeCells]]. A direct save over an existing store is an in-place
+    * rebuild: the written kinds' stale generations are retired, and a
+    * fresh build (`insSeq` 0) clears the mutation history.
+    */
+  private def build(emb: DataFrame, dir: String, nCells: Int,
+                    forceFlat: Boolean, superProbe: Int,
+                    metaCols: Seq[String], trained: Boolean,
+                    trainIters: Int, insSeq: Long, codings: Seq[Coding],
+                    markers: Seq[(String, DataFrame)]): Unit = {
+    val spark = emb.sparkSession
+    retireQuantizerGenerations(spark, dir)
+    val cells = Similarity.autoCells(emb.count(), nCells)
+    markers.foreach { case (name, m) =>
+      m.write.mode("overwrite").parquet(s"$dir/$name")
+    }
+    val cents =
+      if (trained) Similarity.kmeansCentroids(emb, cells, trainIters)
+      else Similarity.normed(emb)
+        .orderBy("vec_id").limit(cells)
+        .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
+    cents.write.mode("overwrite").parquet(centroidsPath(dir))
+    val q = new Quantizers(spark, dir)
+    val twoLevelMin = if (forceFlat) Int.MaxValue else Similarity.twoLevelMinCells
+    val a =
+      if (trained) {
+        val stored = Similarity.collectCentroids(q.cents)
+        assigned(emb, stored.length, twoLevelMin, superProbe, stored)
+      } else assigned(emb, cells, twoLevelMin, superProbe)
+    codings.foreach(_.train(emb, a, q, dir))
+    if (insSeq == 0L) Tombstones.clear(spark, dir)
+    codings.foreach { c =>
+      val rows =
+        if (c.fromPostings)
+          c.rows(spark.read.parquet(liveDir(spark, dir, PostingsKind)), q)
+        else withMeta(c.rows(a, q), emb, metaCols)
+      retireGenerations(spark, dir, c.kind)
+      writeCells(rows, insSeq, s"$dir/${c.kind}", "overwrite")
+    }
+  }
+
+  /** The APPEND half — every appendIvf*, and every upsertIvf* after its
+    * tombstone ([[upsertTo]]). The batch is assigned against the FROZEN
+    * stored centroids, routed the way the build routed ([[storedFlat]]);
+    * every written coding derives its rows from that one assignment with
+    * its frozen quantizers and re-attaches the metadata the STORE was
+    * built with ([[appendMetaCols]] — a mismatch fails before anything is
+    * written); all share one mutation seq, stamped after an upsert's
+    * tombstone so the new rows outrank it. `kind` is the entry point's
+    * coding; a combined store's raw flavor rides along and is written
+    * FIRST ([[fencedAppend]]).
+    */
+  private def appendTo(spark: SparkSession, path: String, batch: DataFrame,
+                       superProbe: Int, metaCols: Seq[String], kind: String,
+                       op: String): Unit =
+    Lease.withLease(spark, path, op) {
+      val m = new Markers(spark, path)
+      val q = new Quantizers(spark, path)
+      val cents = Similarity.collectCentroids(q.cents)
+      val a = assigned(batch, cents.length,
+        if (storedFlat(spark, path, m)) Int.MaxValue
+        else Similarity.twoLevelMinCells, superProbe, cents)
+      val kinds =
+        if (kind == PostingsKind) Seq(kind)
+        else if (committedKinds(spark, path)(PostingsKind)) Seq(PostingsKind, kind)
+        else Seq(kind)
+      val coded = kinds.map { k =>
+        val c = codingOf(k, m)
+        val meta = appendMetaCols(spark, liveDir(spark, path, k), c.core,
+          batch, metaCols)
+        k -> withMeta(c.rows(a, q), batch, meta)
+      }
+      val seq = Tombstones.nextSeq(spark, path)
+      coded.foreach { case (k, rows) =>
+        fencedAppend(spark, path, k)(writeCells(rows, seq, _, "append"))
+      }
+    }
+
+  /** [[upsertIvf]]'s delete-then-add, for any entry point's coding. */
+  private def upsertTo(spark: SparkSession, path: String, batch: DataFrame,
+                       superProbe: Int, metaCols: Seq[String], kind: String,
+                       op: String): Unit =
+    Lease.withLease(spark, path, op) {
+      delete(spark, path, batch.select("vec_id"))
+      appendTo(spark, path, batch, superProbe, metaCols, kind, op)
+    }
 
   /** Build + persist an IVF-Flat index of `emb` under `path`.
     * `metaCols` names extra `emb` columns to carry INTO the postings
@@ -359,46 +625,12 @@ object Index {
               insSeq: Long = 0L): Unit =
     Lease.withLease(emb.sparkSession, path, "saveIvf") {
     import emb.sparkSession.implicits._
-    retireQuantizerGenerations(emb.sparkSession, path)
-    val cells = Similarity.autoCells(emb.count(), nCells)
     // the store self-describes its build configuration so [[rebuild]]
     // re-saves with the SAME coding instead of silently downgrading a
     // trained store to seeded centroids
-    Seq((trained, trainIters, forceFlat))
-      .toDF("trained", "train_iters", "flat")
-      .write.mode("overwrite").parquet(ivfMetaPath(path))
-    // trained = true swaps the deterministic smallest-id seed centroids
-    // for [[Similarity.kmeansCentroids]] — the build pays iters extra
-    // corpus scans (the Lloyd rounds) for cells that actually tile the
-    // distribution; every downstream shape (store layout, probe ranking,
-    // appends against frozen centroids) is unchanged
-    val cents =
-      if (trained) Similarity.kmeansCentroids(emb, cells, trainIters)
-      else Similarity.normed(emb)
-        .orderBy("vec_id").limit(cells)
-        .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
-    cents.write.mode("overwrite").parquet(centroidsPath(path))
-    // repartition BY THE PARTITION COLUMN before writing: partitionBy
-    // alone emits one file per (task × cell) — 12,800 ~65 KB files for
-    // 400 cells at the 1000× corpus (measured), 2B files at 200k cells.
-    // Hash-clustering on cell makes it one file per cell; a build is the
-    // one place a full-corpus shuffle is the right trade for a store
-    // that is read for weeks. (An over-large cell can still be split via
-    // spark.sql.files.maxRecordsPerFile.)
-    val post =
-      if (trained) assignedTo(emb, path, forceFlat, superProbe)
-      else assigned(emb, cells, forceFlat, superProbe)
-    val withMeta =
-      if (metaCols.isEmpty) post
-      else post.join(emb.select((Seq("vec_id") ++ metaCols).map(col): _*), "vec_id")
-    retireGenerations(emb.sparkSession, path, PostingsKind) // in-place rebuild
-    if (insSeq == 0L) // fresh build: no mutation history (a rebuild keeps it)
-      Tombstones.clear(emb.sparkSession, path)
-    withMeta
-      .withColumn("ins_seq", lit(insSeq)) // build rows: mutation seq 0
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(postingsPath(path))
+    build(emb, path, nCells, forceFlat, superProbe, metaCols, trained,
+      trainIters, insSeq, Seq(Flat), Seq(Flat.marker ->
+        Seq((trained, trainIters, forceFlat)).toDF("trained", "train_iters", "flat")))
   }
 
   /** Build + persist the compressed IVF-PQ twin: cell-partitioned PQ
@@ -441,123 +673,28 @@ object Index {
       "residual coding needs trained quantizers (the seeded residual " +
         "codebook is degenerate: smallest-id residuals under smallest-id " +
         "centroids are identically zero) — pass trained = true")
-    val spark = emb.sparkSession
-    import spark.implicits._
-    retireQuantizerGenerations(spark, path)
-    val cells = Similarity.autoCells(emb.count(), nCells)
-    val e = Similarity.normed(emb)
-    // trained = true upgrades BOTH quantizers: kmeans coarse centroids
-    // and pqTrain codebooks (per-subspace Lloyd) replace the smallest-id
-    // seeds — the build pays the training scans once, the serve path is
-    // byte-for-byte the same store contract. ann_ivfpq_trained_recall
-    // prices what the training buys.
-    val cents =
-      if (trained) Similarity.kmeansCentroids(emb, cells, trainIters)
-      else e.orderBy("vec_id").limit(cells)
-        .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
-    cents.write.mode("overwrite").parquet(centroidsPath(path))
-    // assignment BEFORE the codebook: residual training consumes it
-    val assignment =
-      if (trained) assignedTo(emb, path, forceFlat, superProbe)
-      else assigned(emb, cells, forceFlat, superProbe)
-    // the residual table (vec_id, embedding = v − c[cell], cell) —
-    // codebook training input AND encode input under residual coding
-    // (cell rides along so the encode needs no re-attach join; the
-    // trainer's explicit column selects ignore it)
-    def residDf: DataFrame = assignment
-      .join(broadcast(spark.read.parquet(centroidsDir(spark, path))
-        .select(col("cid").as("cell"), col("cv"))), "cell")
-      .select(col("vec_id"),
-        VecQuant.sub(col("v"), col("cv")).as("embedding"),
-        col("cell"))
-    // codebook (codes are encoded against it): trained = pqTrain's
-    // dequantized Lloyd output — over residuals when residual coding is
-    // on, absolute vectors otherwise; seeded = the nCode smallest-id
-    // corpus vectors sliced per subspace — the same seed codewords
-    // pqCodes assigns against
-    val codebook =
-      if (residual) Similarity.pqTrainCodebook(residDf, nSub, nCode, trainIters)
-      else if (trained) Similarity.pqTrainCodebook(emb, nSub, nCode, trainIters)
-      else {
-        val seedCents: Array[(Long, Array[Double])] = e
-          .orderBy("vec_id").limit(nCode)
-          .select("vec_id", "v").collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        val dim = if (seedCents.nonEmpty) seedCents(0)._2.length else 0
-        val sub = dim / nSub
-        val cwRows = for {
-          m <- 0 until nSub
-          (cid, cv) <- seedCents
-        } yield (m.toLong, cid, cv.slice(m * sub, (m + 1) * sub).toSeq)
-        spark.createDataset(cwRows).toDF("sub", "code", "cw")
-      }
-    codebook.write.mode("overwrite").parquet(codewordsPath(path))
-    // the store self-describes its coding AND build geometry so every
-    // serve/append resolves the coding from disk (a residual store served
-    // with absolute LUTs would be silently garbage) and [[rebuild]]
-    // re-saves with the store's own trained/residual/nSub/nCode instead
-    // of silently re-encoding at a different compression geometry
-    Seq((residual, trained, nSub, nCode, trainIters, forceFlat))
-      .toDF("residual", "trained", "n_sub", "n_code", "train_iters", "flat")
-      .write.mode("overwrite").parquet(metaPath(path))
-    // seeded builds keep the pqCodes kernel (oracle-pinned); trained
-    // builds encode against the stored codebook with the same kernel
-    // appends use. All three encode the ASSIGNMENT's rows (v already
-    // normed, cell already attached) — the old shape re-scanned the
-    // corpus per encode and joined the cell back on vec_id.
-    val codesDf =
-      if (residual) encodeCells(spark,
-        residDf.select(col("vec_id"), col("embedding").as("v"), col("cell")),
-        spark.read.parquet(codewordsDir(spark, path)))
-      else if (trained) encodeCells(spark, assignment,
-        spark.read.parquet(codewordsDir(spark, path)))
-      else pqSeedCodesWithCell(assignment, nSub, nCode)
-    val withMeta =
-      if (metaCols.isEmpty) codesDf
-      else codesDf.join(emb.select((Seq("vec_id") ++ metaCols).map(col): _*), "vec_id")
-    retireGenerations(spark, path, PqCodesKind) // in-place rebuild
-    if (insSeq == 0L) // fresh build: no mutation history (a rebuild keeps it)
-      Tombstones.clear(spark, path)
-    withMeta
-      .withColumn("ins_seq", lit(insSeq)) // build rows: mutation seq 0
-      .repartition(col("cell")) // one file per cell (see saveIvf)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(pqCodesPath(path))
-    if (withRaw) {
-      // the refine flavor: same assignment, raw vectors, same cell grid —
-      // written AFTER the codes so a crash mid-build leaves at worst a
-      // codes-only store (ivfPqTopKIndexed still serves; rerank fails
-      // loudly on the missing postings, never silently)
-      val rawMeta =
-        if (metaCols.isEmpty) assignment
-        else assignment.join(
-          emb.select((Seq("vec_id") ++ metaCols).map(col): _*), "vec_id")
-      retireGenerations(spark, path, PostingsKind)
-      rawMeta
-        .withColumn("ins_seq", lit(insSeq))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(postingsPath(path))
-    }
+    import emb.sparkSession.implicits._
+    // the marker lets every serve/append/rebuild resolve the coding from
+    // disk (a residual store served with absolute LUTs would be silently
+    // garbage). Raw AFTER the codes: a crash mid-build leaves at worst a
+    // codes-only store, on which rerank fails loudly, never silently
+    val pq = Pq(BuildMeta(residual, trained, nSub, nCode, trainIters, forceFlat),
+      atBuild = true)
+    build(emb, path, nCells, forceFlat, superProbe, metaCols, trained,
+      trainIters, insSeq, pq +: (if (withRaw) Seq(Flat) else Nil),
+      Seq(pq.marker -> Seq((residual, trained, nSub, nCode, trainIters, forceFlat))
+        .toDF("residual", "trained", "n_sub", "n_code", "train_iters", "flat")))
   }
 
-  /** PQ-encode `emb` against an EXPLICIT codeword table (sub, code, cw) —
+  /** PQ-encode a pre-assigned batch against a stored codebook, carrying
+    * the cell through: `src` is (vec_id, v, cell) — the assignment
+    * itself, whose `v` IS `normed(emb)`'s column — so the corpus is NOT
+    * re-read for the encode and no (vec_id → cell) re-attach join follows.
     * [[Similarity.pqCodes]]' rounding and tie semantics exactly
-    * (9-dp-rounded subspace L2, smaller code id wins ties). Shared by the
-    * frozen-codebook append path and the trained build (the codebook is
-    * the caller's choice; the encoding kernel is one). The codebook is
-    * grouped per subspace and sorted by code id driver-side
+    * (9-dp-rounded subspace L2, smaller code id wins ties): the codebook
+    * is grouped per subspace and sorted by code id driver-side
     * (constant-bounded: nSub·nCode rows) so the linear scan reproduces
-    * the first-smallest-id tie-break.
-    */
-  /** Encode a pre-assigned batch against a stored codebook, carrying the
-    * cell through: `src` is (vec_id, v, cell) — the assignment itself,
-    * whose `v` IS `normed(emb)`'s column — so the corpus is NOT re-read
-    * and re-normed for the encode, and no (vec_id → cell) re-attach join
-    * follows (it used to: encode over a fresh `normed(emb)` scan, then
-    * `.join(cellOf, "vec_id")` — one redundant full pass plus one
-    * batch-sized shuffle per PQ build/append). Output (vec_id, sub,
-    * code, cell), bit-identical to the old encode+join by construction.
+    * the first-smallest-id tie-break. Output (vec_id, sub, code, cell).
     */
   private def encodeCells(spark: SparkSession, src: DataFrame,
                           codewords: DataFrame): DataFrame = {
@@ -567,42 +704,37 @@ object Index {
         .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toArray))
         .groupBy(_._1)
         .map { case (m, rows) => m -> rows.map(r => (r._2, r._3)).sortBy(_._1) }
-    val nSub = bySub.size
     val bc = spark.sparkContext.broadcast(bySub)
-    // native expression, not a udf: same kernel, primitive vector input
-    // instead of a boxed Seq[Double] per row (graft.functions.PqKernels)
-    val codes = org.apache.spark.sql.graft.GraftShim.column(
-      graft.functions.PqEncode(
-        org.apache.spark.sql.graft.GraftShim.expression(col("v")), bc, nSub))
-    src
-      .select(col("vec_id"), posexplode(codes).as(Seq("sub", "code")), col("cell"))
-      .select(col("vec_id"), col("sub").cast("long").as("sub"), col("code"),
-        col("cell"))
+    codesOf(src, GraftShim.column(graft.functions.PqEncode(
+      GraftShim.expression(col("v")), bc, bySub.size)))
   }
 
   /** The seeded-codebook twin of [[encodeCells]]: codebook m = subvector
     * m of the `k` smallest-id vectors of the assignment (the
     * [[Similarity.pqCodes]] convention — `src.v` is `normed(emb).v`, so
     * the seeds are the same rows pqCodes would collect), assignment via
-    * the same 9-dp/ties kernel. Replaces `pqCodes(emb,...).join(cellOf)`
-    * in the seeded build — one corpus scan and the re-attach join gone.
+    * the same 9-dp/ties kernel.
     */
   private def pqSeedCodesWithCell(src: DataFrame, nSub: Int,
                                   k: Int): DataFrame = {
-    val spark = src.sparkSession
     val cents: Array[(Long, Array[Double])] = src
       .orderBy("vec_id").limit(k)
       .select("vec_id", "v").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val bc = spark.sparkContext.broadcast(cents)
-    val codes = org.apache.spark.sql.graft.GraftShim.column(
-      graft.functions.PqSeedCodes(
-        org.apache.spark.sql.graft.GraftShim.expression(col("v")), bc, nSub))
+    val bc = src.sparkSession.sparkContext.broadcast(cents)
+    codesOf(src, GraftShim.column(graft.functions.PqSeedCodes(
+      GraftShim.expression(col("v")), bc, nSub)))
+  }
+
+  /** One (vec_id, sub, code, cell) row per subspace of `codes`, a native
+    * encode expression over `src.v` (not a udf: primitive vector input,
+    * no boxed Seq[Double] per row — graft.functions.PqKernels).
+    */
+  private def codesOf(src: DataFrame, codes: Column): DataFrame =
     src
       .select(col("vec_id"), posexplode(codes).as(Seq("sub", "code")), col("cell"))
       .select(col("vec_id"), col("sub").cast("long").as("sub"), col("code"),
         col("cell"))
-  }
 
   /** (query_id, cell) probe pairs + the normalized query table: the
     * query-side coarse ranking, exact flat scan over the stored
@@ -697,33 +829,7 @@ object Index {
   def appendIvf(spark: SparkSession, path: String, newEmb: DataFrame,
                 superProbe: Int = Similarity.defaultSuperProbe,
                 metaCols: Seq[String] = Nil): Unit =
-    Lease.withLease(spark, path, "appendIvf") {
-    val cents = Similarity.collectCentroids(
-      spark.read.parquet(centroidsDir(spark, path)))
-    val post = Similarity.withCellRanks(Similarity.normed(newEmb),
-      cents.length, 1,
-      twoLevelMin = appendTwoLevelMin(spark, path),
-      superProbe = superProbe, seedArr = cents)
-      .select(col("vec_id"), col("v"), col("norm"),
-        element_at(col("cells"), 1).as("cell"))
-    // the store's schema decides the metadata set — a caller-side
-    // mismatch fails loudly instead of writing silently-unfilterable rows
-    val live = liveDir(spark, path, PostingsKind)
-    val meta = appendMetaCols(spark, live, postingsCore, newEmb, metaCols)
-    val withMeta =
-      if (meta.isEmpty) post
-      else post.join(newEmb.select((Seq("vec_id") ++ meta).map(col): _*), "vec_id")
-    // stamped AFTER any tombstone the caller just wrote ([[upsertIvf]]):
-    // the appended rows outrank it and serve; older rows stay masked
-    val seqNo = Tombstones.nextSeq(spark, path)
-    fencedAppend(spark, path, PostingsKind) { dir =>
-      withMeta
-        .withColumn("ins_seq", lit(seqNo))
-        .repartition(col("cell")) // one appended file per touched cell
-        .write.mode("append").partitionBy("cell")
-        .parquet(dir)
-    }
-  }
+    appendTo(spark, path, newEmb, superProbe, metaCols, PostingsKind, "appendIvf")
 
   /** Refresh a stored IVF-PQ index without a rebuild — the compressed
     * twin of [[appendIvf]], and the one that matters at corpus scale
@@ -740,65 +846,7 @@ object Index {
   def appendIvfPq(spark: SparkSession, path: String, newEmb: DataFrame,
                   superProbe: Int = Similarity.defaultSuperProbe,
                   metaCols: Seq[String] = Nil): Unit =
-    Lease.withLease(spark, path, "appendIvfPq") {
-    val centsDf = spark.read.parquet(centroidsDir(spark, path))
-    val cents = Similarity.collectCentroids(centsDf)
-    val assignment = Similarity.withCellRanks(Similarity.normed(newEmb),
-      cents.length, 1,
-      twoLevelMin = appendTwoLevelMin(spark, path),
-      superProbe = superProbe, seedArr = cents)
-      .select(col("vec_id"), col("v"), col("norm"),
-        element_at(col("cells"), 1).as("cell"))
-    // residual store: the batch is encoded as residuals against its
-    // assigned FROZEN centroid, exactly like the build. Either way the
-    // encode input is the ASSIGNMENT's rows (v already normed, cell
-    // already attached) — no batch re-scan, no re-attach join.
-    val encodeInput =
-      if (isResidual(spark, path)) assignment
-        .join(broadcast(centsDf.select(col("cid").as("cell"), col("cv"))), "cell")
-        .select(col("vec_id"),
-          VecQuant.sub(col("v"), col("cv")).as("v"),
-          col("cell"))
-      else assignment
-    val codesDf = encodeCells(spark, encodeInput,
-      spark.read.parquet(codewordsDir(spark, path)))
-    // the store's schema decides the metadata set — a caller-side
-    // mismatch fails loudly instead of writing silently-unfilterable rows
-    val live = liveDir(spark, path, PqCodesKind)
-    val meta = appendMetaCols(spark, live, pqCodesCore, newEmb, metaCols)
-    val withMeta =
-      if (meta.isEmpty) codesDf
-      else codesDf.join(newEmb.select((Seq("vec_id") ++ meta).map(col): _*), "vec_id")
-    // one seq for the batch, shared by both flavors (same mutation)
-    val seqNo = Tombstones.nextSeq(spark, path)
-    fencedAppend(spark, path, PqCodesKind) { dir =>
-      withMeta
-        .withColumn("ins_seq", lit(seqNo))
-        .repartition(col("cell")) // one appended file per touched cell
-        .write.mode("append").partitionBy("cell")
-        .parquet(dir)
-    }
-    // a COMBINED store (saveIvfPq withRaw / saveIvf sharing the path)
-    // keeps its refine flavor in step: the same frozen-quantizer
-    // assignment appends the raw vectors too, so a rerank serve can
-    // refine appended candidates instead of silently dropping them at
-    // the refine join
-    if (generations(spark, path, PostingsKind).nonEmpty) {
-      val live = liveDir(spark, path, PostingsKind)
-      val rawMeta = appendMetaCols(spark, live, postingsCore, newEmb, metaCols)
-      val rawWithMeta =
-        if (rawMeta.isEmpty) assignment
-        else assignment.join(
-          newEmb.select((Seq("vec_id") ++ rawMeta).map(col): _*), "vec_id")
-      fencedAppend(spark, path, PostingsKind) { dir =>
-        rawWithMeta
-          .withColumn("ins_seq", lit(seqNo))
-          .repartition(col("cell"))
-          .write.mode("append").partitionBy("cell")
-          .parquet(dir)
-      }
-    }
-  }
+    appendTo(spark, path, newEmb, superProbe, metaCols, PqCodesKind, "appendIvfPq")
 
   /** Tombstone a batch of vector ids — O(batch), no partition rewrite.
     * Masked everywhere from the next serve's plan on: the ADC scan, the
@@ -825,10 +873,7 @@ object Index {
     */
   def deleteWhere(spark: SparkSession, path: String, pred: Column): Unit =
     Lease.withLease(spark, path, "deleteWhere") {
-    def has(kind: String) = generations(spark, path, kind)
-      .exists { case (_, p) => isCommitted(spark, p) }
-    val kind = Seq(PostingsKind, PqCodesKind, SqCodesKind)
-      .find(has).getOrElse(PostingsKind)
+    val kind = scanKind(committedKinds(spark, path)).getOrElse(PostingsKind)
     val ids = Tombstones.mask(
       spark.read.parquet(liveDir(spark, path, kind)),
       Tombstones.readAll(spark, path), "vec_id")
@@ -844,10 +889,7 @@ object Index {
   def upsertIvf(spark: SparkSession, path: String, batch: DataFrame,
                 superProbe: Int = Similarity.defaultSuperProbe,
                 metaCols: Seq[String] = Nil): Unit =
-    Lease.withLease(spark, path, "upsertIvf") {
-    delete(spark, path, batch.select("vec_id"))
-    appendIvf(spark, path, batch, superProbe, metaCols)
-  }
+    upsertTo(spark, path, batch, superProbe, metaCols, PostingsKind, "upsertIvf")
 
   /** The compressed twin of [[upsertIvf]] (combined stores keep the raw
     * flavor in step through [[appendIvfPq]]).
@@ -855,19 +897,13 @@ object Index {
   def upsertIvfPq(spark: SparkSession, path: String, batch: DataFrame,
                   superProbe: Int = Similarity.defaultSuperProbe,
                   metaCols: Seq[String] = Nil): Unit =
-    Lease.withLease(spark, path, "upsertIvfPq") {
-    delete(spark, path, batch.select("vec_id"))
-    appendIvfPq(spark, path, batch, superProbe, metaCols)
-  }
+    upsertTo(spark, path, batch, superProbe, metaCols, PqCodesKind, "upsertIvfPq")
 
   /** The scalar-quantized twin of [[upsertIvf]]. */
   def upsertIvfSq(spark: SparkSession, path: String, batch: DataFrame,
                   superProbe: Int = Similarity.defaultSuperProbe,
                   metaCols: Seq[String] = Nil): Unit =
-    Lease.withLease(spark, path, "upsertIvfSq") {
-    delete(spark, path, batch.select("vec_id"))
-    appendIvfSq(spark, path, batch, superProbe, metaCols)
-  }
+    upsertTo(spark, path, batch, superProbe, metaCols, SqCodesKind, "upsertIvfSq")
 
   /** The deletion-mass hook — [[stats]]' tombstone twin, the compaction
     * trigger deletes add: every masked row is anti-join work each serve
@@ -881,10 +917,7 @@ object Index {
     */
   def deleteStats(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    def has(kind: String) = generations(spark, path, kind)
-      .exists { case (_, p) => isCommitted(spark, p) }
-    val kind = Seq(PostingsKind, PqCodesKind, SqCodesKind)
-      .find(has).getOrElse(PostingsKind)
+    val kind = scanKind(committedKinds(spark, path)).getOrElse(PostingsKind)
     // version-level view: one (vec_id, ins_seq) per stored version (the
     // PQ flavor repeats it nSub times)
     val vecs = spark.read.parquet(liveDir(spark, path, kind))
@@ -920,7 +953,6 @@ object Index {
         round(col("n_masked").cast("double") / col("n_versions_stored"), 4))
   }
 
-  private def sqCodesPath(path: String) = s"$path/$SqCodesKind"
   private def sqMetaPath(path: String) = s"$path/sq_meta"
 
   /** Whether the store's SQ codes are residual-coded ([[saveIvfSq]]
@@ -945,53 +977,27 @@ object Index {
     * themselves, and only the coarse centroids freeze.
     */
   private def sqRows(emb: DataFrame): DataFrame =
-    Similarity.normed(emb)
-      .withColumn("scale", VecQuant.maxAbs(col("v")))
-      .withColumn("safe_scale",
-        when(col("scale") === 0d, lit(1.0)).otherwise(col("scale")))
-      .select(col("vec_id"),
-        VecQuant.sqPack(col("v"), col("safe_scale")).as("qb"),
-        round(when(col("norm") === 0d, lit(0.0))
-          .otherwise(col("scale") / col("norm")), 9).as("r"))
+    int8Rows(Similarity.normed(emb), col("v"), rescale(col("norm")),
+      Seq(col("vec_id")))
 
-  /** [[sqRows]] derived from an assignment that already carries
-    * (v, norm, cell) — exactly
-    * `assignment.select("vec_id","cell").join(sqRows(emb), "vec_id")`
-    * without re-scanning and re-norming the corpus and without the
-    * re-attach join (the assignment's v/norm ARE `normed(emb)`'s
-    * columns, one row per vec_id on both sides).
+  /** The int8 pack, the ONE site of the formula: per row, scale =
+    * max|x|, qb = floor(x·127/scale + 0.5) packed one byte per
+    * dimension (a zero vector packs against scale 1). Emits `keep`, qb,
+    * `r` (an expression over the `scale` column) and `tail`.
     */
-  private def sqRowsFromAssignment(assignment: DataFrame): DataFrame =
-    assignment
-      .withColumn("scale", VecQuant.maxAbs(col("v")))
+  private def int8Rows(df: DataFrame, x: Column, r: Column, keep: Seq[Column],
+                       tail: Seq[Column] = Nil): DataFrame =
+    df.withColumn("scale", VecQuant.maxAbs(x))
       .withColumn("safe_scale",
         when(col("scale") === 0d, lit(1.0)).otherwise(col("scale")))
-      .select(col("vec_id"), col("cell"),
-        VecQuant.sqPack(col("v"), col("safe_scale")).as("qb"),
-        round(when(col("norm") === 0d, lit(0.0))
-          .otherwise(col("scale") / col("norm")), 9).as("r"))
+      .select(keep ++ Seq(VecQuant.sqPack(x, col("safe_scale")).as("qb"),
+        r.as("r")) ++ tail: _*)
 
-  /** RESIDUAL SQ rows: quantize x − c[cell] per vector (FAISS's
-    * by_residual for the scalar quantizer). The int8 step shrinks from
-    * max|x|/127 (corpus scale) to max|resid|/127 (CELL scale) — on any
-    * clustered corpus an order of magnitude finer for the same byte —
-    * and unlike residual PQ it needs NO trained codebook: per-vector
-    * scales quantize whatever the residual distribution is. Stored
-    * `r` is the residual scale (reconstruction x̂ = c + qb·r/127);
-    * contrast the absolute rows, whose `r` is the rescale factor of a
-    * rank-only integer-dot score.
+  /** round(scale / norm, 9), 0 for a zero vector: the rescale factor of
+    * the absolute codings' rank-only integer-dot score.
     */
-  private def sqResidualRows(assignment: DataFrame,
-                             cents: DataFrame): DataFrame =
-    assignment
-      .join(broadcast(cents.select(col("cid").as("cell"), col("cv"))), "cell")
-      .withColumn("resid", VecQuant.sub(col("v"), col("cv")))
-      .withColumn("scale", VecQuant.maxAbs(col("resid")))
-      .withColumn("safe_scale",
-        when(col("scale") === 0d, lit(1.0)).otherwise(col("scale")))
-      .select(col("vec_id"), col("cell"),
-        VecQuant.sqPack(col("resid"), col("safe_scale")).as("qb"),
-        col("scale").as("r"))
+  private def rescale(norm: Column): Column =
+    round(when(norm === 0d, lit(0.0)).otherwise(col("scale") / norm), 9)
 
   /** Build + persist the SCALAR-QUANTIZED IVF store (cf. FAISS
     * IndexIVFScalarQuantizer, QT_8bit-style): cell-partitioned int8
@@ -1012,55 +1018,15 @@ object Index {
                 residual: Boolean = false,
                 insSeq: Long = 0L): Unit =
     Lease.withLease(emb.sparkSession, path, "saveIvfSq") {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    retireQuantizerGenerations(spark, path)
-    val cells = Similarity.autoCells(emb.count(), nCells)
-    val cents =
-      if (trained) Similarity.kmeansCentroids(emb, cells, trainIters)
-      else Similarity.normed(emb)
-        .orderBy("vec_id").limit(cells)
-        .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
-    cents.write.mode("overwrite").parquet(centroidsPath(path))
-    // the store self-describes its coding (a residual store served with
-    // the absolute integer-dot ranking would be silently garbage) and
-    // its centroid training, so [[rebuild]] preserves both
-    Seq((residual, trained, trainIters, forceFlat))
-      .toDF("residual", "trained", "train_iters", "flat")
-      .write.mode("overwrite").parquet(sqMetaPath(path))
-    val assignment =
-      if (trained) assignedTo(emb, path, forceFlat, superProbe)
-      else assigned(emb, cells, forceFlat, superProbe)
-    val rows =
-      if (residual)
-        sqResidualRows(assignment, spark.read.parquet(centroidsDir(spark, path)))
-      else sqRowsFromAssignment(assignment)
-    val withMeta =
-      if (metaCols.isEmpty) rows
-      else rows.join(emb.select((Seq("vec_id") ++ metaCols).map(col): _*), "vec_id")
-    retireGenerations(spark, path, SqCodesKind) // in-place rebuild
-    if (insSeq == 0L) // fresh build: no mutation history (a rebuild keeps it)
-      Tombstones.clear(spark, path)
-    withMeta
-      .withColumn("ins_seq", lit(insSeq))
-      .repartition(col("cell")) // one file per cell (see saveIvf)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(sqCodesPath(path))
-    if (withRaw) {
-      // the refine flavor for [[ivfSqRerankTopKIndexed]] — same
-      // assignment, raw vectors, same cell grid (the saveIvfPq withRaw
-      // contract: written after the codes, crash leaves codes-only)
-      val rawMeta =
-        if (metaCols.isEmpty) assignment
-        else assignment.join(
-          emb.select((Seq("vec_id") ++ metaCols).map(col): _*), "vec_id")
-      retireGenerations(spark, path, PostingsKind)
-      rawMeta
-        .withColumn("ins_seq", lit(insSeq))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(postingsPath(path))
-    }
+    import emb.sparkSession.implicits._
+    // the marker records the coding (a residual store ranked by the
+    // absolute integer dot would be silently garbage) and the centroid
+    // training; raw after the codes (the saveIvfPq withRaw contract)
+    val sq = Sq(residual)
+    build(emb, path, nCells, forceFlat, superProbe, metaCols, trained,
+      trainIters, insSeq, sq +: (if (withRaw) Seq(Flat) else Nil),
+      Seq(sq.marker -> Seq((residual, trained, trainIters, forceFlat))
+        .toDF("residual", "trained", "train_iters", "flat")))
   }
 
   /** Refresh the SQ store without a rebuild: coarse-assign the batch
@@ -1071,105 +1037,36 @@ object Index {
   def appendIvfSq(spark: SparkSession, path: String, newEmb: DataFrame,
                   superProbe: Int = Similarity.defaultSuperProbe,
                   metaCols: Seq[String] = Nil): Unit =
-    Lease.withLease(spark, path, "appendIvfSq") {
-    val cents = spark.read.parquet(centroidsDir(spark, path))
-    val centArr = Similarity.collectCentroids(cents)
-    val assignment = Similarity.withCellRanks(Similarity.normed(newEmb),
-      centArr.length, 1,
-      twoLevelMin = appendTwoLevelMin(spark, path),
-      superProbe = superProbe, seedArr = centArr)
-      .select(col("vec_id"), col("v"), col("norm"),
-        element_at(col("cells"), 1).as("cell"))
-    // a residual store encodes the batch's residuals against its
-    // assigned FROZEN centroid, exactly like the build
-    val rows =
-      if (isSqResidual(spark, path)) sqResidualRows(assignment, cents)
-      else sqRowsFromAssignment(assignment)
-    val live = liveDir(spark, path, SqCodesKind)
-    val meta = appendMetaCols(spark, live, sqCodesCore, newEmb, metaCols)
-    val withMeta =
-      if (meta.isEmpty) rows
-      else rows.join(newEmb.select((Seq("vec_id") ++ meta).map(col): _*), "vec_id")
-    val seqNo = Tombstones.nextSeq(spark, path)
-    fencedAppend(spark, path, SqCodesKind) { dir =>
-      withMeta
-        .withColumn("ins_seq", lit(seqNo))
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell")
-        .parquet(dir)
-    }
-    // a combined SQ+raw store keeps its refine flavor in step (the
-    // appendIvfPq contract)
-    if (generations(spark, path, PostingsKind).nonEmpty) {
-      val liveRaw = liveDir(spark, path, PostingsKind)
-      val rawMeta = appendMetaCols(spark, liveRaw, postingsCore, newEmb, metaCols)
-      val rawWithMeta =
-        if (rawMeta.isEmpty) assignment
-        else assignment.join(
-          newEmb.select((Seq("vec_id") ++ rawMeta).map(col): _*), "vec_id")
-      fencedAppend(spark, path, PostingsKind) { dir =>
-        rawWithMeta
-          .withColumn("ins_seq", lit(seqNo))
-          .repartition(col("cell"))
-          .write.mode("append").partitionBy("cell")
-          .parquet(dir)
-      }
-    }
-  }
+    appendTo(spark, path, newEmb, superProbe, metaCols, SqCodesKind, "appendIvfSq")
 
-  private def mrlCodesPath(path: String) = s"$path/$MrlCodesKind"
   private def mrlMetaPath(path: String) = s"$path/mrl_meta"
 
-  // The raw (unquantized) MRL prefix rows — vec_id, first-`dims` slice,
-  // prefix norm, exactly the truncation Similarity.matryoshkaRecall
-  // evaluates — are derived inline at each store site from rows that
-  // already carry `v` (the assignment or the just-written postings), so
-  // the corpus is never re-scanned for the slice.
-
-  /** The QUANTIZED prefix rows — the MRL × SQ8 combined tier: the
-    * first-`dims` slice int8-quantized per vector with [[sqRows]]'
-    * exact conventions (scale = max|x| over the PREFIX, q = floor(x·127
-    * / scale + 0.5) packed to bytes, r = round(scale / prefixNorm, 9),
-    * zero-vector conventions pinned). One byte per kept dimension
-    * instead of eight: the shortlist scan reads dims/(8·fullDims) of
-    * the raw postings bytes (~2% at 16-of-64) — the two compression
-    * axes (dimension cut × precision cut) compose, and the full-width
-    * exact refine is unchanged. Scoring follows the absolute-SQ
-    * convention: exact integer code dot times the stored rescale
-    * factor — a rank-only shortlist surrogate, which is all a
-    * rerank-refined serve needs.
+  /** A query batch's QUANTIZED prefix rows (vec_id, qb, r) — the query
+    * side of the MRL × SQ8 tier, packed exactly like the stored prefix
+    * flavor ([[Mrl]]). One byte per kept dimension instead of eight: the
+    * shortlist scan reads dims/(8·fullDims) of the raw postings bytes
+    * (~2% at 16-of-64), and the full-width exact refine is unchanged.
     */
   private def mrlSqRows(emb: DataFrame, dims: Int): DataFrame =
-    emb.select(col("vec_id"),
-      slice(col("embedding").cast("array<double>"), 1, dims).as("pv"))
-      .withColumn("pn", sqrt(VecFold.dot(col("pv"), col("pv"))))
-      .withColumn("scale", VecQuant.maxAbs(col("pv")))
-      .withColumn("safe_scale",
-        when(col("scale") === 0d, lit(1.0)).otherwise(col("scale")))
-      .select(col("vec_id"),
-        VecQuant.sqPack(col("pv"), col("safe_scale")).as("qb"),
-        round(when(col("pn") === 0d, lit(0.0))
-          .otherwise(col("scale") / col("pn")), 9).as("r"))
+    int8Rows(emb.select(col("vec_id"),
+        slice(col("embedding").cast("array<double>"), 1, dims).as("pv"))
+      .withColumn("pn", sqrt(VecFold.dot(col("pv"), col("pv")))),
+      col("pv"), rescale(col("pn")), Seq(col("vec_id")))
 
   /** The MRL store's recorded build shape: prefix width + whether the
-    * prefix flavor is int8-quantized. One marker read ([[readMetaRow]]).
+    * prefix flavor is int8-quantized, from its marker row ([[readMetaRow]]).
     * Stores written before the `quantized` column are raw-prefix.
     */
-  private case class MrlMeta(dims: Int, quantized: Boolean)
-
-  private def mrlMeta(spark: SparkSession, path: String): MrlMeta =
-    readMetaRow(spark, mrlMetaPath(path)) match {
+  private def mrlOf(meta: Option[(Set[String], org.apache.spark.sql.Row)],
+                    path: String): Mrl =
+    meta match {
       case None => throw new IllegalArgumentException(
         s"no MRL marker at ${mrlMetaPath(path)} — not an MRL store")
       case Some((cols, row)) =>
-        MrlMeta(row.getInt(row.fieldIndex("prefix_dims")),
+        Mrl(row.getInt(row.fieldIndex("prefix_dims")),
           cols.contains("quantized") &&
             row.getBoolean(row.fieldIndex("quantized")))
     }
-
-  /** The prefix flavor's non-metadata columns depend on the coding. */
-  private def mrlCoreOf(quantized: Boolean): Set[String] =
-    if (quantized) sqCodesCore else mrlCodesCore
 
   /** Build + persist the MATRYOSHKA serving tier: a cell-partitioned
     * PREFIX-DIMENSION flavor (`mrl_codes/`: vec_id, first-`prefixDims`
@@ -1205,50 +1102,15 @@ object Index {
                  insSeq: Long = 0L): Unit =
     Lease.withLease(emb.sparkSession, path, "saveIvfMrl") {
     require(prefixDims > 0, "prefixDims must be positive")
-    val spark = emb.sparkSession
-    import spark.implicits._
-    saveIvf(emb, path, nCells, forceFlat, superProbe, metaCols, trained,
-      trainIters, insSeq)
-    // the store self-describes its prefix width AND coding: serves and
-    // appends must slice exactly as the build did (a mismatched
-    // query-side slice would rank prefixes of different lengths; a
-    // quantized store scored as raw doubles would read garbage)
-    Seq((prefixDims, quantized)).toDF("prefix_dims", "quantized")
-      .write.mode("overwrite").parquet(mrlMetaPath(path))
-    // the prefix flavor derives ENTIRELY from the just-written postings:
-    // they carry (vec_id, v, cell, metaCols), so one pruned re-read
-    // yields cell, the prefix slice AND the metadata — no second
-    // assignment pass, no corpus re-scan for the slice, no re-attach
-    // joins (the previous shape joined a cellOf read against an
-    // emb-derived prefix table and then the metaCols). slice(v) here ==
-    // slice(embedding cast to array<double>) in mrl{Sq}Rows, bit-exact.
-    val post = spark.read.parquet(liveDir(spark, path, PostingsKind))
-    val vp = slice(col("v"), 1, prefixDims)
-    val withMeta =
-      if (quantized)
-        post
-          .withColumn("pv", vp)
-          .withColumn("pn", sqrt(VecFold.dot(col("pv"), col("pv"))))
-          .withColumn("scale", VecQuant.maxAbs(col("pv")))
-          .withColumn("safe_scale",
-            when(col("scale") === 0d, lit(1.0)).otherwise(col("scale")))
-          .select(Seq(col("vec_id"), col("cell"),
-            VecQuant.sqPack(col("pv"), col("safe_scale")).as("qb"),
-            round(when(col("pn") === 0d, lit(0.0))
-              .otherwise(col("scale") / col("pn")), 9).as("r")) ++
-            metaCols.map(col): _*)
-      else
-        post
-          .withColumn("vp", vp)
-          .select(Seq(col("vec_id"), col("cell"), col("vp"),
-            sqrt(VecFold.dot(col("vp"), col("vp"))).as("vpn")) ++
-            metaCols.map(col): _*)
-    retireGenerations(spark, path, MrlCodesKind) // in-place rebuild
-    withMeta
-      .withColumn("ins_seq", lit(insSeq))
-      .repartition(col("cell")) // one file per cell (see saveIvf)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(mrlCodesPath(path))
+    import emb.sparkSession.implicits._
+    // the prefix width AND coding are recorded: serves and appends must
+    // slice and score exactly as the build did
+    val mrl = Mrl(prefixDims, quantized)
+    build(emb, path, nCells, forceFlat, superProbe, metaCols, trained,
+      trainIters, insSeq, Seq(Flat, mrl), Seq(
+        Flat.marker -> Seq((trained, trainIters, forceFlat))
+          .toDF("trained", "train_iters", "flat"),
+        mrl.marker -> Seq((prefixDims, quantized)).toDF("prefix_dims", "quantized")))
   }
 
   /** Refresh the MRL store without a rebuild: the batch is assigned
@@ -1260,75 +1122,7 @@ object Index {
   def appendIvfMrl(spark: SparkSession, path: String, newEmb: DataFrame,
                    superProbe: Int = Similarity.defaultSuperProbe,
                    metaCols: Seq[String] = Nil): Unit =
-    Lease.withLease(spark, path, "appendIvfMrl") {
-    val cents = Similarity.collectCentroids(
-      spark.read.parquet(centroidsDir(spark, path)))
-    val assignment = Similarity.withCellRanks(Similarity.normed(newEmb),
-      cents.length, 1,
-      twoLevelMin = appendTwoLevelMin(spark, path),
-      superProbe = superProbe, seedArr = cents)
-      .select(col("vec_id"), col("v"), col("norm"),
-        element_at(col("cells"), 1).as("cell"))
-    val mm = mrlMeta(spark, path)
-    // prefix rows from the assignment itself (its v IS normed(newEmb)'s
-    // column, so slice(v) == mrl{Sq}Rows' slice of the embedding cast):
-    // no batch re-scan, no re-attach join
-    val vp = slice(col("v"), 1, mm.dims)
-    val rows =
-      if (mm.quantized)
-        assignment
-          .withColumn("pv", vp)
-          .withColumn("pn", sqrt(VecFold.dot(col("pv"), col("pv"))))
-          .withColumn("scale", VecQuant.maxAbs(col("pv")))
-          .withColumn("safe_scale",
-            when(col("scale") === 0d, lit(1.0)).otherwise(col("scale")))
-          .select(col("vec_id"), col("cell"),
-            VecQuant.sqPack(col("pv"), col("safe_scale")).as("qb"),
-            round(when(col("pn") === 0d, lit(0.0))
-              .otherwise(col("scale") / col("pn")), 9).as("r"))
-      else
-        assignment
-          .withColumn("vp", vp)
-          .select(col("vec_id"), col("cell"), col("vp"),
-            sqrt(VecFold.dot(col("vp"), col("vp"))).as("vpn"))
-    val live = liveDir(spark, path, MrlCodesKind)
-    val meta = appendMetaCols(spark, live, mrlCoreOf(mm.quantized),
-      newEmb, metaCols)
-    val withMeta =
-      if (meta.isEmpty) rows
-      else rows.join(newEmb.select((Seq("vec_id") ++ meta).map(col): _*),
-        "vec_id")
-    val seqNo = Tombstones.nextSeq(spark, path)
-    // the RAW refine flavor appends FIRST: the two flavors share one
-    // seq but land in two writes, and a crash (or fence abort) between
-    // them must leave the benign asymmetry — an id present in postings
-    // but missing from mrl_codes is merely never SHORTLISTED (and still
-    // serves through every raw-flavor path), whereas the reverse order
-    // leaves prefix rows whose refine join silently drops them from
-    // every MRL result (recall loss with no error). Recovery after a
-    // crash between the writes: re-run the append — or compare the two
-    // flavors' vec_id sets at this seq and re-append the difference.
-    val liveRaw = liveDir(spark, path, PostingsKind)
-    val rawMeta = appendMetaCols(spark, liveRaw, postingsCore, newEmb, metaCols)
-    val rawWithMeta =
-      if (rawMeta.isEmpty) assignment
-      else assignment.join(
-        newEmb.select((Seq("vec_id") ++ rawMeta).map(col): _*), "vec_id")
-    fencedAppend(spark, path, PostingsKind) { dir =>
-      rawWithMeta
-        .withColumn("ins_seq", lit(seqNo))
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell")
-        .parquet(dir)
-    }
-    fencedAppend(spark, path, MrlCodesKind) { dir =>
-      withMeta
-        .withColumn("ins_seq", lit(seqNo))
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell")
-        .parquet(dir)
-    }
-  }
+    appendTo(spark, path, newEmb, superProbe, metaCols, MrlCodesKind, "appendIvfMrl")
 
   /** The matryoshka upsert — [[upsertIvf]]'s delete-then-add ordering
     * over both MRL flavors.
@@ -1336,10 +1130,7 @@ object Index {
   def upsertIvfMrl(spark: SparkSession, path: String, batch: DataFrame,
                    superProbe: Int = Similarity.defaultSuperProbe,
                    metaCols: Seq[String] = Nil): Unit =
-    Lease.withLease(spark, path, "upsertIvfMrl") {
-    delete(spark, path, batch.select("vec_id"))
-    appendIvfMrl(spark, path, batch, superProbe, metaCols)
-  }
+    upsertTo(spark, path, batch, superProbe, metaCols, MrlCodesKind, "upsertIvfMrl")
 
   /** The MATRYOSHKA serve: prefix-cosine shortlist from the stored
     * `mrl_codes/` (probed-cell partitions only — the scan reads
@@ -1357,7 +1148,7 @@ object Index {
                               candWhere: Column = lit(true)): DataFrame = {
     val depth = Similarity.autoRerank(k, rerank)
     val (probes, q) = probeSet(spark, path, queries, nProbe)
-    val mm = mrlMeta(spark, path)
+    val mm = mrlOf(readMetaRow(spark, mrlMetaPath(path)), path)
     // tombstone mask BEFORE ranking (the ivfTopKIndexed contract)
     val codes = Tombstones.mask(
       prunedToProbes(spark, liveDir(spark, path, MrlCodesKind),
@@ -1480,30 +1271,30 @@ object Index {
   /** A DIRECT re-save on an existing store path is an in-place rebuild:
     * the flat quantizer dirs it writes must become live again, so every
     * versioned quantizer generation and every store-level `commit_v<n>`
-    * marker from previous [[rebuild]]s is dropped first (a stale
-    * commit marker could otherwise falsely commit a later compaction's
-    * crashed, uncommitted generation that happens to reuse the number).
+    * marker from previous [[rebuild]]s is dropped first.
     */
   private def retireQuantizerGenerations(spark: SparkSession,
                                          path: String): Unit = {
     retireGenerations(spark, path, CentroidsKind)
     retireGenerations(spark, path, CodewordsKind)
-    dropStoreCommits(spark, path)
+    dropStoreCommits(spark, path); ()
   }
 
-  /** Drop every store-level `commit_v<n>` marker — part of the in-place
-    * rebuild contract (a stale marker could falsely commit a later
-    * publish's crashed, uncommitted generation reusing the number).
+  /** Drop the store-level `commit_v<n>` markers whose version is not in
+    * `keep`: every one on an in-place rebuild (a stale marker could
+    * falsely commit a later publish's crashed, uncommitted generation
+    * reusing the number), the ones no surviving generation needs after a
+    * publish or [[vacuum]]. Returns the bytes removed.
     */
-  private[graft] def dropStoreCommits(spark: SparkSession,
-                                      path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
+  private[graft] def dropStoreCommits(spark: SparkSession, path: String,
+                                      keep: Set[String] = Set.empty): Long = {
+    val root = new org.apache.hadoop.fs.Path(path)
     val fs = fsOf(spark, root)
-    if (fs.exists(root))
-      fs.listStatus(root).toSeq
-        .filter(st => st.isFile && st.getPath.getName.startsWith("commit_v"))
-        .foreach { st => fs.delete(st.getPath, false); () }
+    if (!fs.exists(root)) 0L
+    else fs.listStatus(root).toSeq
+      .filter(st => st.isFile && st.getPath.getName.startsWith("commit_v") &&
+        !keep.contains(st.getPath.getName.stripPrefix("commit_v")))
+      .map { st => fs.delete(st.getPath, false); st.getLen }.sum
   }
 
   /** Append-vs-compaction fence. The refresh paths resolve the live
@@ -1520,10 +1311,16 @@ object Index {
     * in, so the safe recovery is: quiesce the compactor, check the live
     * generation for the batch's ids, re-append what is missing. On a
     * COMBINED store (PQ/SQ/MRL + raw) an append is two fenced writes
-    * sharing one seq — recovery must also check the SIBLING flavor for
-    * the batch's ids and re-sync the difference (the append orders the
-    * writes so a gap is at worst un-shortlisted, never silently dropped
-    * at a refine join — see [[appendIvfMrl]]).
+    * sharing one seq, and every coding appends in ONE order: the RAW
+    * refine flavor FIRST. A crash (or fence abort) between the writes
+    * then leaves the benign asymmetry — an id present in postings but
+    * missing from the codes flavor is merely never SHORTLISTED (and
+    * still serves through every raw-flavor path), whereas the reverse
+    * order leaves coded rows whose refine join silently drops them from
+    * every rerank result (recall loss with no error). Recovery must also
+    * check the SIBLING flavor for the batch's ids: re-run the append, or
+    * compare the two flavors' vec_id sets at this seq and re-append the
+    * difference.
     */
   private[graft] def fencedAppend(spark: SparkSession, path: String,
                                   kind: String)(write: String => Unit): Unit = {
@@ -1571,20 +1368,34 @@ object Index {
   private[graft] def verifyUnmoved(spark: SparkSession, path: String,
                                    snap: StoreSnapshot, stampSeq: Long,
                                    stage: String, what: String): Unit = {
-    val seqNow = Tombstones.currentSeq(spark, path)
-    val gensNow = snapshotStore(spark, path).gens
-    if (seqNow != stampSeq || gensNow != snap.gens)
+    moved(spark, path, snap, stampSeq).foreach { seqNow =>
       abortRaced(spark, path, stage, what,
         s"the store's mutation counter moved $stampSeq -> $seqNow (or a " +
           "compaction flipped a generation)")
+    }
+  }
+
+  /** The store's current mutation seq if it moved past `stampSeq` or a
+    * committed generation changed since `snap`, else None.
+    */
+  private def moved(spark: SparkSession, path: String, snap: StoreSnapshot,
+                    stampSeq: Long): Option[Long] = {
+    val seqNow = Tombstones.currentSeq(spark, path)
+    if (seqNow != stampSeq || snapshotStore(spark, path).gens != snap.gens)
+      Some(seqNow)
+    else None
+  }
+
+  private def dropDir(spark: SparkSession, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = fsOf(spark, p)
+    if (fs.exists(p)) { fs.delete(p, true); () }
   }
 
   private[graft] def abortRaced(spark: SparkSession, path: String,
                                 stage: String, what: String,
                                 detail: String): Nothing = {
-    val sp = new org.apache.hadoop.fs.Path(stage)
-    val fs = fsOf(spark, sp)
-    if (fs.exists(sp)) { fs.delete(sp, true); () }
+    dropDir(spark, stage)
     throw new IllegalStateException(
       s"$what raced a concurrent mutation on $path: $detail after the " +
         s"$what read its inputs, so the staged output would silently " +
@@ -1642,16 +1453,13 @@ object Index {
   }
 
   /** One kind's compaction cycle (shared with [[LexIndex]], whose posting
-    * store is bucket- rather than cell-partitioned).
-    */
-  /** `sortCols`: in-file order the rewrite restores (lexical postings
-    * re-sort by term hash so row-group min/max stats keep the serve's
-    * term-predicate pushdown selective; the ANN stores have no in-file
-    * order contract).
-    */
-  /** `purge`: tombstones to fold into the rewrite — masked rows are
-    * physically dropped from the new generation (the caller consumes
-    * the corresponding tombstone files after every kind is rewritten).
+    * store is bucket- rather than cell-partitioned). `sortCols`: in-file
+    * order the rewrite restores (lexical postings re-sort by term hash so
+    * row-group min/max stats keep the serve's term-predicate pushdown
+    * selective; the ANN stores have no in-file order contract). `purge`:
+    * tombstones to fold into the rewrite — masked rows are physically
+    * dropped from the new generation (the caller consumes the
+    * corresponding tombstone files after every kind is rewritten).
     */
   private[graft] def compactKind(spark: SparkSession, path: String,
                                  kind: String, partitionCol: String,
@@ -1713,23 +1521,14 @@ object Index {
     import spark.implicits._
     // flavor-aware like compact: a PQ-only store (saveIvfPq writes no
     // postings/) counts distinct vec_id over its codes instead
-    def has(kind: String) = generations(spark, path, kind)
-      .exists { case (_, p) => isCommitted(spark, p) }
+    val kind = scanKind(committedKinds(spark, path)).getOrElse(SqCodesKind)
     // the SERVED corpus: tombstoned rows are invisible to every serve
     // (their dead mass is [[deleteStats]]' column, not this one's)
-    val tomb = Tombstones.readAll(spark, path)
+    val live = Tombstones.mask(spark.read.parquet(liveDir(spark, path, kind)),
+      Tombstones.readAll(spark, path), "vec_id")
     val n =
-      if (has(PostingsKind))
-        Tombstones.mask(
-          spark.read.parquet(liveDir(spark, path, PostingsKind)),
-          tomb, "vec_id").count()
-      else {
-        val kind = if (has(PqCodesKind)) PqCodesKind else SqCodesKind
-        Tombstones.mask(
-          spark.read.parquet(liveDir(spark, path, kind)),
-          tomb, "vec_id")
-          .select("vec_id").distinct().count()
-      }
+      if (kind == PostingsKind) live.count()
+      else live.select("vec_id").distinct().count()
     val nc = spark.read.parquet(centroidsDir(spark, path)).count()
     val auto = Similarity.autoCells(n, floorCells).toLong
     Seq((n, nc, auto)).toDF("n_vectors", "n_cells", "auto_cells")
@@ -1800,9 +1599,7 @@ object Index {
     Lease.withLease(spark, path, "rebuild") {
     import Ckpt.CutOps
     val snap = snapshotStore(spark, path)
-    def has(kind: String) = generations(spark, path, kind)
-      .exists { case (_, p) => isCommitted(spark, p) }
-    require(has(PostingsKind),
+    require(committedKinds(spark, path)(PostingsKind),
       s"self-rebuild needs the raw-vector flavor at $path — a codes-only " +
         "store must be rebuilt from the source corpus via rebuildFrom " +
         "(the reader-safe, coding-preserving re-grid; a bare save* " +
@@ -1862,12 +1659,11 @@ object Index {
     Lease.withLease(spark, path, "rebuildFrom") {
     import Ckpt.CutOps
     val snap = snapshotStore(spark, path)
-    def has(kind: String) = generations(spark, path, kind)
-      .exists { case (_, p) => isCommitted(spark, p) }
-    val kinds = Seq(PostingsKind -> postingsCore, PqCodesKind -> pqCodesCore,
-      SqCodesKind -> sqCodesCore)
-    val (kind, core) = kinds.find { case (k, _) => has(k) }.getOrElse(
+    val kinds = committedKinds(spark, path)
+    val kind = scanKind(kinds).getOrElse(
       throw new IllegalArgumentException(s"no committed store at $path"))
+    val core = Map(PostingsKind -> postingsCore, PqCodesKind -> pqCodesCore,
+      SqCodesKind -> sqCodesCore)(kind)
     val meta = storedMetaCols(spark, liveDir(spark, path, kind), core)
     val missing = meta.filterNot(corpus.columns.contains)
     require(missing.isEmpty,
@@ -1899,7 +1695,7 @@ object Index {
           "was taken, anti-join the corpus against your deletion ledger " +
           "and re-run.")
     }
-    stagedRebuild(spark, path, cut, meta, withRaw = has(PostingsKind),
+    stagedRebuild(spark, path, cut, meta, withRaw = kinds(PostingsKind),
       snap, midHook)
   }
 
@@ -1912,131 +1708,55 @@ object Index {
                             corpus: DataFrame, meta: Seq[String],
                             withRaw: Boolean, snap: StoreSnapshot,
                             midHook: () => Unit): Unit = {
-    def has(kind: String) = generations(spark, path, kind)
-      .exists { case (_, p) => isCommitted(spark, p) }
-    val hadPq = has(PqCodesKind)
-    val hadSq = has(SqCodesKind)
-    // read every flavor's build config BEFORE any save rewrites a marker
-    val pqMeta = readBuildMeta(spark, metaPath(path))
-    val sqMeta = readBuildMeta(spark, sqMetaPath(path))
-    val ivfMeta = readBuildMeta(spark, ivfMetaPath(path))
+    val kinds = committedKinds(spark, path)
+    val markers = new Markers(spark, path)
+    // read every flavor's build config BEFORE any marker is rewritten
+    val pq = markers.config("meta")
+    val sq = markers.config("sq_meta")
+    // the centroids' training AND assignment geometry (a flat-built store
+    // re-assigned two-level routes whole families off-macro — recall 0.0
+    // on the 1000x family fixture, SCALING.md) belong to the owner marker
+    val owner =
+      if (kinds(PqCodesKind)) pq
+      else if (kinds(SqCodesKind)) sq
+      else markers.config("ivf_meta")
+    // every flavor the store carries, from ONE fresh assignment in its
+    // own coding; the store keeps its storage shape (no raw flavor is
+    // created where none existed)
+    val codings =
+      (if (kinds(PqCodesKind)) Seq(Pq(pq, atBuild = true)) else Nil) ++
+      (if (kinds(SqCodesKind)) Seq(Sq(sq.residual)) else Nil) ++
+      (if (withRaw) Seq(Flat) else Nil) ++
+      (if (kinds(MrlCodesKind)) Seq(codingOf(MrlCodesKind, markers)) else Nil)
     // rows republished under surviving tombstones must outrank them
     val stampSeq = Tombstones.nextSeq(spark, path)
+    val stage = s"$path/_rebuild_stage"
     // a mutation that slipped in between the caller's snapshot and this
     // bump already raced the corpus read — abort BEFORE paying for the
     // staged build, same contract as the publish-time check
     if (stampSeq != snap.seq + 1)
-      abortRaced(spark, path, s"$path/_rebuild_stage", "rebuild",
+      abortRaced(spark, path, stage, "rebuild",
         s"the store's mutation counter moved ${snap.seq} -> " +
           s"${stampSeq - 1} between the corpus snapshot and the rebuild " +
           "stamp")
-    val stage = s"$path/_rebuild_stage"
-    locally { // a crashed rebuild's leftover stage is dead weight
-      val sp = new org.apache.hadoop.fs.Path(stage)
-      val fs = fsOf(spark, sp)
-      if (fs.exists(sp)) { fs.delete(sp, true); () }
-    }
-    if (hadPq)
-      saveIvfPq(corpus, stage, nSub = pqMeta.nSub, nCode = pqMeta.nCode,
-        metaCols = meta, trained = pqMeta.trained, withRaw = withRaw,
-        trainIters = pqMeta.trainIters, residual = pqMeta.residual,
-        forceFlat = pqMeta.flat, insSeq = stampSeq)
-    else if (hadSq && !withRaw)
-      // SQ-only codes store: one save writes centroids + codes in the
-      // store's own coding, and no raw flavor is created where none
-      // existed — the store keeps its storage shape
-      saveIvfSq(corpus, stage, metaCols = meta, trained = sqMeta.trained,
-        trainIters = sqMeta.trainIters, residual = sqMeta.residual,
-        forceFlat = sqMeta.flat, withRaw = false, insSeq = stampSeq)
-    else {
-      // the centroids' recorded training lives with whichever save wrote
-      // them: sq_meta on an SQ+raw store, ivf_meta on a flat store
-      val cfg = if (hadSq) sqMeta else ivfMeta
-      saveIvf(corpus, stage, metaCols = meta, trained = cfg.trained,
-        trainIters = cfg.trainIters, forceFlat = cfg.flat,
-        insSeq = stampSeq)
-    }
-    if (hadSq && (hadPq || withRaw)) {
-      // the SQ flavor must share the NEW assignment: re-encode from the
-      // same corpus against the staged centroid table, in the store's
-      // own coding. The sq_meta marker is updated IN PLACE at the real
-      // path (markers are coding-preserved — only the `trained`
-      // ownership field can move on a combined store — and serves read
-      // them eagerly at plan time, so pre-planned serves are unaffected)
-      locally {
-        import spark.implicits._
-        Seq((sqMeta.residual, if (hadPq) pqMeta.trained else sqMeta.trained,
-            sqMeta.trainIters, if (hadPq) pqMeta.flat else sqMeta.flat))
-          .toDF("residual", "trained", "train_iters", "flat")
-          .write.mode("overwrite").parquet(sqMetaPath(path))
-      }
-      val cents = spark.read.parquet(centroidsDir(spark, stage))
-      // the assignment mode is build GEOMETRY the SQ codes must share
-      // with the staged postings: a flat-built store re-assigned
-      // two-level would route whole families off-macro (measured recall
-      // 0.0 on the 1000x family fixture, SCALING.md) — like `trained`,
-      // the combined store's geometry belongs to whichever save built
-      // the staged centroids
-      val assignment = assignedTo(corpus, stage,
-        forceFlat = if (hadPq) pqMeta.flat else sqMeta.flat,
-        superProbe = Similarity.defaultSuperProbe)
-      val rows =
-        if (sqMeta.residual) sqResidualRows(assignment, cents)
-        else sqRowsFromAssignment(assignment) // v/norm already on the assignment
-      val withMeta =
-        if (meta.isEmpty) rows
-        else rows.join(corpus.select((Seq("vec_id") ++ meta).map(col): _*),
-          "vec_id")
-      withMeta
-        .withColumn("ins_seq", lit(stampSeq))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(sqCodesPath(stage))
-    }
-    if (has(MrlCodesKind)) {
-      // the MRL prefix flavor shares the staged raw flavor's fresh
-      // assignment (an MRL store always carries raw postings — the
-      // refine half of its serve), re-sliced at the store's recorded
-      // width AND coding; the mrl_meta marker is build-shape-only and
-      // stays in place. Prefix rows derive from the STAGED POSTINGS
-      // (they carry vec_id, v, cell — saveIvfMrl's own shape): no
-      // corpus re-scan, no re-attach join; slice(v) == the old
-      // mrl{Sq}Rows' slice of the embedding cast, bit-exact.
-      val mm = mrlMeta(spark, path)
-      val post = spark.read.parquet(s"$stage/$PostingsKind")
-      val vp = slice(col("v"), 1, mm.dims)
-      val rows =
-        if (mm.quantized)
-          post
-            .withColumn("pv", vp)
-            .withColumn("pn", sqrt(VecFold.dot(col("pv"), col("pv"))))
-            .withColumn("scale", VecQuant.maxAbs(col("pv")))
-            .withColumn("safe_scale",
-              when(col("scale") === 0d, lit(1.0)).otherwise(col("scale")))
-            .select(col("vec_id"), col("cell"),
-              VecQuant.sqPack(col("pv"), col("safe_scale")).as("qb"),
-              round(when(col("pn") === 0d, lit(0.0))
-                .otherwise(col("scale") / col("pn")), 9).as("r"))
-        else
-          post
-            .withColumn("vp", vp)
-            .select(col("vec_id"), col("cell"), col("vp"),
-              sqrt(VecFold.dot(col("vp"), col("vp"))).as("vpn"))
-      val withMeta =
-        if (meta.isEmpty) rows
-        else rows.join(corpus.select((Seq("vec_id") ++ meta).map(col): _*),
-          "vec_id")
-      withMeta
-        .withColumn("ins_seq", lit(stampSeq))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(mrlCodesPath(stage))
+    dropDir(spark, stage) // a crashed rebuild's leftover stage is dead weight
+    // only the CELL budget resets: fresh autoCells over the live corpus
+    build(corpus, stage, nCells = 16, owner.flat, Similarity.defaultSuperProbe,
+      meta, owner.trained, owner.trainIters, stampSeq, codings, markers = Nil)
+    if (kinds(SqCodesKind) && (kinds(PqCodesKind) || withRaw)) {
+      // a combined store's sq_meta is updated IN PLACE at the real path
+      // (markers are coding-preserved — only the `trained`/`flat`
+      // ownership fields can move — and serves read them eagerly at plan
+      // time, so pre-planned serves are unaffected)
+      import spark.implicits._
+      Seq((sq.residual, owner.trained, sq.trainIters, owner.flat))
+        .toDF("residual", "trained", "train_iters", "flat")
+        .write.mode("overwrite").parquet(sqMetaPath(path))
     }
     midHook()
-    // the conflict fence: everything above read a snapshot of the store;
-    // verify no mutation landed since, BEFORE the atomic flip — at 100 TB
-    // the staged build above is hours long and "quiesce mutators" without
-    // enforcement is how production stores silently lose writes
+    // the conflict fence, BEFORE the atomic flip: at 100 TB the staged
+    // build is hours long, and "quiesce mutators" without enforcement is
+    // how production stores silently lose writes
     verifyUnmoved(spark, path, snap, stampSeq, stage, "rebuild")
     publishStage(spark, path, stage, recheck = Some((snap, stampSeq)))
   }
@@ -2084,18 +1804,14 @@ object Index {
     }
     // last-instant fence re-check (see scaladoc): the renamed dirs are
     // uncommitted, so aborting here deletes them and nothing else moved
-    recheck.foreach { case (snap, stampSeq) =>
-      val seqNow = Tombstones.currentSeq(spark, path)
-      val gensNow = snapshotStore(spark, path).gens
-      if (seqNow != stampSeq || gensNow != snap.gens) {
-        kinds.foreach { k =>
-          fs.delete(new Path(s"$path/${k}_v$n"), true); ()
-        }
-        abortRaced(spark, path, stage, "rebuild",
-          s"the store's mutation counter moved $stampSeq -> $seqNow (or " +
-            "a compaction flipped a generation) between the staged " +
-            "renames and the commit-marker create")
+    for ((snap, stampSeq) <- recheck; seqNow <- moved(spark, path, snap, stampSeq)) {
+      kinds.foreach { k =>
+        fs.delete(new Path(s"$path/${k}_v$n"), true); ()
       }
+      abortRaced(spark, path, stage, "rebuild",
+        s"the store's mutation counter moved $stampSeq -> $seqNow (or " +
+          "a compaction flipped a generation) between the staged " +
+          "renames and the commit-marker create")
     }
     fs.create(new Path(root, s"commit_v$n")).close() // THE atomic flip
     kinds.foreach { k =>
@@ -2108,12 +1824,7 @@ object Index {
     val keepVers: Set[String] = Set(n.toString) ++ prevLive.values.flatten
       .map(_.getName).filter(_.contains("_v"))
       .map(nm => nm.substring(nm.lastIndexOf("_v") + 2))
-    fs.listStatus(root).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("commit_v"))
-      .foreach { st =>
-        val v = st.getPath.getName.stripPrefix("commit_v")
-        if (!keepVers.contains(v)) { fs.delete(st.getPath, false); () }
-      }
+    dropStoreCommits(spark, path, keepVers)
     fs.delete(new Path(stage), true); ()
   }
 
@@ -2172,19 +1883,18 @@ object Index {
                      vacuumKeep: Option[Int] = None): DataFrame =
     Lease.withLease(spark, path, "maintain") {
     import spark.implicits._
-    def has(kind: String) = generations(spark, path, kind)
-      .exists { case (_, p) => isCommitted(spark, p) }
+    val kinds = committedKinds(spark, path)
     val st = stats(spark, path).head()
     val dilution = st.getDouble(3)
     val ds = deleteStats(spark, path).head()
     val maskedFrac = ds.getDouble(3)
-    val kind = Seq(PostingsKind, PqCodesKind, SqCodesKind).find(has).get
+    val kind = scanKind(kinds).get
     val files = countDataFiles(spark, liveDir(spark, path, kind))
     val filesPerCell = files.toDouble / math.max(1L, st.getLong(1))
     val action =
       if (dilution > maxDilution) rebuildWith match {
         case Some(corpus) => rebuildFrom(spark, path, corpus); "rebuild"
-        case None if has(PostingsKind) => rebuild(spark, path); "rebuild"
+        case None if kinds(PostingsKind) => rebuild(spark, path); "rebuild"
         // codes-only store past the dilution threshold with no corpus
         // supplied: report the need instead of silently falling through
         case None => "rebuild-needed"
@@ -2291,16 +2001,7 @@ object Index {
       }
     }
     // prune store-level commit markers no surviving generation needs
-    if (fs.exists(root))
-      fs.listStatus(root).toSeq
-        .filter(st => st.isFile && st.getPath.getName.startsWith("commit_v"))
-        .foreach { st =>
-          val v = st.getPath.getName.stripPrefix("commit_v")
-          if (!keptVers.contains(v)) {
-            bytes += st.getLen
-            fs.delete(st.getPath, false); ()
-          }
-        }
+    bytes += dropStoreCommits(spark, path, keptVers.toSet)
     Tombstones.collapseSeq(spark, path)
     Seq((dirsRemoved, bytes)).toDF("generations_removed", "bytes_reclaimed")
   }
@@ -2360,54 +2061,8 @@ object Index {
                                 candWhereSql: String = "TRUE",
                                 centroidWhereSql: String = "TRUE",
                                 embExprSql: String = "embedding"): String =
-    s"""WITH ${Similarity.cellCtesSql(nCells,
-           centroidWhereSql = centroidWhereSql,
-           embExprSql = embExprSql)},
-       |assigned AS (
-       |  SELECT vec_id, cid AS cell FROM ranks WHERE rnk = 1),
-       |probes AS (
-       |  SELECT vec_id AS query_id, cid AS cell
-       |  FROM ranks WHERE rnk <= $nProbe AND $isQuerySql),
-       |pe AS (
-       |  SELECT vec_id, (($embExprSql)::DOUBLE[])[1:$dims] AS pv,
-       |         sqrt(list_dot_product((($embExprSql)::DOUBLE[])[1:$dims],
-       |                               (($embExprSql)::DOUBLE[])[1:$dims])) AS pn
-       |  FROM embeddings),
-       |qp AS (SELECT vec_id AS query_id, pv AS qpv, pn AS qpn
-       |       FROM pe WHERE $isQuerySql),
-       |prescored AS (
-       |  SELECT p.query_id, a.vec_id AS neighbor_id,
-       |         round(${Similarity.safeCosineSql(
-                  "list_dot_product(x.pv, qp.qpv)", "x.pn", "qp.qpn")}, 6)
-       |           AS pcos
-       |  FROM probes p
-       |  JOIN assigned a ON a.cell = p.cell
-       |  JOIN pe x ON x.vec_id = a.vec_id
-       |  JOIN qp ON qp.query_id = p.query_id
-       |  WHERE a.vec_id != p.query_id
-       |    AND a.vec_id IN (SELECT vec_id FROM embeddings WHERE $candWhereSql)),
-       |short AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |              ORDER BY pcos DESC, neighbor_id) AS srank
-       |    FROM prescored)
-       |  WHERE srank <= ${Similarity.autoRerank(k, rerank)}),
-       |qq AS (SELECT vec_id AS query_id, v AS qv, norm AS qnorm FROM e
-       |       WHERE $isQuerySql),
-       |refined AS (
-       |  SELECT s.query_id, s.neighbor_id,
-       |         round(${Similarity.safeCosineSql(
-                  "list_dot_product(e.v, qq.qv)", "e.norm", "qq.qnorm")}, 6)
-       |           AS cosine
-       |  FROM short s
-       |  JOIN e ON e.vec_id = s.neighbor_id
-       |  JOIN qq ON qq.query_id = s.query_id),
-       |ranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |            ORDER BY cosine DESC, neighbor_id) AS rank
-       |  FROM refined)
-       |SELECT query_id, neighbor_id, cosine, rank FROM ranked
-       |WHERE rank <= $k""".stripMargin
+    mrlOracleSql(k, dims, rerank, nCells, nProbe, isQuerySql, candWhereSql,
+      centroidWhereSql, embExprSql, quantized = false)
 
   /** DuckDB oracle for the QUANTIZED MRL serve (`saveIvfMrl(quantized =
     * true)` → [[ivfMrlRerankTopKIndexed]]): the prefix slice is int8-
@@ -2425,6 +2080,43 @@ object Index {
                                   candWhereSql: String = "TRUE",
                                   centroidWhereSql: String = "TRUE",
                                   embExprSql: String = "embedding"): String =
+    mrlOracleSql(k, dims, rerank, nCells, nProbe, isQuerySql, candWhereSql,
+      centroidWhereSql, embExprSql, quantized = true)
+
+  /** The two MRL oracles share everything but the prefix rows `pe` and
+    * the shortlist score: prefix cosine (raw) or code dot × r (int8).
+    */
+  private def mrlOracleSql(k: Int, dims: Int, rerank: Int, nCells: Int,
+                           nProbe: Int, isQuerySql: String,
+                           candWhereSql: String, centroidWhereSql: String,
+                           embExprSql: String, quantized: Boolean): String = {
+    val prefix = s"(($embExprSql)::DOUBLE[])[1:$dims]"
+    val (peSql, qpCols, scoreSql) =
+      if (quantized) (
+        s"""pe0 AS (
+           |  SELECT vec_id, $prefix AS pv
+           |  FROM embeddings),
+           |pe1 AS (
+           |  SELECT vec_id, pv, sqrt(list_dot_product(pv, pv)) AS pn,
+           |         list_max(list_transform(pv, x -> abs(x))) AS scale
+           |  FROM pe0),
+           |pe AS (
+           |  SELECT vec_id,
+           |         list_transform(pv, x -> floor(x * 127.0 /
+           |           (CASE WHEN scale = 0 THEN 1.0 ELSE scale END) + 0.5)) AS qb,
+           |         round(CASE WHEN pn = 0 THEN 0.0 ELSE scale / pn END, 9) AS r
+           |  FROM pe1)""".stripMargin,
+        "qb AS qqb",
+        "list_dot_product(x.qb, qp.qqb) * x.r")
+      else (
+        s"""pe AS (
+           |  SELECT vec_id, $prefix AS pv,
+           |         sqrt(list_dot_product($prefix,
+           |                               $prefix)) AS pn
+           |  FROM embeddings)""".stripMargin,
+        "pv AS qpv, pn AS qpn",
+        s"round(${Similarity.safeCosineSql(
+          "list_dot_product(x.pv, qp.qpv)", "x.pn", "qp.qpn")}, 6)")
     s"""WITH ${Similarity.cellCtesSql(nCells,
            centroidWhereSql = centroidWhereSql,
            embExprSql = embExprSql)},
@@ -2433,24 +2125,11 @@ object Index {
        |probes AS (
        |  SELECT vec_id AS query_id, cid AS cell
        |  FROM ranks WHERE rnk <= $nProbe AND $isQuerySql),
-       |pe0 AS (
-       |  SELECT vec_id, (($embExprSql)::DOUBLE[])[1:$dims] AS pv
-       |  FROM embeddings),
-       |pe1 AS (
-       |  SELECT vec_id, pv, sqrt(list_dot_product(pv, pv)) AS pn,
-       |         list_max(list_transform(pv, x -> abs(x))) AS scale
-       |  FROM pe0),
-       |pe AS (
-       |  SELECT vec_id,
-       |         list_transform(pv, x -> floor(x * 127.0 /
-       |           (CASE WHEN scale = 0 THEN 1.0 ELSE scale END) + 0.5)) AS qb,
-       |         round(CASE WHEN pn = 0 THEN 0.0 ELSE scale / pn END, 9) AS r
-       |  FROM pe1),
-       |qp AS (SELECT vec_id AS query_id, qb AS qqb FROM pe
+       |$peSql,
+       |qp AS (SELECT vec_id AS query_id, $qpCols FROM pe
        |       WHERE $isQuerySql),
        |prescored AS (
-       |  SELECT p.query_id, a.vec_id AS neighbor_id,
-       |         list_dot_product(x.qb, qp.qqb) * x.r AS pscore
+       |  SELECT p.query_id, a.vec_id AS neighbor_id, $scoreSql AS pscore
        |  FROM probes p
        |  JOIN assigned a ON a.cell = p.cell
        |  JOIN pe x ON x.vec_id = a.vec_id
@@ -2479,6 +2158,7 @@ object Index {
        |  FROM refined)
        |SELECT query_id, neighbor_id, cosine, rank FROM ranked
        |WHERE rank <= $k""".stripMargin
+  }
 
   /** Parquet data files under `dir`, counted through the Hadoop
     * FileSystem like every other store touch. A `java.io.File` walk here
@@ -2508,8 +2188,7 @@ object Index {
     */
   def probeCells(spark: SparkSession, path: String, queries: DataFrame,
                  nProbe: Int = 4): Array[Long] =
-    probeSet(spark, path, queries, nProbe)._1
-      .select("cell").distinct().collect().map(_.getLong(0))
+    probedCellVals(probeSet(spark, path, queries, nProbe)._1)
 
   /** TIME-TRAVEL candidate bound: restrict a serve's candidate rows to
     * those inserted at or before `asOfSeq` (build rows are seq 0, every

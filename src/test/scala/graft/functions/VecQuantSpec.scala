@@ -187,4 +187,27 @@ class VecQuantSpec extends SparkSpec {
     assert(r.getSeq[Any](2) == Seq(42.0, null, -127.0))
     assert(r.getSeq[Any](3) == Seq(42L, null, -127L))
   }
+
+  test("the kernels reject mistyped inputs at analysis time") {
+    // a wrong column type must fail as an AnalysisException when the plan
+    // is analyzed, not as a ClassCastException inside an executor task
+    import org.apache.spark.sql.AnalysisException
+    import org.apache.spark.sql.graft.GraftShim
+    val df = Seq((Seq(1.0f, -2.0f), Seq(1.0, 2.0), Array[Byte](1, 2), 2, "x"))
+      .toDF("fv", "dv", "qb", "i", "s")
+    def rejects(c: => org.apache.spark.sql.Column, what: String): Unit = {
+      val e = intercept[AnalysisException](df.select(c))
+      assert(e.getMessage.contains("DATATYPE_MISMATCH"), s"$what: ${e.getMessage}")
+    }
+    rejects(VecQuant.maxAbs(col("fv")), "maxAbs over array<float>")
+    rejects(VecQuant.sqPack(col("dv"), col("s")), "sqPack with a string scale")
+    rejects(VecQuant.byteDot(col("qb"), col("dv")), "byteDot over array<double>")
+    rejects(VecQuant.sub(col("dv"), col("fv")), "sub over array<float>")
+    rejects(VecQuant.reconstruct(col("dv"), col("dv"), lit(1.0)),
+      "reconstruct with array codes")
+    val bloom = spark.sparkContext.broadcast(
+      org.apache.spark.util.sketch.BloomFilter.create(8))
+    rejects(GraftShim.column(BloomContains(GraftShim.expression(col("s")), bloom)),
+      "bloom probe over a string")
+  }
 }

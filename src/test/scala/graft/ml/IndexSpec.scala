@@ -1,6 +1,7 @@
 package graft.ml
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Persisted-index serving path: round-trip equality with the inline
@@ -91,19 +92,33 @@ class IndexSpec extends SparkSpec {
   }
 
   test("appendIvfPq keeps a combined store's raw flavor in step") {
-    val path = freshPath("rerankappend")
-    Index.saveIvfPq(emb.where(col("vec_id") < 100), path, withRaw = true)
-    Index.appendIvfPq(spark, path, emb.where(col("vec_id") >= 100))
+    // inputs: a PQ+raw store and an SQ+raw store, each appended and
+    // served through its own rerank (the refine reads the raw flavor)
     val isQ = pmod(col("vec_id"), lit(10)) === 0
-    // appended vectors must be refinable: raw rows exist for them
-    val raw = spark.read.parquet(
-      Index.liveDir(spark, path, Index.PostingsKind))
-    assert(raw.where(col("vec_id") >= 100).count() === 20L,
-      "appended vectors missing from the raw refine flavor")
-    val got = Index.ivfPqRerankTopKIndexed(spark, path, emb.where(isQ), k = 5)
-      .as[(Long, Long, Double, Int)].collect().toSeq
-    assert(got.nonEmpty)
-    assert(got.forall(r => r._1 != r._2), "self-exclusion broken")
+    val inputs: Seq[(String, String => Unit, String => Unit,
+        String => DataFrame)] = Seq(
+      ("pq",
+        Index.saveIvfPq(emb.where(col("vec_id") < 100), _, withRaw = true),
+        Index.appendIvfPq(spark, _, emb.where(col("vec_id") >= 100)),
+        Index.ivfPqRerankTopKIndexed(spark, _, emb.where(isQ), k = 5)),
+      ("sq",
+        Index.saveIvfSq(emb.where(col("vec_id") < 100), _, withRaw = true),
+        Index.appendIvfSq(spark, _, emb.where(col("vec_id") >= 100)),
+        Index.ivfSqRerankTopKIndexed(spark, _, emb.where(isQ), k = 5)))
+    for ((tag, save, append, serve) <- inputs) {
+      val path = freshPath(s"rerankappend_$tag")
+      save(path)
+      append(path)
+      // appended vectors must be refinable: raw rows exist for them
+      val raw = spark.read.parquet(
+        Index.liveDir(spark, path, Index.PostingsKind))
+      assert(raw.where(col("vec_id") >= 100).count() === 20L,
+        s"$tag: appended vectors missing from the raw refine flavor")
+      val got = serve(path)
+        .as[(Long, Long, Double, Int)].collect().toSeq
+      assert(got.nonEmpty, tag)
+      assert(got.forall(r => r._1 != r._2), s"$tag: self-exclusion broken")
+    }
   }
 
   test("residual store: serves, self-excludes, appends ride the frozen coding") {
@@ -270,20 +285,43 @@ class IndexSpec extends SparkSpec {
 
   test("appendIvf: split build+append serves bit-equal to a one-shot build") {
     // base holds the 16 smallest vec_ids → the frozen centroid set equals
-    // the one-shot build's, so the two stores must serve identical results
-    val path = freshPath("append")
-    Index.saveIvf(emb.where(col("vec_id") < 60), path)
-    Index.appendIvf(spark, path, emb.where(col("vec_id") >= 60))
+    // the one-shot build's, so the two stores must serve identical results.
+    // Inputs: the raw store against the inline operator, and absolute and
+    // residual SQ against a one-shot SQ build of the same coding
     val isQ = pmod(col("vec_id"), lit(10)) === 0
-    val served = Index.ivfTopKIndexed(spark, path, emb.where(isQ), k = 5)
-      .orderBy("query_id", "rank")
-      .as[(Long, Long, Double, Int)].collect().toSeq
-    val oneShot = Similarity.ivfTopK(emb, isQ, k = 5)
-      .orderBy("query_id", "rank")
-      .as[(Long, Long, Double, Int)].collect().toSeq
-    assert(served === oneShot)
-    // appended vectors are really discoverable: some neighbor id >= 60
-    assert(served.exists(_._2 >= 60L), "no appended vector ever surfaced")
+    type Build = (DataFrame, String) => Unit
+    def sq(residual: Boolean): (Build, String => Unit, String => DataFrame) =
+      (Index.saveIvfSq(_, _, residual = residual),
+        Index.appendIvfSq(spark, _, emb.where(col("vec_id") >= 60)),
+        Index.ivfSqTopKIndexed(spark, _, emb.where(isQ), k = 5))
+    val raw: (String, Build, String => Unit, String => DataFrame,
+        () => DataFrame) =
+      ("ivf", Index.saveIvf(_, _),
+        Index.appendIvf(spark, _, emb.where(col("vec_id") >= 60)),
+        Index.ivfTopKIndexed(spark, _, emb.where(isQ), k = 5),
+        () => Similarity.ivfTopK(emb, isQ, k = 5))
+    val inputs = raw +: Seq(false, true).map { residual =>
+      val (build, append, serve) = sq(residual)
+      (s"sq_residual_$residual", build, append, serve, { () =>
+        val p = freshPath(s"append_oneshot_$residual")
+        build(emb, p)
+        serve(p)
+      })
+    }
+    for ((tag, build, append, serve, oneShotOf) <- inputs) {
+      val path = freshPath(s"append_$tag")
+      build(emb.where(col("vec_id") < 60), path)
+      append(path)
+      val served = serve(path)
+        .orderBy("query_id", "rank")
+        .as[(Long, Long, Double, Int)].collect().toSeq
+      val oneShot = oneShotOf()
+        .orderBy("query_id", "rank")
+        .as[(Long, Long, Double, Int)].collect().toSeq
+      assert(served === oneShot, tag)
+      // appended vectors are really discoverable: some neighbor id >= 60
+      assert(served.exists(_._2 >= 60L), s"$tag: no appended vector ever surfaced")
+    }
   }
 
   test("appendIvfPq: split build+append serves bit-equal to a one-shot build") {
@@ -847,30 +885,49 @@ class IndexSpec extends SparkSpec {
   }
 
   test("upsert serves exactly the new version; delete-then-upsert revives") {
-    val path = freshPath("upsert")
-    Index.saveIvf(emb, path)
-    // make vec 17 the unambiguous nearest neighbor of query 30 by
-    // upserting it ONTO query 30's vector (cosine 1.0 after re-assign)
-    val q30 = emb.where(col("vec_id") === 30L).select("embedding").head()
-      .getSeq[Float](0)
-    val newRow = Seq((17L, q30)).toDF("vec_id", "embedding")
-    Index.upsertIvf(spark, path, newRow)
-    val served = Index.ivfTopKIndexed(spark, path, emb.where(isQ5), k = 3)
-      .where(col("query_id") === 30L).orderBy("rank").collect()
-    assert(served.head.getLong(1) === 17L) // the NEW vector ranks first…
-    assert(served.head.getDouble(2) === 1.0) // …with the new cosine
-    // exactly one surviving version: no duplicate (query, neighbor) rows
-    val all = Index.ivfTopKIndexed(spark, path, emb.where(isQ5), k = 40)
-    assert(all.groupBy("query_id", "neighbor_id").count()
-      .where(col("count") > 1).count() === 0L)
-    // delete then upsert revives the id (append outranks the tombstone)
-    Index.delete(spark, path, Seq(17L).toDF("vec_id"))
-    assert(Index.ivfTopKIndexed(spark, path, emb.where(isQ5), k = 40)
-      .where(col("neighbor_id") === 17L).count() === 0L)
-    Index.upsertIvf(spark, path, newRow)
-    assert(Index.ivfTopKIndexed(spark, path, emb.where(isQ5), k = 3)
-      .where(col("query_id") === 30L && col("neighbor_id") === 17L)
-      .count() === 1L)
+    // one input per upsert path: raw, SQ and PQ. The SQ and PQ stores
+    // carry the raw flavor and serve through the exact refine: their
+    // shortlists read the upserted codes, and the refine scores the true
+    // cosine (the absolute-SQ score alone is a rank-only surrogate, under
+    // which an exact duplicate need not rank first)
+    type Serve = (String, Int) => DataFrame
+    val inputs: Seq[(String, String => Unit,
+        (String, DataFrame) => Unit, Serve)] = Seq(
+      ("ivf", Index.saveIvf(emb, _),
+        Index.upsertIvf(spark, _, _),
+        (p, k) => Index.ivfTopKIndexed(spark, p, emb.where(isQ5), k = k)),
+      ("sq", Index.saveIvfSq(emb, _, withRaw = true),
+        Index.upsertIvfSq(spark, _, _),
+        (p, k) => Index.ivfSqRerankTopKIndexed(spark, p, emb.where(isQ5), k = k)),
+      ("pq", Index.saveIvfPq(emb, _, withRaw = true),
+        Index.upsertIvfPq(spark, _, _),
+        (p, k) => Index.ivfPqRerankTopKIndexed(spark, p, emb.where(isQ5), k = k)))
+    for ((tag, save, upsert, serve) <- inputs) {
+      val path = freshPath(s"upsert_$tag")
+      save(path)
+      // make vec 17 the unambiguous nearest neighbor of query 30 by
+      // upserting it ONTO query 30's vector (cosine 1.0 after re-assign)
+      val q30 = emb.where(col("vec_id") === 30L).select("embedding").head()
+        .getSeq[Float](0)
+      val newRow = Seq((17L, q30)).toDF("vec_id", "embedding")
+      upsert(path, newRow)
+      val served = serve(path, 3)
+        .where(col("query_id") === 30L).orderBy("rank").collect()
+      assert(served.head.getLong(1) === 17L, tag) // the NEW vector ranks first…
+      assert(served.head.getDouble(2) === 1.0, tag) // …with the new cosine
+      // exactly one surviving version: no duplicate (query, neighbor) rows
+      val all = serve(path, 40)
+      assert(all.groupBy("query_id", "neighbor_id").count()
+        .where(col("count") > 1).count() === 0L, tag)
+      // delete then upsert revives the id (append outranks the tombstone)
+      Index.delete(spark, path, Seq(17L).toDF("vec_id"))
+      assert(serve(path, 40)
+        .where(col("neighbor_id") === 17L).count() === 0L, tag)
+      upsert(path, newRow)
+      assert(serve(path, 3)
+        .where(col("query_id") === 30L && col("neighbor_id") === 17L)
+        .count() === 1L, tag)
+    }
   }
 
   test("deleteStats counts dead VERSIONS (upsert = one dead + one live)") {

@@ -11,8 +11,12 @@ import org.apache.spark.sql.functions._
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The reference example inputs, vendored as test resources. */
+  private def reference(name: String): String =
+    getClass.getResource(s"/reference/example/$name").getPath
+
   test("IniConfig parses the reference's own config.cfg") {
-    val cfg = IniConfig.parseFile("/root/reference/example/config.cfg")
+    val cfg = IniConfig.parseFile(reference("config.cfg"))
     assert(cfg("rebin")("binning_unit") === "hours")
     assert(cfg("rebin")("n_binning_unit") === "2")
     // trailing spaces in 'mode=lc  ' are stripped like configparser
@@ -37,8 +41,8 @@ class PipelineSpec extends SparkSpec {
     */
   test("golden: README walkthrough on example.csv matches the oracle output") {
     val out = Pipeline.runWithConfigFile(spark,
-        "/root/reference/example/config.cfg",
-        Seq("/root/reference/example/example.csv"))
+        reference("config.cfg"),
+        Seq(reference("example.csv")))
       .select(col("counter"), date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts"),
         col("count"), col("eta"))
       .as[(String, String, Double, Double)].collect()
@@ -67,18 +71,18 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("walkthrough runs under the config's other model sections") {
-    val base = IniConfig.parseFile("/root/reference/example/config.cfg")
+    val base = IniConfig.parseFile(reference("config.cfg"))
     for (model <- Seq("MannKendall", "LinearRegressionModel")) {
       val cfg = base.updated("analyze", base("analyze").updated("model_name", model))
       val out = Pipeline.run(spark, cfg,
-        Seq("/root/reference/example/example.csv"))
+        Seq(reference("example.csv")))
       assert(out.count() === 369, s"$model row count")
       assert(out.where(col("eta").isNull).count() === 0, s"$model null etas")
     }
   }
 
   test("plotParamsText mirrors the reference's parameter box") {
-    val cfg = IniConfig.parseFile("/root/reference/example/config.cfg")
+    val cfg = IniConfig.parseFile(reference("config.cfg"))
     val txt = Pipeline.plotParamsText(cfg)
     assert(txt.startsWith("model: Poisson\n"))
     assert(txt.contains("mode: lc\n") && txt.contains("alpha: 0.99\n"))

@@ -9,6 +9,10 @@ import java.nio.file.Files
 class CsvSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The reference example inputs, vendored as test resources. */
+  private def reference(name: String): String =
+    getClass.getResource(s"/reference/example/$name").getPath
+
   private def tmpDir(): String =
     Files.createTempDirectory("graft-csv").toString
 
@@ -64,9 +68,9 @@ class CsvSpec extends SparkSpec {
     import graft.trend.Rebin
     import org.apache.spark.sql.functions.{col, expr}
     val legacy = Rebin(
-      Csv.readLegacy(spark, Seq("/root/reference/example/scotus.txt")), "hours", 1)
+      Csv.readLegacy(spark, Seq(reference("scotus.txt"))), "hours", 1)
     val modern = Rebin(
-      Csv.readCounts(spark, Seq("/root/reference/example/example.csv")), "hours", 1)
+      Csv.readCounts(spark, Seq(reference("example.csv"))), "hours", 1)
       .withColumn("ts", col("ts") - expr("INTERVAL '3600' SECOND"))
     assert(legacy.count() === 737)
     assert(legacy.exceptAll(modern).isEmpty && modern.exceptAll(legacy).isEmpty)
