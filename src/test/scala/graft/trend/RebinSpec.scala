@@ -1,21 +1,31 @@
 package graft.trend
 
 import graft.SparkSpec
+import graft.functions.Rounding
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => Check}
+import org.scalacheck.rng.Seed
 
 class RebinSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  private def run(rows: Seq[(String, Long, Double, String)]) = {
-    val df = rows.map { case (t, d, c, k) => (ts(t), d, c, k) }
+  private def frame(rows: Seq[(String, Long, Double, String)]): DataFrame =
+    rows.map { case (t, d, c, k) => (ts(t), d, c, k) }
       .toDF("ts", "duration_sec", "count", "counter")
-    Rebin(df, "hours", 1)
-      .orderBy("counter", "ts")
-      .collect()
+
+  private def rowsOf(out: DataFrame) =
+    out.orderBy("counter", "ts").collect()
       .map(r => (r.getString(0), r.getTimestamp(1).toString, r.getDouble(2), r.getDouble(3)))
-  }
+      .toSeq
+
+  private def run(rows: Seq[(String, Long, Double, String)],
+                  unit: String = "hours", nUnit: Int = 1) =
+    rowsOf(Rebin(frame(rows), unit, nUnit))
 
   test("aligned intervals land in their bins; grid extends one bin past max stop") {
     // reference: grid = trunc(min) .. trunc(max_stop) inclusive (analysis.py:82-97)
@@ -146,5 +156,172 @@ class RebinSpec extends SparkSpec {
     val outSum = Rebin(df, "hours", 1).agg(org.apache.spark.sql.functions.sum("count"))
       .head().getDouble(0)
     assert(outSum <= 20.0 && outSum >= 20.0 - 6)
+  }
+
+  test("max stop on a bin edge leaves a trailing untouched bin after a zero run") {
+    // max stop 04:00 is exactly a bin edge, so the grid ends at the
+    // untouched 04:00 bin. The 01:00-02:00 zero run keeps only its first
+    // zero; the compacted list [2, 0, 3, 0] is sliced by the grid index of
+    // the last touched bin (03:00 → idx 3, four rows), so the untouched
+    // trailing zero survives
+    val out = run(Seq(
+      ("2024-01-01 00:00:00", 3600L, 2.0, "a"),
+      ("2024-01-01 03:00:00", 3600L, 3.0, "a")))
+    assert(out == Seq(
+      ("a", "2024-01-01 00:00:00.0", 3600.0, 2.0),
+      ("a", "2024-01-01 01:00:00.0", 3600.0, 0.0),
+      ("a", "2024-01-01 03:00:00.0", 3600.0, 3.0),
+      ("a", "2024-01-01 04:00:00.0", 3600.0, 0.0)))
+  }
+
+  test("rows sharing the min ts both count in the origin bin") {
+    // both start at 00:30: the aligned half-hour lands whole in hour 0,
+    // the straddling hour splits 3/3 across hours 0 and 1
+    val out = run(Seq(
+      ("2024-01-01 00:30:00", 1800L, 5.0, "a"),
+      ("2024-01-01 00:30:00", 3600L, 6.0, "a")))
+    assert(out == Seq(
+      ("a", "2024-01-01 00:00:00.0", 3600.0, 8.0),
+      ("a", "2024-01-01 01:00:00.0", 3600.0, 3.0)))
+  }
+
+  test("nUnit = 2 bins from the unit-truncated origin") {
+    // origin = date_trunc(hour, 01:30) = 01:00, bins of 2 h from there:
+    // [01:30,02:30) lands in 01:00; [02:30,03:30) splits 1/1 across
+    // 01:00 and 03:00
+    val out = run(Seq(
+      ("2024-01-01 01:30:00", 3600L, 4.0, "a"),
+      ("2024-01-01 02:30:00", 3600L, 2.0, "a")), nUnit = 2)
+    assert(out == Seq(
+      ("a", "2024-01-01 01:00:00.0", 7200.0, 5.0),
+      ("a", "2024-01-01 03:00:00.0", 7200.0, 1.0)))
+  }
+
+  test("weekly bins start on the Monday of the first week") {
+    // 2024-01-01 is a Monday; a Wednesday and a Tuesday two weeks later
+    // leave the middle week empty (kept: the first zero of its run)
+    val out = run(Seq(
+      ("2024-01-03 00:00:00", 86400L, 7.0, "a"),
+      ("2024-01-16 00:00:00", 86400L, 2.0, "a")), unit = "weeks")
+    assert(out == Seq(
+      ("a", "2024-01-01 00:00:00.0", 604800.0, 7.0),
+      ("a", "2024-01-08 00:00:00.0", 604800.0, 0.0),
+      ("a", "2024-01-15 00:00:00.0", 604800.0, 2.0)))
+  }
+
+  test("configured grid counts the leading gap before the first touched bin") {
+    // grid 00:00..06:00 from config; data starts at 02:00. The untouched
+    // 00:00 and 01:00 are zero-trimmed, but they still count in the grid
+    // index: the last touched bin (04:00) has idx 4, so the slice keeps
+    // five compacted rows and the zero at 05:00 survives
+    val out = rowsOf(Rebin(frame(Seq(
+        ("2024-01-01 02:00:00", 3600L, 5.0, "a"),
+        ("2024-01-01 04:00:00", 3600L, 1.0, "a"))), "hours", 1,
+      startTime = "2024-01-01 00:00:00", stopTime = "2024-01-01 06:00:00",
+      gridFromConfig = true))
+    assert(out == Seq(
+      ("a", "2024-01-01 02:00:00.0", 3600.0, 5.0),
+      ("a", "2024-01-01 03:00:00.0", 3600.0, 0.0),
+      ("a", "2024-01-01 04:00:00.0", 3600.0, 1.0),
+      ("a", "2024-01-01 05:00:00.0", 3600.0, 0.0)))
+  }
+
+  test("property: random small interval sets rebin as the grid-join formulation does") {
+    val row = for {
+      k <- Gen.oneOf("a", "b", "c")
+      m <- Gen.choose(0, 96).map(_ * 5L)   // start: 0..8 h in 5-min steps
+      d <- Gen.oneOf(0L, 300L, 1200L, 1800L, 3600L, 5400L, 9000L)
+      c <- Gen.oneOf(0.0, 1.0, 2.5, 7.0, 13.0)
+    } yield (new Timestamp(Base + m * 60000L), d, c, k)
+    val args = for {
+      rows <- Gen.choose(1, 12).flatMap(Gen.listOfN(_, row))
+      grid <- Gen.oneOf(
+        ("minutes", 30, false), ("hours", 1, false), ("hours", 2, false),
+        ("hours", 1, true), ("hours", 3, true))
+    } yield (rows, grid)
+    val prop = Prop.forAll(args) { case (rows, (unit, n, cfg)) =>
+      val df = rows.toDF("ts", "duration_sec", "count", "counter")
+      // the configured window clips the random rows on both sides
+      val (start, stop) =
+        if (cfg) ("2024-01-01 01:10:00", "2024-01-01 07:00:00")
+        else ("1970-01-01 00:00:00", "2100-01-01 00:00:00")
+      rowsOf(Rebin(df, unit, n, start, stop, cfg)) ==
+        rowsOf(gridJoinRebin(df, unit, n, start, stop, cfg))
+    }
+    val res = Check.check(
+      Check.Parameters.default.withMinSuccessfulTests(25)
+        .withInitialSeed(Seed(20241017L)), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  private val Base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
+
+  /** The grid-join formulation Rebin shipped before it moved to one
+    * exchange: extents joined back to the input, a generated grid, and a
+    * left join of the grid to the binned sums. Kept here as an
+    * independent model of the same semantics.
+    */
+  private def gridJoinRebin(raw: DataFrame, binningUnit: String, nUnit: Int,
+                            startTime: String, stopTime: String,
+                            gridFromConfig: Boolean): DataFrame = {
+    val unitSec = Map("minutes" -> 60L, "hours" -> 3600L, "days" -> 86400L,
+      "weeks" -> 604800L)(binningUnit)
+    val unit = binningUnit.stripSuffix("s")
+    val binSec = unitSec * nUnit
+    val binUsec = binSec * 1000000L
+    val step = expr(s"INTERVAL '$binSec' SECOND")
+    val in = raw
+      .withColumn("stop_ts", col("ts") + expr("make_interval(0,0,0,0,0,0,duration_sec)"))
+      .where(col("stop_ts") <= lit(stopTime).cast("timestamp") &&
+             col("ts") >= lit(startTime).cast("timestamp") &&
+             col("stop_ts") > col("ts"))
+    val ext =
+      if (gridFromConfig) {
+        val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+        val gendSec = java.time.Duration.between(
+          java.time.LocalDateTime.parse(startTime, fmt),
+          java.time.LocalDateTime.parse(stopTime, fmt)).getSeconds / binSec * binSec
+        in.select("counter").distinct()
+          .select(col("counter"),
+            lit(startTime).cast("timestamp").as("origin"),
+            (lit(startTime).cast("timestamp") +
+              expr(s"INTERVAL '$gendSec' SECOND")).as("gend"))
+      } else
+        in.groupBy("counter")
+          .agg(min("ts").as("mn"), max("stop_ts").as("mx"))
+          .select(col("counter"),
+            date_trunc(unit, col("mn")).as("origin"),
+            date_trunc(unit, col("mx")).as("gend"))
+    val grid = ext.select(col("counter"),
+      explode(sequence(col("origin"), col("gend"), step)).as("bin_start"))
+    val overlapped = in.join(ext, Seq("counter"))
+      .withColumn("i0", expr(s"(unix_micros(ts) - unix_micros(origin)) DIV $binUsec"))
+      .withColumn("i1", least(
+        expr(s"(unix_micros(stop_ts) - 1 - unix_micros(origin)) DIV $binUsec"),
+        expr(s"(unix_micros(gend) - unix_micros(origin)) DIV $binUsec")))
+      .where(col("i1") >= col("i0"))
+      .withColumn("bi", explode(sequence(col("i0"), col("i1"))))
+      .withColumn("bin_start", timestamp_micros(expr(s"unix_micros(origin) + bi * $binUsec")))
+      .withColumn("bin_stop", col("bin_start") + step)
+      .select(col("counter"), col("bin_start"),
+        (col("count") *
+          (unix_micros(least(col("stop_ts"), col("bin_stop"))) -
+           unix_micros(greatest(col("ts"), col("bin_start")))).cast("double") /
+          (unix_micros(col("stop_ts")) - unix_micros(col("ts"))).cast("double")).as("part"))
+    val sums = overlapped.groupBy("counter", "bin_start").agg(sum("part").as("fcount"))
+    val wOrd = Window.partitionBy("counter").orderBy("bin_start")
+    val wAll = Window.partitionBy("counter")
+    grid.join(sums, Seq("counter", "bin_start"), "left")
+      .withColumn("touched", col("fcount").isNotNull)
+      .withColumn("fcount", coalesce(col("fcount"), lit(0.0)))
+      .withColumn("idx", row_number().over(wOrd) - 1)
+      .withColumn("prev", lag("fcount", 1, 0.0).over(wOrd))
+      .withColumn("keep", col("fcount") =!= 0.0 || col("prev") =!= 0.0)
+      .withColumn("last_nz", max(when(col("touched"), col("idx"))).over(wAll))
+      .withColumn("krn", sum(when(col("keep"), 1L).otherwise(0L)).over(wOrd))
+      .where(col("keep") && col("krn") <= col("last_nz") + 1)
+      .select(col("counter"), col("bin_start").as("ts"),
+        lit(binSec.toDouble).as("duration_sec"),
+        Rounding.stableIntTrunc(col("fcount")).as("count"))
   }
 }
