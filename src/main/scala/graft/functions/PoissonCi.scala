@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.commons.math3.special.Gamma
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
 
 /** Equal-tail Poisson confidence-interval width, scipy-convention
   * (reference: `dists.poisson.interval(alpha, mean)[1] - [0]`,
@@ -16,33 +15,62 @@ import org.apache.spark.sql.functions.udf
   * 1e-9 tolerance on the threshold absorbs libm ulp differences between
   * the JVM and DuckDB.
   *
-  * Scale note: O(μ + 40√μ) per *distinct* mean; callers should compute it
-  * over distinct means and join back when means repeat (they do: means are
-  * lagged integer counts). The UDF itself is cheap for the count scales
-  * this engine targets (μ ≲ 10⁵ per bin even at 100 TB of raw events,
-  * because bins are bounded by the grid resolution, not data volume).
+  * Scale note: O(μ + 40√μ) per *distinct* (alpha, mean), and computed
+  * once per JVM: [[width]] is backed by one bounded memo shared by every
+  * [[PoissonCiWidth]] instance in every plan and by the streaming
+  * scorers' scalar calls. Means repeat (they are lagged integer counts or
+  * running averages of them), so after warm-up a row costs one map
+  * lookup. The bound clears the memo when it passes `MemoMax` entries;
+  * refilling is cheap at the count scales this engine targets (μ ≲ 10⁵
+  * per bin even at 100 TB of raw events, because bins are bounded by the
+  * grid resolution, not data volume).
   */
 object PoissonCi {
   private val Tol = 1e-9
+  private val MemoMax = 1 << 16
 
-  /** Smallest k with CDF(k) ≥ q − tol. μ must be > 0, 0 < q < 1. */
-  def ppf(q: Double, mu: Double): Long = {
+  // keyed on the bit patterns, as java.lang.Double keys are: NaN finds
+  // its own entry instead of adding a new one per call
+  private final case class Key(alphaBits: Long, muBits: Long)
+  private val memo = new java.util.concurrent.ConcurrentHashMap[Key, java.lang.Double]()
+
+  /** interval(alpha, μ) upper − lower; equal tails of (1−alpha)/2 each.
+    * μ must be > 0. Memoized JVM-wide on (alpha, μ).
+    */
+  def width(alpha: Double, mu: Double): Double = {
+    val key = Key(java.lang.Double.doubleToLongBits(alpha), java.lang.Double.doubleToLongBits(mu))
+    val w = memo.get(key)
+    if (w != null) w
+    else {
+      val v = computeWidth(alpha, mu)
+      if (memo.size > MemoMax) memo.clear()
+      memo.put(key, v)
+      v
+    }
+  }
+
+  /** ppf(qHi) − ppf(qLo) in one CDF accumulation: ppf(q) = the smallest
+    * k with CDF(k) ≥ q − tol (capped at kMax). qLo < qHi, so the upper
+    * quantile's search continues from where the lower one stopped over
+    * the same sequence of partial sums — both k are exactly those of two
+    * separate searches.
+    */
+  private def computeWidth(alpha: Double, mu: Double): Double = {
+    val qLo = (1.0 - alpha) / 2.0
+    val qHi = 1.0 - qLo
     val lnMu = math.log(mu)
     val kMax = (mu + 40.0 * math.sqrt(mu) + 200.0).toLong
     var k = 0L
     var cdf = math.exp(-mu)
-    while (cdf < q - Tol && k < kMax) {
-      k += 1
-      cdf += math.exp(k * lnMu - mu - Gamma.logGamma(k + 1.0))
-    }
-    k
-  }
-
-  /** interval(alpha, μ) upper − lower; equal tails of (1−alpha)/2 each. */
-  def width(alpha: Double, mu: Double): Double = {
-    val qLo = (1.0 - alpha) / 2.0
-    val qHi = 1.0 - qLo
-    (ppf(qHi, mu) - ppf(qLo, mu)).toDouble
+    def advanceTo(q: Double): Unit =
+      while (cdf < q - Tol && k < kMax) {
+        k += 1
+        cdf += math.exp(k * lnMu - mu - Gamma.logGamma(k + 1.0))
+      }
+    advanceTo(qLo)
+    val kLo = k
+    advanceTo(qHi)
+    (k - kLo).toDouble
   }
 
   /** Null-safe column form: null/≤0 mean → null (callers map to eta 0,

@@ -1,7 +1,9 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.GraftShim
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expression for the equal-tail Poisson CI width
@@ -13,49 +15,35 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * no boxed-function invocation, no UDF null-wrapper, and the projection
   * it appears in stays a single generated loop. `alpha` is part of the
   * expression tree (a plan constant), so Catalyst folds/prunes around it
-  * normally.
+  * normally. Widths come from [[PoissonCi.width]]'s JVM-wide memo, so the
+  * several instances one plan can hold (a pushed-down filter repeats the
+  * projection's) share every computed width.
   */
 case class PoissonCiWidth(child: Expression, alpha: Double)
   extends UnaryExpression {
 
   // callers cast the child to double (see PoissonCi.widthUdf and the
-  // GraftExtensions SQL builder) — ImplicitCastInputTypes is private[sql]
+  // GraftExtensions SQL builder) — ImplicitCastInputTypes is private[sql],
+  // so a direct construction over another type fails analysis here
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "poisson_ci_width"
 
-  // Per-expression-instance memo, re-created on each executor after
-  // deserialization. alpha is fixed per instance, so the key is the bare
-  // boxed mean — no tuple allocation — and the size bound is checked only
-  // on the (rare) miss path, keeping the hot hit path to one CHM get.
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[java.lang.Double, java.lang.Double]()
-
-  def widthOf(mu: Double): Double = {
-    val k = java.lang.Double.valueOf(mu)
-    val w = cache.get(k)
-    if (w != null) w
-    else {
-      val v = PoissonCi.width(alpha, mu)
-      if (cache.size > 65536) cache.clear() // crude bound; refill is cheap
-      cache.put(k, v)
-      v
-    }
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(Seq(child), Seq(DoubleType))
 
   protected override def nullSafeEval(mu: Any): Any = {
     val m = mu.asInstanceOf[Double]
-    if (m <= 0.0) null else widthOf(m)
+    if (m <= 0.0) null else PoissonCi.width(alpha, m)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("poissonCiWidth", this)
     nullSafeCodeGen(ctx, ev, c =>
       s"""
          |if ($c <= 0.0) {
          |  ${ev.isNull} = true;
          |} else {
-         |  ${ev.value} = $ref.widthOf($c);
+         |  ${ev.value} = graft.functions.PoissonCi.width(${alpha}D, $c);
          |}
        """.stripMargin)
   }

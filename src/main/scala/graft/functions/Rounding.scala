@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftShim
 
 /** Numeric trimming helpers mirroring the reference's output conventions. */
 object Rounding {
@@ -17,12 +18,14 @@ object Rounding {
     * of the 2nd significant digit. Engine and oracle use the identical
     * expression on both sides, so the correctness gate is unaffected; this
     * is a documented, deliberate divergence.
+    *
+    * Evaluated by the native [[Trim2]] expression, which reads `x` once
+    * and is bit-identical to the Column form
+    * `when(x > 0, floor(x·r + 0.5) / r).otherwise(0)` with
+    * r = pow(10, 1 − floor(log10 x)).
     */
-  def trim2(x: Column): Column = {
-    val d = lit(1) - floor(log10(x))
-    val r = pow(lit(10.0), d)
-    when(x > 0, floor(x * r + lit(0.5)) / r).otherwise(lit(0.0))
-  }
+  def trim2(x: Column): Column =
+    GraftShim.column(Trim2(GraftShim.expression(x.cast("double"))))
 
   /** Scalar twin of [[trim2]] (used by the streaming scorers); JVM floor/
     * log10/pow are what Spark's column functions call, so results are

@@ -132,11 +132,22 @@ object LexIndex {
     val byKey = Window.partitionBy("bucket", "th", "doc_id")
     val byRun = Window.partitionBy("bucket").orderBy("th", "doc_id")
     exploded
+      // skew: the bucket key spreads DISTINCT terms evenly, but all
+      // postings of one term share its bucket, so a stopword-heavy
+      // bigram makes a hot bucket (one task, one large file). Accepted:
+      // results do not depend on the grid, and the bucket is also the
+      // partition directory the serve prunes to; split hot terms across
+      // a (bucket, salt) exchange if a build ever shows that straggler
       .withColumn("bucket", pmod(col("th"), lit(nb)))
       .repartition(col("bucket"))
       .withColumn("tf", count(lit(1)).over(byKey))
       .withColumn("__pth", lag("th", 1).over(byRun))
       .withColumn("__pdoc", lag("doc_id", 1).over(byRun))
+      // survivor filter preconditions: th is never null (h64 of an
+      // exploded non-null shingle) — `<=>` would merge a run of null th
+      // across documents — and the duplicates of a (th, doc_id) key are
+      // contiguous, which the byRun sort on exactly (th, doc_id) within
+      // a bucket guarantees. A caller feeding its own th must keep both
       .where(!(col("th") <=> col("__pth") && col("doc_id") <=> col("__pdoc")))
       // the stored column order (doc_id, dl, th, tf, meta...) — metadata
       // last, as the legacy meta join produced

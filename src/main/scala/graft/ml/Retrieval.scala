@@ -68,6 +68,12 @@ object Retrieval {
     val byKey = Window.partitionBy("doc_id", "th")
     val byRun = Window.partitionBy("doc_id").orderBy("th")
     terms
+      // skew: every term of one document lands in ONE task, so a giant
+      // document (dl far above the corpus median) is a straggler where a
+      // (doc_id, th) exchange would have spread it. Accepted: one task
+      // holds one document's terms at a time, and results do not depend
+      // on the partitioning — salt or split outlier documents here if a
+      // run ever shows that straggler
       .repartition(col("doc_id"))
       .withColumn("tf", count(lit(1)).over(byKey))
       .withColumn("__pth", lag("th", 1).over(byRun))

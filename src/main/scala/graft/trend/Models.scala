@@ -12,8 +12,11 @@ import org.apache.spark.sql.functions._
   *
   * The reference drives a mutable model object point-by-point per counter
   * (analysis.py:176-186); in batch each model is a pure column pipeline
-  * over Window.partitionBy(counter).orderBy(ts) — no state, fully
-  * whole-stage-codegen'd except the Poisson-CI scalar UDF.
+  * over Window.partitionBy(counter).orderBy(ts) — no state, and fully
+  * whole-stage-codegen'd: the Poisson CI width and the eta trim are
+  * native expressions ([[graft.functions.PoissonCiWidth]],
+  * [[graft.functions.Trim2]]). Each model materializes the columns its
+  * eta reads more than once, so every kernel runs once per row.
   */
 object Models {
   private def w = Window.partitionBy("counter").orderBy("ts")
@@ -134,12 +137,16 @@ object Models {
       covar_pop(col("rn").cast("double"), col("averaged")).over(wReg) /
         var_pop(col("rn").cast("double")).over(wReg)
     val slopeNormed = if (normByMean) slope / avg(col("averaged")).over(wReg) else slope
-    // epsilon floor: a perfectly flat window yields slope ~1e-17 instead of
-    // 0 from fp accumulation, and the exact residue differs per engine;
-    // real slopes at any data scale are many orders above 1e-12
-    val eta = when(col("rn") >= minPoints && abs(slopeNormed) >= 1e-12, slopeNormed)
-      .otherwise(lit(0.0))
-    analyzed(df, eta)
+    // the slope is materialized once: a window expression repeated through
+    // when() and trim2 is not deduplicated, so each copy ran in the
+    // WindowExec. The rn guard stays inside — unguarded, the first rows'
+    // zero var_pop divides by zero under ANSI. Epsilon floor: a perfectly
+    // flat window yields slope ~1e-17 instead of 0 from fp accumulation,
+    // and the exact residue differs per engine; real slopes at any data
+    // scale are many orders above 1e-12
+    val sloped = df.withColumn("slope", when(col("rn") >= minPoints, slopeNormed))
+    val eta = when(abs(col("slope")) >= 1e-12, col("slope")).otherwise(lit(0.0))
+    analyzed(sloped, eta)
   }
 
   // ------------------------------- oracle SQL -------------------------------

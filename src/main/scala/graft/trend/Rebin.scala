@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *    count·overlap/size to each overlapped bin (analysis.py:110-126) — one
   *    proportional formula covers both (contained ⇒ overlap = size);
   *  - input reaching past the last grid stop is silently truncated
-  *    (the IndexError pass at analysis.py:123-124) — the bin-index cap `iN`
+  *    (the IndexError pass at analysis.py:123-124) — the bin-index cap `gi`
   *    reproduces it;
   *  - densify: grid bins with no data get count 0 (analysis.py:139-143);
   *  - zero-trim (analysis.py:131-154): a row is kept iff its count or its
@@ -32,16 +32,22 @@ import org.apache.spark.sql.functions._
   *    a running kept-row counter and a touched flag;
   *  - counts are truncated to int (analysis.py:146-150).
   *
-  * Scale design: the overlapped bins of each input row are computed in
-  * closed form (bin index range relative to the counter's grid origin) and
-  * exploded — O(rows × bins overlapped), never O(rows × grid). The only
-  * joins are (a) input × per-counter extents (one tiny row per counter;
-  * AQE picks a broadcast at runtime — no unconditional hint, so a
-  * many-million-counter corpus degrades to a shuffle join instead of
-  * failing the driver) and (b) grid × binned sums for densify, an
-  * equi-join of two relations hash-partitioned on the same key. One hash
-  * aggregation on (counter, bin), two window passes partitioned by
-  * counter. No driver-side collection; skew across counters is AQE's.
+  * Scale design: one scan of the input and ONE exchange, of the raw
+  * rows hash-partitioned by counter — raw rows, not map-side partial
+  * sums, because every later step reuses that partitioning instead of
+  * shuffling again:
+  *  - the per-counter extent (origin, gend) is a min/max window over the
+  *    counter partition, not a separate aggregation joined back;
+  *  - each row's overlapped bins are computed in closed form (a bin index
+  *    range from the counter's origin) and exploded — O(rows × bins
+  *    overlapped), never O(rows × grid);
+  *  - the (counter, bin) hash aggregation runs in place on the counter
+  *    partitioning and carries the extent;
+  *  - densify needs no grid and no join: each touched bin emits the
+  *    untouched bins up to the next touched one (`lead`) as zero rows;
+  *  - the zero-trim windows run over the same partitions.
+  * No driver-side collection. Skew: a hot counter's rows all land in one
+  * task — its series is one window partition whatever the exchange.
   */
 object Rebin {
   private val unitSeconds = Map(
@@ -79,7 +85,6 @@ object Rebin {
     val unit = binningUnit.stripSuffix("s")
     val binSec = unitSeconds(binningUnit) * nUnit
     val binUsec = binSec * 1000000L
-    val step = expr(s"INTERVAL '$binSec' SECOND")
 
     // range filter drops whole straddling rows (analysis.py:65-68);
     // stop_ts > ts also drops degenerate zero-duration rows, which the
@@ -90,55 +95,60 @@ object Rebin {
       .where(col("stop_ts") <= lit(stopTime).cast("timestamp") &&
              col("ts") >= lit(startTime).cast("timestamp") &&
              col("stop_ts") > col("ts"))
+      // the one exchange: raw rows by counter. The extent window, the
+      // (counter, bin) aggregation and every window below reuse it
+      .repartition(col("counter"))
 
-    // grid extent, one row per counter. Observed mode: origin =
-    // trunc(min start), last bin start = trunc(max stop). Config mode:
-    // the same constant (origin, gend) for every counter present — the
-    // grid is a function of config alone, so it's a pair of literals.
-    val ext =
+    // grid extent per counter. Observed mode: origin = trunc(min
+    // start), last bin start = trunc(max stop). Config mode: the same
+    // constant (origin, gend) for every counter — a pair of literals.
+    val wAll = Window.partitionBy("counter")
+    val (origin, gend) =
       if (gridFromConfig) {
         val gendSec = lastConfigBin(startTime, stopTime, binSec) * binSec
-        in.select("counter").distinct()
-          .select(col("counter"),
-            lit(startTime).cast("timestamp").as("origin"),
-            (lit(startTime).cast("timestamp") +
-              expr(s"INTERVAL '$gendSec' SECOND")).as("gend"))
+        (lit(startTime).cast("timestamp"),
+          lit(startTime).cast("timestamp") + expr(s"INTERVAL '$gendSec' SECOND"))
       } else
-        in.groupBy("counter")
-          .agg(min("ts").as("mn"), max("stop_ts").as("mx"))
-          .select(col("counter"),
-            date_trunc(unit, col("mn")).as("origin"),
-            date_trunc(unit, col("mx")).as("gend"))
+        (date_trunc(unit, min("ts").over(wAll)),
+          date_trunc(unit, max("stop_ts").over(wAll)))
 
-    // the dense uniform grid, generated (not joined against input)
-    val grid = ext.select(col("counter"),
-      explode(sequence(col("origin"), col("gend"), step)).as("bin_start"))
-
-    // closed-form overlapped-bin range per input row: bins i with
-    // origin + i·bin < stop_ts and origin + (i+1)·bin > ts, capped to the
-    // grid (iN). origin <= min(ts) by construction so i0 >= 0.
-    val overlapped = in.join(ext, Seq("counter"))
-      .withColumn("i0", expr(s"(unix_micros(ts) - unix_micros(origin)) DIV $binUsec"))
+    // closed-form overlapped-bin range per input row, in grid indices:
+    // bins i with origin + i·bin < stop_ts and origin + (i+1)·bin > ts,
+    // capped to the last grid bin gi. origin <= min(ts) by construction so
+    // i0 >= 0. Each (counter, i) sum carries the counter's grid extent.
+    val sums = in
+      .select(col("*"), unix_micros(origin).as("o_us"), unix_micros(gend).as("g_us"))
+      .withColumn("gi", expr(s"(g_us - o_us) DIV $binUsec"))
+      .withColumn("i0", expr(s"(unix_micros(ts) - o_us) DIV $binUsec"))
       .withColumn("i1", least(
-        expr(s"(unix_micros(stop_ts) - 1 - unix_micros(origin)) DIV $binUsec"),
-        expr(s"(unix_micros(gend) - unix_micros(origin)) DIV $binUsec")))
+        expr(s"(unix_micros(stop_ts) - 1 - o_us) DIV $binUsec"), col("gi")))
       .where(col("i1") >= col("i0"))
       .withColumn("bi", explode(sequence(col("i0"), col("i1"))))
-      .withColumn("bin_start", timestamp_micros(expr(s"unix_micros(origin) + bi * $binUsec")))
-      .withColumn("bin_stop", col("bin_start") + step)
-      .select(col("counter"), col("bin_start"),
-        (col("count") *
-          (unix_micros(least(col("stop_ts"), col("bin_stop"))) -
-           unix_micros(greatest(col("ts"), col("bin_start")))).cast("double") /
-          (unix_micros(col("stop_ts")) - unix_micros(col("ts"))).cast("double")).as("part"))
+      .withColumn("b0", col("o_us") + col("bi") * binUsec)
+      .withColumn("part", col("count") *
+        (least(unix_micros(col("stop_ts")), col("b0") + binUsec) -
+          greatest(unix_micros(col("ts")), col("b0"))).cast("double") /
+        (unix_micros(col("stop_ts")) - unix_micros(col("ts"))).cast("double"))
+      .groupBy("counter", "bi", "o_us", "gi")
+      .agg(sum("part").as("fcount"))
 
-    val sums = overlapped.groupBy("counter", "bin_start").agg(sum("part").as("fcount"))
+    // densify without a grid: each touched bin also emits the untouched
+    // bins up to the next touched one (the last, up to gi) as zero rows;
+    // the first also emits the leading gap from the grid origin (config
+    // mode — observed mode always touches bin 0), which idx counts
+    val wBin = Window.partitionBy("counter").orderBy("bi")
+    val dense = sums
+      .select(col("*"),
+        when(lag("bi", 1).over(wBin).isNull, lit(0L)).otherwise(col("bi")).as("e0"),
+        coalesce(lead("bi", 1).over(wBin) - 1, col("gi")).as("e1"))
+      .withColumn("e", explode(sequence(col("e0"), col("e1"))))
+      .select(col("counter"),
+        timestamp_micros(col("o_us") + col("e") * binUsec).as("bin_start"),
+        (col("e") === col("bi")).as("touched"),
+        when(col("e") === col("bi"), col("fcount")).otherwise(lit(0.0)).as("fcount"))
 
     val wOrd = Window.partitionBy("counter").orderBy("bin_start")
-    val wAll = Window.partitionBy("counter")
-    grid.join(sums, Seq("counter", "bin_start"), "left")
-      .withColumn("touched", col("fcount").isNotNull)
-      .withColumn("fcount", coalesce(col("fcount"), lit(0.0)))
+    dense
       .withColumn("idx", row_number().over(wOrd) - 1)
       .withColumn("prev", lag("fcount", 1, 0.0).over(wOrd))
       .withColumn("keep", col("fcount") =!= 0.0 || col("prev") =!= 0.0)

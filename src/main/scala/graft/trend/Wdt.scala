@@ -108,9 +108,12 @@ object Wdt {
       .withColumn("rn", row_number().over(w))
       .withColumn("runsum", sum("count").over(w.rowsBetween(Window.unboundedPreceding, 0)))
       .withColumn("trail", collect_list(col("count").cast("double")).over(wTrail))
-    val etaRaw = when(col("rn") < cfg.referenceLength || col("runsum") === 0.0, lit(0.0))
-      .otherwise(etaUdf(col("trail")))
-    df.withColumn("eta", Rounding.trim2(etaRaw))
+    // the raw eta is its own column and the native trim reads it once, so
+    // the filter Detect pushes down runs the template kernel once per row
+    df.withColumn("eta_raw",
+        when(col("rn") < cfg.referenceLength || col("runsum") === 0.0, lit(0.0))
+          .otherwise(etaUdf(col("trail"))))
+      .withColumn("eta", Rounding.trim2(col("eta_raw")))
       .select("counter", "ts", "count", "eta")
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.errors.QueryExecutionErrors
 import org.apache.spark.sql.types.DataType
 
 /** Column ↔ catalyst Expression bridge. Spark 4 made these conversions
@@ -26,4 +27,10 @@ object GraftShim {
   def checkInputTypes(inputs: Seq[Expression],
                       expected: Seq[DataType]): TypeCheckResult =
     ExpectsInputTypes.checkInputDataTypes(inputs, expected)
+
+  /** The DIVIDE_BY_ZERO error Spark's ANSI `/` raises, for native
+    * expressions that reproduce a division (see [[graft.functions.Trim2]]).
+    */
+  def divideByZero(): ArithmeticException =
+    QueryExecutionErrors.divideByZeroError(null)
 }

@@ -25,6 +25,28 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"))
   }
 
+  test("rebin scans its input once and exchanges once, without a join") {
+    // the extent window, the (counter, bin) aggregation and the zero-trim
+    // windows all ride one hash partitioning of the raw rows by counter;
+    // a second exchange, a join or a second scan means the extent or the
+    // grid went back to being computed beside the input
+    val p = plan("trend_rebin")
+    assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, s"expected one exchange:\n$p")
+    assert(!p.contains("Join") && !p.contains("BroadcastExchange"), s"rebin joins:\n$p")
+    assert("FileScan".r.findAllIn(p).size == 1, s"expected one input scan:\n$p")
+  }
+
+  test("linReg computes each regression aggregate once, in the Window") {
+    // the slope is materialized once; repeated through when() and trim2
+    // each copy of the window aggregates ran again in the WindowExec
+    for (q <- Seq("trend_linreg", "trend_linreg_windowed"); f <- Seq("covar_pop", "var_pop")) {
+      val p = plan(q)
+      val hits = p.split("\n").toSeq.flatMap(l => s"\\b$f\\(".r.findAllIn(l).map(_ => l))
+      assert(hits.size == 1 && hits.head.contains("Window ["),
+        s"$q: expected one $f in the Window:\n$p")
+    }
+  }
+
   test("dedup candidate generators stay free of cross joins") {
     for (q <- Seq("dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash")) {
       val p = plan(q)
