@@ -89,12 +89,16 @@ object Rebin {
     // range filter drops whole straddling rows (analysis.py:65-68);
     // stop_ts > ts also drops degenerate zero-duration rows, which the
     // proportional split (count·overlap/size) cannot define — filtered
-    // identically in the oracle CTE so both engines agree on such input
+    // identically in the oracle CTE so both engines agree on such input.
+    // A null counter forms no series: the oracle's equi join on counter
+    // drops it, while the partitioning, windows and grouping below would
+    // all treat null as one more counter
     val in = raw
       .withColumn("stop_ts", col("ts") + expr("make_interval(0,0,0,0,0,0,duration_sec)"))
       .where(col("stop_ts") <= lit(stopTime).cast("timestamp") &&
              col("ts") >= lit(startTime).cast("timestamp") &&
-             col("stop_ts") > col("ts"))
+             col("stop_ts") > col("ts") &&
+             col("counter").isNotNull)
       // the one exchange: raw rows by counter. The extent window, the
       // (counter, bin) aggregation and every window below reuse it
       .repartition(col("counter"))
@@ -135,17 +139,20 @@ object Rebin {
     // densify without a grid: each touched bin also emits the untouched
     // bins up to the next touched one (the last, up to gi) as zero rows;
     // the first also emits the leading gap from the grid origin (config
-    // mode — observed mode always touches bin 0), which idx counts
+    // mode — observed mode always touches bin 0), which idx counts. A bin
+    // whose rows all carry a null count sums to null and stays an
+    // untouched zero, as the oracle's left join of the grid leaves it
     val wBin = Window.partitionBy("counter").orderBy("bi")
     val dense = sums
       .select(col("*"),
         when(lag("bi", 1).over(wBin).isNull, lit(0L)).otherwise(col("bi")).as("e0"),
         coalesce(lead("bi", 1).over(wBin) - 1, col("gi")).as("e1"))
       .withColumn("e", explode(sequence(col("e0"), col("e1"))))
+      .withColumn("touched", col("e") === col("bi") && col("fcount").isNotNull)
       .select(col("counter"),
         timestamp_micros(col("o_us") + col("e") * binUsec).as("bin_start"),
-        (col("e") === col("bi")).as("touched"),
-        when(col("e") === col("bi"), col("fcount")).otherwise(lit(0.0)).as("fcount"))
+        col("touched"),
+        when(col("touched"), col("fcount")).otherwise(lit(0.0)).as("fcount"))
 
     val wOrd = Window.partitionBy("counter").orderBy("bin_start")
     dense

@@ -122,6 +122,35 @@ class RebinSpec extends SparkSpec {
       ("b", "2024-01-02 00:00:00.0", 3600.0, 9.0)))
   }
 
+  test("rows with a null counter produce no series") {
+    // the oracle's equi join on counter drops them (null never equals
+    // null); in both grid modes the null rows must not form a series of
+    // their own, nor move the other counters' grids. Configured grid
+    // 00:00..03:00: the last touched bin 01:00 has idx 1, so the slice
+    // keeps the compacted [4, 0]
+    val rows = Seq(
+      ("2024-01-01 01:00:00", 3600L, 4.0, "a"),
+      ("2024-01-01 00:00:00", 3600L, 9.0, null),
+      ("2024-01-01 05:00:00", 3600L, 2.0, null))
+    assert(run(rows) == Seq(("a", "2024-01-01 01:00:00.0", 3600.0, 4.0)))
+    assert(rowsOf(Rebin(frame(rows), "hours", 1,
+        startTime = "2024-01-01 00:00:00", stopTime = "2024-01-01 03:00:00",
+        gridFromConfig = true)) == Seq(
+      ("a", "2024-01-01 01:00:00.0", 3600.0, 4.0),
+      ("a", "2024-01-01 02:00:00.0", 3600.0, 0.0)))
+  }
+
+  test("a bin reached only by null counts is an untouched zero") {
+    // the null-count row still sets the extent (grid to 03:00), but its
+    // bin sums to null, which the oracle's grid left join leaves as an
+    // untouched 0.0: the trim bound stays at the 00:00 bin
+    val out = rowsOf(Rebin(Seq(
+        (ts("2024-01-01 00:00:00"), 3600L, Some(5.0), "a"),
+        (ts("2024-01-01 02:00:00"), 3600L, None, "a"))
+      .toDF("ts", "duration_sec", "count", "counter"), "hours", 1))
+    assert(out == Seq(("a", "2024-01-01 00:00:00.0", 3600.0, 5.0)))
+  }
+
   test("trailing bin touched by a zero-count input bounds the trim") {
     // reference: last_non_zero_ct_idx is set whenever the bin is TOUCHED by
     // any input row, even with accumulated count 0.0 (analysis.py:140-142),
@@ -228,10 +257,10 @@ class RebinSpec extends SparkSpec {
 
   test("property: random small interval sets rebin as the grid-join formulation does") {
     val row = for {
-      k <- Gen.oneOf("a", "b", "c")
+      k <- Gen.oneOf("a", "b", "c", null)
       m <- Gen.choose(0, 96).map(_ * 5L)   // start: 0..8 h in 5-min steps
       d <- Gen.oneOf(0L, 300L, 1200L, 1800L, 3600L, 5400L, 9000L)
-      c <- Gen.oneOf(0.0, 1.0, 2.5, 7.0, 13.0)
+      c <- Gen.oneOf(Some(0.0), Some(1.0), Some(2.5), Some(7.0), Some(13.0), None)
     } yield (new Timestamp(Base + m * 60000L), d, c, k)
     val args = for {
       rows <- Gen.choose(1, 12).flatMap(Gen.listOfN(_, row))
