@@ -78,12 +78,20 @@ object ProfileQuery {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
     }
+    // drain the listener bus before each flip of `capture`: its events
+    // arrive asynchronously, so a warm-up's late stage events would
+    // otherwise land in the timed window and the timed run's own would
+    // land after it closed (undercounted stages, tasks and shuffle bytes)
+    def drain(): Unit =
+      org.apache.spark.sql.graft.GraftShim.drainListenerBus(spark.sparkContext)
     names.foreach { name =>
       materialize(name); materialize(name) // warm-ups (untimed, uncaptured)
+      drain()
       jobs.clear(); resetPhys(); capture = true
       val t0 = System.nanoTime()
       materialize(name)
       val wall = (System.nanoTime() - t0) / 1e9
+      drain()
       capture = false
       import scala.jdk.CollectionConverters._
       val done = jobs.values.asScala.toSeq.filter(_.end > 0)

@@ -27,14 +27,17 @@ object Rounding {
   def trim2(x: Column): Column =
     GraftShim.column(Trim2(GraftShim.expression(x.cast("double"))))
 
-  /** Scalar twin of [[trim2]] (used by the streaming scorers); JVM floor/
-    * log10/pow are what Spark's column functions call, so results are
-    * bit-identical to the batch path.
+  /** Scalar twin of [[trim2]] (used by the streaming scorers), step for
+    * step the [[Trim2]] kernel: `StrictMath` log10/pow as Spark's
+    * `log10`/`pow` use, long-saturating floors as Spark's `floor(double)`
+    * returns, and NaN → 0.0. Bit-identical to the batch path on every
+    * finite double and NaN; +Inf, where the batch division by a zero
+    * scale raises (ANSI) or is null, gives NaN.
     */
   def trim2Scalar(x: Double): Double =
-    if (x > 0) {
-      val r = math.pow(10.0, 1 - math.floor(math.log10(x)))
-      math.floor(x * r + 0.5) / r
+    if (x > 0 || x.isNaN) {
+      val r = StrictMath.pow(10.0, (1L - math.floor(StrictMath.log10(x)).toLong).toDouble)
+      math.floor(x * r + 0.5).toLong.toDouble / r
     } else 0.0
 
   /** The same expression as SQL text, for DuckDB oracle queries. */

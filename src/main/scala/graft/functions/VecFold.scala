@@ -1,10 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.graft.GraftShim
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Codegen'd vector folds over `array<double>` columns — the inner loop of
   * every embedding operator (ANN scoring, IVF assignment, PQ ADC).
@@ -23,8 +25,12 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * oracles depend on it): a strict left-to-right IEEE-754 fold, null if
   * either array is null, null on length mismatch (`zip_with` null-pads the
   * shorter side, which poisons the sum), and null if any element is null.
+  * Both inputs must be `array<double>`; anything else fails at analysis,
+  * not as a ClassCastException in an executor task.
   */
 abstract class VecFold extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(children, Seq(ArrayType(DoubleType), ArrayType(DoubleType)))
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
@@ -88,10 +94,8 @@ case class L2SqFold(left: Expression, right: Expression) extends VecFold {
 }
 
 object VecFold {
-  import org.apache.spark.sql.graft.GraftShim
-
-  /** Column API. Callers ensure both sides are `array<double>` (the ml
-    * entry points cast at the edge, same as before).
+  /** Column API. Callers cast both sides to `array<double>` at the edge
+    * (the ml entry points do; the SQL registrations cast for the caller).
     */
   def dot(a: Column, b: Column): Column =
     GraftShim.column(DotFold(GraftShim.expression(a), GraftShim.expression(b)))

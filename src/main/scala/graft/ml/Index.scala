@@ -3,7 +3,6 @@ package graft.ml
 import graft.functions.{VecFold, VecQuant}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.graft.GraftShim
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persisted ANN indexes: build ONCE, serve every later query batch from
@@ -71,6 +70,14 @@ import org.apache.spark.sql.functions._
   * same [[Similarity.withCellRanks]] pass, persisted), so divergence is
   * confined to query probe sets and is measured by the
   * [[Similarity.ivfAssignAgreement]] convention.
+  *
+  * Serving: every `*TopKIndexed` serve is one path ([[serve]]) — the
+  * probe set, the masked candidate scan of the coding's kind
+  * ([[Serve.candidates]]), the coding's `score`, the two-phase top-k in
+  * the coding's order ([[Similarity.topK]]), and for the rerank serves
+  * the exact refine ([[refine]]), which is the flat coding's score over
+  * the shortlisted raw rows. A serve flag (filter, time travel, refine)
+  * is threaded through that one path, for every coding at once.
   */
 object Index {
 
@@ -179,8 +186,6 @@ object Index {
   private def scanKind(kinds: Set[String]): Option[String] =
     Seq(PostingsKind, PqCodesKind, SqCodesKind).find(kinds)
 
-  private def metaPath(path: String) = s"$path/meta"
-
   /** LIVE quantizer directories — every read resolves through the
     * generation machinery (a rebuilt store's quantizers live in
     * `centroids_v<n>`; a never-rebuilt store falls through to the flat
@@ -197,7 +202,7 @@ object Index {
     * `residual`); stores written before the marker existed are absolute.
     */
   private[graft] def isResidual(spark: SparkSession, path: String): Boolean =
-    buildMetaOf(readMetaRow(spark, metaPath(path))).residual
+    new Markers(spark, path).config("meta").residual
 
   /** A store's build configuration, read back from its marker table —
     * what [[rebuild]] must re-invoke the save with. Markers written
@@ -364,6 +369,74 @@ object Index {
     def config(name: String): BuildMeta = buildMetaOf(row(name))
   }
 
+  /** One serve's query side, each part computed once: the quantizers,
+    * the normalized queries `qn`, the (query_id, cell) probe pairs from
+    * the exact flat scan over the stored centroids (ties and 9-dp
+    * rounding exactly as the inline path), the probed-cell list the
+    * candidate scan and the refine both prune to, and the exact kernel's
+    * query projection `qv`.
+    */
+  private final class Serve(val spark: SparkSession, val path: String,
+                            val queries: DataFrame, nProbe: Int) {
+    val q = new Quantizers(spark, path)
+    val qn: DataFrame = Similarity.normed(queries)
+    val probes: DataFrame = {
+      val cents = Similarity.collectCentroids(q.cents)
+      Similarity.withCellRanks(qn, cents.length, keep = nProbe,
+        twoLevelMin = Int.MaxValue, seedArr = cents)
+        .select(col("vec_id").as("query_id"),
+          explode(slice(col("cells"), 1, nProbe)).as("cell"))
+    }
+    lazy val cells: Array[Long] =
+      probes.select("cell").distinct().collect().map(_.getLong(0))
+    lazy val qv: DataFrame = qn.select(col("vec_id").as("query_id"),
+      col("v").as("qv"), col("norm").as("qnorm"))
+
+    /** The ONE candidate scan: the live `kind` rows of the probed cells,
+      * with `candWhere` and the time-travel bound pushed into the scan,
+      * then the tombstone mask — applied BEFORE ranking, so a deleted row
+      * never consumes a top-k slot (rank-then-filter would return short
+      * results).
+      */
+    def candidates(kind: String, candWhere: Column,
+                   asOfSeq: Option[Long]): DataFrame =
+      Tombstones.mask(
+        asOfCandidates(prunedToProbes(spark, liveDir(spark, path, kind), cells)
+          .where(candWhere), asOfSeq),
+        asOfTombstones(spark, path, asOfSeq), "vec_id")
+
+    /** Candidates paired with every query probing their cell; a stored
+      * vector with the query's own id is excluded from its result (the
+      * inline self-exclusion contract).
+      */
+    def pairs(c: DataFrame): DataFrame =
+      c.join(broadcast(probes), Seq("cell")).where(col("vec_id") =!= col("query_id"))
+  }
+
+  /** The 6-dp safe cosine of `x` (norm `xn`) against `qx` (norm `qn`). */
+  private def cosine(x: Column, xn: Column, qx: Column, qn: Column): Column =
+    round(Similarity.safeCosine(VecFold.dot(x, qx), xn, qn), 6)
+
+  /** (query_id, neighbor_id = `id`, `score`) of `pairs` joined to the
+    * broadcast query-side rows `qside`.
+    */
+  private def against(pairs: DataFrame, qside: DataFrame, id: String,
+                      score: Column): DataFrame =
+    pairs.join(broadcast(qside), "query_id")
+      .select(col("query_id"), col(id).as("neighbor_id"), score)
+
+  /** The absolute int8 codings' score: the exact integer dot of the
+    * packed codes against the query's packed rows `qrows` (vec_id, qb),
+    * times the stored rescale factor. |q| ≤ 127 keeps every product and
+    * the sum exact in Long, so the score is order-free and
+    * bit-reproducible. A rank-only surrogate, not a true cosine: the
+    * query-side factor is constant per query and cannot reorder.
+    */
+  private def codeDot(pairs: DataFrame, qrows: DataFrame,
+                      name: String): DataFrame =
+    against(pairs, qrows.select(col("vec_id").as("query_id"), col("qb").as("qqb")),
+      "vec_id", (VecQuant.byteDot(col("qb"), col("qqb")) * col("r")).as(name))
+
   /** One data CODING of a dense store (the layout table above): the
     * directory `kind` it writes, its `core` (non-metadata) columns, the
     * `marker` recording its configuration, and `rows` — the (vec_id, v,
@@ -382,11 +455,25 @@ object Index {
       * (which already carry the metadata) instead of the assignment.
       */
     def fromPostings: Boolean = false
+    /** Serve: the masked candidates `c` of this kind scored against the
+      * query batch → (query_id, neighbor_id, [[scoreCol]]), ranked by
+      * [[order]].
+      */
+    def score(c: DataFrame, s: Serve): DataFrame
+    def scoreCol: String = "cosine"
+    def order: Seq[Column] = Seq(desc(scoreCol), asc("neighbor_id"))
   }
 
   /** IVF-Flat: the assignment itself — raw vectors, the refine flavor. */
   private case object Flat extends Coding(PostingsKind, postingsCore, "ivf_meta") {
     def rows(a: DataFrame, q: Quantizers): DataFrame = a
+    def score(c: DataFrame, s: Serve): DataFrame = exact(s.pairs(c), "vec_id", s)
+    /** The exact-cosine kernel, shared with [[refine]]: rows carrying
+      * (query_id, `id`, v, norm) against the query projection.
+      */
+    def exact(rows: DataFrame, id: String, s: Serve): DataFrame =
+      against(rows, s.qv, id,
+        cosine(col("v"), col("norm"), col("qv"), col("qnorm")).as(scoreCol))
   }
 
   /** SQ8 — per-vector int8 codes with [[sqRows]]' conventions (per-vector
@@ -398,6 +485,11 @@ object Index {
     * any clustered corpus an order of magnitude finer for the same byte,
     * and unlike residual PQ with NO trained codebook; `r` is the residual
     * scale (reconstruction x̂ = c + qb·r/127).
+    * The serve scores by the marker's coding (a residual store ranked by
+    * the absolute integer dot would be silently garbage): residual — the
+    * true cosine of the dequantized candidate against the FLOAT query
+    * (asymmetric distance); absolute — [[codeDot]], rank-equal to
+    * [[Similarity.int8TopK]] restricted to the probed cells.
     */
   private final case class Sq(residual: Boolean)
       extends Coding(SqCodesKind, sqCodesCore, "sq_meta") {
@@ -406,6 +498,15 @@ object Index {
         Seq(col("vec_id"), col("cell")))
       else int8Rows(a, col("v"), rescale(col("norm")),
         Seq(col("vec_id"), col("cell")))
+    override def scoreCol: String = "score"
+    def score(c: DataFrame, s: Serve): DataFrame =
+      if (residual) {
+        val xh = c.join(broadcast(s.q.cents.select(col("cid").as("cell"), col("cv"))),
+            "cell")
+          .withColumn("xh", VecQuant.reconstruct(col("cv"), col("qb"), col("r")))
+        against(s.pairs(xh), s.qv, "vec_id", cosine(col("xh"),
+          sqrt(VecFold.dot(col("xh"), col("xh"))), col("qv"), col("qnorm")).as(scoreCol))
+      } else codeDot(s.pairs(c), sqRows(s.queries), scoreCol)
   }
 
   /** PQ codes — seeded, trained or residual (`cfg`). At build the
@@ -416,6 +517,11 @@ object Index {
     * seed kernel. Otherwise (every append) the batch is encoded against
     * the FROZEN stored codebook. Either way the encode input is the
     * assignment's rows — no corpus re-scan, no re-attach join.
+    * The serve ranks by ADC: a per-query lookup table of 9-dp-scaled
+    * int64 squared distances from each query subvector to each codeword
+    * (residual: per (query, probed cell), over the query's own residual —
+    * nq·nProbe·nSub·nCode entries, query-bounded), summed exactly over a
+    * candidate's codes; no raw corpus vector is read.
     */
   private final case class Pq(cfg: BuildMeta, atBuild: Boolean = false)
       extends Coding(PqCodesKind, pqCodesCore, "meta") {
@@ -447,6 +553,32 @@ object Index {
         }
       codebook.write.mode("overwrite").parquet(codewordsPath(dir))
     }
+    override def scoreCol: String = "adc_e9"
+    override def order: Seq[Column] = Seq(asc(scoreCol), asc("neighbor_id"))
+    def score(c: DataFrame, s: Serve): DataFrame = {
+      // the stored codeword width IS the subspace width, dim / nSub, on
+      // seeded, trained and residual codebooks alike
+      val w = size(col("cw"))
+      def d2i(x: Column): Column = floor(VecFold.l2sq(
+          slice(x, col("sub").cast("int") * w + 1, w), col("cw")) * 1e9 + 0.5)
+        .cast("long").as("d2i")
+      val qv = s.qn.select(col("vec_id").as("query_id"), col("v"))
+      val (lut, keys) =
+        if (cfg.residual) (s.probes
+          .join(broadcast(s.q.cents.select(col("cid").as("cell"), col("cv"))), "cell")
+          .join(qv, "query_id")
+          .select(col("query_id"), col("cell"), VecQuant.sub(col("v"), col("cv")).as("rv"))
+          .crossJoin(broadcast(s.q.codewords))
+          .select(col("query_id"), col("cell"), col("sub"), col("code"), d2i(col("rv"))),
+          Seq("query_id", "cell", "sub", "code"))
+        else (qv.crossJoin(broadcast(s.q.codewords))
+          .select(col("query_id"), col("sub"), col("code"), d2i(col("v"))),
+          Seq("query_id", "sub", "code"))
+      s.pairs(c.select("vec_id", "sub", "code", "cell"))
+        .join(broadcast(lut), keys)
+        .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
+        .agg(sum("d2i").as(scoreCol))
+    }
   }
 
   /** The matryoshka prefix flavor: the first `dims` dimensions of `v` —
@@ -468,17 +600,36 @@ object Index {
       if (quantized) int8Rows(p, col("pv"), rescale(col("pn")), keep, meta)
       else p.select(keep ++ Seq(col("pv").as("vp"), col("pn").as("vpn")) ++ meta: _*)
     }
+    /** The shortlist score: the prefix cosine exactly as
+      * [[Similarity.matryoshkaRecall]] evaluates it, or on the quantized
+      * tier [[codeDot]] over the query's packed prefix ([[mrlSqRows]]) —
+      * a rank-only surrogate, all a shortlist that feeds the exact refine
+      * needs.
+      */
+    def score(c: DataFrame, s: Serve): DataFrame =
+      if (quantized) codeDot(s.pairs(c), mrlSqRows(s.queries, dims), scoreCol)
+      else against(s.pairs(c), s.queries.select(col("vec_id").as("query_id"),
+            slice(col("embedding").cast("array<double>"), 1, dims).as("qpv"))
+          .withColumn("qpn", sqrt(VecFold.dot(col("qpv"), col("qpv")))),
+        "vec_id", cosine(col("vp"), col("vpn"), col("qpv"), col("qpn")).as(scoreCol))
   }
 
   /** The coding a store's `kind` directory holds, configured from its
-    * marker.
+    * marker. MRL markers written before the `quantized` column are
+    * raw-prefix.
     */
   private def codingOf(kind: String, m: Markers): Coding =
     kind match {
       case PostingsKind => Flat
       case PqCodesKind => Pq(m.config("meta"))
       case SqCodesKind => Sq(m.config("sq_meta").residual)
-      case MrlCodesKind => mrlOf(m.row("mrl_meta"), m.path)
+      case MrlCodesKind => m.row("mrl_meta") match {
+        case None => throw new IllegalArgumentException(
+          s"no MRL marker at ${m.path}/mrl_meta — not an MRL store")
+        case Some((cols, row)) =>
+          Mrl(row.getInt(row.fieldIndex("prefix_dims")),
+            cols.contains("quantized") && row.getBoolean(row.fieldIndex("quantized")))
+      }
     }
 
   /** (vec_id, v − c[cell], cell): the residual codings' encode input. */
@@ -736,23 +887,6 @@ object Index {
       .select(col("vec_id"), col("sub").cast("long").as("sub"), col("code"),
         col("cell"))
 
-  /** (query_id, cell) probe pairs + the normalized query table: the
-    * query-side coarse ranking, exact flat scan over the stored
-    * centroids (ties and 9-dp rounding exactly as the inline path).
-    */
-  private def probeSet(spark: SparkSession, path: String, queries: DataFrame,
-                       nProbe: Int): (DataFrame, DataFrame) = {
-    val cents = Similarity.collectCentroids(
-      spark.read.parquet(centroidsDir(spark, path)))
-    val q = Similarity.normed(queries)
-    val ranked = Similarity.withCellRanks(q, cents.length,
-      keep = nProbe,
-      twoLevelMin = Int.MaxValue, seedArr = cents)
-    val probes = ranked.select(col("vec_id").as("query_id"),
-      explode(slice(col("cells"), 1, nProbe)).as("cell"))
-    (probes, q)
-  }
-
   /** The serving-path scan cut: restrict a cell-partitioned store to the
     * query batch's probed cells. The probe list is collected driver-side —
     * bounded by nq·nProbe (and by nCells), a QUERY-side quantity that
@@ -808,9 +942,6 @@ object Index {
       else spark.read.option("basePath", dir).parquet(dirs.toSeq: _*)
     pruned.where(col(partitionCol).isin(probeVals.toSeq: _*))
   }
-
-  private def probedCellVals(probes: DataFrame): Array[Long] =
-    probes.select("cell").distinct().collect().map(_.getLong(0))
 
   /** Refresh a stored IVF-Flat index WITHOUT a rebuild: assign only the
     * arriving batch against the STORED centroids (the
@@ -953,22 +1084,6 @@ object Index {
         round(col("n_masked").cast("double") / col("n_versions_stored"), 4))
   }
 
-  private def sqMetaPath(path: String) = s"$path/sq_meta"
-
-  /** Whether the store's SQ codes are residual-coded ([[saveIvfSq]]
-    * `residual`); stores written before the marker are absolute.
-    */
-  private def isSqResidual(spark: SparkSession, path: String): Boolean =
-    buildMetaOf(readMetaRow(spark, sqMetaPath(path))).residual
-
-  /** Exact integer dot of two packed code vectors, widened to double at
-    * the end — |q| ≤ 127 keeps every product and the sum exact in Long,
-    * so the score is order-free and bit-reproducible (the DuckDB twin
-    * computes list_dot_product over the same integer-valued doubles).
-    * Codegen expression; bit-equal to the UDF it replaced (VecQuantSpec).
-    */
-  private def sqDot(a: Column, b: Column): Column = VecQuant.byteDot(a, b)
-
   /** Per-vector symmetric int8 quantization — [[Similarity.int8TopK]]'s
     * exact convention (scale = max|x|, q = floor(x·127/scale + 0.5),
     * r = round(scale/norm, 9), zero-vector conventions pinned), packed
@@ -1039,8 +1154,6 @@ object Index {
                   metaCols: Seq[String] = Nil): Unit =
     appendTo(spark, path, newEmb, superProbe, metaCols, SqCodesKind, "appendIvfSq")
 
-  private def mrlMetaPath(path: String) = s"$path/mrl_meta"
-
   /** A query batch's QUANTIZED prefix rows (vec_id, qb, r) — the query
     * side of the MRL × SQ8 tier, packed exactly like the stored prefix
     * flavor ([[Mrl]]). One byte per kept dimension instead of eight: the
@@ -1052,21 +1165,6 @@ object Index {
         slice(col("embedding").cast("array<double>"), 1, dims).as("pv"))
       .withColumn("pn", sqrt(VecFold.dot(col("pv"), col("pv")))),
       col("pv"), rescale(col("pn")), Seq(col("vec_id")))
-
-  /** The MRL store's recorded build shape: prefix width + whether the
-    * prefix flavor is int8-quantized, from its marker row ([[readMetaRow]]).
-    * Stores written before the `quantized` column are raw-prefix.
-    */
-  private def mrlOf(meta: Option[(Set[String], org.apache.spark.sql.Row)],
-                    path: String): Mrl =
-    meta match {
-      case None => throw new IllegalArgumentException(
-        s"no MRL marker at ${mrlMetaPath(path)} — not an MRL store")
-      case Some((cols, row)) =>
-        Mrl(row.getInt(row.fieldIndex("prefix_dims")),
-          cols.contains("quantized") &&
-            row.getBoolean(row.fieldIndex("quantized")))
-    }
 
   /** Build + persist the MATRYOSHKA serving tier: a cell-partitioned
     * PREFIX-DIMENSION flavor (`mrl_codes/`: vec_id, first-`prefixDims`
@@ -1133,128 +1231,28 @@ object Index {
     upsertTo(spark, path, batch, superProbe, metaCols, MrlCodesKind, "upsertIvfMrl")
 
   /** The MATRYOSHKA serve: prefix-cosine shortlist from the stored
-    * `mrl_codes/` (probed-cell partitions only — the scan reads
-    * prefixDims/dim of the raw bytes), exact full-width refine from the
-    * co-located `postings/` ([[refineExact]] — nq·rerank-bounded, cost
-    * independent of corpus size). Shortlist scores are the truncated
-    * vectors' cosines exactly as [[Similarity.matryoshkaRecall]]
-    * evaluates them (6-dp round, ties on neighbor_id); `rerank <= 0`
-    * resolves through [[Similarity.autoRerank]]. Output matches
-    * [[ivfTopKIndexed]]: (query_id, neighbor_id, cosine, rank).
+    * `mrl_codes/` (the scan reads prefixDims/dim of the raw bytes),
+    * exact full-width refine from the co-located `postings/`. Output
+    * matches [[ivfTopKIndexed]]: (query_id, neighbor_id, cosine, rank).
     */
   def ivfMrlRerankTopKIndexed(spark: SparkSession, path: String,
                               queries: DataFrame, k: Int, rerank: Int = 0,
                               nProbe: Int = 4,
-                              candWhere: Column = lit(true)): DataFrame = {
-    val depth = Similarity.autoRerank(k, rerank)
-    val (probes, q) = probeSet(spark, path, queries, nProbe)
-    val mm = mrlOf(readMetaRow(spark, mrlMetaPath(path)), path)
-    // tombstone mask BEFORE ranking (the ivfTopKIndexed contract)
-    val codes = Tombstones.mask(
-      prunedToProbes(spark, liveDir(spark, path, MrlCodesKind),
-        probedCellVals(probes)).where(candWhere),
-      Tombstones.readAll(spark, path), "vec_id")
-    // shortlist scoring follows the store's recorded prefix coding:
-    // raw-prefix cosine, or (quantized tier) the absolute-SQ integer
-    // code dot × the stored rescale factor — a rank-only surrogate,
-    // which is all a shortlist that feeds an exact refine needs
-    val scored =
-      if (mm.quantized) {
-        val qp = mrlSqRows(queries, mm.dims)
-          .select(col("vec_id").as("query_id"), col("qb").as("qqb"))
-        codes.join(broadcast(probes), Seq("cell"))
-          .where(col("vec_id") =!= col("query_id"))
-          .join(broadcast(qp), "query_id")
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            (sqDot(col("qb"), col("qqb")) * col("r")).as("cosine"))
-      } else {
-        val qp = queries.select(col("vec_id").as("query_id"),
-            slice(col("embedding").cast("array<double>"), 1, mm.dims)
-              .as("qpv"))
-          .withColumn("qpn", sqrt(VecFold.dot(col("qpv"), col("qpv"))))
-        codes.join(broadcast(probes), Seq("cell"))
-          .where(col("vec_id") =!= col("query_id"))
-          .join(broadcast(qp), "query_id")
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            round(Similarity.safeCosine(VecFold.dot(col("vp"), col("qpv")),
-              col("vpn"), col("qpn")), 6).as("cosine"))
-      }
-    val short = Similarity.topK(scored, depth)
-      .select("query_id", "neighbor_id")
-    refineExact(spark, path, probes, q, short, k)
-  }
+                              candWhere: Column = lit(true)): DataFrame =
+    serve(spark, path, queries, MrlCodesKind, k, nProbe, candWhere, rerank = Some(rerank))
 
-  /** Coding-aware SQ candidate scoring over the masked, probe-pruned
-    * codes — the ONE ranking kernel both SQ serves share, so the rerank
-    * shortlist can never diverge from the plain serve's coding branch
-    * (a residual store shortlisted with the absolute integer dot would
-    * rank residual-coded bytes as if they were absolute — silently
-    * garbage, exactly what the `sq_meta` marker exists to prevent).
-    *   - residual store: reconstruct x̂ = c + qb·r/127 per candidate and
-    *     rank by the true cosine of the dequantized vector against the
-    *     FLOAT query (asymmetric distance — the query is never
-    *     quantized); a real approximate cosine.
-    *   - absolute store: the EXACT integer code dot times the stored
-    *     rescale factor — rank-equal to [[Similarity.int8TopK]]
-    *     restricted to the probed cells (the query-side factor is
-    *     constant per query and cannot reorder); a rank-only surrogate,
-    *     not a true cosine.
-    * Emits (query_id, neighbor_id, cosine) for the shared top-k.
-    */
-  private def sqScored(spark: SparkSession, path: String, probes: DataFrame,
-                       q: DataFrame, queries: DataFrame,
-                       candWhere: Column,
-                       asOfSeq: Option[Long] = None): DataFrame = {
-    val codes = Tombstones.mask(
-      asOfCandidates(
-        prunedToProbes(spark, liveDir(spark, path, SqCodesKind),
-          probedCellVals(probes)).where(candWhere), asOfSeq),
-      asOfTombstones(spark, path, asOfSeq), "vec_id")
-    if (isSqResidual(spark, path)) {
-      val cents = spark.read.parquet(centroidsDir(spark, path))
-        .select(col("cid").as("cell"), col("cv"))
-      val xhat = codes.join(broadcast(cents), "cell")
-        .withColumn("xh",
-          VecQuant.reconstruct(col("cv"), col("qb"), col("r")))
-      val qv = q.select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("norm").as("qnorm"))
-      xhat.join(broadcast(probes), Seq("cell"))
-        .where(col("vec_id") =!= col("query_id"))
-        .join(broadcast(qv), "query_id")
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(Similarity.safeCosine(VecFold.dot(col("xh"), col("qv")),
-            sqrt(VecFold.dot(col("xh"), col("xh"))), col("qnorm")), 6)
-            .as("cosine"))
-    } else {
-      val qq = sqRows(queries)
-        .select(col("vec_id").as("query_id"), col("qb").as("qqb"))
-      codes.join(broadcast(probes), Seq("cell"))
-        .where(col("vec_id") =!= col("query_id"))
-        .join(broadcast(qq), "query_id")
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          (sqDot(col("qb"), col("qqb")) * col("r")).as("cosine"))
-    }
-  }
-
-  /** Answer a query batch from the stored SQ codes: probed-cell
-    * partitions only, candidates ranked by the store's own coding
-    * ([[sqScored]]). Output (query_id, neighbor_id, score, rank) — ONE
-    * contract for both codings; `score` is the dequantized cosine on a
-    * residual store and the rescaled integer dot (a rank-only surrogate,
-    * not a true cosine) on an absolute store. `asOfSeq` is the
-    * time-travel bound [[ivfTopKIndexed]] documents — same semantics,
-    * same two pushed predicates, same compaction/rebuild horizon.
+  /** Answer a query batch from the stored SQ codes, ranked by the store's
+    * own coding ([[Sq]]). Output (query_id, neighbor_id, score, rank) —
+    * ONE contract for both codings; `score` is the dequantized cosine on
+    * a residual store and the rescaled integer dot (a rank-only
+    * surrogate, not a true cosine) on an absolute store. `asOfSeq` is
+    * [[ivfTopKIndexed]]'s time-travel bound.
     */
   def ivfSqTopKIndexed(spark: SparkSession, path: String, queries: DataFrame,
                        k: Int, nProbe: Int = 4,
                        candWhere: Column = lit(true),
-                       asOfSeq: Option[Long] = None): DataFrame = {
-    val (probes, q) = probeSet(spark, path, queries, nProbe)
-    Similarity.topK(
-      sqScored(spark, path, probes, q, queries, candWhere, asOfSeq), k)
-      .select(col("query_id"), col("neighbor_id"),
-        col("cosine").as("score"), col("rank"))
-  }
+                       asOfSeq: Option[Long] = None): DataFrame =
+    serve(spark, path, queries, SqCodesKind, k, nProbe, candWhere, asOfSeq)
 
   /** Drop every generation of `kind` (used by an in-place REBUILD: the
     * overwrite save targets the flat v0 directory, so stale higher
@@ -1751,7 +1749,7 @@ object Index {
       import spark.implicits._
       Seq((sq.residual, owner.trained, sq.trainIters, owner.flat))
         .toDF("residual", "trained", "train_iters", "flat")
-        .write.mode("overwrite").parquet(sqMetaPath(path))
+        .write.mode("overwrite").parquet(s"$path/sq_meta")
     }
     midHook()
     // the conflict fence, BEFORE the atomic flip: at 100 TB the staged
@@ -2188,7 +2186,7 @@ object Index {
     */
   def probeCells(spark: SparkSession, path: String, queries: DataFrame,
                  nProbe: Int = 4): Array[Long] =
-    probedCellVals(probeSet(spark, path, queries, nProbe)._1)
+    new Serve(spark, path, queries, nProbe).cells
 
   /** TIME-TRAVEL candidate bound: restrict a serve's candidate rows to
     * those inserted at or before `asOfSeq` (build rows are seq 0, every
@@ -2221,19 +2219,55 @@ object Index {
       asOfSeq.fold(t)(s => t.where(col("del_seq") <= s))
     }
 
-  /** Answer a query batch from a stored IVF-Flat index: rank cells
-    * against the stored centroids, read ONLY the probed posting
-    * partitions, exact-cosine the candidates, top-k. `queries` carries
-    * (vec_id, embedding); a stored vector with the same vec_id is
-    * excluded from its own result (the inline self-exclusion contract).
-    * Output: (query_id, neighbor_id, cosine, rank) — bit-equal to
-    * [[Similarity.ivfTopK]] at every flat-assignment corpus.
+  /** THE serve path behind every `*TopKIndexed` serve (the header's
+    * "Serving" paragraph): the coding comes from the store's marker for
+    * `kind`; `rerank = Some(r)` shortlists [[Similarity.autoRerank]]`(k,
+    * r)` candidates by the coding's score and answers with [[refine]].
+    */
+  private def serve(spark: SparkSession, path: String, queries: DataFrame,
+                    kind: String, k: Int, nProbe: Int, candWhere: Column,
+                    asOfSeq: Option[Long] = None,
+                    rerank: Option[Int] = None): DataFrame = {
+    val s = new Serve(spark, path, queries, nProbe)
+    val c = codingOf(kind, new Markers(spark, path))
+    val top = Similarity.topK(c.score(s.candidates(kind, candWhere, asOfSeq), s),
+      rerank.fold(k)(Similarity.autoRerank(k, _)), c.order)
+    if (rerank.isEmpty)
+      top.select(col("query_id"), col("neighbor_id"), col(c.scoreCol), col("rank"))
+    else refine(s, top.select("query_id", "neighbor_id"), k)
+  }
+
+  /** The exact refine of a shortlist (cf. FAISS IndexRefineFlat): ONLY the
+    * shortlisted candidates' raw vectors are read from the co-located
+    * `postings/` flavor and scored by the flat coding's exact cosine.
+    * Query-bounded: the scan prunes to the probed cells the shortlist
+    * came from and is broadcast-joined to the nq·rerank shortlist on
+    * neighbor_id, so the refine costs the same at any corpus size. The
+    * mask applies here too: an upserted id has a masked stale raw row
+    * co-resident with its live one, and the id join would otherwise
+    * refine against both.
+    */
+  private def refine(s: Serve, short: DataFrame, k: Int): DataFrame = {
+    require(generations(s.spark, s.path, PostingsKind).nonEmpty,
+      s"rerank serve needs the raw-vector flavor co-located at ${s.path} — " +
+        "build the store with withRaw = true (or saveIvf on the same path)")
+    val rows = s.candidates(PostingsKind, lit(true), None)
+      .select(col("vec_id").as("neighbor_id"), col("v"), col("norm"))
+      .join(broadcast(short), Seq("neighbor_id"))
+    Similarity.topK(Flat.exact(rows, "neighbor_id", s), k)
+      .select("query_id", "neighbor_id", "cosine", "rank")
+  }
+
+  /** Answer a query batch from a stored IVF-Flat index: exact cosine over
+    * the probed posting partitions. `queries` carries (vec_id,
+    * embedding). Output: (query_id, neighbor_id, cosine, rank) —
+    * bit-equal to [[Similarity.ivfTopK]] at every flat-assignment corpus.
     *
     * `candWhere` is FILTERED vector search (the label/language/tenant
     * predicate every production store supports): candidates failing the
     * predicate are cut BEFORE ranking, so the result is the true top-k
     * AMONG matches — not a rank-then-filter that can return fewer than k
-    * while matches exist. The predicate references postings columns, so
+    * while matches exist. The predicate references stored columns, so
     * it lands in the parquet scan next to the partition prune
     * (PushedFilters; metadata columns persist via [[saveIvf]]'s
     * `metaCols`) — at a 1% selectivity the serve reads 1% of the probed
@@ -2258,198 +2292,46 @@ object Index {
   def ivfTopKIndexed(spark: SparkSession, path: String, queries: DataFrame,
                      k: Int, nProbe: Int = 4,
                      candWhere: Column = lit(true),
-                     asOfSeq: Option[Long] = None): DataFrame = {
-    val (probes, q) = probeSet(spark, path, queries, nProbe)
-    // tombstone mask BEFORE ranking: a deleted row must not consume a
-    // top-k slot (rank-then-filter would return short results)
-    val post = Tombstones.mask(
-      asOfCandidates(
-        prunedToProbes(spark, liveDir(spark, path, PostingsKind),
-          probedCellVals(probes)).where(candWhere), asOfSeq),
-      asOfTombstones(spark, path, asOfSeq), "vec_id")
-    val qv = q.select(col("vec_id").as("query_id"), col("v").as("qv"),
-      col("norm").as("qnorm"))
-    val scored = post.join(broadcast(probes), Seq("cell"))
-      .where(col("vec_id") =!= col("query_id"))
-      .join(broadcast(qv), "query_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(Similarity.safeCosine(VecFold.dot(col("v"), col("qv")),
-          col("norm"), col("qnorm")), 6).as("cosine"))
-    Similarity.topK(scored, k).select("query_id", "neighbor_id", "cosine", "rank")
-  }
+                     asOfSeq: Option[Long] = None): DataFrame =
+    serve(spark, path, queries, PostingsKind, k, nProbe, candWhere, asOfSeq)
 
-  /** Answer a query batch from a stored IVF-PQ index: probed-cell code
-    * partitions only, per-query ADC lookup table over the stored
-    * codebook, integer-exact distance sum — no raw corpus vector is read.
+  /** Answer a query batch from a stored IVF-PQ index by ADC ([[Pq]]).
     * Output: (query_id, neighbor_id, adc_e9, rank) — bit-equal to
     * [[Similarity.ivfPqTopK]] at every flat-assignment corpus.
     */
   def ivfPqTopKIndexed(spark: SparkSession, path: String, queries: DataFrame,
                        k: Int, nProbe: Int = 4,
-                       candWhere: Column = lit(true)): DataFrame = {
-    val (probes, q) = probeSet(spark, path, queries, nProbe)
-    adcRanked(spark, path, probes, q, k, candWhere)
-  }
-
-  /** The ADC ranking over a stored code layout for an already-computed
-    * probe set — shared by [[ivfPqTopKIndexed]] (the whole serve) and
-    * [[ivfPqRerankTopKIndexed]] (its shortlist stage, which must reuse
-    * the probe set so the refine prune reads the same cells).
-    */
-  private def adcRanked(spark: SparkSession, path: String, probes: DataFrame,
-                        q: DataFrame, k: Int, candWhere: Column): DataFrame = {
-    // tombstone mask before ranking (see ivfTopKIndexed)
-    val codes = Tombstones.mask(
-      prunedToProbes(spark, liveDir(spark, path, PqCodesKind),
-        probedCellVals(probes)).where(candWhere),
-      Tombstones.readAll(spark, path), "vec_id")
-      .select("vec_id", "sub", "code", "cell")
-    val cw = spark.read.parquet(codewordsDir(spark, path))
-    // ONE marker read answers both nSub and the residual flag — the
-    // marker records the build's n_sub (rebuild already trusts it), and
-    // the distinct-count over the codewords it replaces was a full
-    // shuffle job on every ADC serve. A store with NO marker (or a
-    // legacy marker predating the n_sub column) falls back to that
-    // distinct count: trusting the BuildMeta default would silently
-    // mis-slice subvectors on a non-default legacy store (ADVICE r15) —
-    // the shuffle is the legacy-only price of not returning garbage.
-    val metaRow = readMetaRow(spark, metaPath(path))
-    val meta = buildMetaOf(metaRow)
-    val nSub =
-      if (metaRow.exists(_._1.contains("n_sub"))) meta.nSub
-      else cw.select("sub").distinct().count().toInt
-    // per-query ADC lookup table, exactly the inline construction:
-    // d2(query subvector, codeword) scaled to an exact int64
-    val dim = q.select(size(col("v")).as("d")).limit(1)
-      .collect().headOption.map(_.getInt(0)).getOrElse(0)
-    val sub = dim / nSub
-    val adc =
-      if (meta.residual) {
-        // residual LUT: keyed by (query, PROBED CELL) — the query's own
-        // residual against that cell's centroid, measured to each
-        // codeword. nq·nProbe·nSub·nCode entries, query-bounded.
-        val rsub = slice(col("rv"), col("sub").cast("int") * sub + 1, lit(sub))
-        val lut = probes
-          .join(broadcast(spark.read.parquet(centroidsDir(spark, path))
-            .select(col("cid").as("cell"), col("cv"))), "cell")
-          .join(q.select(col("vec_id").as("query_id"), col("v")), "query_id")
-          .select(col("query_id"), col("cell"),
-            VecQuant.sub(col("v"), col("cv")).as("rv"))
-          .crossJoin(broadcast(cw))
-          .select(col("query_id"), col("cell"), col("sub"), col("code"),
-            floor(VecFold.l2sq(rsub, col("cw")) * 1e9 + 0.5).cast("long").as("d2i"))
-        codes.join(broadcast(probes), Seq("cell"))
-          .where(col("vec_id") =!= col("query_id"))
-          .join(broadcast(lut), Seq("query_id", "cell", "sub", "code"))
-          .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-          .agg(sum("d2i").as("adc_e9"))
-      } else {
-        val qsub = slice(col("v"), col("sub").cast("int") * sub + 1, lit(sub))
-        val lut = q.select(col("vec_id").as("query_id"), col("v"))
-          .crossJoin(broadcast(cw))
-          .select(col("query_id"), col("sub"), col("code"),
-            floor(VecFold.l2sq(qsub, col("cw")) * 1e9 + 0.5).cast("long").as("d2i"))
-        codes.join(broadcast(probes), Seq("cell"))
-          .where(col("vec_id") =!= col("query_id"))
-          .join(broadcast(lut), Seq("query_id", "sub", "code"))
-          .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-          .agg(sum("d2i").as("adc_e9"))
-      }
-    val byDist = Seq(asc("adc_e9"), asc("neighbor_id"))
-    val pre = Window.partitionBy(col("query_id"), pmod(col("neighbor_id"), lit(64)))
-      .orderBy(byDist: _*)
-    val fin = Window.partitionBy("query_id").orderBy(byDist: _*)
-    adc
-      .withColumn("r1", row_number().over(pre)).where(col("r1") <= k).drop("r1")
-      .withColumn("rank", row_number().over(fin)).where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "adc_e9", "rank")
-  }
+                       candWhere: Column = lit(true)): DataFrame =
+    serve(spark, path, queries, PqCodesKind, k, nProbe, candWhere)
 
   /** The production compressed-serve shape on the PERSISTED store (cf.
     * FAISS IndexIVFPQ + IndexRefineFlat; inline eval twin:
-    * [[Similarity.ivfPqRerankTopK]]): the ADC scan shortlists `rerank`
-    * candidates per query from the stored `pq_codes/` alone (probed-cell
-    * partitions, no raw vector read), then ONLY those candidates' full
-    * vectors are fetched from the CO-LOCATED `postings/` flavor
-    * ([[saveIvfPq]] `withRaw`) and scored with the exact cosine.
-    *
-    * Scale shape: the refine reads raw vectors only from the probed cell
-    * directories and inner-joins them to the broadcast shortlist —
-    * nq·rerank rows, a QUERY-side bound — so the full-precision corpus
-    * is pruned twice (partition prune, then the semi-join) and the
-    * refine cost is independent of corpus size. Output matches
-    * [[ivfTopKIndexed]] (query_id, neighbor_id, cosine, rank), bit-equal
-    * to the inline rerank at every flat-assignment corpus.
+    * [[Similarity.ivfPqRerankTopK]]): an ADC shortlist from `pq_codes/`
+    * alone, then the exact [[refine]] from the co-located `postings/`
+    * ([[saveIvfPq]] `withRaw`). Output matches [[ivfTopKIndexed]],
+    * bit-equal to the inline rerank at every flat-assignment corpus.
+    * `rerank <= 0` resolves to the max(10·k, 40) depth rule
+    * ([[Similarity.autoRerank]]): the old fixed 4·k default served
+    * recall@10 = 0.49 on the separation-free jitter corpus while 10·k
+    * recovers 1.0 at flat cost — the shortlist is query-bounded either
+    * way, so the deeper default buys recall for ~nothing.
     */
   def ivfPqRerankTopKIndexed(spark: SparkSession, path: String,
                              queries: DataFrame, k: Int, rerank: Int = 0,
                              nProbe: Int = 4,
-                             candWhere: Column = lit(true)): DataFrame = {
-    // rerank <= 0 resolves to the measured max(10·k, 40) depth rule
-    // ([[Similarity.autoRerank]]): the old fixed 4·k default served
-    // recall@10 = 0.49 on the separation-free jitter corpus while 10·k
-    // recovers 1.0 at flat cost — the shortlist is query-bounded either
-    // way, so the deeper default buys recall for ~nothing
-    val depth = Similarity.autoRerank(k, rerank)
-    val (probes, q) = probeSet(spark, path, queries, nProbe)
-    val short = adcRanked(spark, path, probes, q, depth, candWhere)
-      .select("query_id", "neighbor_id")
-    refineExact(spark, path, probes, q, short, k)
-  }
-
-  /** The exact-cosine refine stage shared by the PQ and SQ rerank
-    * serves: fetch ONLY the broadcast shortlist's raw vectors from the
-    * co-located `postings/` flavor (probed-cell partition prune + the
-    * nq·rerank semi-join — refine cost independent of corpus size),
-    * score with the exact cosine, re-rank.
-    */
-  private def refineExact(spark: SparkSession, path: String,
-                          probes: DataFrame, q: DataFrame,
-                          short: DataFrame, k: Int): DataFrame = {
-    val raw = generations(spark, path, PostingsKind)
-    require(raw.nonEmpty,
-      s"rerank serve needs the raw-vector flavor co-located at $path — " +
-        "build the store with withRaw = true (or saveIvf on the same path)")
-    // every shortlisted candidate came from a probed cell, so the refine
-    // scan prunes to the same cell directories the shortlist read. The
-    // mask applies HERE too, not just to the shortlist: an upserted id
-    // has a masked stale raw row co-resident with its live one, and the
-    // id-equijoin below would otherwise refine against both
-    val post = Tombstones.mask(
-      prunedToProbes(spark, liveDir(spark, path, PostingsKind),
-        probedCellVals(probes)),
-      Tombstones.readAll(spark, path), "vec_id")
-      .select(col("vec_id").as("neighbor_id"), col("v"), col("norm"))
-    val qv = q.select(col("vec_id").as("query_id"), col("v").as("qv"),
-      col("norm").as("qnorm"))
-    val scored = post.join(broadcast(short), Seq("neighbor_id"))
-      .join(broadcast(qv), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(Similarity.safeCosine(VecFold.dot(col("v"), col("qv")),
-          col("norm"), col("qnorm")), 6).as("cosine"))
-    Similarity.topK(scored, k).select("query_id", "neighbor_id", "cosine", "rank")
-  }
+                             candWhere: Column = lit(true)): DataFrame =
+    serve(spark, path, queries, PqCodesKind, k, nProbe, candWhere, rerank = Some(rerank))
 
   /** SQ8 shortlist + exact refine — the SQ tier's deployment
-    * composition ([[ivfPqRerankTopKIndexed]]'s shape with the SQ
-    * ranking as the shortlist stage). The shortlist goes through the
-    * same coding-aware kernel as the plain serve ([[sqScored]]), so a
-    * residual store shortlists by its dequantized cosine — never by the
-    * absolute integer dot over residual-coded bytes. Where the int8
-    * resolution limit blurs within-family order (SCALING.md round 12's
-    * tier matrix), the refine restores it at nq·rerank raw-vector reads.
+    * composition. The shortlist is the plain serve's coding-aware score,
+    * so a residual store shortlists by its dequantized cosine. Where the
+    * int8 resolution limit blurs within-family order (SCALING.md round
+    * 12's tier matrix), the refine restores it at nq·rerank raw-vector
+    * reads.
     */
   def ivfSqRerankTopKIndexed(spark: SparkSession, path: String,
                              queries: DataFrame, k: Int, rerank: Int = 0,
                              nProbe: Int = 4,
-                             candWhere: Column = lit(true)): DataFrame = {
-    // rerank <= 0 → max(10·k, 40) ([[Similarity.autoRerank]]; measured
-    // rationale at [[ivfPqRerankTopKIndexed]])
-    val depth = Similarity.autoRerank(k, rerank)
-    val (probes, q) = probeSet(spark, path, queries, nProbe)
-    val short = Similarity.topK(
-      sqScored(spark, path, probes, q, queries, candWhere), depth)
-      .select("query_id", "neighbor_id")
-    refineExact(spark, path, probes, q, short, k)
-  }
+                             candWhere: Column = lit(true)): DataFrame =
+    serve(spark, path, queries, SqCodesKind, k, nProbe, candWhere, rerank = Some(rerank))
 }

@@ -74,13 +74,15 @@ object Similarity {
   /** Two-phase top-k per query: rank within a salt bucket first (bounded
     * partitions), then globally among the <= 64·k survivors. Identical
     * result to a single global rank, but the corpus-sized sort is
-    * distributed over 64 buckets per query.
+    * distributed over 64 buckets per query. `order` ranks the rows:
+    * highest cosine first by default, ties on the smaller neighbor_id.
     */
-  private[ml] def topK(scored: DataFrame, k: Int): DataFrame = {
-    val byScore = Seq(desc("cosine"), asc("neighbor_id"))
+  private[ml] def topK(scored: DataFrame, k: Int,
+                       order: Seq[Column] = Seq(desc("cosine"), asc("neighbor_id")))
+      : DataFrame = {
     val pre = Window.partitionBy(col("query_id"), pmod(col("neighbor_id"), lit(64)))
-      .orderBy(byScore: _*)
-    val fin = Window.partitionBy("query_id").orderBy(byScore: _*)
+      .orderBy(order: _*)
+    val fin = Window.partitionBy("query_id").orderBy(order: _*)
     scored
       .withColumn("r1", row_number().over(pre)).where(col("r1") <= k).drop("r1")
       .withColumn("rank", row_number().over(fin)).where(col("rank") <= k)

@@ -33,4 +33,13 @@ object GraftShim {
     */
   def divideByZero(): ArithmeticException =
     QueryExecutionErrors.divideByZeroError(null)
+
+  /** Block until every event posted so far has reached the listeners
+    * (`LiveListenerBus.waitUntilEmpty`, `private[spark]`). Listener
+    * events arrive asynchronously: counters read or a capture window
+    * closed right after an action otherwise miss the stage and task
+    * events still queued on the bus.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -81,6 +81,7 @@ class PoissonCiWidthSpec extends SparkSpec {
       spark.sparkContext.parallelize(xs.map(Row(_)), 2), schema)
     val df = frame(special ++ random.filterNot(_.isPosInfinity).map(Double.box))
     val inf = frame(Seq(Double.PositiveInfinity))
+    val scalar = udf(Rounding.trim2Scalar _)
     def outcome(c: => Column): Either[String, Any] =
       try Right(inf.select(c).head().get(0))
       catch {
@@ -100,12 +101,15 @@ class PoissonCiWidthSpec extends SparkSpec {
           if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
         spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
         val rows = df.select(col("x"), RoundingCheck.trim2Column(col("x")),
-          Rounding.trim2(col("x"))).collect()
+          Rounding.trim2(col("x")), scalar(col("x"))).collect()
         assert(rows.length == special.length + random.count(!_.isPosInfinity))
-        rows.foreach { case Row(x, o, n) =>
+        rows.foreach { case Row(x, o, n, sc) =>
           // Objects.equals: boxed equality makes NaN == NaN and tells ±0 apart
           assert(java.util.Objects.equals(o, n),
             s"trim2($x) codegen=$codegen ansi=$ansi: got $n want $o")
+          // the streaming scorers' scalar twin (a null x never reaches it)
+          assert(x == null || java.util.Objects.equals(o, sc),
+            s"trim2Scalar($x): got $sc want $o")
         }
         val old = outcome(RoundingCheck.trim2Column(col("x")))
         assert(outcome(Rounding.trim2(col("x"))) == old, s"+Inf codegen=$codegen ansi=$ansi")

@@ -74,4 +74,16 @@ class VecFoldSpec extends SparkSpec {
       aggregate(col("v"), lit(0.0), (acc, x) => acc + x * x).as("o")).collect()
     got.foreach { case Row(n: Double, o: Double) => assert(n == o) }
   }
+
+  test("the folds reject non-double arrays at analysis time") {
+    // an AnalysisException when the plan is analyzed, not a
+    // ClassCastException inside an executor task (the SQL registrations
+    // cast to array<double>, so the SQL-callable test above still holds)
+    val typed = Seq((Seq(1.0f, 2.0f), Seq("a", "b"), Seq(1.0, 2.0))).toDF("f", "s", "d")
+    for ((c, what) <- Seq(VecFold.dot(col("f"), col("d")) -> "dot over array<float>",
+                          VecFold.l2sq(col("d"), col("s")) -> "l2sq over array<string>")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](typed.select(c))
+      assert(e.getMessage.contains("DATATYPE_MISMATCH"), s"$what: ${e.getMessage}")
+    }
+  }
 }

@@ -67,6 +67,26 @@ class IndexSpec extends SparkSpec {
     assert(served.nonEmpty)
   }
 
+  test("ADC serves slice subvectors right on a legacy marker without n_sub") {
+    // stores written before the `n_sub` marker column must still serve
+    // with their own subspace width, not the 8-subspace default
+    val path = freshPath("legacynsub")
+    Index.saveIvfPq(emb, path, nSub = 4, withRaw = true)
+    val isQ = pmod(col("vec_id"), lit(10)) === 0
+    def serves(): (Seq[(Long, Long, Long, Int)], Seq[(Long, Long, Double, Int)]) = (
+      Index.ivfPqTopKIndexed(spark, path, emb.where(isQ), k = 5)
+        .orderBy("query_id", "rank").as[(Long, Long, Long, Int)].collect().toSeq,
+      Index.ivfPqRerankTopKIndexed(spark, path, emb.where(isQ), k = 5, rerank = 8)
+        .orderBy("query_id", "rank").as[(Long, Long, Double, Int)].collect().toSeq)
+    val intact = serves()
+    Seq((false, false, 16, 3, false))
+      .toDF("residual", "trained", "n_code", "train_iters", "flat")
+      .write.mode("overwrite").parquet(s"$path/meta")
+    assert(!spark.read.parquet(s"$path/meta").columns.contains("n_sub"))
+    assert(serves() === intact)
+    assert(intact._1.nonEmpty && intact._2.nonEmpty)
+  }
+
   test("rerank serve fails loudly on a codes-only store (no raw flavor)") {
     val path = freshPath("rerankraw")
     Index.saveIvfPq(emb, path) // withRaw = false: no postings/
