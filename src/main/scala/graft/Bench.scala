@@ -122,7 +122,8 @@ object Bench {
         "comparing against a previous round")
     // SPARK_GRAFT_CHECKPOINT_DIR flips every lineage cut in the library
     // (graft.ml.Ckpt.cut) from localCheckpoint to RELIABLE checkpoints —
-    // the executor-loss-safe deployment shape; BatchKill measures the A/B
+    // the executor-loss-safe deployment shape (A/B: SCALING.md "The BATCH
+    // surface under executor loss")
     sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
       .foreach(spark.sparkContext.setCheckpointDir)
     spark.sparkContext.setLogLevel("WARN")

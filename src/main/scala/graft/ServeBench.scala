@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *
   * Usage: SPARK_GRAFT_SF_DIR=/tmp/sfL sbt "runMain graft.ServeBench"
   * One JSON line per measurement; timing = noop-write of the result
-  * (warm-up pass first, as in Bench/IvfSweep).
+  * (warm-up pass first, as in Bench).
   */
 object ServeBench {
   def main(args: Array[String]): Unit = {

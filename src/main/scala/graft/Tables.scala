@@ -42,18 +42,16 @@ object Tables {
 
   /** Columnar intermediate store (S4) — the engine's replacement for the
     * reference's JSON dict-of-series handoff between stages
-    * (trend_analyze_many.py:186,235). Counter-BUCKETED parquet, not
-    * partitionBy(counter): a million counters as directories would be a
-    * small-files disaster, while `nBuckets` hash buckets keep files
-    * bounded, give partition pruning for single-counter reads
-    * (bucket = hash(counter) % n is computable at lookup time), and let a
-    * downstream per-counter stage start from co-partitioned data.
+    * (trend_analyze_many.py:186,235). A plain parquet write of the
+    * rebinned frame, with no shuffle of its own: [[graft.trend.Rebin]]
+    * already partitions by counter, so each rebin task writes one file
+    * holding whole counters, and the file count follows the rebin's
+    * partitions, not the number of counters. Stores written by earlier
+    * versions, hash-bucketed into `bucket=` directories, still load:
+    * [[loadBinned]] drops that partition column.
     */
-  def saveBinned(binned: DataFrame, path: String, nBuckets: Int = 64): Unit =
-    binned
-      .withColumn("bucket", pmod(hash(col("counter")), lit(nBuckets)))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
+  def saveBinned(binned: DataFrame, path: String): Unit =
+    binned.write.mode("overwrite").parquet(path)
 
   def loadBinned(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path).drop("bucket")

@@ -1,10 +1,12 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.graft.GraftShim
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** The IVF coarse-quantizer assignment kernel as a native expression —
   * the `keep` nearest broadcast-centroid ids ordered by 9-dp-rounded
@@ -31,6 +33,8 @@ case class CellRanksExpr(left: Expression, right: Expression,
     bcSup: Broadcast[(Array[Array[Double]], Array[Array[Int]])],
     keep: Int, superProbe: Int)
     extends BinaryExpression with CodegenFallback {
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(Seq(left, right), Seq(ArrayType(DoubleType), DoubleType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "cell_ranks"

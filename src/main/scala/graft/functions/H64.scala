@@ -1,9 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.graft.GraftShim
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The portable 60-bit md5 hash as one native expression — the key-space
@@ -31,6 +33,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * null out.
   */
 case class H64Expr(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(Seq(child), Seq(StringType))
   override def dataType: DataType = LongType
   override def nullable: Boolean = child.nullable
   override def prettyName: String = "h64"
@@ -46,8 +50,6 @@ case class H64Expr(child: Expression) extends UnaryExpression {
 }
 
 object H64 {
-  import org.apache.spark.sql.graft.GraftShim
-
   def apply(c: Column): Column =
     GraftShim.column(H64Expr(GraftShim.expression(c)))
 

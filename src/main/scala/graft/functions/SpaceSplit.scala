@@ -1,9 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.GraftShim
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -24,6 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * elements never null.
   */
 case class SpaceSplit(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(Seq(child), Seq(StringType))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = child.nullable
   override def prettyName: String = "space_split"
@@ -39,8 +43,6 @@ case class SpaceSplit(child: Expression) extends UnaryExpression {
 }
 
 object SpaceSplit {
-  import org.apache.spark.sql.graft.GraftShim
-
   def apply(c: Column): Column =
     GraftShim.column(SpaceSplit(GraftShim.expression(c)))
 

@@ -2,9 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.GraftShim
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -34,6 +36,8 @@ import org.apache.spark.unsafe.types.UTF8String
 case class ShingleArray(child: Expression, k: Int)
     extends UnaryExpression with CodegenFallback {
   require(k >= 1, "shingle width must be positive")
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(Seq(child), Seq(ArrayType(StringType)))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = false
   override def prettyName: String = "shingle_array"
@@ -81,7 +85,6 @@ case class ShingleArray(child: Expression, k: Int)
 }
 
 object ShingleArray {
-  import org.apache.spark.sql.graft.GraftShim
   def apply(w: Column, k: Int): Column =
     GraftShim.column(ShingleArray(GraftShim.expression(w), k))
 }
@@ -94,6 +97,8 @@ object ShingleArray {
   * Replaces the interpreted HOF fold in [[graft.ml.TextStats.tokenStats]].
   */
 case class SumStrLen(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(Seq(child), Seq(ArrayType(StringType)))
   override def dataType: DataType = org.apache.spark.sql.types.LongType
   override def nullable: Boolean = true
   override def prettyName: String = "sum_str_len"
@@ -135,7 +140,6 @@ case class SumStrLen(child: Expression) extends UnaryExpression {
 }
 
 object SumStrLen {
-  import org.apache.spark.sql.graft.GraftShim
   def apply(w: Column): Column =
     GraftShim.column(SumStrLen(GraftShim.expression(w)))
 }
@@ -149,6 +153,8 @@ object SumStrLen {
   */
 case class CountInSet(child: Expression, values: Seq[String])
     extends UnaryExpression with CodegenFallback {
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(Seq(child), Seq(ArrayType(StringType)))
   override def dataType: DataType = org.apache.spark.sql.types.IntegerType
   override def nullable: Boolean = true
   override def prettyName: String = "count_in_set"
@@ -176,7 +182,6 @@ case class CountInSet(child: Expression, values: Seq[String])
 }
 
 object CountInSet {
-  import org.apache.spark.sql.graft.GraftShim
   def apply(w: Column, values: Seq[String]): Column =
     GraftShim.column(CountInSet(GraftShim.expression(w), values))
 }

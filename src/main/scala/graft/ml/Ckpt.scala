@@ -10,7 +10,8 @@ import org.apache.spark.sql.DataFrame
   *  - `localCheckpoint()`: blocks live on executors with NO lineage —
   *    fast (no files), but an executor death makes every dependent task
   *    fail with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND and aborts the job
-  *    (measured: StreamBench `drift_killexec`, BatchKill).
+  *    (measured: StreamBench `drift_killexec`, and the batch executor-kill
+  *    A/B in SCALING.md "The BATCH surface under executor loss").
   *  - `checkpoint(eager = true)`: materializes to the session's
   *    CHECKPOINT DIRECTORY (HDFS/object store on a cluster) — blocks
   *    rebuild from files on any executor, surviving process death, at
@@ -21,8 +22,9 @@ import org.apache.spark.sql.DataFrame
   * runs (the sf oracle gates, local benches) stay on the fast path
   * unchanged; any long-running job sets a checkpoint dir
   * (`spark.sparkContext.setCheckpointDir`, or SPARK_GRAFT_CHECKPOINT_DIR
-  * under Bench/BatchKill) and every lineage cut in the library becomes
-  * executor-loss-safe — BatchKill measures exactly this A/B.
+  * under Bench) and every lineage cut in the library becomes
+  * executor-loss-safe — the A/B recorded in SCALING.md "The BATCH
+  * surface under executor loss".
   *
   * Reliable-checkpoint files accumulate for the session's lifetime;
   * enable `spark.cleaner.referenceTracking.cleanCheckpoints` (or clear

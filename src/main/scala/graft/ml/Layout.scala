@@ -67,10 +67,9 @@ object Layout {
     * profile↔activity join that repeats every pipeline run pays its
     * shuffle ONCE at write time instead of per query. `sortBy` persists
     * per-bucket order so the sort-merge join can skip its sorts when
-    * each bucket lands in one file. This is the catalog twin of
-    * [[graft.Tables.saveBinned]]'s manual hash-bucketed layout: the
-    * catalog records the bucket spec, so Catalyst — not the reader —
-    * proves the distribution. LayoutSpec pins the exchange-free plan.
+    * each bucket lands in one file. The catalog records the bucket
+    * spec, so Catalyst — not the reader — proves the distribution.
+    * LayoutSpec pins the exchange-free plan.
     */
   def writeBucketedTable(df: DataFrame, table: String, path: String,
                          key: String, nBuckets: Int = 16): Unit =

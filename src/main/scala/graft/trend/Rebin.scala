@@ -1,9 +1,11 @@
 package graft.trend
 
 import graft.functions.Rounding
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import java.time.ZoneId
+import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Re-grid irregular (ts, duration_sec, count, counter) intervals onto a
   * uniform per-counter time grid, splitting counts of straddling intervals
@@ -28,26 +30,31 @@ import org.apache.spark.sql.functions._
   *    (last_touched_grid_idx + 1) elements — the reference slices the
   *    *compacted* list by a *grid* index, and the bound is the last bin
   *    TOUCHED by any input row (`idx in output_data`, analysis.py:140-142),
-  *    even one whose accumulated count is 0.0. We reproduce both quirks via
-  *    a running kept-row counter and a touched flag;
+  *    even one whose accumulated count is 0.0. Both quirks are reproduced
+  *    (the oracle below via a running kept-row counter and a touched flag);
   *  - counts are truncated to int (analysis.py:146-150).
   *
-  * Scale design: one scan of the input and ONE exchange, of the raw
-  * rows hash-partitioned by counter — raw rows, not map-side partial
-  * sums, because every later step reuses that partitioning instead of
-  * shuffling again:
-  *  - the per-counter extent (origin, gend) is a min/max window over the
-  *    counter partition, not a separate aggregation joined back;
-  *  - each row's overlapped bins are computed in closed form (a bin index
-  *    range from the counter's origin) and exploded — O(rows × bins
-  *    overlapped), never O(rows × grid);
-  *  - the (counter, bin) hash aggregation runs in place on the counter
-  *    partitioning and carries the extent;
-  *  - densify needs no grid and no join: each touched bin emits the
-  *    untouched bins up to the next touched one (`lead`) as zero rows;
-  *  - the zero-trim windows run over the same partitions.
-  * No driver-side collection. Skew: a hot counter's rows all land in one
-  * task — its series is one window partition whatever the exchange.
+  * Scale design: the reference's own sequential pass, distributed by
+  * counter. One scan of the input and ONE exchange: the filtered rows,
+  * projected to (counter, t0, t1, count) in micros, are hash-partitioned
+  * by counter and sorted within each group by (t0, t1, count), and one
+  * sweep per counter walks them in that order:
+  *  - the grid origin is the session-zone unit truncation of the first
+  *    t0 (observed mode) or the configured start (config mode);
+  *  - each row adds count·overlap/size to the bins it spans, kept in a
+  *    ring of open bins. A bin behind the current t0 can receive nothing
+  *    more, so it is final: densify and zero-trim settle it and emit it
+  *    at once. Untouched runs between touched bins, the config-mode
+  *    leading gap and the trailing bins up to the last grid bin are
+  *    settled arithmetically, not bin by bin; the `krn <= last_nz + 1`
+  *    slice needs one held zero bin and a "some bin was dropped" flag.
+  * State: O(bins one row spans), not O(rows) or O(grid). Work:
+  * O(raw rows + emitted bins), so a 1970–2100 configured hourly grid
+  * costs what a tight one does. Summation order: each bin sums its parts
+  * in (t0, t1, count) order, deterministic whatever the input
+  * partitioning. Skew: a hot counter's rows all land in one task, which
+  * sorts them (spilling past its memory) and sweeps them in one pass.
+  * No driver-side collection.
   */
 object Rebin {
   private val unitSeconds = Map(
@@ -82,89 +89,163 @@ object Rebin {
             startTime: String = "1970-01-01 00:00:00",
             stopTime: String = "2100-01-01 00:00:00",
             gridFromConfig: Boolean = false): DataFrame = {
-    val unit = binningUnit.stripSuffix("s")
     val binSec = unitSeconds(binningUnit) * nUnit
     val binUsec = binSec * 1000000L
+    val zone = DateTimeUtils.getZoneId(raw.sparkSession.conf.get("spark.sql.session.timeZone"))
+    val level = DateTimeUtils.parseTruncLevel(UTF8String.fromString(binningUnit.stripSuffix("s")))
+    // config mode: the same (origin, last bin index) for every counter
+    val configGrid =
+      if (gridFromConfig)
+        Some((DateTimeUtils.stringToTimestamp(UTF8String.fromString(startTime), zone)
+          .getOrElse(throw new IllegalArgumentException(s"unparseable start time '$startTime'")),
+          lastConfigBin(startTime, stopTime, binSec)))
+      else None
 
     // range filter drops whole straddling rows (analysis.py:65-68);
     // stop_ts > ts also drops degenerate zero-duration rows, which the
     // proportional split (count·overlap/size) cannot define — filtered
     // identically in the oracle CTE so both engines agree on such input.
     // A null counter forms no series: the oracle's equi join on counter
-    // drops it, while the partitioning, windows and grouping below would
-    // all treat null as one more counter
-    val in = raw
+    // drops it, while the grouping below would treat null as one more
+    // counter
+    raw
       .withColumn("stop_ts", col("ts") + expr("make_interval(0,0,0,0,0,0,duration_sec)"))
       .where(col("stop_ts") <= lit(stopTime).cast("timestamp") &&
              col("ts") >= lit(startTime).cast("timestamp") &&
              col("stop_ts") > col("ts") &&
              col("counter").isNotNull)
-      // the one exchange: raw rows by counter. The extent window, the
-      // (counter, bin) aggregation and every window below reuse it
-      .repartition(col("counter"))
-
-    // grid extent per counter. Observed mode: origin = trunc(min
-    // start), last bin start = trunc(max stop). Config mode: the same
-    // constant (origin, gend) for every counter — a pair of literals.
-    val wAll = Window.partitionBy("counter")
-    val (origin, gend) =
-      if (gridFromConfig) {
-        val gendSec = lastConfigBin(startTime, stopTime, binSec) * binSec
-        (lit(startTime).cast("timestamp"),
-          lit(startTime).cast("timestamp") + expr(s"INTERVAL '$gendSec' SECOND"))
-      } else
-        (date_trunc(unit, min("ts").over(wAll)),
-          date_trunc(unit, max("stop_ts").over(wAll)))
-
-    // closed-form overlapped-bin range per input row, in grid indices:
-    // bins i with origin + i·bin < stop_ts and origin + (i+1)·bin > ts,
-    // capped to the last grid bin gi. origin <= min(ts) by construction so
-    // i0 >= 0. Each (counter, i) sum carries the counter's grid extent.
-    val sums = in
-      .select(col("*"), unix_micros(origin).as("o_us"), unix_micros(gend).as("g_us"))
-      .withColumn("gi", expr(s"(g_us - o_us) DIV $binUsec"))
-      .withColumn("i0", expr(s"(unix_micros(ts) - o_us) DIV $binUsec"))
-      .withColumn("i1", least(
-        expr(s"(unix_micros(stop_ts) - 1 - o_us) DIV $binUsec"), col("gi")))
-      .where(col("i1") >= col("i0"))
-      .withColumn("bi", explode(sequence(col("i0"), col("i1"))))
-      .withColumn("b0", col("o_us") + col("bi") * binUsec)
-      .withColumn("part", col("count") *
-        (least(unix_micros(col("stop_ts")), col("b0") + binUsec) -
-          greatest(unix_micros(col("ts")), col("b0"))).cast("double") /
-        (unix_micros(col("stop_ts")) - unix_micros(col("ts"))).cast("double"))
-      .groupBy("counter", "bi", "o_us", "gi")
-      .agg(sum("part").as("fcount"))
-
-    // densify without a grid: each touched bin also emits the untouched
-    // bins up to the next touched one (the last, up to gi) as zero rows;
-    // the first also emits the leading gap from the grid origin (config
-    // mode — observed mode always touches bin 0), which idx counts. A bin
-    // whose rows all carry a null count sums to null and stays an
-    // untouched zero, as the oracle's left join of the grid leaves it
-    val wBin = Window.partitionBy("counter").orderBy("bi")
-    val dense = sums
-      .select(col("*"),
-        when(lag("bi", 1).over(wBin).isNull, lit(0L)).otherwise(col("bi")).as("e0"),
-        coalesce(lead("bi", 1).over(wBin) - 1, col("gi")).as("e1"))
-      .withColumn("e", explode(sequence(col("e0"), col("e1"))))
-      .withColumn("touched", col("e") === col("bi") && col("fcount").isNotNull)
-      .select(col("counter"),
-        timestamp_micros(col("o_us") + col("e") * binUsec).as("bin_start"),
-        col("touched"),
-        when(col("touched"), col("fcount")).otherwise(lit(0.0)).as("fcount"))
-
-    val wOrd = Window.partitionBy("counter").orderBy("bin_start")
-    dense
-      .withColumn("idx", row_number().over(wOrd) - 1)
-      .withColumn("prev", lag("fcount", 1, 0.0).over(wOrd))
-      .withColumn("keep", col("fcount") =!= 0.0 || col("prev") =!= 0.0)
-      .withColumn("last_nz", max(when(col("touched"), col("idx"))).over(wAll))
-      .withColumn("krn", sum(when(col("keep"), 1L).otherwise(0L)).over(wOrd))
-      .where(col("keep") && col("krn") <= col("last_nz") + 1)
-      .select(col("counter"), col("bin_start").as("ts"),
+      .select(col("counter"), unix_micros(col("ts")).as("t0"),
+        unix_micros(col("stop_ts")).as("t1"), col("count").cast("double").as("count"))
+      .groupBy(col("counter")).as[String, Interval](Encoders.STRING, Encoders.product[Interval])
+      .flatMapSortedGroups(col("t0"), col("t1"), col("count")) { (counter, rows) =>
+        val sweep = new Sweep(counter, binUsec, level, zone, configGrid)
+        rows.flatMap(sweep.add) ++ sweep.finish()
+      }(Encoders.product[Bin])
+      .select(col("counter"), timestamp_micros(col("start")).as("ts"),
         lit(binSec.toDouble).as("duration_sec"),
         Rounding.stableIntTrunc(col("fcount")).as("count"))
+  }
+
+  /** One raw row in micros; `count` is null where the input's is. */
+  private[trend] case class Interval(counter: String, t0: Long, t1: Long, count: Option[Double])
+
+  /** One emitted grid bin: its start in micros and its summed count. */
+  private[trend] case class Bin(counter: String, start: Long, fcount: Double)
+
+  /** The rebin of one counter, fed its rows in (t0, t1, count) order.
+    *
+    * Bins are numbered from the origin; `next` is the first bin not yet
+    * final. The open bins next, next+1, … hold their running sums and
+    * touched flags in a ring. A row starting in bin i0 closes every bin
+    * before i0: each is settled in order (densify, then the zero-trim
+    * rules) and emitted if it survives. The last grid bin `gi` is known
+    * only at the end in observed mode (trunc of the max stop), so a bin
+    * closes only once it is at or below the `gi` of the stops seen so
+    * far — which, with a unit-aligned origin, never holds a bin back.
+    */
+  private final class Sweep(counter: String, binUs: Long, level: Int, zone: ZoneId,
+                            configGrid: Option[(Long, Long)]) {
+    private var origin = 0L
+    private var gi = -1L            // the last grid bin known to exist
+    private var started = false
+    private var sums = new Array[Double](8)
+    private var touched = new Array[Boolean](8)
+    private var head = 0            // ring slot of bin `next`
+    private var open = 0            // open bins: next until next + open - 1
+    private var next = 0L
+    private var prevNz = false      // the bin before `next` is nonzero
+    private var dropped = false     // some settled bin was not kept
+    private var held = -1L          // a kept untouched zero, emitted once a touched bin follows
+    private var heldOk = false      // `dropped` when it was held: the final slice keeps it
+    private val out = scala.collection.mutable.ArrayBuffer.empty[Bin]
+
+    /** Adds one row; returns the bins it closed that survive. */
+    def add(r: Interval): Iterator[Bin] = {
+      out.clear()
+      if (!started) {
+        started = true
+        origin = configGrid.fold(DateTimeUtils.truncTimestamp(r.t0, level, zone))(_._1)
+      }
+      gi = configGrid.fold(math.max(gi, lastBin(r.t1)))(_._2)
+      val i0 = (r.t0 - origin) / binUs
+      settleUpTo(math.min(i0 - 1, gi))
+      r.count.foreach { c =>
+        val i1 = (r.t1 - 1 - origin) / binUs
+        val size = (r.t1 - r.t0).toDouble
+        var i = i0
+        while (i <= i1) {
+          val b0 = origin + i * binUs
+          val k = slot(i)
+          sums(k) += c * (math.min(r.t1, b0 + binUs) - math.max(r.t0, b0)).toDouble / size
+          touched(k) = true
+          i += 1
+        }
+      }
+      out.iterator
+    }
+
+    /** Settles every bin up to the last grid bin; returns the survivors. */
+    def finish(): Iterator[Bin] = {
+      out.clear()
+      settleUpTo(gi)
+      if (held >= 0 && heldOk) out += Bin(counter, origin + held * binUs, 0.0)
+      out.iterator
+    }
+
+    private def lastBin(t1: Long): Long =
+      (DateTimeUtils.truncTimestamp(t1, level, zone) - origin) / binUs
+
+    /** The ring slot of open bin i, opening bins up to i. */
+    private def slot(i: Long): Int = {
+      val n = (i - next).toInt + 1
+      if (n > sums.length) {
+        var cap = sums.length * 2
+        while (cap < n) cap *= 2
+        val (s, t) = (new Array[Double](cap), new Array[Boolean](cap))
+        for (j <- 0 until open) {
+          s(j) = sums((head + j) % sums.length)
+          t(j) = touched((head + j) % sums.length)
+        }
+        sums = s; touched = t; head = 0
+      }
+      open = math.max(open, n)
+      (head + n - 1) % sums.length
+    }
+
+    private def settleUpTo(last: Long): Unit =
+      while (next <= last) {
+        if (open > 0) {
+          val (s, t) = (sums(head), touched(head))
+          sums(head) = 0.0; touched(head) = false
+          head = (head + 1) % sums.length
+          open -= 1
+          settle(s, t)
+          next += 1
+        } else {
+          // untouched run next..last: only its first bin can be kept
+          // (prev nonzero); the rest are dropped zeros
+          settle(0.0, touched = false)
+          if (last > next) dropped = true
+          next = last + 1
+        }
+      }
+
+    /** Densify and zero-trim bin `next`: kept iff it or its predecessor
+      * is nonzero; a kept bin is emitted if some touched bin is at or
+      * after it, and a kept untouched zero after the last touched bin
+      * survives the final slice iff an earlier bin was dropped.
+      */
+    private def settle(s: Double, touched: Boolean): Unit = {
+      if (touched && held >= 0) {
+        out += Bin(counter, origin + held * binUs, 0.0)
+        held = -1L
+      }
+      if (s != 0.0 || prevNz) {
+        if (touched) out += Bin(counter, origin + next * binUs, s)
+        else { held = next; heldOk = dropped }
+      } else dropped = true
+      prevNz = s != 0.0
+    }
   }
 
   /** The same computation as a DuckDB CTE chain over a relation named

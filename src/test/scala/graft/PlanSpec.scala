@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Physical-plan regression guards for the scale-critical shapes: these
   * fail loudly if a future change reintroduces a known scale-killer.
@@ -26,14 +31,43 @@ class PlanSpec extends SparkSpec {
   }
 
   test("rebin scans its input once and exchanges once, without a join") {
-    // the extent window, the (counter, bin) aggregation and the zero-trim
-    // windows all ride one hash partitioning of the raw rows by counter;
-    // a second exchange, a join or a second scan means the extent or the
-    // grid went back to being computed beside the input
+    // the per-counter sweep rides one hash partitioning of the raw rows
+    // by counter; a second exchange, a join or a second scan means the
+    // extent or the grid went back to being computed beside the input
     val p = plan("trend_rebin")
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, s"expected one exchange:\n$p")
+    assert("Exchange".r.findAllIn(p).size == 1, s"expected one exchange:\n$p")
     assert(!p.contains("Join") && !p.contains("BroadcastExchange"), s"rebin joins:\n$p")
     assert("FileScan".r.findAllIn(p).size == 1, s"expected one input scan:\n$p")
+  }
+
+  test("rebin sweeps each counter once, with no Window operator") {
+    // extent, densify and zero-trim happen in the sorted sweep; a Window
+    // would buffer a counter's rows again
+    val p = plan("trend_rebin")
+    assert("""\bWindow\b""".r.findFirstIn(p).isEmpty, s"rebin windows:\n$p")
+  }
+
+  test("the binned store's save adds no exchange of its own") {
+    // saveBinned writes the rebinned frame as the rebin partitioned it:
+    // the write's plan holds the rebin's one exchange and no other
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      SparkEntry.queries("trend_poisson_lc_stored")(spark, sf)
+      org.apache.spark.sql.graft.GraftShim.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    object H extends AdaptiveSparkPlanHelper
+    val writes = plans.synchronized(plans.toList)
+      .filter(p => H.find(p)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+    assert(writes.size == 1, s"expected one write:\n${writes.mkString("\n")}")
+    val shuffles = H.collect(writes.head) { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size == 1, s"expected the rebin's one exchange:\n${writes.head}")
   }
 
   test("linReg computes each regression aggregate once, in the Window") {

@@ -53,4 +53,16 @@ class ShingleArraySpec extends SparkSpec {
       .as[Long].collect().toSeq
     assert(viaNew == viaOld && viaNew.length == 3)
   }
+
+  test("the string-array kernels reject other inputs at analysis time") {
+    // an AnalysisException when the plan is analyzed, not a
+    // ClassCastException inside an executor task
+    val typed = Seq((Seq(1L, 2L), "a b")).toDF("longs", "text")
+    for ((c, what) <- Seq(ShingleArray(col("longs"), 2) -> "shingles over array<bigint>",
+                          SumStrLen(col("text")) -> "sum_str_len over a string",
+                          CountInSet(col("longs"), Seq("a")) -> "count_in_set over array<bigint>")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](typed.select(c))
+      assert(e.getMessage.contains("DATATYPE_MISMATCH"), s"$what: ${e.getMessage}")
+    }
+  }
 }

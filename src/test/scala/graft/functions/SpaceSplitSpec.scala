@@ -49,4 +49,10 @@ class SpaceSplitSpec extends SparkSpec {
       .as[Long].collect().toSeq
     assert(viaNew == viaOld && viaNew.length == 2)
   }
+
+  test("space split rejects a non-string input at analysis time") {
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Seq(Seq("a b")).toDF("w").select(SpaceSplit(col("w"))))
+    assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+  }
 }

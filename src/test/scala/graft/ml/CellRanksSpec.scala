@@ -114,4 +114,16 @@ class CellRanksSpec extends SparkSpec {
       }
     }
   }
+
+  test("cell ranks reject a non-double vector at analysis time") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graft.GraftShim
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(Array((0L, Array(1.0), 1.0)))
+    val ranks = GraftShim.column(graft.functions.CellRanksExpr(
+      GraftShim.expression(col("v")), GraftShim.expression(col("norm")), bc, null, 1, 0))
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Seq((Seq(1.0f), 1.0)).toDF("v", "norm").select(ranks))
+    assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+  }
 }

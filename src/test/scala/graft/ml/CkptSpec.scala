@@ -6,7 +6,8 @@ import graft.SparkSpec
   * shared test SparkContext has no un-set for a checkpoint dir, so
   * flipping it here would silently switch every later suite's lineage
   * cuts to reliable checkpoints. The reliable path's contract (survives
-  * executor SIGKILL, bit-equal result) is the measured BatchKill A/B.
+  * executor SIGKILL, bit-equal result) is the measured A/B in SCALING.md
+  * "The BATCH surface under executor loss".
   */
 class CkptSpec extends SparkSpec {
   import spark.implicits._

@@ -283,6 +283,78 @@ class RebinSpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
+  /** `n` seeded random rows over two days: counter "hot" holds `hotShare`
+    * of them, the rest spread over five others; durations from 5 min to
+    * 5 h, so rows straddle bins and overlap each other; a few null counts.
+    */
+  private def randomRows(n: Int, hotShare: Double, seed: Long): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map { _ =>
+      val k = if (rnd.nextDouble() < hotShare) "hot" else s"c${rnd.nextInt(5)}"
+      val d = Seq(300L, 1200L, 3600L, 5400L, 18000L)(rnd.nextInt(5))
+      val c = if (rnd.nextInt(50) == 0) None else Some(rnd.nextInt(20).toDouble / 4)
+      (new Timestamp(Base + rnd.nextInt(48 * 60) * 60000L), d, c, k)
+    }.toDF("ts", "duration_sec", "count", "counter")
+  }
+
+  test("output does not depend on input order or partitioning") {
+    // each bin's sum is taken in one order whatever the input's layout
+    val df = randomRows(600, 0.3, 7L)
+    val want = rowsOf(Rebin(df))
+    assert(want.nonEmpty)
+    for (parts <- Seq(1, 7)) {
+      val shuffled = df.orderBy(rand(11L)).repartition(parts)
+      assert(rowsOf(Rebin(shuffled)) == want, s"$parts partitions")
+      assert(rowsOf(Rebin(shuffled, "minutes", 30)) == rowsOf(Rebin(df, "minutes", 30)),
+        s"$parts partitions, 30-minute bins")
+    }
+  }
+
+  test("a hot counter holding 90% of the rows rebins as the grid-join formulation does") {
+    val df = randomRows(2000, 0.9, 23L)
+    for ((unit, n, cfg) <- Seq(("hours", 1, false), ("minutes", 20, false), ("hours", 1, true))) {
+      val (start, stop) =
+        if (cfg) ("2024-01-01 03:00:00", "2024-01-02 20:00:00")
+        else ("1970-01-01 00:00:00", "2100-01-01 00:00:00")
+      assert(rowsOf(Rebin(df, unit, n, start, stop, cfg)) ==
+        rowsOf(gridJoinRebin(df, unit, n, start, stop, cfg)), s"$unit x $n, config grid $cfg")
+    }
+  }
+
+  test("a configured 1970-2100 hourly grid returns the rows of a tight one") {
+    // ~1.14 M grid bins per counter, nearly all untouched: the leading gap
+    // and the tail are settled without visiting them. Both grids are
+    // hour-aligned and both leave an untouched bin before the data and
+    // after its last stop, so the zero-trim keeps the same rows
+    val df = frame(Seq(
+      ("2024-01-01 02:10:00", 5400L, 6.0, "a"),
+      ("2024-01-01 06:00:00", 3600L, 2.0, "a"),
+      ("2024-01-01 03:00:00", 600L, 1.0, "b"),
+      ("2024-01-01 09:30:00", 1800L, 4.0, "b")))
+    val wide = rowsOf(Rebin(df, "hours", 1, "1970-01-01 00:00:00", "2100-01-01 00:00:00",
+      gridFromConfig = true))
+    val tight = rowsOf(Rebin(df, "hours", 1, "2024-01-01 00:00:00", "2024-01-01 12:00:00",
+      gridFromConfig = true))
+    assert(wide.nonEmpty && wide == tight)
+  }
+
+  test("loadBinned reads a plain store and a bucket-partitioned one alike") {
+    // stores written before the plain layout are hash-bucketed into
+    // bucket= directories; the partition column must not leak into rows
+    val binned = Rebin(randomRows(300, 0.5, 3L))
+    val dir = java.nio.file.Files.createTempDirectory("binned").toString
+    graft.Tables.saveBinned(binned, s"$dir/plain")
+    binned.withColumn("bucket", pmod(hash(col("counter")), lit(4)))
+      .repartition(col("bucket"))
+      .write.partitionBy("bucket").parquet(s"$dir/bucketed")
+    val want = rowsOf(binned)
+    for (store <- Seq("plain", "bucketed")) {
+      val loaded = graft.Tables.loadBinned(spark, s"$dir/$store")
+      assert(loaded.columns.toSeq == Seq("counter", "ts", "duration_sec", "count"), store)
+      assert(rowsOf(loaded) == want, store)
+    }
+  }
+
   private val Base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
 
   /** The grid-join formulation Rebin shipped before it moved to one
