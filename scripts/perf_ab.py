@@ -25,15 +25,20 @@ import tempfile
 
 
 def export(rev, dest):
-    """The committed files of `rev` in `dest` (reused if already there)."""
+    """The committed files of `rev` in `dest` (reused if it holds `rev`)."""
     sha = subprocess.check_output(["git", "rev-parse", rev], text=True).strip()
-    if not os.path.exists(os.path.join(dest, ".rev")):
+    marker = os.path.join(dest, ".rev")
+    if os.path.exists(marker):
+        with open(marker) as f:
+            if f.read() != sha:
+                sys.exit(f"perf_ab: {dest} holds another revision; use a fresh --workdir")
+    else:
         os.makedirs(dest, exist_ok=True)
         archive = subprocess.Popen(["git", "archive", sha], stdout=subprocess.PIPE)
         subprocess.check_call(["tar", "-x", "-C", dest], stdin=archive.stdout)
         if archive.wait() != 0:
             sys.exit(f"perf_ab: git archive {rev} failed")
-        with open(os.path.join(dest, ".rev"), "w") as f:
+        with open(marker, "w") as f:
             f.write(sha)
     return sha
 

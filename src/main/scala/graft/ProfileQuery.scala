@@ -29,14 +29,16 @@ object ProfileQuery {
     val execDesc = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     // per-run physical totals — the deterministic A/B metrics (wall time
     // on this box carries ±40-70% noise; bytes shuffled and tasks run do
-    // not): shuffle write/read, input bytes, stage/task counts
+    // not): shuffle write/read, input bytes, spill (memory + disk, as
+    // perfbench's spark.spill_bytes counts it), stage/task counts
     val shufW = new java.util.concurrent.atomic.AtomicLong
     val shufR = new java.util.concurrent.atomic.AtomicLong
     val inB = new java.util.concurrent.atomic.AtomicLong
+    val spill = new java.util.concurrent.atomic.AtomicLong
     val nStages = new java.util.concurrent.atomic.AtomicLong
     val nTasks = new java.util.concurrent.atomic.AtomicLong
     def resetPhys(): Unit =
-      Seq(shufW, shufR, inB, nStages, nTasks).foreach(_.set(0L))
+      Seq(shufW, shufR, inB, spill, nStages, nTasks).foreach(_.set(0L))
     @volatile var capture = false
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(
@@ -46,6 +48,7 @@ object ProfileQuery {
           shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
           shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
           inB.addAndGet(m.inputMetrics.bytesRead)
+          spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
           nStages.incrementAndGet()
           nTasks.addAndGet(sc.stageInfo.numTasks)
           ()
@@ -100,6 +103,7 @@ object ProfileQuery {
       println(f"  phys: shuffle_write=${shufW.get / 1024.0}%.1f KiB " +
         f"shuffle_read=${shufR.get / 1024.0}%.1f KiB " +
         f"input=${inB.get / 1024.0}%.1f KiB " +
+        f"spill=${spill.get / 1024.0}%.1f KiB " +
         f"stages=${nStages.get} tasks=${nTasks.get}")
       done.groupBy(_.site).view
         .mapValues(js => (js.map(j => (j.end - j.start) / 1e3).sum, js.size))

@@ -21,8 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    count·overlap/size to each overlapped bin (analysis.py:110-126) — one
   *    proportional formula covers both (contained ⇒ overlap = size);
   *  - input reaching past the last grid stop is silently truncated
-  *    (the IndexError pass at analysis.py:123-124) — the bin-index cap `gi`
-  *    reproduces it;
+  *    (the IndexError pass at analysis.py:123-124) — bins past the last
+  *    grid bin `gi` are dropped;
   *  - densify: grid bins with no data get count 0 (analysis.py:139-143);
   *  - zero-trim (analysis.py:131-154): a row is kept iff its count or its
   *    predecessor's count is nonzero (so only the FIRST zero of each zero
@@ -54,7 +54,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * in (t0, t1, count) order, deterministic whatever the input
   * partitioning. Skew: a hot counter's rows all land in one task, which
   * sorts them (spilling past its memory) and sweeps them in one pass.
-  * No driver-side collection.
+  * No driver-side collection. Spark cannot see that the output is still
+  * partitioned by counter, so a per-counter model after it shuffles the
+  * binned rows (one per bin, not per raw row) once more.
   */
 object Rebin {
   private val unitSeconds = Map(
@@ -126,8 +128,8 @@ object Rebin {
         Rounding.stableIntTrunc(col("fcount")).as("count"))
   }
 
-  /** One raw row in micros; `count` is null where the input's is. */
-  private[trend] case class Interval(counter: String, t0: Long, t1: Long, count: Option[Double])
+  /** One raw row of a counter, in micros; `count` is null where the input's is. */
+  private[trend] case class Interval(t0: Long, t1: Long, count: Option[Double])
 
   /** One emitted grid bin: its start in micros and its summed count. */
   private[trend] case class Bin(counter: String, start: Long, fcount: Double)
@@ -138,10 +140,11 @@ object Rebin {
     * final. The open bins next, next+1, … hold their running sums and
     * touched flags in a ring. A row starting in bin i0 closes every bin
     * before i0: each is settled in order (densify, then the zero-trim
-    * rules) and emitted if it survives. The last grid bin `gi` is known
-    * only at the end in observed mode (trunc of the max stop), so a bin
+    * rules) and emitted if it survives. In observed mode the last grid
+    * bin `gi` (trunc of the max stop) is known only at the end, so a bin
     * closes only once it is at or below the `gi` of the stops seen so
-    * far — which, with a unit-aligned origin, never holds a bin back.
+    * far; on a grid aligned to the truncation unit that never holds a
+    * bin back.
     */
   private final class Sweep(counter: String, binUs: Long, level: Int, zone: ZoneId,
                             configGrid: Option[(Long, Long)]) {
@@ -224,7 +227,7 @@ object Rebin {
         } else {
           // untouched run next..last: only its first bin can be kept
           // (prev nonzero); the rest are dropped zeros
-          settle(0.0, touched = false)
+          settle(0.0, isTouched = false)
           if (last > next) dropped = true
           next = last + 1
         }
@@ -235,13 +238,13 @@ object Rebin {
       * after it, and a kept untouched zero after the last touched bin
       * survives the final slice iff an earlier bin was dropped.
       */
-    private def settle(s: Double, touched: Boolean): Unit = {
-      if (touched && held >= 0) {
+    private def settle(s: Double, isTouched: Boolean): Unit = {
+      if (isTouched && held >= 0) {
         out += Bin(counter, origin + held * binUs, 0.0)
         held = -1L
       }
       if (s != 0.0 || prevNz) {
-        if (touched) out += Bin(counter, origin + next * binUs, s)
+        if (isTouched) out += Bin(counter, origin + next * binUs, s)
         else { held = next; heldOk = dropped }
       } else dropped = true
       prevNz = s != 0.0
