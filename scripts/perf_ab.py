@@ -1,18 +1,19 @@
 #!/usr/bin/env python3
-"""Alternating A/B of the repo benchmark between two revisions.
+"""Alternating A/B of the repo benchmark between a revision and HEAD.
 
-    python3 scripts/perf_ab.py --base HEAD~1 [--head HEAD] --pairs 10 \
-        --seed 41 [--workload trend --workload corpus_store] [--workdir DIR]
+    python3 scripts/perf_ab.py --base HEAD~1 --pairs 10 --seed 41 \
+        [--workload trend --workload corpus_store] [--workdir DIR]
 
-Exports the committed files of each revision into its own directory under
-`--workdir` (`git archive`, so each side builds from a fresh checkout's
-files into its own `.bench_build/`), then runs
+Exports the committed files of the base revision and of HEAD each into its
+own directory under `--workdir` (`git archive`, so each side builds from a
+fresh checkout's files into its own `.bench_build/`), then runs
 `perfbench/run.py --workload W --seed S --seconds N --trace 0` once per
-side per pair, alternating which side runs first. It only reads
-perfbench. For each workload and end-to-end metric of `BENCHMARK.json` it
-prints each side's median and quartiles and the number of pairs the head
-side won (ties count for neither), plus failed operations; the last line
-of standard output is the same summary as JSON. Every run's metrics are
+side per pair, alternating which side runs first; N is `run_seconds` of
+HEAD's `BENCHMARK.json`, so both sides run the benchmark's own length. It
+only reads perfbench. For each workload and end-to-end metric of
+`BENCHMARK.json` it prints each side's median and quartiles and the number
+of pairs the head side won (ties count for neither), plus failed
+operations; the last line of standard output is the same summary as JSON. Every run's metrics are
 appended to `<workdir>/runs.jsonl` as they finish.
 """
 import argparse
@@ -64,24 +65,22 @@ def quartiles(xs):
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--base", required=True, help="revision to compare against")
-    ap.add_argument("--head", default="HEAD")
     ap.add_argument("--workload", action="append", help="default: every workload")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--seconds", type=int, help="default: BENCHMARK.json run_seconds")
     ap.add_argument("--workdir", default=os.path.join(tempfile.gettempdir(), "perf_ab"))
     a = ap.parse_args()
 
     sides = {}
-    for side, rev in (("base", a.base), ("head", a.head)):
+    for side, rev in (("base", a.base), ("head", "HEAD")):
         dest = os.path.join(a.workdir, side)
         sides[side] = (dest, export(rev, dest))
     with open(os.path.join(sides["head"][0], "BENCHMARK.json")) as f:
         spec = json.load(f)
     better = {m["name"]: m["better"] for m in spec["end_to_end"]}
     workloads = a.workload or [w["name"] for w in spec["workloads"]]
-    seconds = a.seconds or spec["run_seconds"]
-    print(f"base {a.base} = {sides['base'][1][:12]}, head {a.head} = {sides['head'][1][:12]}")
+    seconds = spec["run_seconds"]
+    print(f"base {a.base} = {sides['base'][1][:12]}, head HEAD = {sides['head'][1][:12]}")
 
     runs = {w: {"base": [], "head": []} for w in workloads}
     log = open(os.path.join(a.workdir, "runs.jsonl"), "a")
