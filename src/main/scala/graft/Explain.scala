@@ -24,38 +24,13 @@ object Explain {
         catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
       }
     // `lex_build`: the lexical postings-BUILD subtree — a write-side plan
-    // no declared query's explain can show. Prints the legacy two-shuffle
-    // shape (termFrequencies window on (doc_id, th), then repartition by
-    // bucket + th sort for the partitioned write) next to the fused
-    // one-shuffle shape actually used by saveLexical/appendLexical.
+    // no declared query's explain can show: the one-shuffle shape
+    // saveLexical/appendLexical write through
     if (only.contains("lex_build")) {
-      import org.apache.spark.sql.functions._
-      import graft.ml.Portable.{words, shingles, h64}
       val corpus = Tables.load(spark, sfDir, "documents")
         .where(!graft.ml.Retrieval.boundedIsQuery)
-      val nb = 64L
-      val exploded = corpus
-        .select(col("doc_id"), words(col("text")).as("w"))
-        .select(col("doc_id"),
-          greatest(size(col("w")) - 1, lit(0)).cast("long").as("dl"),
-          explode(shingles(col("w"), 2)).as("t"))
-        .select(col("doc_id"), col("dl"), h64(col("t")).as("th"))
-      println("========== lex_build (legacy two-shuffle shape) ==========")
-      // the round-15 shape, inlined verbatim (termFrequencies itself has
-      // since moved to the fused one-sort form): window tf on (doc_id,
-      // th), then repartition by bucket + th sort for the write
-      val byKey = org.apache.spark.sql.expressions.Window
-        .partitionBy("doc_id", "th")
-      exploded
-        .withColumn("tf", count(lit(1)).over(byKey))
-        .withColumn("rn", row_number().over(byKey.orderBy("th")))
-        .where(col("rn") === 1).drop("rn")
-        .withColumn("bucket", pmod(col("th"), lit(nb)))
-        .repartition(col("bucket"))
-        .sortWithinPartitions("th")
-        .explain("formatted")
       println("========== lex_build (fused one-shuffle shape) ==========")
-      graft.ml.LexIndex.bucketedPostingsOf(corpus, nb).explain("formatted")
+      graft.ml.LexIndex.bucketedPostingsOf(corpus, 64L).explain("formatted")
     }
     spark.stop()
   }

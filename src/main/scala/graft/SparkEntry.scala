@@ -272,7 +272,7 @@ object SparkEntry {
       Csv.writeScored(Models.poissonLc(rebinnedEvents(s, dir), alpha = 0.99), tmp)
       Csv.readScored(s, Seq(tmp))
     }),
-    // stage handoff through the bucketed columnar intermediate (S4):
+    // stage handoff through the plain parquet intermediate (S4):
     // rebin → parquet store → load → score; oracle identical to
     // trend_poisson_lc, so a hash match proves the round-trip is lossless
     "trend_poisson_lc_stored" -> ((s, dir) => {
@@ -2068,7 +2068,7 @@ object SparkEntry {
       "SELECT counter, ts, count, eta FROM scored"),
     "trend_poisson_lc_stored" -> withScored(Models.poissonLcOracleCtes(0.99),
       "SELECT counter, ts, count, eta FROM scored"),
-    "trend_poisson_cycle" -> withScored(Models.poissonCycleOracleCtes(0.99),
+    "trend_poisson_cycle" -> withScored(Models.poissonCycleMultiOracleCtes(0.99, Seq("hour")),
       "SELECT counter, ts, count, eta FROM scored"),
     "trend_poisson_cycle_weekday" -> withScored(
       Models.poissonCycleMultiOracleCtes(0.99, Seq("weekday", "hour")),
@@ -2354,7 +2354,7 @@ object SparkEntry {
       Retrieval.bm25TopKOracleSql(Retrieval.boundedIsQuerySql, k = 10),
     // refresh with FROZEN df/avgdl: stats CTEs pinned to the 90% base
     "ret_bm25_appended" ->
-      LexIndex.bm25FrozenOracleSql(Retrieval.boundedIsQuerySql,
+      Retrieval.bm25TopKOracleSql(Retrieval.boundedIsQuerySql,
         baseWhereSql = "((doc_id % 10) + 10) % 10 != 9", k = 10),
     "ret_bm25_index_stats" ->
       LexIndex.lexStatsOracleSql(Retrieval.boundedIsQuerySql,
@@ -2363,11 +2363,11 @@ object SparkEntry {
     // frozen over the full build corpus; the compacted twin answers the
     // SAME oracle (purge must not change any answer)
     "ret_bm25_deleted" ->
-      LexIndex.bm25FrozenOracleSql(Retrieval.boundedIsQuerySql,
+      Retrieval.bm25TopKOracleSql(Retrieval.boundedIsQuerySql,
         baseWhereSql = "TRUE", k = 10,
         liveWhereSql = "((doc_id % 7) + 7) % 7 != 3"),
     "ret_bm25_deleted_compacted" ->
-      LexIndex.bm25FrozenOracleSql(Retrieval.boundedIsQuerySql,
+      Retrieval.bm25TopKOracleSql(Retrieval.boundedIsQuerySql,
         baseWhereSql = "TRUE", k = 10,
         liveWhereSql = "((doc_id % 7) + 7) % 7 != 3"),
     // maintain decisions: pinned thresholds against count formulas —
@@ -2396,11 +2396,11 @@ object SparkEntry {
     // filtered serve: candidates cut to the predicate BEFORE ranking,
     // stats frozen over the full corpus — true top-k among matches
     "ret_bm25_filtered" ->
-      LexIndex.bm25FrozenOracleSql(Retrieval.boundedIsQuerySql,
+      Retrieval.bm25TopKOracleSql(Retrieval.boundedIsQuerySql,
         baseWhereSql = "TRUE", k = 10,
         liveWhereSql = "lang IN ('zh', 'fr')", metaColsSql = Seq("lang")),
     "ret_bm25_delete_where" ->
-      LexIndex.bm25FrozenOracleSql(Retrieval.boundedIsQuerySql,
+      Retrieval.bm25TopKOracleSql(Retrieval.boundedIsQuerySql,
         baseWhereSql = "TRUE", k = 10,
         liveWhereSql = "lang != 'de'", metaColsSql = Seq("lang")),
     "ret_bm25_eval" ->

@@ -1,9 +1,11 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.GraftShim
 import org.apache.spark.sql.types._
 
 /** The PQ / k-means assignment kernels as native expressions. Each is the
@@ -23,6 +25,8 @@ import org.apache.spark.sql.types._
 case class PqSeedCodes(child: Expression,
     bc: Broadcast[Array[(Long, Array[Double])]], nSub: Int)
     extends UnaryExpression with CodegenFallback {
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(children, Seq(ArrayType(DoubleType)))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "pq_seed_codes"
@@ -69,6 +73,8 @@ case class PqSeedCodes(child: Expression,
 case class PqEncode(child: Expression,
     bc: Broadcast[Map[Long, Array[(Long, Array[Double])]]], nSub: Int)
     extends UnaryExpression with CodegenFallback {
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(children, Seq(ArrayType(DoubleType)))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "pq_encode"
@@ -117,6 +123,8 @@ case class PqEncode(child: Expression,
   */
 case class KmeansAssign(child: Expression, bc: Broadcast[Array[Array[Long]]])
     extends UnaryExpression with CodegenFallback {
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(children, Seq(ArrayType(LongType)))
   override def dataType: DataType = StructType(Seq(
     StructField("_1", LongType, nullable = false),
     StructField("_2", LongType, nullable = false)))
@@ -153,6 +161,8 @@ case class KmeansAssign(child: Expression, bc: Broadcast[Array[Array[Long]]])
 case class PqAssign(left: Expression, right: Expression,
     bc: Broadcast[Array[Array[Array[Long]]]])
     extends BinaryExpression with CodegenFallback {
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(children, Seq(LongType, ArrayType(LongType)))
   override def dataType: DataType = StructType(Seq(
     StructField("_1", LongType, nullable = false),
     StructField("_2", LongType, nullable = false)))

@@ -208,6 +208,8 @@ case class SqPackBytes(left: Expression, right: Expression)
 /** See [[VecQuant.sqQuant]]. */
 case class SqQuantDoubles(left: Expression, right: Expression)
     extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(children, Seq(ArrayType(DoubleType), DoubleType))
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = true
   override def prettyName: String = "sq_quant_doubles"
@@ -254,6 +256,8 @@ case class SqQuantDoubles(left: Expression, right: Expression)
 /** See [[VecQuant.sqQuantLongs]]. */
 case class SqQuantLongs(left: Expression, right: Expression)
     extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(children, Seq(ArrayType(DoubleType), DoubleType))
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def nullable: Boolean = true
   override def prettyName: String = "sq_quant_longs"
@@ -337,6 +341,8 @@ case class ByteDot(left: Expression, right: Expression)
 
 /** See [[VecQuant.unpack]]. */
 case class UnpackBytes(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftShim.checkInputTypes(children, Seq(BinaryType))
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "unpack_bytes"

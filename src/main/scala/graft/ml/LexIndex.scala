@@ -31,10 +31,11 @@ import org.apache.spark.sql.functions._
   *   - `stats/` one row (n_docs, avgdl, n_buckets), frozen at build.
   *
   * Scoring at serve time is bit-identical to [[Retrieval.bm25TopK]] for a
-  * store built over the same corpus: same 6-dp idf rounding, same
-  * integer-micro-unit contributions, same two-stage top-k and tie-breaks
-  * — `ret_bm25_persisted` answers the SAME DuckDB oracle as
-  * `ret_bm25_seeds`.
+  * store built over the same corpus: both serves call the same
+  * [[Retrieval.seedTerms]], [[Retrieval.idfWeights]] and
+  * [[Retrieval.bm25Ranked]], and the build writes
+  * [[Retrieval.termStream]] — `ret_bm25_persisted` answers the SAME
+  * DuckDB oracle as `ret_bm25_seeds`.
   *
   * Refresh ([[appendLexical]]) appends the arriving documents' postings
   * to their bucket partitions with df / avgdl / n_docs intentionally
@@ -115,13 +116,6 @@ object LexIndex {
   private[graft] def bucketedPostingsOf(docs: DataFrame, nb: Long,
                                         metaCols: Seq[String] = Nil): DataFrame = {
     val metaExprs = metaCols.map(col)
-    val exploded = docs
-      .select(col("doc_id") +: words(col("text")).as("w") +: metaExprs: _*)
-      .select(col("doc_id") +:
-        greatest(size(col("w")) - 1, lit(0)).cast("long").as("dl") +:
-        explode(shingles(col("w"), 2)).as("t") +: metaExprs: _*)
-      .select(col("doc_id") +: col("dl") +: h64(col("t")).as("th") +:
-        metaExprs: _*)
     // two window specs over ONE sort: the tf count partitions by the
     // full key (required ordering = the partition keys, (bucket, th,
     // doc_id)), and the survivor-row pick uses lag over the SAME
@@ -131,7 +125,7 @@ object LexIndex {
     // its (th, doc_id) run iff the previous row's key differs
     val byKey = Window.partitionBy("bucket", "th", "doc_id")
     val byRun = Window.partitionBy("bucket").orderBy("th", "doc_id")
-    exploded
+    Retrieval.termStream(docs, metaCols)
       // skew: the bucket key spreads DISTINCT terms evenly, but all
       // postings of one term share its bucket, so a stopword-heavy
       // bigram makes a hot bucket (one task, one large file). Accepted:
@@ -646,13 +640,7 @@ object LexIndex {
     val nBuckets = stats.select("n_buckets").head().getLong(0)
     // the seed vocabulary: bounded, materialized once, read three times
     // (bucket/term collect below, df weighting, posting join)
-    val qterms = queryDocs
-      .select(col("doc_id").as("query_id"),
-        slice(words(col("text")), 1, nQueryTerms + 1).as("w"))
-      .select(col("query_id"), explode(shingles(col("w"), 2)).as("t"))
-      .select(col("query_id"), h64(col("t")).as("th"))
-      .distinct()
-      .lineageCut
+    val qterms = Retrieval.seedTerms(queryDocs, nQueryTerms)
     // driver-side probe lists — the serving-path scan cut (the shared
     // [[Index.prunedToProbes]] machinery): the read names ONLY the
     // seed-term bucket directories (full partition discovery would list
@@ -673,37 +661,17 @@ object LexIndex {
       Index.prunedToProbes(spark, dir, buckets, "bucket").where(termFilter)
     // idf per (query, surviving term) from the FROZEN stored df + stats;
     // bounded by the seed vocabulary — broadcast everywhere below
-    val weighted = pruned(termsDir(spark, path))
-      .join(broadcast(qterms), "th")
-      .crossJoin(broadcast(stats.select("n_docs", "avgdl")))
-      .where(col("df") <= floor(lit(dfCapFrac) * col("n_docs")))
-      .select(col("query_id"), col("th"),
-        round(log(lit(1.0) +
-          (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)), 6).as("idf"),
-        col("avgdl"))
-    // posting join: pruned stored postings × broadcast weights — map-side,
-    // the only store-touching operation (df-capped terms never leave the
-    // scan: their weights don't exist, the join drops their postings).
-    // Tombstone mask before scoring: a deleted doc must not consume a
+    val weighted = Retrieval.idfWeights(
+      pruned(termsDir(spark, path))
+        .join(broadcast(qterms), "th")
+        .crossJoin(broadcast(stats.select("n_docs", "avgdl"))),
+      Seq("query_id", "th"), dfCapFrac)
+    // the pruned stored postings are the only store-touching relation;
+    // tombstone mask before scoring: a deleted doc must not consume a
     // top-k slot (the dense serve's rank-then-filter hazard)
-    val contrib = Tombstones.mask(
+    Retrieval.bm25Ranked(Tombstones.mask(
       pruned(Index.liveDir(spark, path, PostingsKind)).where(candWhere),
-      Tombstones.readAll(spark, path), "doc_id")
-      .join(broadcast(weighted), "th")
-      .select(col("query_id"), col("doc_id"),
-        floor(col("idf") * (col("tf") * (k1 + 1) /
-            (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))) *
-          1e6 + 0.5).cast("long").as("c_micro"))
-    val scored = contrib.groupBy("query_id", "doc_id")
-      .agg(sum("c_micro").as("score_micro"))
-    val order = Seq(desc("score_micro"), asc("doc_id"))
-    val pre = Window.partitionBy(col("query_id"), pmod(col("doc_id"), lit(64)))
-      .orderBy(order: _*)
-    val fin = Window.partitionBy("query_id").orderBy(order: _*)
-    scored
-      .withColumn("r1", row_number().over(pre)).where(col("r1") <= k).drop("r1")
-      .withColumn("rank", row_number().over(fin)).where(col("rank") <= k)
-      .select("query_id", "doc_id", "score_micro", "rank")
+      Tombstones.readAll(spark, path), "doc_id"), weighted, k, k1, b)
   }
 
   /** The lexical MAINTENANCE decision ([[Index.maintain]]'s sparse
@@ -916,75 +884,4 @@ object LexIndex {
        |  0::BIGINT AS post_n_tombstones, 0::BIGINT AS post_n_masked,
        |  0.0::DOUBLE AS post_masked_frac
        |FROM vals""".stripMargin
-
-  /** DuckDB oracle for a REFRESHED store ([[saveLexical]] over the base
-    * slice, [[appendLexical]] of the rest, then [[bm25TopKIndexed]]):
-    * postings (tf, dl) over the FULL corpus, df / n_docs / avgdl frozen
-    * to the base slice — the lexical twin of the dense append oracles'
-    * pinned centroid seed sets. `baseWhereSql` selects the base slice
-    * among corpus rows.
-    */
-  /** `liveWhereSql` restricts the SERVED documents (tombstone-masked
-    * candidates under [[deleteDocs]], or a filtered serve's `candWhere`
-    * over `metaColsSql` columns carried into the corpus CTE) while
-    * df / n_docs / avgdl stay frozen to `base` — deletion's and
-    * filtered retrieval's scoring semantics exactly.
-    */
-  def bm25FrozenOracleSql(isQuerySql: String, baseWhereSql: String,
-                          k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
-                          nQueryTerms: Int = 8,
-                          dfCapFrac: Double = 0.5,
-                          liveWhereSql: String = "TRUE",
-                          metaColsSql: Seq[String] = Nil): String =
-    s"""WITH corpus AS (
-       |  SELECT doc_id, ${(metaColsSql :+ s"$wordsSql AS w").mkString(", ")}
-       |  FROM documents WHERE NOT ($isQuerySql)),
-       |base AS (SELECT * FROM corpus WHERE $baseWhereSql),
-       |live AS (SELECT * FROM corpus WHERE $liveWhereSql),
-       |tf AS (
-       |  SELECT doc_id, ${h64Sql("t")} AS th, count(*)::BIGINT AS tf
-       |  FROM (SELECT doc_id, unnest(${shinglesSql(2)}) AS t FROM live)
-       |  GROUP BY doc_id, 2),
-       |dl AS (
-       |  SELECT doc_id,
-       |         (CASE WHEN len(w) >= 2 THEN len(w) - 1 ELSE 0 END)::BIGINT AS dl
-       |  FROM live),
-       |basedl AS (
-       |  SELECT (CASE WHEN len(w) >= 2 THEN len(w) - 1 ELSE 0 END)::BIGINT AS dl
-       |  FROM base),
-       |stats AS (
-       |  SELECT count(*)::BIGINT AS n_docs, round(avg(dl), 6) AS avgdl
-       |  FROM basedl),
-       |qw AS (
-       |  SELECT doc_id AS query_id, ($wordsSql)[1:${nQueryTerms + 1}] AS w
-       |  FROM documents WHERE $isQuerySql),
-       |qterms AS (
-       |  SELECT DISTINCT query_id, ${h64Sql("t")} AS th
-       |  FROM (SELECT query_id, unnest(${shinglesSql(2)}) AS t FROM qw)),
-       |df AS (
-       |  SELECT th, count(DISTINCT doc_id)::BIGINT AS df
-       |  FROM (SELECT doc_id, ${h64Sql("t")} AS th
-       |        FROM (SELECT doc_id, unnest(${shinglesSql(2)}) AS t FROM base))
-       |  WHERE th IN (SELECT th FROM qterms) GROUP BY th),
-       |weighted AS (
-       |  SELECT q.query_id, q.th,
-       |         round(ln(1.0 + (s.n_docs - d.df + 0.5) / (d.df + 0.5)), 6) AS idf,
-       |         s.avgdl
-       |  FROM qterms q JOIN df d USING (th), stats s
-       |  WHERE d.df <= floor($dfCapFrac * s.n_docs)),
-       |contrib AS (
-       |  SELECT w.query_id, t.doc_id,
-       |         floor(w.idf * (t.tf * ($k1 + 1) /
-       |             (t.tf + $k1 * (1.0 - $b + $b * l.dl / w.avgdl))) *
-       |           1e6 + 0.5)::BIGINT AS c_micro
-       |  FROM tf t JOIN weighted w USING (th) JOIN dl l ON t.doc_id = l.doc_id),
-       |scored AS (
-       |  SELECT query_id, doc_id, sum(c_micro)::BIGINT AS score_micro
-       |  FROM contrib GROUP BY query_id, doc_id),
-       |ranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |            ORDER BY score_micro DESC, doc_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, doc_id, score_micro, rank FROM ranked
-       |WHERE rank <= $k""".stripMargin
 }

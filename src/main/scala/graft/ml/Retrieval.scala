@@ -81,59 +81,118 @@ object Retrieval {
       .drop("__pth")
   }
 
-  /** BM25 top-k: for every query document (selected by `isQuery`; its
-    * query terms are the distinct bigrams among its first
-    * `nQueryTerms`+1 words), the `k` highest-scoring CORPUS documents
-    * (the non-query rows). Scoring: idf(t) = ln(1 + (N − df + 0.5)/
-    * (df + 0.5)) rounded to 6 dp; tf-norm = tf·(k1+1)/(tf + k1·(1 − b +
-    * b·dl/avgdl)) with dl = the document's bigram count; contribution =
-    * round-half-up of idf·tfnorm·1e6 (integer micro-units); score =
-    * Σ contributions. Ties break on doc_id. Terms with df > dfCapFrac·N
-    * are pruned (stopword cap). Output:
-    * (query_id, doc_id, score_micro, rank).
+  /** (doc_id, dl, th [, carried cols]) — the corpus TERM STREAM: one row
+    * per bigram occurrence of `docs`, hashed to 8 bytes (shingleTable
+    * rule: corpus-sized relations carry term hashes only). dl, the
+    * document's bigram count, rides the stream (functionally dependent
+    * on doc_id) so tf normalization needs no corpus×corpus re-attach
+    * join; it is max(|words| − 1, 0) from the word count, NOT
+    * size(shingles(...)) — evaluating the shingle expression twice per
+    * row doubled the scan cost (measured). `carried` columns ride the
+    * same way (the stored postings' metadata).
     */
-  def bm25TopK(docs: DataFrame, isQuery: Column, k: Int = 10,
-               k1: Double = 1.2, b: Double = 0.75,
-               nQueryTerms: Int = 8, dfCapFrac: Double = 0.5): DataFrame = {
-    require(k > 0 && nQueryTerms > 0 && dfCapFrac > 0)
-    val corpus = docs.where(!isQuery)
-    // corpus-global scalars from the word counts ALONE — no posting pass:
-    // Σ tf over the full index is exactly Σ dl (each posting is one
-    // bigram occurrence), so avgdl never needs index entries for terms no
-    // query asks about; n_docs counts docs with < 2 words too. One
-    // column-pruned codegen scan (split + size, no shingle HOF).
+  private[ml] def termStream(docs: DataFrame,
+                             carried: Seq[String] = Nil): DataFrame = {
+    val carry = carried.map(col)
+    docs
+      .select(col("doc_id") +: words(col("text")).as("w") +: carry: _*)
+      .select(col("doc_id") +: dlOf(col("w")).as("dl") +:
+        explode(shingles(col("w"), 2)).as("t") +: carry: _*)
+      .select(col("doc_id") +: col("dl") +: h64(col("t")).as("th") +:
+        carry: _*)
+  }
+
+  private def dlOf(w: Column): Column =
+    greatest(size(w) - 1, lit(0)).cast("long")
+
+  /** One row (n_docs, avgdl) of `corpus` from the word counts ALONE — no
+    * posting pass: Σ tf over the full index is exactly Σ dl (each
+    * posting is one bigram occurrence), so avgdl never needs index
+    * entries for terms no query asks about; n_docs counts docs with < 2
+    * words too. One column-pruned codegen scan.
+    */
+  private def corpusStats(corpus: DataFrame): DataFrame = {
     val nDocs = corpus.count()
-    val stats = corpus
-      .select(greatest(size(words(col("text"))) - 1, lit(0))
-        .cast("long").as("dl"))
+    corpus.select(dlOf(words(col("text"))).as("dl"))
       .agg(lit(nDocs).as("n_docs"),
         round(sum("dl") / nDocs.toDouble, 6).as("avgdl"))
-    // query-derived relations — all bounded by |queries|·nQueryTerms;
-    // materialized once (bounded checkpoint) because both the term filter
-    // and the idf weighting read them
-    val qterms = docs.where(isQuery)
+  }
+
+  /** The distinct (query_id, th) SEED TERMS: the bigrams among each
+    * query document's first `nQueryTerms`+1 words, hashed. Bounded by
+    * |queries|·nQueryTerms and materialized once (bounded checkpoint):
+    * the term filter and the idf weighting both read it.
+    */
+  private[ml] def seedTerms(queryDocs: DataFrame, nQueryTerms: Int): DataFrame =
+    queryDocs
       .select(col("doc_id").as("query_id"),
         slice(words(col("text")), 1, nQueryTerms + 1).as("w"))
       .select(col("query_id"), explode(shingles(col("w"), 2)).as("t"))
       .select(col("query_id"), h64(col("t")).as("th"))
       .distinct()
       .lineageCut
+
+  /** The df-capped idf WEIGHTING over rows carrying (`keys`, df, n_docs,
+    * avgdl): terms with df > dfCapFrac·N are pruned (stopword cap — an
+    * uncapped stopword term would drag ~every document into every
+    * query's candidate set); the rest get idf(t) = ln(1 + (N − df +
+    * 0.5)/(df + 0.5)) rounded to 6 dp. Output: (`keys`, idf, avgdl).
+    */
+  private[ml] def idfWeights(withStats: DataFrame, keys: Seq[String],
+                             dfCapFrac: Double): DataFrame =
+    withStats.where(col("df") <= floor(lit(dfCapFrac) * col("n_docs")))
+      .select(keys.map(col) ++ Seq(
+        round(log(lit(1.0) +
+          (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)), 6).as("idf"),
+        col("avgdl")): _*)
+
+  /** One posting's BM25 contribution in integer micro-units, from a row
+    * carrying (tf, dl, idf, avgdl): round-half-up of idf·tf·(k1+1)/(tf +
+    * k1·(1 − b + b·dl/avgdl))·1e6.
+    */
+  private[ml] def contribMicro(k1: Double, b: Double): Column =
+    floor(col("idf") * (col("tf") * (k1 + 1) /
+        (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))) *
+      1e6 + 0.5).cast("long").as("c_micro")
+
+  /** The per-query BM25 tail both serves share: postings (doc_id, th,
+    * tf, dl) × broadcast weights (query_id, th, idf, avgdl) — map-side,
+    * the only corpus-touching operation after the postings are in hand
+    * (df-capped terms have no weight row, so the join drops their
+    * postings) — then Σ contributions per (query, doc) and the two-stage
+    * top-k ([[Similarity.topK]]: 64-way pre-prune on doc_id), ties on
+    * doc_id. Output: (query_id, doc_id, score_micro, rank).
+    */
+  private[ml] def bm25Ranked(postings: DataFrame, weighted: DataFrame, k: Int,
+                             k1: Double, b: Double): DataFrame = {
+    val scored = postings.join(broadcast(weighted), "th")
+      .select(col("query_id"), col("doc_id"), contribMicro(k1, b))
+      .groupBy("query_id", "doc_id")
+      .agg(sum("c_micro").as("score_micro"))
+    Similarity.topK(scored, k, Seq(desc("score_micro"), asc("doc_id")), "doc_id")
+      .select("query_id", "doc_id", "score_micro", "rank")
+  }
+
+  /** BM25 top-k: for every query document (selected by `isQuery`; its
+    * query terms are [[seedTerms]]), the `k` highest-scoring CORPUS
+    * documents (the non-query rows). Scoring: [[idfWeights]] with N and
+    * avgdl from [[corpusStats]], dl = the document's bigram count,
+    * contribution = [[contribMicro]], score = Σ contributions. Ties break
+    * on doc_id. Output: (query_id, doc_id, score_micro, rank).
+    */
+  def bm25TopK(docs: DataFrame, isQuery: Column, k: Int = 10,
+               k1: Double = 1.2, b: Double = 0.75,
+               nQueryTerms: Int = 8, dfCapFrac: Double = 0.5): DataFrame = {
+    require(k > 0 && nQueryTerms > 0 && dfCapFrac > 0)
+    val corpus = docs.where(!isQuery)
+    val stats = corpusStats(corpus)
+    val qterms = seedTerms(docs.where(isQuery), nQueryTerms)
     // THE scale decision: the query-vocabulary semi-join sits BELOW the
-    // index build. Corpus-sized relations carry 8-byte term hashes only
-    // (shingleTable rule); dl rides the term stream (functionally
-    // dependent on doc_id) so tf normalization needs no corpus×corpus
-    // re-attach join; dl = max(|words| − 1, 0) from the word count, NOT
-    // size(shingles(...)) — the shingle HOF is interpreted and evaluating
-    // it twice per row doubled the scan cost (measured). Filtering before
-    // termFrequencies means the window sort, the checkpoint, and every
-    // downstream stage see matched postings only — the unfiltered index
-    // (~3 on-disk copies at the 1000× corpus) exhausted local scratch.
-    val terms = corpus
-      .select(col("doc_id"), words(col("text")).as("w"))
-      .select(col("doc_id"),
-        greatest(size(col("w")) - 1, lit(0)).cast("long").as("dl"),
-        explode(shingles(col("w"), 2)).as("t"))
-      .select(col("doc_id"), col("dl"), h64(col("t")).as("th"))
+    // index build. Filtering before termFrequencies means the window
+    // sort, the checkpoint, and every downstream stage see matched
+    // postings only — the unfiltered index (~3 on-disk copies at the
+    // 1000× corpus) exhausted local scratch.
+    val terms = termStream(corpus)
       .join(broadcast(qterms.select("th").distinct()), "th")
     // materialize the matched-posting index ONCE (the kmeans
     // localCheckpoint discipline): df and the posting join both read tf —
@@ -143,73 +202,32 @@ object Retrieval {
     // tf is already pruned to the query vocabulary, so df is a plain
     // per-term row count over it
     val df = tf.groupBy("th").agg(count(lit(1)).as("df"))
-    // idf per surviving query term; the df cap prunes stopword-like terms
-    val weighted = qterms.join(broadcast(df), "th").join(broadcast(stats))
-      .where(col("df") <= floor(lit(dfCapFrac) * col("n_docs")))
-      .select(col("query_id"), col("th"),
-        round(log(lit(1.0) +
-          (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)), 6).as("idf"),
-        col("avgdl"))
-    // posting join: corpus tf stream × broadcast query-term weights —
-    // map-side, the only corpus-touching operation after the tf aggregate
-    val contrib = tf.join(broadcast(weighted), "th")
-      .select(col("query_id"), col("doc_id"),
-        floor(col("idf") * (col("tf") * (k1 + 1) /
-            (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))) *
-          1e6 + 0.5).cast("long").as("c_micro"))
-    val scored = contrib.groupBy("query_id", "doc_id")
-      .agg(sum("c_micro").as("score_micro"))
-    // two-stage top-k (Similarity.topK shape): 64-way bucketed pre-prune
-    // bounds the final per-query window's input to 64·k rows
-    val order = Seq(desc("score_micro"), asc("doc_id"))
-    val pre = Window.partitionBy(col("query_id"), pmod(col("doc_id"), lit(64)))
-      .orderBy(order: _*)
-    val fin = Window.partitionBy("query_id").orderBy(order: _*)
-    scored
-      .withColumn("r1", row_number().over(pre)).where(col("r1") <= k).drop("r1")
-      .withColumn("rank", row_number().over(fin)).where(col("rank") <= k)
-      .select("query_id", "doc_id", "score_micro", "rank")
+    val weighted = idfWeights(
+      qterms.join(broadcast(df), "th").join(broadcast(stats)),
+      Seq("query_id", "th"), dfCapFrac)
+    bm25Ranked(tf, weighted, k, k1, b)
   }
 
-  /** DuckDB oracle for [[bm25TopK]]; `isQuerySql` selects the query rows
-    * of `documents`.
+  /** DuckDB oracle for [[bm25TopK]] and for the stored serve
+    * [[LexIndex.bm25TopKIndexed]]; `isQuerySql` selects the query rows of
+    * `documents`. `baseWhereSql` selects the corpus rows df / n_docs /
+    * avgdl are frozen to (a store built over that slice, then appended
+    * to); `liveWhereSql` restricts the SERVED documents (tombstone-masked
+    * candidates, or a filtered serve's `candWhere` over `metaColsSql`
+    * columns carried into the corpus CTE). Both default to the whole
+    * corpus: the inline operator's semantics.
     */
   def bm25TopKOracleSql(isQuerySql: String, k: Int = 10,
                         k1: Double = 1.2, b: Double = 0.75,
-                        nQueryTerms: Int = 8, dfCapFrac: Double = 0.5): String =
+                        nQueryTerms: Int = 8, dfCapFrac: Double = 0.5,
+                        baseWhereSql: String = "TRUE",
+                        liveWhereSql: String = "TRUE",
+                        metaColsSql: Seq[String] = Nil): String =
     s"""WITH corpus AS (
-       |  SELECT doc_id, $wordsSql AS w FROM documents WHERE NOT ($isQuerySql)),
-       |tf AS (
-       |  SELECT doc_id, ${h64Sql("t")} AS th, count(*)::BIGINT AS tf
-       |  FROM (SELECT doc_id, unnest(${shinglesSql(2)}) AS t FROM corpus)
-       |  GROUP BY doc_id, 2),
-       |dl AS (
-       |  SELECT doc_id,
-       |         (CASE WHEN len(w) >= 2 THEN len(w) - 1 ELSE 0 END)::BIGINT AS dl
-       |  FROM corpus),
-       |stats AS (
-       |  SELECT count(*)::BIGINT AS n_docs, round(avg(dl), 6) AS avgdl FROM dl),
-       |qw AS (
-       |  SELECT doc_id AS query_id, ($wordsSql)[1:${nQueryTerms + 1}] AS w
-       |  FROM documents WHERE $isQuerySql),
-       |qterms AS (
-       |  SELECT DISTINCT query_id, ${h64Sql("t")} AS th
-       |  FROM (SELECT query_id, unnest(${shinglesSql(2)}) AS t FROM qw)),
-       |df AS (
-       |  SELECT th, count(*)::BIGINT AS df FROM tf
-       |  WHERE th IN (SELECT th FROM qterms) GROUP BY th),
-       |weighted AS (
-       |  SELECT q.query_id, q.th,
-       |         round(ln(1.0 + (s.n_docs - d.df + 0.5) / (d.df + 0.5)), 6) AS idf,
-       |         s.avgdl
-       |  FROM qterms q JOIN df d USING (th), stats s
-       |  WHERE d.df <= floor($dfCapFrac * s.n_docs)),
-       |contrib AS (
-       |  SELECT w.query_id, t.doc_id,
-       |         floor(w.idf * (t.tf * ($k1 + 1) /
-       |             (t.tf + $k1 * (1.0 - $b + $b * l.dl / w.avgdl))) *
-       |           1e6 + 0.5)::BIGINT AS c_micro
-       |  FROM tf t JOIN weighted w USING (th) JOIN dl l ON t.doc_id = l.doc_id),
+       |  SELECT doc_id, ${(metaColsSql :+ s"$wordsSql AS w").mkString(", ")}
+       |  FROM documents WHERE NOT ($isQuerySql)),
+       |${bm25CtesSql(isQuerySql, k1, b, nQueryTerms, dfCapFrac,
+            perQuery = true, baseWhereSql, liveWhereSql)},
        |scored AS (
        |  SELECT query_id, doc_id, sum(c_micro)::BIGINT AS score_micro
        |  FROM contrib GROUP BY query_id, doc_id),
@@ -219,6 +237,65 @@ object Retrieval {
        |  FROM scored)
        |SELECT query_id, doc_id, score_micro, rank FROM ranked
        |WHERE rank <= $k""".stripMargin
+
+  /** The BM25 CTE chain both oracles share, over a `corpus` CTE with
+    * (doc_id, w): `tf` and `dl` of the served (`liveWhereSql`) documents,
+    * `stats` and `df` of the `baseWhereSql` documents, `qterms` the
+    * distinct (query_id, th) seed terms, `weighted` the df-capped idf —
+    * per (query_id, th) when `perQuery`, else per distinct seed th (the
+    * selection profile) — and `contrib` the micro-unit contribution per
+    * ([query_id,] doc_id, term).
+    */
+  private def bm25CtesSql(isQuerySql: String, k1: Double, b: Double,
+                          nQueryTerms: Int, dfCapFrac: Double,
+                          perQuery: Boolean, baseWhereSql: String = "TRUE",
+                          liveWhereSql: String = "TRUE"): String = {
+    def tf(from: String): String =
+      s"""SELECT doc_id, ${h64Sql("t")} AS th, count(*)::BIGINT AS tf
+         |  FROM (SELECT doc_id, unnest(${shinglesSql(2)}) AS t FROM $from)
+         |  GROUP BY doc_id, 2""".stripMargin
+    def dl(from: String): String =
+      s"""SELECT doc_id,
+         |         (CASE WHEN len(w) >= 2 THEN len(w) - 1 ELSE 0 END)::BIGINT AS dl
+         |  FROM $from""".stripMargin
+    val (terms, keys) =
+      if (perQuery) ("qterms", "q.query_id, q.th")
+      else ("(SELECT DISTINCT th FROM qterms)", "q.th")
+    s"""base AS (SELECT * FROM corpus WHERE $baseWhereSql),
+       |live AS (SELECT * FROM corpus WHERE $liveWhereSql),
+       |tf AS (
+       |  ${tf("live")}),
+       |dl AS (
+       |  ${dl("live")}),
+       |basetf AS (
+       |  ${tf("base")}),
+       |basedl AS (
+       |  ${dl("base")}),
+       |stats AS (
+       |  SELECT count(*)::BIGINT AS n_docs, round(avg(dl), 6) AS avgdl
+       |  FROM basedl),
+       |qw AS (
+       |  SELECT doc_id AS query_id, ($wordsSql)[1:${nQueryTerms + 1}] AS w
+       |  FROM documents WHERE $isQuerySql),
+       |qterms AS (
+       |  SELECT DISTINCT query_id, ${h64Sql("t")} AS th
+       |  FROM (SELECT query_id, unnest(${shinglesSql(2)}) AS t FROM qw)),
+       |df AS (
+       |  SELECT th, count(*)::BIGINT AS df FROM basetf
+       |  WHERE th IN (SELECT th FROM qterms) GROUP BY th),
+       |weighted AS (
+       |  SELECT $keys,
+       |         round(ln(1.0 + (s.n_docs - d.df + 0.5) / (d.df + 0.5)), 6) AS idf,
+       |         s.avgdl
+       |  FROM $terms q JOIN df d USING (th), stats s
+       |  WHERE d.df <= floor($dfCapFrac * s.n_docs)),
+       |contrib AS (
+       |  SELECT ${if (perQuery) "w.query_id, " else ""}t.doc_id,
+       |         floor(w.idf * (t.tf * ($k1 + 1) /
+       |             (t.tf + $k1 * (1.0 - $b + $b * l.dl / w.avgdl))) *
+       |           1e6 + 0.5)::BIGINT AS c_micro
+       |  FROM tf t JOIN weighted w USING (th) JOIN dl l ON t.doc_id = l.doc_id)""".stripMargin
+  }
 
   /** The persistable SELECTION PROFILE: the distinct df-capped seed
     * terms with their idf weights, plus the corpus stats — everything an
@@ -230,34 +307,18 @@ object Retrieval {
                      nQueryTerms: Int = 8,
                      dfCapFrac: Double = 0.5): DataFrame = {
     val corpus = docs.where(!isQuery)
-    // avgdl from word counts (Σ tf over the full index ≡ Σ dl; see
-    // bm25TopK) — the full index is never built
-    val nDocs = corpus.count()
-    val stats = corpus
-      .select(greatest(size(words(col("text"))) - 1, lit(0))
-        .cast("long").as("dl"))
-      .agg(lit(nDocs).as("n_docs"),
-        round(sum("dl") / nDocs.toDouble, 6).as("avgdl"))
-    val seedTerms = docs.where(isQuery)
-      .select(slice(words(col("text")), 1, nQueryTerms + 1).as("w"))
-      .select(explode(shingles(col("w"), 2)).as("t"))
-      .select(h64(col("t")).as("th")).distinct()
-      .lineageCut
+    val stats = corpusStats(corpus)
+    // the profile scores the seed set as ONE query: its terms are the
+    // union of the seeds' terms
+    val seed = seedTerms(docs.where(isQuery).withColumn("doc_id", lit(0L)),
+      nQueryTerms).select("th")
     // seed-vocabulary semi-join below the index build (bm25TopK shape);
     // df is tf's only consumer here, so no checkpoint — the filtered
     // stream flows straight into one aggregation
-    val tf = termFrequencies(corpus
-      .select(col("doc_id"), words(col("text")).as("w"))
-      .select(col("doc_id"), explode(shingles(col("w"), 2)).as("t"))
-      .select(col("doc_id"), h64(col("t")).as("th"))
-      .join(broadcast(seedTerms), "th"))
+    val tf = termFrequencies(termStream(corpus).join(broadcast(seed), "th"))
     val df = tf.groupBy("th").agg(count(lit(1)).as("df"))
-    seedTerms.join(broadcast(df), "th").join(broadcast(stats))
-      .where(col("df") <= floor(lit(dfCapFrac) * col("n_docs")))
-      .select(col("th"),
-        round(log(lit(1.0) +
-          (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)), 6).as("idf"),
-        col("avgdl"))
+    idfWeights(seed.join(broadcast(df), "th").join(broadcast(stats)),
+      Seq("th"), dfCapFrac)
   }
 
   /** Profile ADMISSION score: every corpus document scored against the
@@ -280,18 +341,10 @@ object Retrieval {
       .lineageCut
     // profile-vocabulary semi-join below the index build (bm25TopK
     // shape); contrib is tf's only consumer, so no checkpoint
-    val tf = termFrequencies(corpus
-      .select(col("doc_id"), words(col("text")).as("w"))
-      .select(col("doc_id"),
-        greatest(size(col("w")) - 1, lit(0)).cast("long").as("dl"),
-        explode(shingles(col("w"), 2)).as("t"))
-      .select(col("doc_id"), col("dl"), h64(col("t")).as("th"))
-      .join(broadcast(weights.select("th")), "th"))
+    val tf = termFrequencies(
+      termStream(corpus).join(broadcast(weights.select("th")), "th"))
     val contrib = tf.join(broadcast(weights), "th")
-      .select(col("doc_id"),
-        floor(col("idf") * (col("tf") * (k1 + 1) /
-            (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))) *
-          1e6 + 0.5).cast("long").as("c_micro"))
+      .select(col("doc_id"), contribMicro(k1, b))
     val per = contrib.groupBy("doc_id")
       .agg(count(lit(1)).as("n_matched"), sum("c_micro").as("score_micro"))
     corpus.select("doc_id").join(per, Seq("doc_id"), "left")
@@ -307,36 +360,8 @@ object Retrieval {
                             thresholdMicro: Long = 1000000L): String =
     s"""WITH corpus AS (
        |  SELECT doc_id, $wordsSql AS w FROM documents WHERE NOT ($isQuerySql)),
-       |tf AS (
-       |  SELECT doc_id, ${h64Sql("t")} AS th, count(*)::BIGINT AS tf
-       |  FROM (SELECT doc_id, unnest(${shinglesSql(2)}) AS t FROM corpus)
-       |  GROUP BY doc_id, 2),
-       |dl AS (
-       |  SELECT doc_id,
-       |         (CASE WHEN len(w) >= 2 THEN len(w) - 1 ELSE 0 END)::BIGINT AS dl
-       |  FROM corpus),
-       |stats AS (
-       |  SELECT count(*)::BIGINT AS n_docs, round(avg(dl), 6) AS avgdl FROM dl),
-       |seed AS (
-       |  SELECT DISTINCT ${h64Sql("t")} AS th
-       |  FROM (SELECT unnest(${shinglesSql(2)}) AS t
-       |        FROM (SELECT ($wordsSql)[1:${nQueryTerms + 1}] AS w
-       |              FROM documents WHERE $isQuerySql))),
-       |df AS (
-       |  SELECT th, count(*)::BIGINT AS df FROM tf
-       |  WHERE th IN (SELECT th FROM seed) GROUP BY th),
-       |weights AS (
-       |  SELECT s.th,
-       |         round(ln(1.0 + (st.n_docs - d.df + 0.5) / (d.df + 0.5)), 6) AS idf,
-       |         st.avgdl
-       |  FROM seed s JOIN df d USING (th), stats st
-       |  WHERE d.df <= floor($dfCapFrac * st.n_docs)),
-       |contrib AS (
-       |  SELECT t.doc_id,
-       |         floor(w.idf * (t.tf * ($k1 + 1) /
-       |             (t.tf + $k1 * (1.0 - $b + $b * l.dl / w.avgdl))) *
-       |           1e6 + 0.5)::BIGINT AS c_micro
-       |  FROM tf t JOIN weights w USING (th) JOIN dl l ON t.doc_id = l.doc_id),
+       |${bm25CtesSql(isQuerySql, k1, b, nQueryTerms, dfCapFrac,
+            perQuery = false)},
        |per AS (
        |  SELECT doc_id, count(*)::BIGINT AS n_matched,
        |         sum(c_micro)::BIGINT AS score_micro

@@ -76,11 +76,12 @@ object Similarity {
     * result to a single global rank, but the corpus-sized sort is
     * distributed over 64 buckets per query. `order` ranks the rows:
     * highest cosine first by default, ties on the smaller neighbor_id.
+    * `id` names the candidate column the salt bucket pmod(id, 64) keys on.
     */
   private[ml] def topK(scored: DataFrame, k: Int,
-                       order: Seq[Column] = Seq(desc("cosine"), asc("neighbor_id")))
-      : DataFrame = {
-    val pre = Window.partitionBy(col("query_id"), pmod(col("neighbor_id"), lit(64)))
+                       order: Seq[Column] = Seq(desc("cosine"), asc("neighbor_id")),
+                       id: String = "neighbor_id"): DataFrame = {
+    val pre = Window.partitionBy(col("query_id"), pmod(col(id), lit(64)))
       .orderBy(order: _*)
     val fin = Window.partitionBy("query_id").orderBy(order: _*)
     scored
@@ -1036,14 +1037,8 @@ object Similarity {
       .join(lut, Seq("query_id", "sub", "code"))
       .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
       .agg(sum("d2i").as("adc_e9"))
-    // two-phase rank (cf. topK), ascending by integer distance
-    val byDist = Seq(asc("adc_e9"), asc("neighbor_id"))
-    val pre = Window.partitionBy(col("query_id"), pmod(col("neighbor_id"), lit(64)))
-      .orderBy(byDist: _*)
-    val fin = Window.partitionBy("query_id").orderBy(byDist: _*)
-    adc
-      .withColumn("r1", row_number().over(pre)).where(col("r1") <= k).drop("r1")
-      .withColumn("rank", row_number().over(fin)).where(col("rank") <= k)
+    // ascending by integer distance
+    topK(adc, k, Seq(asc("adc_e9"), asc("neighbor_id")))
       .select("query_id", "neighbor_id", "adc_e9", "rank")
   }
 

@@ -132,8 +132,9 @@ object Pipeline {
     run(spark, IniConfig.parseFile(configPath), csvPaths)
 
   /** The trend_analyze_many.py flow: every counter rebinned and analyzed,
-    * with the rebinned stage persisted to a bucketed columnar
-    * intermediate (the engine's version of its JSON handoff,
+    * with the rebinned stage persisted to the columnar intermediate, a
+    * plain parquet store ([[graft.Tables.saveBinned]]; the engine's
+    * version of its JSON handoff,
     * trend_analyze_many.py:186,235) so the analyze stage — or a later
     * re-run with different model parameters — starts from stored bins
     * instead of re-reading raw CSV. The reference's per-counter

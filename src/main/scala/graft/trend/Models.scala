@@ -202,24 +202,6 @@ object Models {
        |  FROM etas)""".stripMargin
   }
 
-  /** Same for Poisson cycle mode with period_list = [hour]. */
-  def poissonCycleOracleCtes(alpha: Double = 0.99): String = {
-    val etaRaw = "CASE WHEN k.mean = 0 OR c.ci_w IS NULL OR c.ci_w = 0" +
-      " THEN 0.0 ELSE abs(k.count - k.mean) / c.ci_w END"
-    s"""keyed AS (
-       |  SELECT counter, ts, count,
-       |         sum(count) OVER (PARTITION BY counter, hour(ts) ORDER BY ts)
-       |           / count(*) OVER (PARTITION BY counter, hour(ts) ORDER BY ts) AS mean
-       |  FROM rebinned),
-       |${PoissonCi.widthSqlCte(alpha, "keyed", "mean")},
-       |etas AS (
-       |  SELECT k.counter, k.ts, k.count, $etaRaw AS eta_raw
-       |  FROM keyed k LEFT JOIN ci_width c ON k.mean = c.mean),
-       |scored AS (
-       |  SELECT counter, ts, count, ${Rounding.trim2Sql("eta_raw")} AS eta
-       |  FROM etas)""".stripMargin
-  }
-
   /** Linear-regression model with a bounded regression window and
     * norm_by_mean (models.py:81-89): slope of the trailing `regWindow`
     * averaged counts, divided by their mean.

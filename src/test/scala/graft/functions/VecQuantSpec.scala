@@ -209,5 +209,22 @@ class VecQuantSpec extends SparkSpec {
       org.apache.spark.util.sketch.BloomFilter.create(8))
     rejects(GraftShim.column(BloomContains(GraftShim.expression(col("s")), bloom)),
       "bloom probe over a string")
+    rejects(VecQuant.sqQuant(col("fv"), lit(1.0)), "sqQuant over array<float>")
+    rejects(VecQuant.sqQuantLongs(col("dv"), col("s")),
+      "sqQuantLongs with a string scale")
+    rejects(VecQuant.unpack(col("dv")), "unpack over array<double>")
+    def ex(c: org.apache.spark.sql.Column) = GraftShim.expression(c)
+    val seeds = spark.sparkContext.broadcast(Array.empty[(Long, Array[Double])])
+    val books = spark.sparkContext.broadcast(
+      Map.empty[Long, Array[(Long, Array[Double])]])
+    val cents = spark.sparkContext.broadcast(Array.empty[Array[Long]])
+    val subBooks = spark.sparkContext.broadcast(Array.empty[Array[Array[Long]]])
+    rejects(GraftShim.column(PqSeedCodes(ex(col("fv")), seeds, 2)),
+      "pqSeedCodes over array<float>")
+    rejects(GraftShim.column(PqEncode(ex(col("fv")), books, 2)), "pqEncode over array<float>")
+    rejects(GraftShim.column(KmeansAssign(ex(col("dv")), cents)),
+      "kmeansAssign over array<double>")
+    rejects(GraftShim.column(PqAssign(ex(col("i")), ex(typedLit(Seq(1L))), subBooks)),
+      "pqAssign with an int subspace")
   }
 }

@@ -2,6 +2,8 @@ package graft.ml
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => Check}
+import org.scalacheck.rng.Seed
 
 /** Unit coverage for BM25 retrieval on hand-checkable micro-corpora (the
   * sf-scale oracle check is the driver's t2 gate).
@@ -95,5 +97,67 @@ class RetrievalSpec extends SparkSpec {
     // the fixture exercises all three membership cases
     assert(fused.exists(r => r._3 > 0 && r._4 > 0), "no both-lists candidate")
     assert(fused.exists(r => r._3 === -1 || r._4 === -1), "no one-list candidate")
+  }
+
+  test("property: inline, stored and plain-Scala BM25 agree on random corpora") {
+    // a four-word vocabulary: bigrams repeat across documents, so scores
+    // tie at the top-k cut and frequent bigrams cross the df cap
+    val text = Gen.choose(1, 7)
+      .flatMap(Gen.listOfN(_, Gen.oneOf("a", "b", "c", "d"))).map(_.mkString(" "))
+    val corpora = Gen.choose(6, 14).flatMap(Gen.listOfN(_, text))
+    val k = 3
+    val isQ = col("doc_id") < 2
+    def h64(s: String): Long = {
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes("UTF-8")).map(x => f"$x%02x").mkString
+      java.lang.Long.parseLong(hex.take(15), 16)
+    }
+    def round6(x: Double): Double =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def bigrams(t: String, nWords: Int): Seq[String] =
+      t.split(" ", -1).take(nWords).sliding(2).filter(_.length == 2)
+        .map(_.mkString(" ")).toSeq
+    var ties, capped = 0
+    // each query's idf map built here (df over the corpus, the default
+    // cap df <= floor(0.5·N), 6-dp idf), each document scored by the
+    // streaming gate's in-row scorer, ordered by (score desc, doc_id)
+    def reference(texts: Seq[String]): Seq[(Long, Long, Long, Int)] = {
+      val (queries, corpus) = texts.zipWithIndex
+        .map { case (t, i) => (i.toLong, t) }.partition(_._1 < 2)
+      val n = corpus.size
+      val avgdl = round6(corpus.map(d => bigrams(d._2, Int.MaxValue).size)
+        .sum.toDouble / n)
+      val df = corpus.flatMap(d => bigrams(d._2, Int.MaxValue).distinct)
+        .groupBy(identity).map { case (g, occ) => g -> occ.size.toLong }
+      queries.flatMap { case (q, t) =>
+        val terms = bigrams(t, 9).distinct.flatMap(g => df.get(g).map(g -> _))
+        capped += terms.count(_._2 > n / 2)
+        val idf = terms.collect { case (g, d) if d <= n / 2 =>
+          h64(g) -> round6(StrictMath.log(1.0 + (n - d + 0.5) / (d + 0.5)))
+        }.toMap
+        val hits = corpus
+          .map { case (d, dt) => (d, StreamingSelect.scoreText(dt, idf, avgdl, 1.2, 0.75)) }
+          .collect { case (d, (m, s)) if m > 0 => (d, s) }
+          .sortBy { case (d, s) => (-s, d) }
+        if (hits.map(_._2).distinct.size < hits.size) ties += 1
+        hits.take(k).zipWithIndex.map { case ((d, s), i) => (q, d, s, i + 1) }
+      }
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Int)] =
+      df.orderBy("query_id", "rank").as[(Long, Long, Long, Int)].collect().toSeq
+    val prop = Prop.forAll(corpora) { texts =>
+      val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text")
+      val path = java.nio.file.Files.createTempDirectory("graft_bm25_prop").toString
+      LexIndex.saveLexical(docs.where(!isQ), path, nBuckets = 4)
+      val inline = rows(Retrieval.bm25TopK(docs, isQ, k))
+      val stored = rows(LexIndex.bm25TopKIndexed(spark, path, docs.where(isQ), k))
+      inline == reference(texts) && stored == inline
+    }
+    val res = Check.check(
+      Check.Parameters.default.withMinSuccessfulTests(25)
+        .withInitialSeed(Seed(20261019L)), prop)
+    assert(res.passed, res.status.toString)
+    assert(ties > 0 && capped > 0, s"ties $ties, capped terms $capped")
   }
 }
