@@ -227,7 +227,7 @@ object Retrieval {
        |  SELECT doc_id, ${(metaColsSql :+ s"$wordsSql AS w").mkString(", ")}
        |  FROM documents WHERE NOT ($isQuerySql)),
        |${bm25CtesSql(isQuerySql, k1, b, nQueryTerms, dfCapFrac,
-            perQuery = true, baseWhereSql, liveWhereSql)},
+            baseWhereSql = baseWhereSql, liveWhereSql = liveWhereSql)},
        |scored AS (
        |  SELECT query_id, doc_id, sum(c_micro)::BIGINT AS score_micro
        |  FROM contrib GROUP BY query_id, doc_id),
@@ -241,14 +241,16 @@ object Retrieval {
   /** The BM25 CTE chain both oracles share, over a `corpus` CTE with
     * (doc_id, w): `tf` and `dl` of the served (`liveWhereSql`) documents,
     * `stats` and `df` of the `baseWhereSql` documents, `qterms` the
-    * distinct (query_id, th) seed terms, `weighted` the df-capped idf —
-    * per (query_id, th) when `perQuery`, else per distinct seed th (the
-    * selection profile) — and `contrib` the micro-unit contribution per
-    * ([query_id,] doc_id, term).
+    * distinct (query_id, th) seed terms, `weighted` the df-capped idf per
+    * (query_id, th) and `contrib` the micro-unit contribution per
+    * (query_id, doc_id, term). `queryIdSql` names each seed's query; the
+    * selection profile passes a constant, scoring the seed set as ONE
+    * query.
     */
   private def bm25CtesSql(isQuerySql: String, k1: Double, b: Double,
                           nQueryTerms: Int, dfCapFrac: Double,
-                          perQuery: Boolean, baseWhereSql: String = "TRUE",
+                          queryIdSql: String = "doc_id",
+                          baseWhereSql: String = "TRUE",
                           liveWhereSql: String = "TRUE"): String = {
     def tf(from: String): String =
       s"""SELECT doc_id, ${h64Sql("t")} AS th, count(*)::BIGINT AS tf
@@ -258,9 +260,6 @@ object Retrieval {
       s"""SELECT doc_id,
          |         (CASE WHEN len(w) >= 2 THEN len(w) - 1 ELSE 0 END)::BIGINT AS dl
          |  FROM $from""".stripMargin
-    val (terms, keys) =
-      if (perQuery) ("qterms", "q.query_id, q.th")
-      else ("(SELECT DISTINCT th FROM qterms)", "q.th")
     s"""base AS (SELECT * FROM corpus WHERE $baseWhereSql),
        |live AS (SELECT * FROM corpus WHERE $liveWhereSql),
        |tf AS (
@@ -275,7 +274,7 @@ object Retrieval {
        |  SELECT count(*)::BIGINT AS n_docs, round(avg(dl), 6) AS avgdl
        |  FROM basedl),
        |qw AS (
-       |  SELECT doc_id AS query_id, ($wordsSql)[1:${nQueryTerms + 1}] AS w
+       |  SELECT $queryIdSql AS query_id, ($wordsSql)[1:${nQueryTerms + 1}] AS w
        |  FROM documents WHERE $isQuerySql),
        |qterms AS (
        |  SELECT DISTINCT query_id, ${h64Sql("t")} AS th
@@ -284,13 +283,13 @@ object Retrieval {
        |  SELECT th, count(*)::BIGINT AS df FROM basetf
        |  WHERE th IN (SELECT th FROM qterms) GROUP BY th),
        |weighted AS (
-       |  SELECT $keys,
+       |  SELECT q.query_id, q.th,
        |         round(ln(1.0 + (s.n_docs - d.df + 0.5) / (d.df + 0.5)), 6) AS idf,
        |         s.avgdl
-       |  FROM $terms q JOIN df d USING (th), stats s
+       |  FROM qterms q JOIN df d USING (th), stats s
        |  WHERE d.df <= floor($dfCapFrac * s.n_docs)),
        |contrib AS (
-       |  SELECT ${if (perQuery) "w.query_id, " else ""}t.doc_id,
+       |  SELECT w.query_id, t.doc_id,
        |         floor(w.idf * (t.tf * ($k1 + 1) /
        |             (t.tf + $k1 * (1.0 - $b + $b * l.dl / w.avgdl))) *
        |           1e6 + 0.5)::BIGINT AS c_micro
@@ -361,7 +360,7 @@ object Retrieval {
     s"""WITH corpus AS (
        |  SELECT doc_id, $wordsSql AS w FROM documents WHERE NOT ($isQuerySql)),
        |${bm25CtesSql(isQuerySql, k1, b, nQueryTerms, dfCapFrac,
-            perQuery = false)},
+            queryIdSql = "0")},
        |per AS (
        |  SELECT doc_id, count(*)::BIGINT AS n_matched,
        |         sum(c_micro)::BIGINT AS score_micro
