@@ -1,6 +1,6 @@
 package graft
 
-import graft.ml.{Index, Similarity}
+import graft.ml.{Index, Similarity, Store}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -100,8 +100,8 @@ object ServeBench {
         // resolve the LIVE generation: after a compaction the flat dir is
         // the retained grace copy — counting it would report the stale
         // fragmented layout
-        val kind = if (flavor == "ivf") Index.PostingsKind else Index.PqCodesKind
-        def store = Index.liveDir(spark, path, kind).stripPrefix("file:")
+        val kind = if (flavor == "ivf") Store.PostingsKind else Store.PqCodesKind
+        def store = Store.liveDir(spark, path, kind).stripPrefix("file:")
         save(emb.where(pmod(col("vec_id"), lit(2)) === 0), path)
         val ta = System.nanoTime()
         (0 until 40).foreach { s0 =>
@@ -265,7 +265,7 @@ object ServeBench {
       val planned = Index.ivfTopKIndexed(spark, path, q50, k = 10)
       planned.queryExecution.executedPlan // pin file listing pre-vacuum
       val tv = System.nanoTime()
-      val rep = Index.vacuum(spark, path).head()
+      val rep = Store.vacuum(spark, path).head()
       val vacSec = (System.nanoTime() - tv) / 1e9
       val racing = checksum(planned) // executes after the reclaim
       println(s"""{"stage":"vacuum","sec":${Bench.fmt3(vacSec)},"n":$n,"store_bytes_before":$bytesBefore,"bytes_reclaimed":${rep.getLong(1)},"generations_removed":${rep.getLong(0)},"racing_equal":${racing == quiet}}""")
@@ -302,7 +302,7 @@ object ServeBench {
       // LEXICAL COMPACTION RACE: the dense race stage's sparse twin — a
       // serve PLANNED before compactLexical's generation flip must
       // execute bit-equal (the retained previous generation is the
-      // reader's contract; shared Index.compactKind machinery).
+      // reader's contract; the shared Store.compact publish).
       import graft.ml.{LexIndex, Retrieval}
       val docs = Tables.load(spark, sfDir, "documents")
       val corpus = docs.where(!Retrieval.boundedIsQuery)
@@ -382,21 +382,21 @@ object ServeBench {
           ("raw",
             (p: String) => Index.saveIvf(emb, p, forceFlat = true),
             (p: String) => Index.ivfTopKIndexed(spark, p, qT, k = 10),
-            Index.PostingsKind),
+            Store.PostingsKind),
           ("sq8",
             (p: String) => Index.saveIvfSq(emb, p, forceFlat = true,
               withRaw = true),
             (p: String) => Index.ivfSqTopKIndexed(spark, p, qT, k = 10),
-            Index.SqCodesKind),
+            Store.SqCodesKind),
           ("pq",
             (p: String) => Index.saveIvfPq(emb, p, forceFlat = true),
             (p: String) => Index.ivfPqTopKIndexed(spark, p, qT, k = 10),
-            Index.PqCodesKind))) {
+            Store.PqCodesKind))) {
         val path = s"$root/tier_$tier"
         val tb = System.nanoTime()
         save(path)
         val buildSec = (System.nanoTime() - tb) / 1e9
-        val bytes = dirBytes(Index.liveDir(spark, path, kind).stripPrefix("file:"))
+        val bytes = dirBytes(Store.liveDir(spark, path, kind).stripPrefix("file:"))
         val serveSec = timed(s"tier_${tier}_serve_q50")(serve(path))
         val rec = recallOf(serve(path))
         println(s"""{"stage":"tier_$tier","n":$n,"build_sec":${Bench.fmt3(buildSec)},"store_bytes":$bytes,"serve_sec":${Bench.fmt3(serveSec)},"recall10":$rec}""")
@@ -421,7 +421,7 @@ object ServeBench {
         withRaw = true)
       val sqrBuild = (System.nanoTime() - trb) / 1e9
       val sqrBytes = dirBytes(
-        Index.liveDir(spark, sqrPath, Index.SqCodesKind).stripPrefix("file:"))
+        Store.liveDir(spark, sqrPath, Store.SqCodesKind).stripPrefix("file:"))
       val sqrSec = timed("tier_sq8_residual_serve_q50")(
         Index.ivfSqTopKIndexed(spark, sqrPath, qT, k = 10))
       val sqrRec = recallOf(Index.ivfSqTopKIndexed(spark, sqrPath, qT, k = 10))
@@ -444,7 +444,7 @@ object ServeBench {
       Index.saveIvfMrl(emb, mrlPath, prefixDims = 16, forceFlat = true)
       val mrlBuild = (System.nanoTime() - tmb) / 1e9
       val mrlBytes = dirBytes(
-        Index.liveDir(spark, mrlPath, Index.MrlCodesKind).stripPrefix("file:"))
+        Store.liveDir(spark, mrlPath, Store.MrlCodesKind).stripPrefix("file:"))
       val mrlSec = timed("tier_mrl_serve_q50")(
         Index.ivfMrlRerankTopKIndexed(spark, mrlPath, qT, k = 10))
       val mrlRec = recallOf(
@@ -459,7 +459,7 @@ object ServeBench {
         trained = true)
       val sqtBuild = (System.nanoTime() - ttb) / 1e9
       val sqtBytes = dirBytes(
-        Index.liveDir(spark, sqtPath, Index.SqCodesKind).stripPrefix("file:"))
+        Store.liveDir(spark, sqtPath, Store.SqCodesKind).stripPrefix("file:"))
       val sqtSec = timed("tier_sq8_residual_trained_serve_q50")(
         Index.ivfSqTopKIndexed(spark, sqtPath, qT, k = 10))
       val sqtRec = recallOf(Index.ivfSqTopKIndexed(spark, sqtPath, qT, k = 10))
@@ -476,7 +476,7 @@ object ServeBench {
         quantized = true)
       val mrlqBuild = (System.nanoTime() - tmqb) / 1e9
       val mrlqBytes = dirBytes(
-        Index.liveDir(spark, mrlqPath, Index.MrlCodesKind).stripPrefix("file:"))
+        Store.liveDir(spark, mrlqPath, Store.MrlCodesKind).stripPrefix("file:"))
       val mrlqSec = timed("tier_mrl_sq_serve_q50")(
         Index.ivfMrlRerankTopKIndexed(spark, mrlqPath, qT, k = 10))
       val mrlqRec = recallOf(
@@ -494,7 +494,7 @@ object ServeBench {
         residual = true, withRaw = true)
       val pqtBuild = (System.nanoTime() - tpb) / 1e9
       val pqtBytes = dirBytes(
-        Index.liveDir(spark, pqtPath, Index.PqCodesKind).stripPrefix("file:"))
+        Store.liveDir(spark, pqtPath, Store.PqCodesKind).stripPrefix("file:"))
       val pqtAdcRec = recallOf(
         Index.ivfPqTopKIndexed(spark, pqtPath, qT, k = 10))
       val pqtSec = timed("tier_pq_trained_rerank_serve_q50")(

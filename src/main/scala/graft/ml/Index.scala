@@ -47,16 +47,13 @@ import org.apache.spark.sql.functions._
   * it ([[storedFlat]]); a rebuild re-trains from it and rewrites a
   * combined store's `sq_meta` to match.
   *
-  * Mutation and publication state beside the data:
-  *   - `tombstones/` (vec_id, del_seq) and `seq/` (the mutation counter
-  *     as marker-file names) — [[Tombstones]];
-  *   - `<kind>_v<n>/` — a later generation of any kind above (the flat
-  *     directory is v0), committed by its own `_SUCCESS` ([[compact]])
-  *     or by a store-level `commit_v<n>` file that flips every kind of a
-  *     [[rebuild]] at once;
-  *   - `_rebuild_stage/` — a rebuild's output before publication,
-  *     invisible to the generation listing;
-  *   - `_writer_lease` — the single-writer [[Lease]].
+  * Mutation and publication state beside the data is [[Store]]'s: every
+  * kind above (the flat directory is generation 0) is replaced only by
+  * the one publish ([[Store.publish]] — [[compact]] and [[rebuild]] stage
+  * their output and end there), which commits each new generation
+  * `<kind>_v<n>/` with one store-level `commit_v<n>` file; tombstones
+  * and the mutation counter are [[Tombstones]]', the single-writer
+  * lease [[Lease]]'s.
   *
   * Query-side coarse ranking is the exact FLAT scan over the stored
   * centroids: per query it costs O(nCells·dim), and at serving time
@@ -80,105 +77,13 @@ import org.apache.spark.sql.functions._
   * is threaded through that one path, for every coding at once.
   */
 object Index {
+  import Store.{CentroidsKind, CodewordsKind, MrlCodesKind, PostingsKind,
+    PqCodesKind, SqCodesKind, appendMetaCols, committedKinds, dropStoreCommits,
+    exists, fencedAppend, liveDir, prunedToProbes, retireGenerations,
+    generations, snapshotStore, storedMetaCols}
 
   private def centroidsPath(path: String) = s"$path/centroids"
   private def codewordsPath(path: String) = s"$path/codewords"
-
-  /** The two compactable data families; everything else in a store
-    * (centroids, codewords) is written once at build and never rewritten.
-    */
-  private[graft] val PostingsKind = "postings"
-  private[graft] val PqCodesKind = "pq_codes"
-  private[graft] val SqCodesKind = "sq_codes"
-  private[graft] val MrlCodesKind = "mrl_codes"
-
-  /** The build-artifact families a REBUILD replaces alongside the data
-    * kinds. Versioned like the data kinds so a reader-safe rebuild can
-    * publish fresh quantizers without deleting the generation a
-    * pre-planned serve still holds file references into.
-    */
-  private[graft] val CentroidsKind = "centroids"
-  private[graft] val CodewordsKind = "codewords"
-  // "terms" is the LEXICAL store's second data family ([[LexIndex]]);
-  // it shares this generation machinery, so the staged-rebuild publish
-  // lists it too (a dense store simply never stages one)
-  private val AllKinds =
-    Seq(CentroidsKind, CodewordsKind, PostingsKind, PqCodesKind, SqCodesKind,
-      MrlCodesKind, LexIndex.TermsKind)
-
-  private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Version number of a data directory: the build writes the flat
-    * `postings/` (version 0); every compaction publishes `postings_v<n>`.
-    */
-  private def versionOf(kind: String, name: String): Option[Int] =
-    if (name == kind) Some(0)
-    else if (name.startsWith(s"${kind}_v"))
-      scala.util.Try(name.stripPrefix(s"${kind}_v").toInt).toOption
-    else None
-
-  /** All on-disk generations of `kind` under the store, committed or not,
-    * as (version, path) — version 0 is the flat build directory.
-    */
-  private[graft] def generations(spark: SparkSession, path: String, kind: String)
-      : Seq[(Int, org.apache.hadoop.fs.Path)] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq.filter(_.isDirectory)
-      .flatMap(st => versionOf(kind, st.getPath.getName).map(_ -> st.getPath))
-  }
-
-  private def isCommitted(spark: SparkSession,
-                          p: org.apache.hadoop.fs.Path): Boolean = {
-    val fs = fsOf(spark, p)
-    // the flat build dir (v0) is committed by construction: save/append
-    // write it directly and a reader only ever exists after a build.
-    // Versioned dirs are committed by their _SUCCESS marker — compact's
-    // atomic publish point (single-file create) — OR by a store-level
-    // `commit_v<n>` marker: [[rebuild]] replaces EVERY kind in one
-    // logical flip, so its generations carry no per-dir marker and
-    // become live together the instant the one store-level file exists
-    // (per-dir markers would expose a window where a plan mixes new
-    // centroids with old postings — garbage probes, not stale data).
-    if (!p.getName.contains("_v")) true
-    else if (fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))) true
-    else {
-      val name = p.getName
-      val ver = name.substring(name.lastIndexOf("_v") + 2)
-      fs.exists(new org.apache.hadoop.fs.Path(p.getParent, s"commit_v$ver"))
-    }
-  }
-
-  /** Resolve the LIVE data directory for `kind`: the highest COMMITTED
-    * generation. This is the crash-safety contract: a compaction that
-    * died mid-write left an uncommitted `_v<n>` directory that no reader
-    * ever selects, and the previous generation — still on disk — stays
-    * live. Readers, appends, and stats all resolve through here.
-    */
-  private[graft] def liveDir(spark: SparkSession, path: String,
-                             kind: String): String = {
-    val committed = generations(spark, path, kind)
-      .filter { case (_, p) => isCommitted(spark, p) }
-    if (committed.isEmpty) s"$path/$kind" // fresh store: the build target
-    else committed.maxBy(_._1)._2.toString
-  }
-
-  /** The kinds with a committed generation at `path`, from ONE listing
-    * of the store root — what every store-wide operation dispatches on.
-    */
-  private def committedKinds(spark: SparkSession, path: String): Set[String] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    if (!fs.exists(root)) Set.empty
-    else {
-      val dirs = fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
-      AllKinds.filter(k => dirs.exists(p =>
-        versionOf(k, p.getName).isDefined && isCommitted(spark, p))).toSet
-    }
-  }
 
   /** The kind a store-wide scan reads: the raw flavor if present, else
     * the PQ codes, else the SQ codes (an MRL store always carries raw).
@@ -223,8 +128,7 @@ object Index {
     */
   private def readMetaRow(spark: SparkSession, dir: String)
       : Option[(Set[String], org.apache.spark.sql.Row)] = {
-    val mp = new org.apache.hadoop.fs.Path(dir)
-    if (!fsOf(spark, mp).exists(mp)) None
+    if (!exists(spark, dir)) None
     else {
       val df = spark.read.parquet(dir)
       Some((df.columns.toSet, df.head()))
@@ -258,10 +162,8 @@ object Index {
     */
   private def storedFlat(spark: SparkSession, path: String,
                          markers: Markers): Boolean = {
-    val owner = Seq("meta", "sq_meta").find { name =>
-      val p = new org.apache.hadoop.fs.Path(s"$path/$name")
-      fsOf(spark, p).exists(p)
-    }.getOrElse("ivf_meta")
+    val owner = Seq("meta", "sq_meta").find(m => exists(spark, s"$path/$m"))
+      .getOrElse("ivf_meta")
     // ONE marker read serves both the legacy-column check and the meta
     // row, shared with the coding that reads the same marker
     val meta = markers.row(owner)
@@ -293,46 +195,6 @@ object Index {
   private val pqCodesCore = Set("vec_id", "sub", "code", "cell", "ins_seq")
   private val sqCodesCore = Set("vec_id", "qb", "r", "cell", "ins_seq")
   private val mrlCodesCore = Set("vec_id", "vp", "vpn", "cell", "ins_seq")
-
-  /** The metadata columns a store was BUILT with, read from its parquet
-    * schema (footer-only, no data scan). Appends derive their effective
-    * metaCols from this instead of trusting the caller: an append that
-    * omitted a build-time metadata column would write rows that read back
-    * with null metadata, which a filtered serve silently never matches —
-    * an operational trap, so the mismatch fails loudly at append time.
-    */
-  private[graft] def storedMetaCols(spark: SparkSession, dir: String,
-                             core: Set[String]): Seq[String] =
-    // mergeSchema: on a legacy mixed-schema store (pre-validation appends
-    // that omitted metaCols) the UNION schema must decide the stored
-    // metadata set — a single sampled footer could miss a metadata column
-    // and wave through exactly the unfilterable append this check exists
-    // to reject (compactKind reads with mergeSchema for the same reason)
-    spark.read.option("mergeSchema", "true").parquet(dir)
-      .schema.map(_.name).filterNot(core.contains)
-
-  /** Validates + derives the effective metadata columns for an append:
-    * the STORE's metadata set wins; the incoming batch must carry every
-    * stored metadata column, and a caller-specified `metaCols` must match
-    * the stored set exactly (passing extras the store lacks would fork
-    * the on-disk schema).
-    */
-  private[graft] def appendMetaCols(spark: SparkSession, dir: String,
-                             core: Set[String], newEmb: DataFrame,
-                             callerMeta: Seq[String]): Seq[String] = {
-    val stored = storedMetaCols(spark, dir, core)
-    require(callerMeta.isEmpty || callerMeta.toSet == stored.toSet,
-      s"append: metaCols ${callerMeta.mkString("[", ",", "]")} does not match " +
-        s"the store's metadata columns ${stored.mkString("[", ",", "]")} — " +
-        "appending with mismatched metadata would write rows a filtered " +
-        "serve silently never matches")
-    val missing = stored.filterNot(newEmb.columns.contains)
-    require(missing.isEmpty,
-      s"append: incoming batch lacks the store's metadata column(s) " +
-        s"${missing.mkString(", ")} — the store was built with " +
-        s"metaCols = ${stored.mkString("[", ",", "]")}")
-    stored
-  }
 
   /** The assignment every coding derives its rows from: (vec_id, v, norm,
     * cell) from the shared coarse pass ([[Similarity.ivfAssign]]
@@ -887,62 +749,6 @@ object Index {
       .select(col("vec_id"), col("sub").cast("long").as("sub"), col("code"),
         col("cell"))
 
-  /** The serving-path scan cut: restrict a cell-partitioned store to the
-    * query batch's probed cells. The probe list is collected driver-side —
-    * bounded by nq·nProbe (and by nCells), a QUERY-side quantity that
-    * stays small at any corpus scale. TWO cuts compose: the read names
-    * ONLY the probed partition directories (basePath + explicit paths —
-    * full-store partition discovery lists every cell directory before
-    * pruning, a driver cost that grows with the CELL COUNT; at a 2,500-
-    * bucket lexical grid it quadrupled a 5-seed serve, and a 100-TB
-    * store has orders of magnitude more cells than any serve probes),
-    * and the literal isin on the partition column stays on top, keeping
-    * the prune visible in the plan (PlanSpec pins PartitionFilters) and
-    * guarding against a path-construction drift.
-    */
-  private[graft] def prunedToProbes(spark: SparkSession, dir: String,
-                                    probeVals: Array[Long],
-                                    partitionCol: String = "cell"): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val base = new Path(dir)
-    val fs = fsOf(spark, base)
-    // existence-filter the probed dirs: a probed cell can be empty (no
-    // vector ever assigned there) and parquet refuses missing paths.
-    // The probes are checked CONCURRENTLY (bounded pool): serially this
-    // is one storage round-trip per probed cell — nq·nProbe of them per
-    // serve, which at object-store latency dominates plan time long
-    // before the scan starts. Order-preserving, so the read's path list
-    // (and everything downstream) is byte-identical to the serial check.
-    val paths = probeVals.map(v => new Path(base, s"$partitionCol=$v"))
-    val dirs: Array[String] =
-      if (paths.length <= 1) paths.filter(fs.exists).map(_.toString)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, paths.length))
-        try {
-          val checks = paths.map { p =>
-            pool.submit(new java.util.concurrent.Callable[Boolean] {
-              def call(): Boolean = fs.exists(p)
-            })
-          }
-          paths.zip(checks).collect {
-            case (p, f) if f.get() => p.toString
-          }
-        } catch {
-          // preserve the serial path's error shape (an fs.exists IOException
-          // propagated directly, not wrapped), and cancel still-queued
-          // checks so one failed probe doesn't wait out the rest of the pool
-          case e: java.util.concurrent.ExecutionException =>
-            pool.shutdownNow()
-            throw Option(e.getCause).getOrElse(e)
-        } finally pool.shutdown()
-      }
-    val pruned =
-      if (dirs.isEmpty) spark.read.parquet(dir).where(lit(false))
-      else spark.read.option("basePath", dir).parquet(dirs.toSeq: _*)
-    pruned.where(col(partitionCol).isin(probeVals.toSeq: _*))
-  }
-
   /** Refresh a stored IVF-Flat index WITHOUT a rebuild: assign only the
     * arriving batch against the STORED centroids (the
     * [[Similarity.ivfAssignIncremental]] daily-refresh contract —
@@ -988,9 +794,7 @@ object Index {
     * outstanding is [[deleteStats]]' job.
     */
   def delete(spark: SparkSession, path: String, ids: DataFrame): Unit =
-    Lease.withLease(spark, path, "delete") {
-      Tombstones.write(spark, path, ids, "vec_id")
-    }
+    Store.delete(spark, path, ids, "vec_id", "delete")
 
   /** Predicate deletion (the DELETE WHERE / retention shape): tombstone
     * every CURRENTLY-SERVED id matching `pred` — a predicate over the
@@ -1004,13 +808,10 @@ object Index {
     */
   def deleteWhere(spark: SparkSession, path: String, pred: Column): Unit =
     Lease.withLease(spark, path, "deleteWhere") {
-    val kind = scanKind(committedKinds(spark, path)).getOrElse(PostingsKind)
-    val ids = Tombstones.mask(
-      spark.read.parquet(liveDir(spark, path, kind)),
-      Tombstones.readAll(spark, path), "vec_id")
-      .where(pred).select("vec_id").distinct()
-    delete(spark, path, ids)
-  }
+      Store.deleteWhere(spark, path,
+        scanKind(committedKinds(spark, path)).getOrElse(PostingsKind),
+        "vec_id", pred, "deleteWhere")
+    }
 
   /** Replace vectors in place: tombstone the batch's ids (mutation seq
     * s), then append the new versions (seq s+1) — the delete-then-add
@@ -1046,43 +847,10 @@ object Index {
     * reclaims, not "vectors ever touched". One row:
     * (n_versions_stored, n_tombstones, n_masked, masked_frac).
     */
-  def deleteStats(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val kind = scanKind(committedKinds(spark, path)).getOrElse(PostingsKind)
-    // version-level view: one (vec_id, ins_seq) per stored version (the
-    // PQ flavor repeats it nSub times)
-    val vecs = spark.read.parquet(liveDir(spark, path, kind))
-      .select(col("vec_id"),
-        coalesce(col("ins_seq"), lit(0L)).as("ins_seq"))
-      .distinct()
-    val tomb = Tombstones.readAll(spark, path)
-    // ONE pass over the store instead of two: tombstones pre-aggregated
-    // to max(del_seq) per id (a version is masked iff SOME tombstone has
-    // del_seq ≥ ins_seq ⟺ the max does), then stored + masked counted
-    // from a single 1:≤1 left join — the separate count() and semi-join
-    // count() each re-scanned the store; n_tombstones is the pre-agg's
-    // own row count (= distinct tombstoned ids)
-    val (nStored, nTomb, masked) = tomb match {
-      case None => (vecs.count(), 0L, 0L)
-      case Some(t) =>
-        // n_tombstones counts ALL distinct tombstoned ids — present in
-        // the store or not — so it comes from the pre-agg itself, not
-        // from the join (an unmatched tombstone never appears there)
-        val tt = t.groupBy(col("vec_id").as("__tomb_id"))
-          .agg(max("del_seq").as("__tomb_seq"))
-        val row = vecs.join(tt,
-            vecs("vec_id") === tt("__tomb_id"), "left")
-          .agg(count(lit(1)).as("stored"),
-            count(when(col("__tomb_seq") >= col("ins_seq"), lit(1)))
-              .as("masked"))
-          .head()
-        (row.getLong(0), tt.count(), row.getLong(1))
-    }
-    Seq((nStored, nTomb, masked))
-      .toDF("n_versions_stored", "n_tombstones", "n_masked")
-      .withColumn("masked_frac",
-        round(col("n_masked").cast("double") / col("n_versions_stored"), 4))
-  }
+  def deleteStats(spark: SparkSession, path: String): DataFrame =
+    Store.deleteStats(spark, path,
+      scanKind(committedKinds(spark, path)).getOrElse(PostingsKind), "vec_id",
+      versions = true, "n_versions_stored")
 
   /** Per-vector symmetric int8 quantization — [[Similarity.int8TopK]]'s
     * exact convention (scale = max|x|, q = floor(x·127/scale + 0.5),
@@ -1254,18 +1022,6 @@ object Index {
                        asOfSeq: Option[Long] = None): DataFrame =
     serve(spark, path, queries, SqCodesKind, k, nProbe, candWhere, asOfSeq)
 
-  /** Drop every generation of `kind` (used by an in-place REBUILD: the
-    * overwrite save targets the flat v0 directory, so stale higher
-    * versions from a previous store's compactions must not outrank it).
-    * Shared with [[LexIndex.saveLexical]], whose rebuild has the same
-    * stale-generation exposure.
-    */
-  private[graft] def retireGenerations(spark: SparkSession, path: String,
-                                       kind: String): Unit =
-    generations(spark, path, kind).foreach { case (_, p) =>
-      fsOf(spark, p).delete(p, true); ()
-    }
-
   /** A DIRECT re-save on an existing store path is an in-place rebuild:
     * the flat quantizer dirs it writes must become live again, so every
     * versioned quantizer generation and every store-level `commit_v<n>`
@@ -1275,234 +1031,29 @@ object Index {
                                          path: String): Unit = {
     retireGenerations(spark, path, CentroidsKind)
     retireGenerations(spark, path, CodewordsKind)
-    dropStoreCommits(spark, path); ()
+    dropStoreCommits(spark, path, all = true); ()
   }
 
-  /** Drop the store-level `commit_v<n>` markers whose version is not in
-    * `keep`: every one on an in-place rebuild (a stale marker could
-    * falsely commit a later publish's crashed, uncommitted generation
-    * reusing the number), the ones no surviving generation needs after a
-    * publish or [[vacuum]]. Returns the bytes removed.
-    */
-  private[graft] def dropStoreCommits(spark: SparkSession, path: String,
-                                      keep: Set[String] = Set.empty): Long = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    if (!fs.exists(root)) 0L
-    else fs.listStatus(root).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("commit_v") &&
-        !keep.contains(st.getPath.getName.stripPrefix("commit_v")))
-      .map { st => fs.delete(st.getPath, false); st.getLen }.sum
-  }
-
-  /** Append-vs-compaction fence. The refresh paths resolve the live
-    * generation, write into it, then MUST observe the same generation
-    * still live: a compaction whose source listing predates the append
-    * (or a flip landing between resolve and write) strands the appended
-    * files in the retired/grace generation — [[liveDir]] never serves
-    * them and the next compaction deletes them, a silent-data-loss
-    * window. The store's write contract is single-writer (appends and
-    * compact must not interleave); this fence turns a violated contract
-    * into a loud failure instead of lost rows. On failure the append DID
-    * NOT take effect if the flip preceded the write's visibility — but a
-    * compaction that listed mid-write may have folded part of the batch
-    * in, so the safe recovery is: quiesce the compactor, check the live
-    * generation for the batch's ids, re-append what is missing. On a
-    * COMBINED store (PQ/SQ/MRL + raw) an append is two fenced writes
-    * sharing one seq, and every coding appends in ONE order: the RAW
-    * refine flavor FIRST. A crash (or fence abort) between the writes
-    * then leaves the benign asymmetry — an id present in postings but
-    * missing from the codes flavor is merely never SHORTLISTED (and
-    * still serves through every raw-flavor path), whereas the reverse
-    * order leaves coded rows whose refine join silently drops them from
-    * every rerank result (recall loss with no error). Recovery must also
-    * check the SIBLING flavor for the batch's ids: re-run the append, or
-    * compare the two flavors' vec_id sets at this seq and re-append the
-    * difference.
-    */
-  private[graft] def fencedAppend(spark: SparkSession, path: String,
-                                  kind: String)(write: String => Unit): Unit = {
-    val live = liveDir(spark, path, kind)
-    write(live)
-    val after = liveDir(spark, path, kind)
-    if (after != live)
-      throw new IllegalStateException(
-        s"append raced a compaction on $path/$kind: wrote into $live but " +
-          s"$after is now live, so the appended rows are stranded in a " +
-          "retired generation and will NOT be served. Appends and compact " +
-          "are single-writer — quiesce the compactor, verify which of the " +
-          "batch's rows reached the live generation, and re-append the rest.")
-  }
-
-  /** What a rebuild must observe UNCHANGED between reading its corpus
-    * and publishing its generations: the mutation counter (every
-    * append/delete/upsert bumps it — [[Tombstones.nextSeq]]) and the
-    * committed-generation set (a compaction flip changes it without
-    * bumping the counter). Together they cover every mutation the
-    * store's single-writer contract forbids during the rebuild window.
-    */
-  private[graft] case class StoreSnapshot(seq: Long, gens: Set[String])
-
-  private[graft] def snapshotStore(spark: SparkSession,
-                                   path: String): StoreSnapshot =
-    StoreSnapshot(
-      Tombstones.currentSeq(spark, path),
-      AllKinds.flatMap(k => generations(spark, path, k)
-        .filter { case (_, p) => isCommitted(spark, p) }
-        .map { case (_, p) => p.getName }).toSet)
-
-  /** The rebuild-vs-mutator fence — [[fencedAppend]]'s twin for the
-    * other side of the single-writer contract. A rebuild reads the
-    * corpus at time T and publishes at time T+hours (at 100 TB the
-    * staged build IS hours); a mutation landing in between mutated a
-    * snapshot the rebuild had already read, so the new generations
-    * would silently lack it — the honor-system window round 13
-    * documented ("quiesce mutators") is here turned into a loud abort:
-    * the staged output is discarded, the store is untouched (it still
-    * serves every mutation), and the caller re-runs the rebuild after
-    * actually quiescing its mutators. Checked BEFORE the commit-marker
-    * create, so a failed rebuild can never half-publish.
-    */
-  private[graft] def verifyUnmoved(spark: SparkSession, path: String,
-                                   snap: StoreSnapshot, stampSeq: Long,
-                                   stage: String, what: String): Unit = {
-    moved(spark, path, snap, stampSeq).foreach { seqNow =>
-      abortRaced(spark, path, stage, what,
-        s"the store's mutation counter moved $stampSeq -> $seqNow (or a " +
-          "compaction flipped a generation)")
-    }
-  }
-
-  /** The store's current mutation seq if it moved past `stampSeq` or a
-    * committed generation changed since `snap`, else None.
-    */
-  private def moved(spark: SparkSession, path: String, snap: StoreSnapshot,
-                    stampSeq: Long): Option[Long] = {
-    val seqNow = Tombstones.currentSeq(spark, path)
-    if (seqNow != stampSeq || snapshotStore(spark, path).gens != snap.gens)
-      Some(seqNow)
-    else None
-  }
-
-  private def dropDir(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsOf(spark, p)
-    if (fs.exists(p)) { fs.delete(p, true); () }
-  }
-
-  private[graft] def abortRaced(spark: SparkSession, path: String,
-                                stage: String, what: String,
-                                detail: String): Nothing = {
-    dropDir(spark, stage)
-    throw new IllegalStateException(
-      s"$what raced a concurrent mutation on $path: $detail after the " +
-        s"$what read its inputs, so the staged output would silently " +
-        "lack that mutation. Rebuilds/folds and mutators are " +
-        "single-writer — the staged output was discarded and the store " +
-        "is UNCHANGED (it still serves every mutation, including the " +
-        "racing one); quiesce appends/deletes/upserts/compactions and " +
-        s"re-run the $what.")
-  }
-
-  /** Compact a store's cell partitions back to one file per cell — both
-    * flavors, whichever of `postings/` / `pq_codes/` the store carries.
-    * Every append adds one file per touched cell; after many refresh
-    * cycles a hot cell is dozens of small files and the serve scan pays
-    * per-file open/footer overhead — the same small-files failure the
-    * build writer fixed, re-accumulating incrementally.
-    *
-    * Publication is VERSIONED, not rename-swapped: the compacted layout
-    * lands in a fresh `<kind>_v<n+1>` directory and becomes live the
-    * instant its `_SUCCESS` marker commits (one atomic file create —
-    * [[liveDir]] only ever selects committed generations). This buys the
-    * two safety properties a rename swap lacks:
-    *   - CRASH safety: a compaction that dies mid-write leaves an
-    *     uncommitted directory no reader selects; the store never passes
-    *     through a state where the live data is missing or partial.
-    *   - READER safety: the PREVIOUS generation stays on disk until the
-    *     NEXT compaction retires it, so a serve planned against the old
-    *     listing (parquet readers pin file paths at plan time) executes
-    *     to completion even if the flip happens mid-query — no
-    *     FileNotFoundException window. ServeBench races a pre-planned
-    *     serve against the flip and pins checksum equality at 100×.
-    * Cost: up to one retained previous generation (≤ 2× kind bytes
-    * between compactions) — the standard MVCC trade every table format
-    * (Iceberg/Delta snapshots) makes.
+  /** Compact a store's cell partitions back to one file per cell — every
+    * coding the store carries. Every append adds one file per touched
+    * cell; after many refresh cycles a hot cell is dozens of small files
+    * and the serve scan pays per-file open/footer overhead — the same
+    * small-files failure the build writer fixed, re-accumulating
+    * incrementally. The rewrite purges tombstoned rows and consumes the
+    * tombstone files it read; it is published like every replacement
+    * ([[Store.compact]]): crash-safe (an unpublished rewrite is never
+    * selected) and reader-safe (the previous generation survives as the
+    * grace generation, so a serve planned before the flip completes —
+    * ServeBench races one against the flip and pins checksum equality).
     * Content is unchanged — IndexSpec pins serve bit-equality across a
-    * compaction for both flavors. The rewrite reads with mergeSchema so
-    * a store whose files disagree on metadata columns (possible only for
-    * stores written before appends validated metaCols) compacts to the
-    * union schema instead of silently dropping metadata.
+    * compaction for every flavor.
     */
   def compact(spark: SparkSession, path: String): Unit =
     Lease.withLease(spark, path, "compact") {
-    // tombstone consumption: list ONCE, purge masked rows from every
-    // flavor's rewrite, then delete exactly the listed files — a delete
-    // landing after the listing keeps masking at serve time and is
-    // consumed by the NEXT compaction instead of being silently dropped
-    val consumed = Tombstones.listFiles(spark, path)
-    val tomb = Tombstones.readFiles(spark, consumed)
-    Seq(PostingsKind, PqCodesKind, SqCodesKind, MrlCodesKind)
-      .foreach(compactKind(spark, path, _, "cell", Nil, tomb, "vec_id"))
-    Tombstones.deleteFiles(spark, path, consumed)
-    // fold the mutation-counter markers too: compaction is the store's
-    // periodic housekeeping window, and nothing else prunes seq/
-    Tombstones.collapseSeq(spark, path)
-  }
-
-  /** One kind's compaction cycle (shared with [[LexIndex]], whose posting
-    * store is bucket- rather than cell-partitioned). `sortCols`: in-file
-    * order the rewrite restores (lexical postings re-sort by term hash so
-    * row-group min/max stats keep the serve's term-predicate pushdown
-    * selective; the ANN stores have no in-file order contract). `purge`:
-    * tombstones to fold into the rewrite — masked rows are physically
-    * dropped from the new generation (the caller consumes the
-    * corresponding tombstone files after every kind is rewritten).
-    */
-  private[graft] def compactKind(spark: SparkSession, path: String,
-                                 kind: String, partitionCol: String,
-                                 sortCols: Seq[String] = Nil,
-                                 purge: Option[DataFrame] = None,
-                                 purgeIdCol: String = "vec_id"): Unit = {
-    import org.apache.hadoop.fs.Path
-    val gens = generations(spark, path, kind)
-    if (gens.exists { case (_, p) => isCommitted(spark, p) }) {
-      val src = liveDir(spark, path, kind)
-      // next version past EVERY on-disk generation, committed or not —
-      // a crashed compaction's leftover is simply overwritten later,
-      // never reused as-is
-      val next = gens.map(_._1).max + 1
-      val dst = s"$path/${kind}_v$next"
-      val rewritten = Tombstones.mask(
-        spark.read.option("mergeSchema", "true").parquet(src),
-        purge, purgeIdCol)
-        .repartition(col(partitionCol))
-      // sort by (partitionCol, sortCols...): the partition-column prefix
-      // satisfies the dynamic-partition write's required ordering, so the
-      // write adds NO second sort, and within each partition's file the
-      // rows still come out sortCols-ordered (partitionCol is constant
-      // there) — one local sort instead of two
-      (if (sortCols.isEmpty) rewritten
-       else rewritten.sortWithinPartitions(
-         (partitionCol +: sortCols).map(col): _*))
-        .write.mode("overwrite").partitionBy(partitionCol).parquet(dst)
-      val dstPath = new Path(dst)
-      val fs = fsOf(spark, dstPath)
-      // the publish point: ensure the commit marker exists even when
-      // the committer was configured not to write one
-      val marker = new Path(dstPath, "_SUCCESS")
-      if (!fs.exists(marker)) { fs.create(marker).close() }
-      // retire everything older than the generation readers may still
-      // hold plans against: keep dst (live) + src (grace window).
-      // Compare by directory NAME — generation paths from the fs
-      // listing carry a scheme (file:/…) the constructed strings lack.
-      val keep = Set(dstPath.getName, new Path(src).getName)
-      generations(spark, path, kind).foreach { case (_, p) =>
-        if (!keep.contains(p.getName)) { fs.delete(p, true); () }
-      }
+      Store.compact(spark, path,
+        Seq(PostingsKind, PqCodesKind, SqCodesKind, MrlCodesKind), "cell",
+        Nil, "vec_id", Tombstones.listFiles(spark, path))
     }
-  }
-
 
   /** The rebuild-decision hook: how far a refreshed store has drifted
     * from the cell budget a fresh build would get. `n_cells` is what the
@@ -1559,17 +1110,11 @@ object Index {
     * loop would trigger silently. Only the CELL budget resets — fresh
     * autoCells over the live corpus is the dilution fix that motivated
     * the rebuild.
-    * READER-SAFE: the fresh store is built in a staging directory under
-    * the store root (invisible to the generation listing), then every
-    * kind — quantizers included — is renamed into a `<kind>_v<n>`
-    * generation and published by ONE store-level `commit_v<n>` marker
-    * (single atomic file create). Until that instant every reader
-    * resolves the old generations; after it, all kinds flip together —
-    * no window where a plan can mix new centroids with old postings. A
-    * serve PLANNED before the flip executes to completion against the
-    * previous generation, which stays on disk as the grace generation
-    * (the [[compact]] contract; ServeBench's `race_rebuild` row pins
-    * checksum equality with the quiet serve at 100×).
+    * READER-SAFE: the fresh store is built in a staging directory and
+    * every kind — quantizers included — flips live at once in
+    * [[Store.publish]]; a serve PLANNED before the flip completes against
+    * the grace generation (ServeBench's `race_rebuild` row pins checksum
+    * equality with the quiet serve at 100×).
     * Tombstones are NOT cleared (deleting them would break plans that
     * pinned their files): the rebuilt rows carry a freshly-bumped
     * `ins_seq` that outranks every existing `del_seq`, so the surviving
@@ -1580,7 +1125,7 @@ object Index {
     * window is ENFORCED, not honor-system: the mutation counter and
     * committed-generation set are snapshotted when the corpus is read
     * and re-verified immediately before the commit-marker create
-    * ([[verifyUnmoved]]); an append/upsert/delete/compaction landing
+    * ([[Store.verifyUnmoved]]); an append/upsert/delete/compaction landing
     * in between aborts the rebuild LOUDLY with the staged output
     * discarded and the store unchanged — the racing mutation is never
     * silently absent from a published generation.
@@ -1697,14 +1242,14 @@ object Index {
       snap, midHook)
   }
 
-  /** The shared staged-rebuild machinery behind [[rebuild]] and
-    * [[rebuildFrom]]: stage every flavor in the store's own recorded
-    * configuration, stamp past the tombstones, publish atomically.
+  /** The staged rebuild behind [[rebuild]] and [[rebuildFrom]]: stage
+    * every flavor in the store's own recorded configuration, stamped past
+    * the tombstones, through [[Store.rebuildStaged]]'s fence and publish.
     * `corpus` columns: (vec_id, embedding, meta…), already lineage-cut.
     */
   private def stagedRebuild(spark: SparkSession, path: String,
                             corpus: DataFrame, meta: Seq[String],
-                            withRaw: Boolean, snap: StoreSnapshot,
+                            withRaw: Boolean, snap: Store.StoreSnapshot,
                             midHook: () => Unit): Unit = {
     val kinds = committedKinds(spark, path)
     val markers = new Markers(spark, path)
@@ -1726,104 +1271,21 @@ object Index {
       (if (kinds(SqCodesKind)) Seq(Sq(sq.residual)) else Nil) ++
       (if (withRaw) Seq(Flat) else Nil) ++
       (if (kinds(MrlCodesKind)) Seq(codingOf(MrlCodesKind, markers)) else Nil)
-    // rows republished under surviving tombstones must outrank them
-    val stampSeq = Tombstones.nextSeq(spark, path)
-    val stage = s"$path/_rebuild_stage"
-    // a mutation that slipped in between the caller's snapshot and this
-    // bump already raced the corpus read — abort BEFORE paying for the
-    // staged build, same contract as the publish-time check
-    if (stampSeq != snap.seq + 1)
-      abortRaced(spark, path, stage, "rebuild",
-        s"the store's mutation counter moved ${snap.seq} -> " +
-          s"${stampSeq - 1} between the corpus snapshot and the rebuild " +
-          "stamp")
-    dropDir(spark, stage) // a crashed rebuild's leftover stage is dead weight
-    // only the CELL budget resets: fresh autoCells over the live corpus
-    build(corpus, stage, nCells = 16, owner.flat, Similarity.defaultSuperProbe,
-      meta, owner.trained, owner.trainIters, stampSeq, codings, markers = Nil)
-    if (kinds(SqCodesKind) && (kinds(PqCodesKind) || withRaw)) {
-      // a combined store's sq_meta is updated IN PLACE at the real path
-      // (markers are coding-preserved — only the `trained`/`flat`
-      // ownership fields can move — and serves read them eagerly at plan
-      // time, so pre-planned serves are unaffected)
-      import spark.implicits._
-      Seq((sq.residual, owner.trained, sq.trainIters, owner.flat))
-        .toDF("residual", "trained", "train_iters", "flat")
-        .write.mode("overwrite").parquet(s"$path/sq_meta")
-    }
-    midHook()
-    // the conflict fence, BEFORE the atomic flip: at 100 TB the staged
-    // build is hours long, and "quiesce mutators" without enforcement is
-    // how production stores silently lose writes
-    verifyUnmoved(spark, path, snap, stampSeq, stage, "rebuild")
-    publishStage(spark, path, stage, recheck = Some((snap, stampSeq)))
-  }
-
-  /** Flip a staged rebuild live: rename every staged kind into the next
-    * generation number (shared across kinds), commit them all with ONE
-    * `commit_v<n>` marker file, then retire everything older than the
-    * grace generation a pre-planned serve may still read from. Per-dir
-    * `_SUCCESS` markers are stripped before the renames — a staged dir
-    * must not self-commit ahead of its siblings, or a plan built
-    * between renames would mix generations of different kinds.
-    *
-    * `recheck = Some((snap, stampSeq))` re-verifies the conflict fence
-    * IMMEDIATELY before the commit-marker create — after the renames,
-    * which can take real time on an object store. A mutation landing
-    * between [[verifyUnmoved]] and the flip would otherwise be silently
-    * absent from the published generations; at this point the renamed
-    * dirs are still uncommitted (marker-less — no reader selects them),
-    * so aborting only needs to delete them and the store is unchanged.
-    * The residual window is the single marker create itself; the
-    * [[Lease]] closes it for every API writer (a mutator cannot even
-    * start while the rebuild holds the lease), leaving this recheck as
-    * defense-in-depth against lease-bypassing writers.
-    */
-  private[graft] def publishStage(spark: SparkSession, path: String,
-                           stage: String,
-                           recheck: Option[(StoreSnapshot, Long)] = None)
-      : Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val kinds = AllKinds.filter(k => fs.exists(new Path(s"$stage/$k")))
-    // the pre-flip live generation per kind — kept as the grace window
-    val prevLive: Map[String, Option[Path]] = kinds.map { k =>
-      k -> generations(spark, path, k)
-        .filter { case (_, p) => isCommitted(spark, p) }
-        .sortBy(_._1).lastOption.map(_._2)
-    }.toMap
-    val n = 1 + kinds.flatMap(k => generations(spark, path, k).map(_._1))
-      .foldLeft(0)(math.max)
-    kinds.foreach { k =>
-      fs.delete(new Path(s"$stage/$k/_SUCCESS"), false)
-      require(fs.rename(new Path(s"$stage/$k"), new Path(s"$path/${k}_v$n")),
-        s"rebuild publish: rename of $k into generation v$n failed at $path")
-    }
-    // last-instant fence re-check (see scaladoc): the renamed dirs are
-    // uncommitted, so aborting here deletes them and nothing else moved
-    for ((snap, stampSeq) <- recheck; seqNow <- moved(spark, path, snap, stampSeq)) {
-      kinds.foreach { k =>
-        fs.delete(new Path(s"$path/${k}_v$n"), true); ()
-      }
-      abortRaced(spark, path, stage, "rebuild",
-        s"the store's mutation counter moved $stampSeq -> $seqNow (or " +
-          "a compaction flipped a generation) between the staged " +
-          "renames and the commit-marker create")
-    }
-    fs.create(new Path(root, s"commit_v$n")).close() // THE atomic flip
-    kinds.foreach { k =>
-      val keep = Set(s"${k}_v$n") ++ prevLive(k).map(_.getName)
-      generations(spark, path, k).foreach { case (_, p) =>
-        if (!keep.contains(p.getName)) { fs.delete(p, true); () }
+    Store.rebuildStaged(spark, path, snap, midHook) { (stage, stampSeq) =>
+      // only the CELL budget resets: fresh autoCells over the live corpus
+      build(corpus, stage, nCells = 16, owner.flat, Similarity.defaultSuperProbe,
+        meta, owner.trained, owner.trainIters, stampSeq, codings, markers = Nil)
+      if (kinds(SqCodesKind) && (kinds(PqCodesKind) || withRaw)) {
+        // a combined store's sq_meta is updated IN PLACE at the real path
+        // (markers are coding-preserved — only the `trained`/`flat`
+        // ownership fields can move — and serves read them eagerly at
+        // plan time, so pre-planned serves are unaffected)
+        import spark.implicits._
+        Seq((sq.residual, owner.trained, sq.trainIters, owner.flat))
+          .toDF("residual", "trained", "train_iters", "flat")
+          .write.mode("overwrite").parquet(s"$path/sq_meta")
       }
     }
-    // prune store-level commit markers no surviving generation needs
-    val keepVers: Set[String] = Set(n.toString) ++ prevLive.values.flatten
-      .map(_.getName).filter(_.contains("_v"))
-      .map(nm => nm.substring(nm.lastIndexOf("_v") + 2))
-    dropStoreCommits(spark, path, keepVers)
-    fs.delete(new Path(stage), true); ()
   }
 
   /** The MAINTENANCE decision, closed over the three measured signals:
@@ -1831,7 +1293,7 @@ object Index {
     *     flavor permits [[rebuild]] (fresh cells, purge included); a
     *     codes-only store re-grids via [[rebuildFrom]] when the caller
     *     supplies `rebuildWith`, else reports `"rebuild-needed"` (the
-    *     [[LexIndex.maintain]] contract) instead of silently skipping;
+    *     lexical store's contract) instead of silently skipping;
     *   - dead-version mass ([[deleteStats]]) past `maxMaskedFrac`, or
     *     per-cell fragmentation past `maxFilesPerCell` → [[compact]];
     *   - otherwise no action.
@@ -1866,7 +1328,7 @@ object Index {
     * rows. Without `rebuildWith`, a raw flavor self-rebuilds and a
     * codes-only store reports `"rebuild-needed"`.
     *
-    * `vacuumKeep = Some(n)` additionally runs [[vacuum]]`(path, n)`
+    * `vacuumKeep = Some(n)` additionally runs [[Store.vacuum]]`(path, n)`
     * AFTER whatever action fired — the cron shape for reclaiming
     * superseded generations without a second scheduled job. Explicitly
     * opt-in because the keep count carries the grace-window contract
@@ -1887,7 +1349,7 @@ object Index {
     val ds = deleteStats(spark, path).head()
     val maskedFrac = ds.getDouble(3)
     val kind = scanKind(kinds).get
-    val files = countDataFiles(spark, liveDir(spark, path, kind))
+    val files = Store.countDataFiles(spark, liveDir(spark, path, kind))
     val filesPerCell = files.toDouble / math.max(1L, st.getLong(1))
     val action =
       if (dilution > maxDilution) rebuildWith match {
@@ -1900,7 +1362,7 @@ object Index {
       else if (maskedFrac > maxMaskedFrac || filesPerCell > maxFilesPerCell) {
         compact(spark, path); "compact"
       } else "none"
-    vacuumKeep.foreach { n => vacuum(spark, path, n); () }
+    vacuumKeep.foreach { n => Store.vacuum(spark, path, n); () }
     Seq((action, st.getLong(0), st.getLong(1), st.getLong(2), dilution,
         maskedFrac, math.rint(filesPerCell * 10000) / 10000))
       .toDF("action", "n_vectors", "n_cells", "auto_cells", "dilution",
@@ -1911,7 +1373,7 @@ object Index {
     * maintenance window: acquire the [[Lease]] (so the tick can never
     * interleave with an out-of-band mutator — a second tick, a manual
     * rebuild, a stray append all fail loudly at acquisition), run
-    * [[maintainReport]]'s measured decision + action, then [[vacuum]]
+    * [[maintainReport]]'s measured decision + action, then [[Store.vacuum]]
     * superseded generations, all under ONE lease window. Returns the
     * evidence row extended with the vacuum's result:
     * (action, n_vectors, n_cells, auto_cells, dilution, masked_frac,
@@ -1932,77 +1394,8 @@ object Index {
     Lease.withLease(spark, path, "maintenanceTick") {
       val report = maintainReport(spark, path, maxDilution, maxMaskedFrac,
         maxFilesPerCell, rebuildWith, vacuumKeep = None)
-      report.crossJoin(vacuum(spark, path, vacuumKeep))
+      report.crossJoin(Store.vacuum(spark, path, vacuumKeep))
     }
-
-  /** Reclaim SUPERSEDED generations — the explicit end of the MVCC
-    * story. Every publish ([[compact]]'s versioned flip, [[rebuild]]'s
-    * staged one) retires generations older than its grace window, but a
-    * store that is rebuilt once and then only APPENDED keeps its
-    * superseded full-size generation forever: nothing else runs a
-    * publish to retire it — a storage leak worth ~1× the store at
-    * 100-TB sizes. `vacuum` deletes, per kind, every generation below
-    * the newest `keepGenerations` committed ones (crashed publishes'
-    * uncommitted leftovers below the live generation included), prunes
-    * store-level commit markers no surviving generation needs, and
-    * collapses the mutation-counter markers. All through the Hadoop FS.
-    *
-    * GRACE-WINDOW contract: `keepGenerations = 1` keeps ONLY the live
-    * generation — correct in the maintenance window after every serve
-    * planned before the last flip has drained (a parquet plan pins file
-    * paths; vacuuming its generation while it still runs is the
-    * FileNotFoundException the grace window exists to prevent). Serves
-    * PLANNED AFTER the last flip read the live generation and are safe
-    * throughout. `keepGenerations = 2` preserves the standard one-flip
-    * grace window and is safe whenever [[compact]] itself is.
-    * Single-writer, like every store mutation here.
-    *
-    * Returns one row: (generations_removed, bytes_reclaimed).
-    */
-  def vacuum(spark: SparkSession, path: String,
-             keepGenerations: Int = 1): DataFrame =
-    Lease.withLease(spark, path, "vacuum") {
-    require(keepGenerations >= 1, "must keep at least the live generation")
-    import spark.implicits._
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    def treeBytes(p: Path): Long = {
-      val it = fs.listFiles(p, true)
-      var n = 0L
-      while (it.hasNext) n += it.next().getLen
-      n
-    }
-    var dirsRemoved = 0L
-    var bytes = 0L
-    val keptVers = scala.collection.mutable.Set[String]()
-    AllKinds.foreach { k =>
-      val gens = generations(spark, path, k)
-      val committed = gens.filter { case (_, p) => isCommitted(spark, p) }
-        .sortBy(-_._1)
-      if (committed.nonEmpty) {
-        val keep = committed.take(keepGenerations)
-        keptVers ++= keep.map(_._1.toString)
-        val liveVer = committed.head._1
-        val keepNames = keep.map(_._2.getName).toSet
-        gens.foreach { case (v, p) =>
-          // also drops crashed publishes' uncommitted leftovers — but
-          // only BELOW the live generation: an uncommitted dir above it
-          // could be an in-flight staged publish under a violated
-          // single-writer contract, and deleting it buys nothing
-          if (v < liveVer && !keepNames.contains(p.getName)) {
-            bytes += treeBytes(p)
-            dirsRemoved += 1
-            fs.delete(p, true); ()
-          }
-        }
-      }
-    }
-    // prune store-level commit markers no surviving generation needs
-    bytes += dropStoreCommits(spark, path, keptVers.toSet)
-    Tombstones.collapseSeq(spark, path)
-    Seq((dirsRemoved, bytes)).toDF("generations_removed", "bytes_reclaimed")
-  }
 
   /** DuckDB count-formula oracle for [[maintainReport]] over the
     * standard degraded-store fixture (built on `baseWhereSql` at
@@ -2156,28 +1549,6 @@ object Index {
        |  FROM refined)
        |SELECT query_id, neighbor_id, cosine, rank FROM ranked
        |WHERE rank <= $k""".stripMargin
-  }
-
-  /** Parquet data files under `dir`, counted through the Hadoop
-    * FileSystem like every other store touch. A `java.io.File` walk here
-    * would silently return 0 on HDFS/S3/abfs stores — exactly the
-    * deployments whose fragmentation matters — so the [[maintain]]
-    * compaction trigger would never fire, with no error. Recursive: the
-    * data dirs nest one partition level (cell=…/bucket=…).
-    */
-  private[graft] def countDataFiles(spark: SparkSession, dir: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) 0L
-    else {
-      val it = fs.listFiles(p, true)
-      var n = 0L
-      while (it.hasNext) {
-        if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-      }
-      n
-    }
   }
 
   /** The distinct cells a query batch would probe — the measurement hook

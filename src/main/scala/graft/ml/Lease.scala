@@ -10,8 +10,8 @@ import org.apache.hadoop.fs.Path
   * mutation-counter markers rely on) by every mutating entry point and
   * deleted on completion.
   *
-  * Why it exists: the in-process fences ([[Index.fencedAppend]],
-  * [[Index.verifyUnmoved]]) turn a VIOLATED single-writer contract into
+  * Why it exists: the in-process fences ([[Store.fencedAppend]],
+  * [[Store.verifyUnmoved]]) turn a VIOLATED single-writer contract into
   * a loud abort after the fact, but they cannot stop two DRIVERS — two
   * rebuilds launched from two processes, or a rebuild racing an external
   * compactor — from both paying for hours of staged work before one
@@ -31,15 +31,14 @@ import org.apache.hadoop.fs.Path
   *
   * STALE-LEASE TAKEOVER: a holder that crashed leaves its lease file
   * behind and would otherwise wedge the store forever. A lease older
-  * than `ttlMs` (default 1 h, env `SPARK_GRAFT_LEASE_TTL_MS`) is
-  * treated as abandoned: the waiter deletes it and retries the
-  * exclusive create — if two waiters race the takeover, the create
-  * picks exactly one winner and the loser aborts against the fresh
-  * lease. Operators with mutations legitimately longer than the TTL
-  * (a 100-TB rebuild) must raise it — a takeover under a LIVE holder
-  * degrades to the fence-only guarantees. Holders could alternatively
-  * heartbeat the file's mtime; this implementation keeps the lease a
-  * single create/delete pair and documents the TTL contract instead.
+  * than [[TtlMs]] (1 h) is treated as abandoned: the waiter deletes it
+  * and retries the exclusive create — if two waiters race the takeover,
+  * the create picks exactly one winner and the loser aborts against the
+  * fresh lease. A mutation legitimately longer than the TTL (a 100-TB
+  * rebuild) can be taken over under a LIVE holder, which degrades to the
+  * fence-only guarantees. Holders could alternatively heartbeat the
+  * file's mtime; this implementation keeps the lease a single
+  * create/delete pair and documents the TTL contract instead.
   *
   * READERS NEED NO LEASE — serves plan against committed generations
   * and the grace window keeps pre-flip plans executable (the MVCC
@@ -69,23 +68,19 @@ private[graft] object Lease {
 
   private def leasePath(path: String) = new Path(s"$path/$LeaseFile")
 
-  def defaultTtlMs: Long = sys.env.get("SPARK_GRAFT_LEASE_TTL_MS")
-    .flatMap(v => scala.util.Try(v.toLong).toOption)
-    .getOrElse(60L * 60 * 1000)
-
-  private def fsOf(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** Age past which a lease is taken to be abandoned by a crashed holder. */
+  private[graft] val TtlMs: Long = 60L * 60 * 1000
 
   /** Run `body` as `path`'s single writer: acquire the lease (or fail
     * loudly naming the holder), release on every exit path. Nested calls
     * from the same thread pass through.
     */
-  def withLease[T](spark: SparkSession, path: String, what: String,
-                   ttlMs: Long = defaultTtlMs)(body: => T): T = {
+  def withLease[T](spark: SparkSession, path: String, what: String)
+                  (body: => T): T = {
     val key = new Path(path).toUri.getPath
     if (held.get.contains(key)) body
     else {
-      acquire(spark, path, key, what, ttlMs)
+      acquire(spark, path, key, what)
       held.get += key
       try body
       finally {
@@ -98,11 +93,11 @@ private[graft] object Lease {
   /** Whether a lease file currently exists (test/ops hook). */
   def isHeld(spark: SparkSession, path: String): Boolean = {
     val lp = leasePath(path)
-    fsOf(spark, lp).exists(lp)
+    Store.fs(spark, lp).exists(lp)
   }
 
   private def acquire(spark: SparkSession, path: String, key: String,
-                      what: String, ttlMs: Long): Unit = {
+                      what: String): Unit = {
     val info = what + "@" + java.lang.management.ManagementFactory
       .getRuntimeMXBean.getName + " thread=" +
       Thread.currentThread().getName
@@ -114,7 +109,7 @@ private[graft] object Lease {
           s"process by [$prev]. The store's mutations are single-writer " +
           "— wait for the holder to finish.")
     val lp = leasePath(path)
-    val fs = fsOf(spark, lp)
+    val fs = Store.fs(spark, lp)
     try {
       fs.mkdirs(lp.getParent)
       var acquired = false
@@ -126,9 +121,9 @@ private[graft] object Lease {
           acquired = true
         } catch {
           case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-            contend(fs, lp, path, what, ttlMs)
+            contend(fs, lp, path, what)
           case _: java.nio.file.FileAlreadyExistsException =>
-            contend(fs, lp, path, what, ttlMs)
+            contend(fs, lp, path, what)
         }
       }
     } catch {
@@ -141,21 +136,21 @@ private[graft] object Lease {
     * otherwise.
     */
   private def contend(fs: org.apache.hadoop.fs.FileSystem, lp: Path,
-                      path: String, what: String, ttlMs: Long): Unit = {
+                      path: String, what: String): Unit = {
     val st = try Some(fs.getFileStatus(lp)) catch {
       case _: java.io.FileNotFoundException => None
     }
     st match {
       case None => () // released in the window: loop retries the create
       case Some(s)
-          if System.currentTimeMillis() - s.getModificationTime > ttlMs =>
+          if System.currentTimeMillis() - s.getModificationTime > TtlMs =>
         // stale: the holder crashed without releasing — take over.
         // Racing takeovers are safe: both delete (idempotent), the
         // exclusive create picks one winner, the loser aborts against
         // the winner's fresh lease on the next loop.
         System.err.println(s"[graft.Lease] taking over a stale writer " +
           s"lease on $path (age ${System.currentTimeMillis() -
-            s.getModificationTime} ms > ttl $ttlMs ms)")
+            s.getModificationTime} ms > ttl $TtlMs ms)")
         fs.delete(lp, false); ()
       case Some(_) =>
         val holder = try {
@@ -170,15 +165,14 @@ private[graft] object Lease {
             s"[$holder]. The store's mutations are single-writer — wait " +
             "for the holder to finish (its lease file is deleted on " +
             s"completion), or if it crashed, the lease expires after " +
-            s"${ttlMs / 1000} s and the next mutator takes over " +
-            "(SPARK_GRAFT_LEASE_TTL_MS overrides).")
+            s"${TtlMs / 1000} s and the next mutator takes over.")
     }
   }
 
   private def release(spark: SparkSession, path: String,
                       key: String): Unit = {
     val lp = leasePath(path)
-    fsOf(spark, lp).delete(lp, false)
+    Store.fs(spark, lp).delete(lp, false)
     inProcess.remove(key); ()
   }
 }

@@ -28,7 +28,14 @@ import org.apache.spark.sql.functions._
   *     normalization at serve time needs no corpus-side join.
   *   - `terms/` (th, df) partitioned the same way: the document
   *     frequencies, FROZEN at build time.
-  *   - `stats/` one row (n_docs, avgdl, n_buckets), frozen at build.
+  *   - `stats/` one row (n_docs, avgdl, n_buckets, sum_dl), frozen at
+  *     build; a fold or rebuild republishes it inside the new terms
+  *     generation ([[statsDir]]).
+  *   - `df_deltas/`, `doc_deltas/` — the append sidecars [[foldStats]]
+  *     consumes.
+  * Postings and terms are versioned and published like every store kind
+  * ([[Store]]: `<kind>_v<n>/` generations, one `commit_v<n>` marker per
+  * publish); tombstones and the mutation counter are [[Tombstones]]'.
   *
   * Scoring at serve time is bit-identical to [[Retrieval.bm25TopK]] for a
   * store built over the same corpus: both serves call the same
@@ -52,8 +59,7 @@ import org.apache.spark.sql.functions._
 object LexIndex {
   import Portable._
 
-  private[graft] val PostingsKind = "postings"
-  private[graft] val TermsKind = "terms"
+  import Store.{PostingsKind, TermsKind, liveDir}
   private def termsPath(path: String) = s"$path/terms"
   private def statsPath(path: String) = s"$path/stats"
 
@@ -62,7 +68,7 @@ object LexIndex {
     * through to the flat build dir).
     */
   private[graft] def termsDir(spark: SparkSession, path: String): String =
-    Index.liveDir(spark, path, TermsKind)
+    liveDir(spark, path, TermsKind)
 
   /** LIVE stats: once a fold or staged rebuild has republished them,
     * the stats row rides INSIDE the live terms generation (`_stats/` —
@@ -72,20 +78,13 @@ object LexIndex {
     * A never-folded store falls back to the flat build dir.
     */
   private[graft] def statsDir(spark: SparkSession, path: String): String = {
-    val t = new org.apache.hadoop.fs.Path(termsDir(spark, path), "_stats")
-    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(t)) t.toString else statsPath(path)
+    val t = s"${termsDir(spark, path)}/_stats"
+    if (Store.exists(spark, t)) t else statsPath(path)
   }
   // per-append accounting sidecars ([[foldStats]]' inputs): df_deltas =
   // (th, df) of each appended batch, doc_deltas = (n_docs, sum_dl)
   private def dfDeltasPath(path: String) = s"$path/df_deltas"
   private def docDeltasPath(path: String) = s"$path/doc_deltas"
-
-  private def deletePath(spark: SparkSession, p: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) { fs.delete(hp, true); () }
-  }
 
   /** (doc_id, dl, th, tf [, metaCols], bucket) — every bigram posting of
     * `docs`, BUCKET-FUSED: the tf aggregation and the partitioned write's
@@ -198,9 +197,9 @@ object LexIndex {
     // outrank them in liveDir and silently serve pre-rebuild relations —
     // retire them first (the dense saveIvf contract), along with any
     // store-level commit markers from staged rebuilds
-    Index.retireGenerations(spark, path, PostingsKind)
-    Index.retireGenerations(spark, path, TermsKind)
-    Index.dropStoreCommits(spark, path)
+    Store.retireGenerations(spark, path, PostingsKind)
+    Store.retireGenerations(spark, path, TermsKind)
+    Store.dropStoreCommits(spark, path, all = true)
     if (insSeq == 0L) // fresh build: no mutation history (a rebuild keeps it)
       Tombstones.clear(spark, path)
     // one file per bucket, th-sorted within it (row-group stats carry the
@@ -248,8 +247,8 @@ object LexIndex {
         coalesce(sum("tf"), lit(0L)).as("sum_dl"))
       .write.mode("overwrite").parquet(statsPath(path))
     // a fresh build owes nothing to the previous store's append history
-    deletePath(spark, dfDeltasPath(path))
-    deletePath(spark, docDeltasPath(path))
+    Store.dropDir(spark, dfDeltasPath(path))
+    Store.dropDir(spark, docDeltasPath(path))
   }
 
   /** Refresh the store WITHOUT a rebuild: the arriving documents'
@@ -267,9 +266,8 @@ object LexIndex {
     // the store's schema decides the metadata set — a caller-side
     // mismatch fails loudly instead of writing silently-unfilterable
     // rows (the dense-store append contract)
-    val meta = Index.appendMetaCols(spark,
-      Index.liveDir(spark, path, PostingsKind), postingsCore,
-      newDocs, metaCols)
+    val meta = Store.appendMetaCols(spark, liveDir(spark, path, PostingsKind),
+      postingsCore, newDocs, metaCols)
     // materialized once: the postings write, the df sidecar, and the doc
     // sidecar all derive from this batch-sized relation — bucket-fused
     // like the build (one exchange carries tf aggregation AND layout;
@@ -278,7 +276,7 @@ object LexIndex {
     // stamped AFTER any tombstone the caller just wrote ([[upsertDocs]]):
     // the appended postings outrank it and serve; older rows stay masked
     val seqNo = Tombstones.nextSeq(spark, path)
-    Index.fencedAppend(spark, path, PostingsKind) { dir =>
+    Store.fencedAppend(spark, path, PostingsKind) { dir =>
       post
         .withColumn("ins_seq", lit(seqNo))
         .write.mode("append").partitionBy("bucket")
@@ -335,37 +333,25 @@ object LexIndex {
   private[graft] def foldStats(spark: SparkSession, path: String,
                                midHook: () => Unit): Unit =
     Lease.withLease(spark, path, "foldStats") {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(dfDeltasPath(path)))) return // nothing appended
-    val snap = Index.snapshotStore(spark, path)
     // the consumption listing: exactly these files are folded in and
-    // exactly these are deleted after the flip
-    def listParquet(dir: String): Seq[String] = {
-      val p = new Path(dir)
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString)
-    }
-    val dfFiles = listParquet(dfDeltasPath(path))
-    val docFiles = listParquet(docDeltasPath(path))
+    // exactly these are deleted by the publish
+    val dfFiles = Store.listParquet(spark, dfDeltasPath(path))
+    val docFiles = Store.listParquet(spark, docDeltasPath(path))
     if (dfFiles.isEmpty && docFiles.isEmpty) return // nothing to fold
+    val snap = Store.snapshotStore(spark, path)
     val st = spark.read.parquet(statsDir(spark, path))
     require(st.columns.contains("sum_dl"),
       "foldStats needs a store built with the sum_dl stats column " +
         "(older store: run a full saveLexical rebuild instead)")
     val row = st.select("n_docs", "n_buckets", "sum_dl").head()
     val nb = row.getLong(1)
-    // READER-SAFE publish (the compactKind contract): the folded terms
-    // are STAGED (stats row riding inside as `_stats/`), renamed into a
-    // fresh `terms_v<n>` generation only after the conflict fence, and
-    // committed by one marker create; the previous generation stays on
-    // disk for any serve that planned against it
+    // READER-SAFE: the folded terms are STAGED with the stats row riding
+    // inside as `_stats/`, so the one publish flips df and stats together;
+    // the previous generation stays on disk for any serve planned against it
     val src = termsDir(spark, path)
     val stage = s"$path/_fold_stage"
-    deletePath(spark, stage) // a crashed fold's leftover is dead weight
+    val staged = s"$stage/$TermsKind"
+    Store.dropDir(spark, stage) // a crashed fold's leftover is dead weight
     import spark.implicits._
     val dd = Tombstones.readFiles(spark, docFiles)
       .fold(Seq((0L, 0L)).toDF("dn", "ds").head()) {
@@ -378,7 +364,7 @@ object LexIndex {
       .select(col("n_docs"),
         round(col("sum_dl") / col("n_docs").cast("double"), 6).as("avgdl"),
         lit(nb).as("n_buckets"), col("sum_dl"))
-      .write.mode("overwrite").parquet(s"$stage/_stats")
+      .write.mode("overwrite").parquet(s"$staged/_stats")
     // terms: frozen ⊎ listed deltas, summed per term, re-gridded like
     // the build
     spark.read.parquet(src).select("th", "df")
@@ -394,30 +380,12 @@ object LexIndex {
       // bucket-prefixed sort — see the saveLexical terms write
       .sortWithinPartitions("bucket", "th")
       .write.mode("append").partitionBy("bucket") // append: _stats is in stage
-      .parquet(stage)
-    // the staged dir must not self-commit before the fence + rename
-    fs.delete(new Path(stage, "_SUCCESS"), false)
+      .parquet(staged)
     midHook()
     // the conflict fence: a mutation since the snapshot means the fold
     // read a superseded sidecar/terms state — abort before publishing
-    Index.verifyUnmoved(spark, path, snap, snap.seq, stage, "fold")
-    val next = 1 + Index.generations(spark, path, TermsKind)
-      .map(_._1).foldLeft(0)(math.max)
-    val dst = s"$path/${TermsKind}_v$next"
-    require(fs.rename(new Path(stage), new Path(dst)),
-      s"fold publish: rename of staged terms into generation v$next " +
-        s"failed at $path")
-    // THE publish point: one atomic marker create flips df and stats
-    fs.create(new Path(dst, "_SUCCESS")).close()
-    // retire everything but the new generation and the grace window
-    val keep = Set(new Path(dst).getName, new Path(src).getName)
-    Index.generations(spark, path, TermsKind).foreach { case (_, p) =>
-      if (!keep.contains(p.getName)) { fs.delete(p, true); () }
-    }
-    // folded = consumed — exactly the files the fold read; a delta that
-    // landed mid-fold (impossible without tripping the fence, but cheap
-    // to honor anyway) survives for the next cycle
-    Tombstones.deleteFiles(spark, path, dfFiles ++ docFiles)
+    Store.verifyUnmoved(spark, path, snap, snap.seq, stage, "fold")
+    Store.publish(spark, path, stage, "fold", consumed = dfFiles ++ docFiles)
   }
 
   /** READER-SAFE full rebuild over `corpus` — the lexical twin of
@@ -452,51 +420,29 @@ object LexIndex {
                                     midHook: () => Unit): Unit =
     Lease.withLease(corpus.sparkSession, path, "rebuildLexical") {
     val spark = corpus.sparkSession
-    val snap = Index.snapshotStore(spark, path)
-    val stage = s"$path/_rebuild_stage"
-    deletePath(spark, stage) // a crashed rebuild's leftover is dead weight
-    val stampSeq = Tombstones.nextSeq(spark, path)
-    if (stampSeq != snap.seq + 1)
-      Index.abortRaced(spark, path, stage, "rebuild",
-        s"the store's mutation counter moved ${snap.seq} -> " +
-          s"${stampSeq - 1} between the corpus snapshot and the rebuild " +
-          "stamp")
-    saveLexical(corpus, stage, nBuckets, metaCols, insSeq = stampSeq)
-    // one marker must commit all three relations: move the staged stats
-    // into the staged terms dir before the publish renames it
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.rename(
-      new org.apache.hadoop.fs.Path(s"$stage/stats"),
-      new org.apache.hadoop.fs.Path(s"$stage/$TermsKind/_stats")),
-      s"lexical rebuild: staging the stats row inside $stage/$TermsKind failed")
-    midHook()
-    // the conflict fence, BEFORE the atomic flip (the dense contract)
-    Index.verifyUnmoved(spark, path, snap, stampSeq, stage, "rebuild")
-    Index.publishStage(spark, path, stage, recheck = Some((snap, stampSeq)))
     // the append history is folded into the fresh build by construction
-    deletePath(spark, dfDeltasPath(path))
-    deletePath(spark, docDeltasPath(path))
+    Store.rebuildStaged(spark, path, Store.snapshotStore(spark, path), midHook,
+        consumed = Seq(dfDeltasPath(path), docDeltasPath(path))) { (stage, stampSeq) =>
+      saveLexical(corpus, stage, nBuckets, metaCols, insSeq = stampSeq)
+      // one marker must commit all three relations: move the staged stats
+      // into the staged terms dir before the publish renames it
+      val from = new org.apache.hadoop.fs.Path(s"$stage/stats")
+      require(Store.fs(spark, from).rename(from,
+        new org.apache.hadoop.fs.Path(s"$stage/$TermsKind/_stats")),
+        s"lexical rebuild: staging the stats row inside $stage/$TermsKind failed")
+    }
   }
 
   /** Fold per-append files back to one th-sorted file per bucket — the
-    * dense store's versioned-generation cycle ([[Index.compactKind]]):
-    * crash-safe (`_SUCCESS` is the publish point) and reader-safe (the
-    * previous generation survives until the next compaction).
+    * dense store's compaction ([[Store.compact]]): crash-safe (an
+    * unpublished rewrite is never selected) and reader-safe (the previous
+    * generation survives as the grace generation).
     */
   def compactLexical(spark: SparkSession, path: String): Unit =
     Lease.withLease(spark, path, "compactLexical") {
-    // tombstone consumption mirrors [[Index.compact]]: purge exactly the
-    // listed files' masked rows, delete exactly those files — deletes
-    // landing mid-compaction survive to the next cycle
-    val consumed = Tombstones.listFiles(spark, path)
-    val tomb = Tombstones.readFiles(spark, consumed)
-    Index.compactKind(spark, path, PostingsKind, "bucket", Seq("th"),
-      tomb, "doc_id")
-    Tombstones.deleteFiles(spark, path, consumed)
-    // fold the mutation-counter markers too (the dense compact contract)
-    Tombstones.collapseSeq(spark, path)
-  }
+      Store.compact(spark, path, Seq(PostingsKind), "bucket", Seq("th"),
+        "doc_id", Tombstones.listFiles(spark, path))
+    }
 
   /** Tombstone documents by id — O(batch), no bucket rewrite; masked
     * from the next serve's plan on (see [[Tombstones]]). Scoring stats
@@ -508,9 +454,7 @@ object LexIndex {
     * are physically reclaimed by [[compactLexical]].
     */
   def deleteDocs(spark: SparkSession, path: String, ids: DataFrame): Unit =
-    Lease.withLease(spark, path, "deleteDocs") {
-      Tombstones.write(spark, path, ids, "doc_id")
-    }
+    Store.delete(spark, path, ids, "doc_id", "deleteDocs")
 
   /** Predicate deletion over the store's own columns — metadata
     * (`metaCols`) included, so "drop tenant X" needs no external id
@@ -522,13 +466,8 @@ object LexIndex {
     */
   def deleteWhereDocs(spark: SparkSession, path: String,
                       pred: Column): Unit =
-    Lease.withLease(spark, path, "deleteWhereDocs") {
-    val ids = Tombstones.mask(
-      spark.read.parquet(Index.liveDir(spark, path, PostingsKind)),
-      Tombstones.readAll(spark, path), "doc_id")
-      .where(pred).select("doc_id").distinct()
-    deleteDocs(spark, path, ids)
-  }
+    Store.deleteWhere(spark, path, PostingsKind, "doc_id", pred,
+      "deleteWhereDocs")
 
   /** Replace documents in place: tombstone the batch's ids, then append
     * the new versions — [[Index.upsertIvf]]'s delete-then-add ordering.
@@ -553,7 +492,7 @@ object LexIndex {
     Lease.withLease(spark, path, "upsertDocs") {
     val ids = docs.select("doc_id").distinct()
     val served = Tombstones.mask(
-      spark.read.parquet(Index.liveDir(spark, path, PostingsKind)),
+      spark.read.parquet(liveDir(spark, path, PostingsKind)),
       Tombstones.readAll(spark, path), "doc_id")
       .join(ids, "doc_id")
       .select("doc_id", "th", "dl")
@@ -575,37 +514,9 @@ object LexIndex {
     * compaction reclaims): one row (n_postings_stored, n_tombstones,
     * n_masked, masked_frac).
     */
-  def deleteStats(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val live = spark.read.parquet(Index.liveDir(spark, path, PostingsKind))
-    val tomb = Tombstones.readAll(spark, path)
-    // ONE pass over the postings instead of two (the [[Index.deleteStats]]
-    // fusion): tombstones pre-aggregated to max(del_seq) per doc (masked
-    // iff SOME del_seq ≥ ins_seq ⟺ the max is), stored + masked from a
-    // single left-join aggregate; n_tombstones is the pre-agg's own row
-    // count — it must count tombstoned ids absent from the store too, so
-    // it cannot come from the join
-    val insSeq =
-      if (live.columns.contains("ins_seq")) coalesce(col("ins_seq"), lit(0L))
-      else lit(0L)
-    val (nStored, nTomb, masked) = tomb match {
-      case None => (live.count(), 0L, 0L)
-      case Some(t) =>
-        val tt = t.groupBy(col("doc_id").as("__tomb_id"))
-          .agg(max("del_seq").as("__tomb_seq"))
-        val row = live.select(col("doc_id"), insSeq.as("ins_seq"))
-          .join(tt, col("doc_id") === col("__tomb_id"), "left")
-          .agg(count(lit(1)).as("stored"),
-            count(when(col("__tomb_seq") >= col("ins_seq"), lit(1)))
-              .as("masked"))
-          .head()
-        (row.getLong(0), tt.count(), row.getLong(1))
-    }
-    Seq((nStored, nTomb, masked))
-      .toDF("n_postings_stored", "n_tombstones", "n_masked")
-      .withColumn("masked_frac",
-        round(col("n_masked").cast("double") / col("n_postings_stored"), 4))
-  }
+  def deleteStats(spark: SparkSession, path: String): DataFrame =
+    Store.deleteStats(spark, path, PostingsKind, "doc_id", versions = false,
+      "n_postings_stored")
 
   /** Answer a seed batch from the stored index: seed bigrams hashed and
     * collected driver-side (bounded by |seeds|·nQueryTerms — query-side
@@ -642,7 +553,7 @@ object LexIndex {
     // (bucket/term collect below, df weighting, posting join)
     val qterms = Retrieval.seedTerms(queryDocs, nQueryTerms)
     // driver-side probe lists — the serving-path scan cut (the shared
-    // [[Index.prunedToProbes]] machinery): the read names ONLY the
+    // [[Store.prunedToProbes]] machinery): the read names ONLY the
     // seed-term bucket directories (full partition discovery would list
     // every bucket before pruning — a driver cost that grows with the
     // grid, measured 4× on a 2,500-bucket 5-seed serve), the bucket isin
@@ -658,7 +569,7 @@ object LexIndex {
     val termFilter =
       if (ths.length <= 8192) col("th").isin(ths.toSeq: _*) else lit(true)
     def pruned(dir: String): DataFrame =
-      Index.prunedToProbes(spark, dir, buckets, "bucket").where(termFilter)
+      Store.prunedToProbes(spark, dir, buckets, "bucket").where(termFilter)
     // idf per (query, surviving term) from the FROZEN stored df + stats;
     // bounded by the seed vocabulary — broadcast everywhere below
     val weighted = Retrieval.idfWeights(
@@ -670,7 +581,7 @@ object LexIndex {
     // tombstone mask before scoring: a deleted doc must not consume a
     // top-k slot (the dense serve's rank-then-filter hazard)
     Retrieval.bm25Ranked(Tombstones.mask(
-      pruned(Index.liveDir(spark, path, PostingsKind)).where(candWhere),
+      pruned(liveDir(spark, path, PostingsKind)).where(candWhere),
       Tombstones.readAll(spark, path), "doc_id"), weighted, k, k1, b)
   }
 
@@ -714,7 +625,7 @@ object LexIndex {
     * (action, unscoreable_frac, masked_frac, files_per_bucket,
     * dilution).
     */
-  /** `vacuumKeep`: the [[Index.vacuum]] opt-in, run after the action —
+  /** `vacuumKeep`: the [[Store.vacuum]] opt-in, run after the action —
     * shared generation machinery, same grace-window contract.
     */
   def maintainReport(spark: SparkSession, path: String,
@@ -725,20 +636,17 @@ object LexIndex {
                      rebuildWith: Option[DataFrame] = None,
                      vacuumKeep: Option[Int] = None): DataFrame =
     Lease.withLease(spark, path, "maintainLexical") {
-    import org.apache.hadoop.fs.Path
     import spark.implicits._
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val st = stats(spark, path).head()
-    val hasSidecars = fs.exists(new Path(dfDeltasPath(path)))
+    val hasSidecars = Store.exists(spark, dfDeltasPath(path))
     val ds = deleteStats(spark, path).head()
     // the unscoreable denominator is the live posting-row count —
     // exactly deleteStats' n_postings_stored, so no third postings scan
     val liveRows = math.max(1L, ds.getLong(0))
     val unscoreableFrac = st.getLong(2).toDouble / liveRows
     val maskedFrac = ds.getDouble(3)
-    val dir = Index.liveDir(spark, path, PostingsKind)
-    val files = Index.countDataFiles(spark, dir)
+    val dir = liveDir(spark, path, PostingsKind)
+    val files = Store.countDataFiles(spark, dir)
     val filesPerBucket = files.toDouble / math.max(1L, st.getLong(3))
     val dilution = st.getDouble(5)
     val action =
@@ -750,12 +658,12 @@ object LexIndex {
       } else if (dilution > maxDilution) rebuildWith match {
         case Some(corpus) =>
           rebuildLexical(corpus, path,
-            metaCols = Index.storedMetaCols(spark, dir, postingsCore))
+            metaCols = Store.storedMetaCols(spark, dir, postingsCore))
           "rebuild"
         case None => "rebuild-needed"
       }
       else "none"
-    vacuumKeep.foreach { n => Index.vacuum(spark, path, n); () }
+    vacuumKeep.foreach { n => Store.vacuum(spark, path, n); () }
     Seq((action, math.rint(unscoreableFrac * 10000) / 10000, maskedFrac,
         math.rint(filesPerBucket * 10000) / 10000, dilution))
       .toDF("action", "unscoreable_frac", "masked_frac",
@@ -793,7 +701,7 @@ object LexIndex {
     // so they don't count as live (their frozen-stats mass is
     // [[deleteStats]]' column, not this one's)
     val live = Tombstones.mask(
-      spark.read.parquet(Index.liveDir(spark, path, PostingsKind)),
+      spark.read.parquet(liveDir(spark, path, PostingsKind)),
       Tombstones.readAll(spark, path), "doc_id")
     val terms = spark.read.parquet(termsDir(spark, path))
     // ONE pass over the live postings for both counts (was a distinct

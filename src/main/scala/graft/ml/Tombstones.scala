@@ -33,15 +33,12 @@ import org.apache.spark.sql.functions._
   *
   * On-disk: `tombstones/` parquet (id, del_seq), one file per delete
   * batch; `seq/` empty marker files named by counter value (the same
-  * single-file-create atomicity the `_SUCCESS` commit markers use — no
+  * single-file-create atomicity the commit markers use — no
   * read-modify-write window). Mutations share the store's single-writer
   * contract; readers need no coordination.
   */
 private[graft] object Tombstones {
   import org.apache.hadoop.fs.Path
-
-  private def fsOf(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def tombDir(path: String) = new Path(s"$path/tombstones")
   private def seqDir(path: String) = new Path(s"$path/seq")
@@ -54,7 +51,7 @@ private[graft] object Tombstones {
     */
   def currentSeq(spark: SparkSession, path: String): Long = {
     val dir = seqDir(path)
-    val fs = fsOf(spark, dir)
+    val fs = Store.fs(spark, dir)
     if (!fs.exists(dir)) 0L
     else fs.listStatus(dir).iterator
       .flatMap(s => scala.util.Try(s.getPath.getName.toLong).toOption)
@@ -89,7 +86,7 @@ private[graft] object Tombstones {
 
   def nextSeq(spark: SparkSession, path: String): Long = {
     val dir = seqDir(path)
-    val fs = fsOf(spark, dir)
+    val fs = Store.fs(spark, dir)
     val lock = bumpLocks.computeIfAbsent(dir.toString, _ => new Object)
     lock.synchronized {
       fs.mkdirs(dir)
@@ -112,10 +109,7 @@ private[graft] object Tombstones {
     * history (the [[LexIndex.saveLexical]] sidecar contract).
     */
   def clear(spark: SparkSession, path: String): Unit =
-    Seq(tombDir(path), seqDir(path)).foreach { d =>
-      val fs = fsOf(spark, d)
-      if (fs.exists(d)) { fs.delete(d, true); () }
-    }
+    Seq(tombDir(path), seqDir(path)).foreach(d => Store.dropDir(spark, d.toString))
 
   /** Collapse `seq/` to its single max marker. [[nextSeq]] lists the
     * whole directory per mutation, and nothing else prunes it — a
@@ -128,7 +122,7 @@ private[graft] object Tombstones {
     */
   def collapseSeq(spark: SparkSession, path: String): Unit = {
     val dir = seqDir(path)
-    val fs = fsOf(spark, dir)
+    val fs = Store.fs(spark, dir)
     if (fs.exists(dir)) {
       val vals = fs.listStatus(dir).toSeq
         .flatMap(s => scala.util.Try(s.getPath.getName.toLong).toOption)
@@ -160,14 +154,8 @@ private[graft] object Tombstones {
     * listed and deletes exactly those, so tombstones written after the
     * listing survive).
     */
-  def listFiles(spark: SparkSession, path: String): Seq[String] = {
-    val dir = tombDir(path)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString)
-  }
+  def listFiles(spark: SparkSession, path: String): Seq[String] =
+    Store.listParquet(spark, tombDir(path).toString)
 
   def readFiles(spark: SparkSession, files: Seq[String]): Option[DataFrame] =
     if (files.isEmpty) None else Some(spark.read.parquet(files: _*))
@@ -183,7 +171,7 @@ private[graft] object Tombstones {
                   files: Seq[String]): Unit =
     files.foreach { f =>
       val p = new Path(f)
-      fsOf(spark, p).delete(p, false); ()
+      Store.fs(spark, p).delete(p, false); ()
     }
 
   /** Apply the mask: drop rows whose id is tombstoned by a delete at or

@@ -131,7 +131,7 @@ class IndexSpec extends SparkSpec {
       append(path)
       // appended vectors must be refinable: raw rows exist for them
       val raw = spark.read.parquet(
-        Index.liveDir(spark, path, Index.PostingsKind))
+        Store.liveDir(spark, path, Store.PostingsKind))
       assert(raw.where(col("vec_id") >= 100).count() === 20L,
         s"$tag: appended vectors missing from the raw refine flavor")
       val got = serve(path)
@@ -157,7 +157,7 @@ class IndexSpec extends SparkSpec {
     // the appended rows' codes were residual-encoded: every appended
     // vec_id carries nSub code rows in the live codes dir
     val codes = spark.read.parquet(
-      Index.liveDir(spark, path, Index.PqCodesKind))
+      Store.liveDir(spark, path, Store.PqCodesKind))
     assert(codes.where(col("vec_id") === 110L).count() === 8L)
   }
 
@@ -372,7 +372,7 @@ class IndexSpec extends SparkSpec {
       .as[(Long, Long, Double, Int)].collect().toSeq
     def filesPerCell: Map[String, Int] = {
       val post = new java.io.File(
-        Index.liveDir(spark, path, Index.PostingsKind).stripPrefix("file:"))
+        Store.liveDir(spark, path, Store.PostingsKind).stripPrefix("file:"))
       post.listFiles().filter(_.getName.startsWith("cell=")).map { d =>
         d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))
       }.toMap
@@ -397,7 +397,7 @@ class IndexSpec extends SparkSpec {
       .as[(Long, Long, Long, Int)].collect().toSeq
     def filesPerCell: Map[String, Int] = {
       val post = new java.io.File(
-        Index.liveDir(spark, path, Index.PqCodesKind).stripPrefix("file:"))
+        Store.liveDir(spark, path, Store.PqCodesKind).stripPrefix("file:"))
       post.listFiles().filter(_.getName.startsWith("cell=")).map { d =>
         d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))
       }.toMap
@@ -537,7 +537,7 @@ class IndexSpec extends SparkSpec {
     Index.saveIvf(withLabel.where(col("vec_id") < 60), path, metaCols = Seq("label"))
     // simulate the legacy metadata-free append by writing core-only rows
     // straight into the live postings dir (what pre-validation code did)
-    val live = Index.liveDir(spark, path, Index.PostingsKind)
+    val live = Store.liveDir(spark, path, Store.PostingsKind)
     spark.read.parquet(live).drop("label")
       .withColumn("cell", lit(0L))
       .limit(5)
@@ -576,7 +576,7 @@ class IndexSpec extends SparkSpec {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$path/postings_v7/cell=0/part-junk.parquet"),
       Array[Byte](1, 2, 3))
-    assert(Index.liveDir(spark, path, Index.PostingsKind).endsWith("/postings"),
+    assert(Store.liveDir(spark, path, Store.PostingsKind).endsWith("/postings"),
       "uncommitted generation was selected as live")
     val after = Index.ivfTopKIndexed(spark, path, emb.where(isQ), k = 5)
       .orderBy("query_id", "rank")
@@ -584,7 +584,7 @@ class IndexSpec extends SparkSpec {
     assert(after === quiet)
     // a later compaction recovers: publishes PAST the dead generation
     Index.compact(spark, path)
-    assert(Index.liveDir(spark, path, Index.PostingsKind).endsWith("postings_v8"))
+    assert(Store.liveDir(spark, path, Store.PostingsKind).endsWith("postings_v8"))
     val compacted = Index.ivfTopKIndexed(spark, path, emb.where(isQ), k = 5)
       .orderBy("query_id", "rank")
       .as[(Long, Long, Double, Int)].collect().toSeq
@@ -635,9 +635,9 @@ class IndexSpec extends SparkSpec {
     val racing = planned.as[(Long, Long, Double, Int)].collect().toSeq
     assert(racing === quiet)
     // every kind flipped together into the same committed generation
-    assert(Index.liveDir(spark, path, Index.PostingsKind).contains("postings_v"),
+    assert(Store.liveDir(spark, path, Store.PostingsKind).contains("postings_v"),
       "rebuild did not publish a versioned postings generation")
-    assert(Index.liveDir(spark, path, Index.CentroidsKind).contains("centroids_v"),
+    assert(Store.liveDir(spark, path, Store.CentroidsKind).contains("centroids_v"),
       "rebuild did not publish a versioned centroids generation")
     // the rebuilt store serves the same corpus: fresh plan = inline twin
     val served = Index.ivfTopKIndexed(spark, path, emb.where(isQ), k = 5)
@@ -700,7 +700,7 @@ class IndexSpec extends SparkSpec {
     val path = freshPath("postrebuild")
     Index.saveIvf(emb.where(col("vec_id") < 60), path, nCells = 4)
     Index.rebuild(spark, path)
-    assert(Index.liveDir(spark, path, Index.PostingsKind).contains("postings_v"))
+    assert(Store.liveDir(spark, path, Store.PostingsKind).contains("postings_v"))
     Index.appendIvf(spark, path, emb.where(col("vec_id") >= 60))
     val isQ = pmod(col("vec_id"), lit(10)) === 0
     val served = Index.ivfTopKIndexed(spark, path, emb.where(isQ), k = 5)
@@ -741,16 +741,16 @@ class IndexSpec extends SparkSpec {
         java.nio.file.Paths.get(s"$path/${kind}_v3/part-junk.parquet"),
         Array[Byte](9, 9, 9))
     }
-    assert(Index.liveDir(spark, path, Index.PostingsKind).endsWith("/postings"),
+    assert(Store.liveDir(spark, path, Store.PostingsKind).endsWith("/postings"),
       "uncommitted rebuild generation was selected as live")
-    assert(Index.liveDir(spark, path, Index.CentroidsKind).endsWith("/centroids"))
+    assert(Store.liveDir(spark, path, Store.CentroidsKind).endsWith("/centroids"))
     val after = Index.ivfTopKIndexed(spark, path, emb.where(isQ), k = 5)
       .orderBy("query_id", "rank")
       .as[(Long, Long, Double, Int)].collect().toSeq
     assert(after === quiet)
     // a real rebuild publishes PAST the dead generation and cleans it up
     Index.rebuild(spark, path)
-    assert(Index.liveDir(spark, path, Index.PostingsKind).endsWith("postings_v4"))
+    assert(Store.liveDir(spark, path, Store.PostingsKind).endsWith("postings_v4"))
     assert(!new java.io.File(s"$path/postings_v3").exists(),
       "crashed rebuild leftover survived the next publish")
     val rebuilt = Index.ivfTopKIndexed(spark, path, emb.where(isQ), k = 5)
@@ -763,9 +763,9 @@ class IndexSpec extends SparkSpec {
     val path = freshPath("rebuild")
     Index.saveIvf(emb.where(col("vec_id") < 60), path)
     Index.compact(spark, path) // live moves to postings_v1
-    assert(Index.liveDir(spark, path, Index.PostingsKind).endsWith("postings_v1"))
+    assert(Store.liveDir(spark, path, Store.PostingsKind).endsWith("postings_v1"))
     Index.saveIvf(emb, path) // rebuild over the full corpus
-    assert(Index.liveDir(spark, path, Index.PostingsKind).endsWith("/postings"),
+    assert(Store.liveDir(spark, path, Store.PostingsKind).endsWith("/postings"),
       "rebuild left a stale compacted generation outranking the fresh build")
     val isQ = pmod(col("vec_id"), lit(10)) === 0
     val served = Index.ivfTopKIndexed(spark, path, emb.where(isQ), k = 5)
@@ -875,8 +875,8 @@ class IndexSpec extends SparkSpec {
     assert(dump() === before) // physical purge changes no answer
     assert(Tombstones.listFiles(spark, path).isEmpty) // consumed
     // masked rows are physically gone from BOTH flavors' new generations
-    Seq(Index.PostingsKind, Index.PqCodesKind).foreach { kind =>
-      val live = spark.read.parquet(Index.liveDir(spark, path, kind))
+    Seq(Store.PostingsKind, Store.PqCodesKind).foreach { kind =>
+      val live = spark.read.parquet(Store.liveDir(spark, path, kind))
       assert(live.where(delPred).count() === 0L)
     }
   }
@@ -889,10 +889,10 @@ class IndexSpec extends SparkSpec {
     // compact's body with a listing taken BEFORE a second delete lands
     val consumed = Tombstones.listFiles(spark, path)
     Index.delete(spark, path, Seq(31L).toDF("vec_id")) // mid-compaction
-    Index.compactKind(spark, path, Index.PostingsKind, "cell", Nil,
-      Tombstones.readFiles(spark, consumed), "vec_id")
+    Store.compact(spark, path, Seq(Store.PostingsKind), "cell", Nil, "vec_id",
+      consumed)
     Tombstones.deleteFiles(spark, path, consumed)
-    val live = spark.read.parquet(Index.liveDir(spark, path, Index.PostingsKind))
+    val live = spark.read.parquet(Store.liveDir(spark, path, Store.PostingsKind))
     assert(live.where(col("vec_id") === 21L).count() === 0L) // purged
     assert(live.where(col("vec_id") === 31L).count() === 1L) // still stored…
     val served = Index.ivfTopKIndexed(spark, path, emb.where(isQ5), k = 40)
@@ -900,7 +900,7 @@ class IndexSpec extends SparkSpec {
     assert(!served.contains(31L)) // …but still MASKED (tombstone survived)
     Index.compact(spark, path) // the next cycle purges it
     assert(Tombstones.listFiles(spark, path).isEmpty)
-    assert(spark.read.parquet(Index.liveDir(spark, path, Index.PostingsKind))
+    assert(spark.read.parquet(Store.liveDir(spark, path, Store.PostingsKind))
       .where(col("vec_id") === 31L).count() === 0L)
   }
 
@@ -1015,7 +1015,7 @@ class IndexSpec extends SparkSpec {
     Index.compact(spark, path)
     assert(serve().orderBy("query_id", "rank").collect().toSeq === masked)
     assert(Tombstones.listFiles(spark, path).isEmpty)
-    assert(spark.read.parquet(Index.liveDir(spark, path, Index.SqCodesKind))
+    assert(spark.read.parquet(Store.liveDir(spark, path, Store.SqCodesKind))
       .where(delPred).count() === 0L)
     // version-level stats on the SQ-only flavor
     val r = Index.deleteStats(spark, path).head()
@@ -1176,13 +1176,13 @@ class IndexSpec extends SparkSpec {
     assert(Index.isResidual(spark, path),
       "rebuildFrom downgraded the residual marker")
     val cw = spark.read.parquet(
-      Index.liveDir(spark, path, Index.CodewordsKind))
+      Store.liveDir(spark, path, Store.CodewordsKind))
     assert(cw.select("sub").distinct().count() === 4L &&
       cw.select("code").distinct().count() === 8L,
       "rebuildFrom reset the PQ geometry")
     // the store keeps its codes-only shape and serves the FULL corpus
     // (republished rows outrank the old tombstone by construction)
-    assert(Index.generations(spark, path, Index.PostingsKind).isEmpty,
+    assert(Store.generations(spark, path, Store.PostingsKind).isEmpty,
       "rebuildFrom created a raw flavor on a codes-only store")
     assert(Index.stats(spark, path).head().getLong(0) === 120L)
     assert(Index.ivfPqTopKIndexed(spark, path,
@@ -1195,7 +1195,7 @@ class IndexSpec extends SparkSpec {
     Index.saveIvfSq(fam, path, nCells = 4, residual = true)
     assert(Index.maintain(spark, path) === "rebuild-needed")
     assert(Index.maintain(spark, path, rebuildWith = Some(fam)) === "rebuild")
-    assert(Index.generations(spark, path, Index.PostingsKind).isEmpty,
+    assert(Store.generations(spark, path, Store.PostingsKind).isEmpty,
       "rebuildFrom created a raw flavor on an SQ-only store")
     val scores = Index.ivfSqTopKIndexed(spark, path,
       fam.where(col("vec_id") < 5), k = 5)
@@ -1241,7 +1241,7 @@ class IndexSpec extends SparkSpec {
     val path = freshPath("flatroute")
     Index.saveIvf(base, path, nCells = 80, forceFlat = true)
     val seed = spark.read
-      .parquet(Index.liveDir(spark, path, Index.CentroidsKind))
+      .parquet(Store.liveDir(spark, path, Store.CentroidsKind))
       .select(col("cid").as("vec_id"), col("cv").as("v"),
         col("cn").as("norm"))
     def assignedCells(twoLevelMin: Int): Map[Long, Long] =
@@ -1255,7 +1255,7 @@ class IndexSpec extends SparkSpec {
       "fixture too easy: two-level and flat agree on every batch vector")
     Index.appendIvf(spark, path, batch)
     val stored = spark.read
-      .parquet(Index.liveDir(spark, path, Index.PostingsKind))
+      .parquet(Store.liveDir(spark, path, Store.PostingsKind))
       .where(col("vec_id") >= 1000L)
       .select("vec_id", "cell").as[(Long, Long)].collect().toMap
     assert(stored === flat,
@@ -1303,7 +1303,7 @@ class IndexSpec extends SparkSpec {
   test("an append racing a rebuild fails it loudly; the batch is never lost") {
     val path = freshPath("racemutapp")
     Index.saveIvf(emb.where(col("vec_id") < 100), path)
-    val gensBefore = Index.generations(spark, path, Index.PostingsKind)
+    val gensBefore = Store.generations(spark, path, Store.PostingsKind)
       .map(_._1).toSet
     val ex = intercept[IllegalStateException] {
       Index.rebuild(spark, path,
@@ -1313,7 +1313,7 @@ class IndexSpec extends SparkSpec {
     // the store is UNCHANGED by the aborted rebuild: no new generation
     // published, no stage leftover, and the RACING batch serves (it
     // landed in the still-live generation — never silently dropped)
-    assert(Index.generations(spark, path, Index.PostingsKind)
+    assert(Store.generations(spark, path, Store.PostingsKind)
       .map(_._1).toSet === gensBefore,
       "aborted rebuild published a generation")
     val fs = new org.apache.hadoop.fs.Path(path)
@@ -1321,7 +1321,7 @@ class IndexSpec extends SparkSpec {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_rebuild_stage")),
       "aborted rebuild left its staging directory behind")
     val stored = spark.read
-      .parquet(Index.liveDir(spark, path, Index.PostingsKind))
+      .parquet(Store.liveDir(spark, path, Store.PostingsKind))
       .select("vec_id").as[Long].collect().toSet
     assert((100L until 120L).forall(stored.contains),
       "the racing append's rows are missing from the live store")
@@ -1383,7 +1383,7 @@ class IndexSpec extends SparkSpec {
     assert(Index.maintain(spark, path,
       rebuildWith = Some(refreshed)) === "rebuild")
     val stored = spark.read
-      .parquet(Index.liveDir(spark, path, Index.PostingsKind))
+      .parquet(Store.liveDir(spark, path, Store.PostingsKind))
       .select("vec_id").as[Long].collect().toSet
     assert((120L until 160L).forall(stored.contains),
       "maintain(rebuildWith) ignored the supplied corpus and " +
@@ -1398,12 +1398,12 @@ class IndexSpec extends SparkSpec {
       .orderBy("query_id", "rank")
       .as[(Long, Long, Double, Int)].collect().toSeq
     Index.rebuild(spark, path) // publishes v1; v0 survives as grace
-    assert(Index.generations(spark, path, Index.PostingsKind).size === 2,
+    assert(Store.generations(spark, path, Store.PostingsKind).size === 2,
       "rebuild did not leave the grace generation for vacuum to reclaim")
     // plan AFTER the flip (pins the live v1 files), vacuum, execute: a
     // post-flip plan must survive a keepGenerations = 1 vacuum
     val planned = Index.ivfTopKIndexed(spark, path, emb.where(isQ5), k = 5)
-    val rep = Index.vacuum(spark, path).head()
+    val rep = Store.vacuum(spark, path).head()
     assert(rep.getLong(0) >= 2L, // postings + centroids grace gens at least
       s"vacuum removed ${rep.getLong(0)} generations, expected >= 2")
     assert(rep.getLong(1) > 0L, "vacuum reports zero bytes reclaimed")
@@ -1412,13 +1412,13 @@ class IndexSpec extends SparkSpec {
     assert(served === quiet,
       "a serve planned after the flip broke across the vacuum")
     // exactly the live generation remains, per kind
-    Seq(Index.PostingsKind, Index.CentroidsKind).foreach { k =>
-      val gens = Index.generations(spark, path, k)
+    Seq(Store.PostingsKind, Store.CentroidsKind).foreach { k =>
+      val gens = Store.generations(spark, path, k)
       assert(gens.size === 1 && gens.head._1 > 0,
         s"vacuum left ${gens.size} generations of $k")
     }
     // idempotent: nothing left to reclaim
-    val again = Index.vacuum(spark, path).head()
+    val again = Store.vacuum(spark, path).head()
     assert(again.getLong(0) === 0L && again.getLong(1) === 0L)
     // the vacuumed store is still a first-class store: fresh serves and
     // mutations keep working
@@ -1437,10 +1437,10 @@ class IndexSpec extends SparkSpec {
     val path = freshPath("vacuum2")
     Index.saveIvf(emb, path)
     Index.rebuild(spark, path) // v1 live, v0 grace
-    val rep = Index.vacuum(spark, path, keepGenerations = 2).head()
+    val rep = Store.vacuum(spark, path, keepGenerations = 2).head()
     assert(rep.getLong(0) === 0L,
       "keepGenerations = 2 removed the one-flip grace window")
-    assert(Index.generations(spark, path, Index.PostingsKind).size === 2)
+    assert(Store.generations(spark, path, Store.PostingsKind).size === 2)
   }
 
   test("vacuum reclaims a lexical store's superseded generations too") {
@@ -1455,10 +1455,10 @@ class IndexSpec extends SparkSpec {
       .as[(Long, Long, Long, Int)].collect().toSeq
     LexIndex.rebuildLexical(docs.where(col("doc_id") >= 4), path,
       nBuckets = 16)
-    val rep = Index.vacuum(spark, path).head()
+    val rep = Store.vacuum(spark, path).head()
     assert(rep.getLong(0) >= 2L && rep.getLong(1) > 0L)
-    Seq(LexIndex.PostingsKind, LexIndex.TermsKind).foreach { k =>
-      assert(Index.generations(spark, path, k).size === 1,
+    Seq(Store.PostingsKind, Store.TermsKind).foreach { k =>
+      assert(Store.generations(spark, path, k).size === 1,
         s"vacuum left a superseded $k generation")
     }
     val after = LexIndex.bm25TopKIndexed(spark, path,
@@ -1504,7 +1504,7 @@ class IndexSpec extends SparkSpec {
       extra(110L, 112L).withColumn("embedding",
         transform(col("embedding"), x => x + lit(0.5))))
     val mrlRows0 = spark.read
-      .parquet(Index.liveDir(spark, path, Index.MrlCodesKind))
+      .parquet(Store.liveDir(spark, path, Store.MrlCodesKind))
       .where(col("vec_id") === 110L).count()
     assert(mrlRows0 === 2L, "upsert should co-locate masked + live versions")
     // delete masks; the serve is the true top-k among survivors
@@ -1512,13 +1512,13 @@ class IndexSpec extends SparkSpec {
     assert(!servedSet().contains(7L), "deleted id served from the MRL store")
     // self-rebuild keeps the MRL flavor (raw postings are the corpus)
     Index.rebuild(spark, path)
-    assert(Index.generations(spark, path, Index.MrlCodesKind)
+    assert(Store.generations(spark, path, Store.MrlCodesKind)
       .exists(_._1 > 0), "rebuild dropped the MRL prefix flavor")
     assert(!servedSet().contains(7L), "rebuild resurrected a deleted id")
     assert(servedSet().exists(_ >= 100L), "rebuild lost appended rows")
     // compaction + vacuum leave a serving store
     Index.compact(spark, path)
-    val rep = Index.vacuum(spark, path).head()
+    val rep = Store.vacuum(spark, path).head()
     assert(rep.getLong(0) > 0L)
     assert(servedSet().nonEmpty)
   }
@@ -1539,7 +1539,7 @@ class IndexSpec extends SparkSpec {
     // must carry int8 codes, not raw prefixes
     Index.appendIvfMrl(spark, path, extra(100L, 120L))
     val mrlCols = spark.read
-      .parquet(Index.liveDir(spark, path, Index.MrlCodesKind))
+      .parquet(Store.liveDir(spark, path, Store.MrlCodesKind))
       .columns.toSet
     assert(mrlCols.contains("qb") && !mrlCols.contains("vp"),
       "quantized MRL store lost its int8 coding on append")
@@ -1560,7 +1560,7 @@ class IndexSpec extends SparkSpec {
     assert(mrl === raw, "flavors diverged after upsert + delete")
     Index.rebuild(spark, path)
     val rebuiltCols = spark.read
-      .parquet(Index.liveDir(spark, path, Index.MrlCodesKind))
+      .parquet(Store.liveDir(spark, path, Store.MrlCodesKind))
       .columns.toSet
     assert(rebuiltCols.contains("qb") && !rebuiltCols.contains("vp"),
       "rebuild silently de-quantized the MRL flavor")
@@ -1575,8 +1575,8 @@ class IndexSpec extends SparkSpec {
     assert(Index.maintain(spark, path,
       vacuumKeep = Some(1)) === "rebuild")
     // the rebuild's grace generation was vacuumed in the same pass
-    Seq(Index.PostingsKind, Index.CentroidsKind).foreach { k =>
-      assert(Index.generations(spark, path, k).size === 1,
+    Seq(Store.PostingsKind, Store.CentroidsKind).foreach { k =>
+      assert(Store.generations(spark, path, k).size === 1,
         s"maintain(vacuumKeep = 1) left a superseded $k generation")
     }
     val served = Index.ivfTopKIndexed(spark, path, emb.where(isQ5), k = 5)

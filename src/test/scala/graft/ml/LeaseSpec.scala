@@ -74,7 +74,7 @@ class LeaseSpec extends SparkSpec {
       // nothing was written: the batch is absent, the rebuild (same
       // thread as its own lease) is untouched
       val stored = spark.read
-        .parquet(Index.liveDir(spark, path, Index.PostingsKind))
+        .parquet(Store.liveDir(spark, path, Store.PostingsKind))
         .select("vec_id").as[Long].collect().toSet
       assert(!stored.exists(_ >= 100L),
         "a lease-blocked append still wrote rows")
@@ -82,7 +82,7 @@ class LeaseSpec extends SparkSpec {
     // quiesced, the append succeeds
     Index.appendIvf(spark, path, emb.where(col("vec_id") >= 100))
     val stored = spark.read
-      .parquet(Index.liveDir(spark, path, Index.PostingsKind))
+      .parquet(Store.liveDir(spark, path, Store.PostingsKind))
       .select("vec_id").as[Long].collect().toSet
     assert((100L until 120L).forall(stored.contains))
   }
@@ -102,7 +102,7 @@ class LeaseSpec extends SparkSpec {
     Index.appendIvf(spark, path, emb.where(col("vec_id") >= 100))
     assert(!Lease.isHeld(spark, path), "takeover left the lease behind")
     val stored = spark.read
-      .parquet(Index.liveDir(spark, path, Index.PostingsKind))
+      .parquet(Store.liveDir(spark, path, Store.PostingsKind))
       .select("vec_id").as[Long].collect().toSet
     assert((100L until 120L).forall(stored.contains))
   }
@@ -181,18 +181,18 @@ class LeaseSpec extends SparkSpec {
   test("publishStage's last-instant recheck aborts on a late mutation") {
     val path = freshPath("recheck")
     Index.saveIvf(emb, path)
-    val snap = Index.snapshotStore(spark, path)
+    val snap = Store.snapshotStore(spark, path)
     // hand-build a staged postings dir (content irrelevant — the abort
     // must fire before the commit marker)
     val stage = s"$path/_rebuild_stage"
     emb.limit(5).withColumn("cell", lit(0L))
-      .write.mode("overwrite").parquet(s"$stage/${Index.PostingsKind}")
+      .write.mode("overwrite").parquet(s"$stage/${Store.PostingsKind}")
     // a mutation lands AFTER verifyUnmoved would have passed (we replay
     // the exact window: snapshot taken, then the counter moves)
     Index.delete(spark, path,
       emb.where(col("vec_id") === 1L).select("vec_id"))
     val ex = intercept[IllegalStateException] {
-      Index.publishStage(spark, path, stage,
+      Store.publish(spark, path, stage, "rebuild",
         recheck = Some((snap, snap.seq)))
     }
     assert(ex.getMessage.contains("commit-marker create"))
@@ -200,7 +200,7 @@ class LeaseSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the renamed-but-uncommitted generation was rolled back and no
     // commit marker exists — the store is exactly its pre-publish self
-    assert(Index.generations(spark, path, Index.PostingsKind)
+    assert(Store.generations(spark, path, Store.PostingsKind)
       .map(_._1).toSet === Set(0))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/commit_v1")))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(stage)),

@@ -100,7 +100,7 @@ class LexIndexSpec extends SparkSpec {
     val nDocs = statsBefore.getLong(0); val avgdl = statsBefore.getDouble(1)
     val dfMap = dfBefore.map(t => t._1 -> t._2).toMap
     val post = spark.read.parquet(
-        Index.liveDir(spark, path, LexIndex.PostingsKind))
+        Store.liveDir(spark, path, Store.PostingsKind))
       .where(col("doc_id") === hit._2)
       .select("th", "tf", "dl").as[(Long, Long, Long)].collect()
     val qths = docs.where(col("doc_id") === hit._1)
@@ -128,7 +128,7 @@ class LexIndexSpec extends SparkSpec {
     LexIndex.appendLexical(spark, path, docs.where(col("doc_id") >= 30))
     def filesPerBucket: Map[String, Int] = {
       val post = new java.io.File(
-        Index.liveDir(spark, path, LexIndex.PostingsKind).stripPrefix("file:"))
+        Store.liveDir(spark, path, Store.PostingsKind).stripPrefix("file:"))
       post.listFiles().filter(_.getName.startsWith("bucket=")).map { d =>
         d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))
       }.toMap
@@ -218,13 +218,13 @@ class LexIndexSpec extends SparkSpec {
     LexIndex.saveLexical(docs.where(!isQ && col("doc_id") < 20), path,
       nBuckets = 8)
     LexIndex.compactLexical(spark, path) // live moves to postings_v1
-    assert(Index.liveDir(spark, path, LexIndex.PostingsKind)
+    assert(Store.liveDir(spark, path, Store.PostingsKind)
       .endsWith("postings_v1"))
     // rebuild over the FULL corpus: the fresh flat postings/ must win —
     // a stale postings_v1 outranking it would serve the 20-doc corpus
     // scored with the 36-doc df/avgdl
     LexIndex.saveLexical(docs.where(!isQ), path, nBuckets = 8)
-    assert(Index.liveDir(spark, path, LexIndex.PostingsKind)
+    assert(Store.liveDir(spark, path, Store.PostingsKind)
         .endsWith("/postings"),
       "rebuild left a stale compacted generation outranking the fresh build")
     val served = LexIndex.bm25TopKIndexed(spark, path, docs.where(isQ), k = 5)
@@ -247,7 +247,7 @@ class LexIndexSpec extends SparkSpec {
     // generation while the append's write is in flight — the appended
     // files land in the now-retired flat dir, which liveDir never serves
     val thrown = intercept[IllegalStateException] {
-      Index.fencedAppend(spark, path, LexIndex.PostingsKind) { dir =>
+      Store.fencedAppend(spark, path, Store.PostingsKind) { dir =>
         docs.where(col("doc_id") >= 20 && col("doc_id") < 30)
           .select(col("doc_id"), Portable.h64(col("text")).as("th"),
             lit(1L).as("tf"), lit(3L).as("dl"),
@@ -331,7 +331,7 @@ class LexIndexSpec extends SparkSpec {
     LexIndex.compactLexical(spark, path)
     assert(dump() === before) // physical purge changes no answer
     assert(Tombstones.listFiles(spark, path).isEmpty) // consumed
-    assert(spark.read.parquet(Index.liveDir(spark, path, LexIndex.PostingsKind))
+    assert(spark.read.parquet(Store.liveDir(spark, path, Store.PostingsKind))
       .where(delPred).count() === 0L)
   }
 
@@ -339,9 +339,9 @@ class LexIndexSpec extends SparkSpec {
     val path = freshPath("delstats")
     LexIndex.saveLexical(docs.where(!isQ), path, nBuckets = 16)
     val livePostings = spark.read
-      .parquet(Index.liveDir(spark, path, LexIndex.PostingsKind)).count()
+      .parquet(Store.liveDir(spark, path, Store.PostingsKind)).count()
     val deadPostings = spark.read
-      .parquet(Index.liveDir(spark, path, LexIndex.PostingsKind))
+      .parquet(Store.liveDir(spark, path, Store.PostingsKind))
       .where(col("doc_id") === 7L).count()
     LexIndex.deleteDocs(spark, path, Seq(7L).toDF("doc_id"))
     val st = LexIndex.stats(spark, path).head()
@@ -468,7 +468,7 @@ class LexIndexSpec extends SparkSpec {
     val racing = planned.as[(Long, Long, Long, Int)].collect().toSeq
     assert(racing === quiet)
     // the folded store serves the refreshed stats (terms_v1 + _stats)
-    assert(Index.liveDir(spark, path, LexIndex.TermsKind).contains("terms_v"),
+    assert(Store.liveDir(spark, path, Store.TermsKind).contains("terms_v"),
       "fold did not publish a versioned terms generation")
     val folded = LexIndex.bm25TopKIndexed(spark, path, docs.where(isQ), k = 10)
       .orderBy("query_id", "rank")
@@ -506,9 +506,9 @@ class LexIndexSpec extends SparkSpec {
     assert(racing === quiet,
       "pre-planned serve diverged across the lexical rebuild flip")
     // postings and terms flipped together under one commit marker
-    assert(Index.liveDir(spark, path, LexIndex.PostingsKind)
+    assert(Store.liveDir(spark, path, Store.PostingsKind)
       .contains("postings_v"))
-    assert(Index.liveDir(spark, path, LexIndex.TermsKind).contains("terms_v"))
+    assert(Store.liveDir(spark, path, Store.TermsKind).contains("terms_v"))
     // the rebuilt store = a fresh build over the final corpus, and the
     // surviving tombstone does not re-mask the republished doc 25
     val served = LexIndex.bm25TopKIndexed(spark, path, docs.where(isQ), k = 20)
@@ -542,7 +542,7 @@ class LexIndexSpec extends SparkSpec {
       nBuckets = 16)
     LexIndex.rebuildLexical(docs.where(!isQ && col("doc_id") < 30), path,
       nBuckets = 16)
-    assert(Index.liveDir(spark, path, LexIndex.PostingsKind)
+    assert(Store.liveDir(spark, path, Store.PostingsKind)
       .contains("postings_v"))
     // append into the versioned store, then fold the sidecars: the
     // fold must publish terms_v2 on top of the rebuild's terms_v1 and
@@ -659,7 +659,7 @@ class LexIndexSpec extends SparkSpec {
       .as[(Long, Long, Long, Int)].collect().toSeq
     assert(after.toSet === served.toSet)
     assert(spark.read
-      .parquet(Index.liveDir(spark, path, LexIndex.PostingsKind))
+      .parquet(Store.liveDir(spark, path, Store.PostingsKind))
       .where(col("lang") === "en").count() === 0L,
       "compaction left masked-language postings behind")
   }
@@ -683,7 +683,7 @@ class LexIndexSpec extends SparkSpec {
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$path/df_deltas")),
       "the racing append's df sidecar was deleted by the aborted rebuild")
     val stored = spark.read
-      .parquet(Index.liveDir(spark, path, LexIndex.PostingsKind))
+      .parquet(Store.liveDir(spark, path, Store.PostingsKind))
       .select("doc_id").as[Long].collect().toSet
     assert((30L until 40L).forall(stored.contains),
       "the racing append's postings are missing from the live store")
@@ -777,7 +777,7 @@ class LexIndexSpec extends SparkSpec {
     LexIndex.appendLexical(spark, path, batch)
     LexIndex.foldStats(spark, path)
     val folded = spark.read.parquet(
-      Index.liveDir(spark, path, "terms") + "/_stats").head()
+      Store.liveDir(spark, path, "terms") + "/_stats").head()
     val freshP = freshPath("statsidfresh")
     LexIndex.saveLexical(corpus.unionByName(batch), freshP, nBuckets = 16)
     val fresh = spark.read.parquet(s"$freshP/stats").head()

@@ -50,17 +50,20 @@ object CrashPointFs {
   private val GenDir = "(centroids|codewords|postings|pq_codes|sq_codes|mrl_codes|terms)(_v\\d+)?".r
 
   @volatile private var root: Option[String] = None
-  @volatile private var failAt = 0
+  @volatile private var failAt = Int.MaxValue
   @volatile private var fired = false
   private val seen = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Throw at the `n`-th counted mutation under store `path`. */
-  def arm(path: String, n: Int): Unit = {
+  /** Count the mutations under store `path`; throw at the `n`-th. */
+  def arm(path: String, n: Int = Int.MaxValue): Unit = {
     root = Some(new Path(path).toUri.getPath); seen.set(0); fired = false
     failAt = n
   }
 
-  def disarm(): Unit = { failAt = 0; root = None }
+  def disarm(): Unit = root = None
+
+  /** The mutations counted since the last arming. */
+  def counted: Int = seen.get
 
   /** Whether the current arming has thrown. */
   def hasFired: Boolean = fired
@@ -82,7 +85,7 @@ object CrashPointFs {
     Iterator.iterate(p)(_.getParent).takeWhile(_ != null).exists(isGeneration)
 
   private def step(what: String): Unit =
-    if (failAt > 0 && root.exists(r => what.contains(r)) &&
+    if (root.exists(r => what.contains(r)) &&
         seen.incrementAndGet() == failAt) {
       fired = true
       throw new java.io.IOException(s"injected crash at publish mutation #$failAt: $what")
@@ -131,29 +134,27 @@ class StoreCrashSpec extends SparkSpec {
                         serve: String => Seq[Row]): Int = {
     val pre = serve(crashUri(template))
     val clean = copyOf(template, tag)
-    mutate(clean)
+    CrashPointFs.arm(clean)
+    try mutate(clean) finally CrashPointFs.disarm()
+    val points = CrashPointFs.counted
     val post = serve(clean)
-    var n = 1
-    var crashed = true
-    while (crashed) {
+    (1 to points).foreach { n =>
       val store = copyOf(template, tag)
       CrashPointFs.arm(store, n)
-      crashed =
+      val crashed =
         try { mutate(store); false }
         catch { case _: Exception if CrashPointFs.hasFired => true }
         finally CrashPointFs.disarm()
+      assert(crashed, s"$tag: publish mutation #$n of $points was never reached")
       val seen = serve(store)
-      if (crashed) {
-        assert(seen == pre || seen == post,
-          s"$tag: a crash at publish mutation #$n left a store that serves " +
-            "neither the pre- nor the post-state")
-        mutate(store)
-        assert(serve(store) == post,
-          s"$tag: the call after a crash at publish mutation #$n did not recover")
-        n += 1
-      } else assert(seen == post, s"$tag: the uncrashed run diverged")
+      assert(seen == pre || seen == post,
+        s"$tag: a crash at publish mutation #$n left a store that serves " +
+          "neither the pre- nor the post-state")
+      mutate(store)
+      assert(serve(store) == post,
+        s"$tag: the call after a crash at publish mutation #$n did not recover")
     }
-    n - 1
+    points
   }
 
   private def emb = (0L until 48L).map { i =>

@@ -402,7 +402,7 @@ class StreamingAnnServeSpec extends SparkSpec {
     // the blocked micro-batch wrote NOTHING — neither flavor carries it
     // (no torn prefix/raw pair, the silent-recall-loss shape)
     val stored = spark.read
-      .parquet(Index.liveDir(spark, path, Index.MrlCodesKind))
+      .parquet(Store.liveDir(spark, path, Store.MrlCodesKind))
       .select("vec_id").as[Long].collect().toSet
     assert(!stored.exists(_ >= 100L),
       "a lease-blocked streamed micro-batch still wrote rows")
@@ -417,7 +417,7 @@ class StreamingAnnServeSpec extends SparkSpec {
       iq2.processAllAvailable()
     } finally iq2.stop()
     val replayed = spark.read
-      .parquet(Index.liveDir(spark, path, Index.MrlCodesKind))
+      .parquet(Store.liveDir(spark, path, Store.MrlCodesKind))
       .select("vec_id").as[Long].collect().toSet
     assert((100L until 110L).forall(replayed.contains),
       "the retried micro-batch is missing from the live store")
