@@ -167,13 +167,6 @@ private[graft] object Tombstones {
   def readAll(spark: SparkSession, path: String): Option[DataFrame] =
     readFiles(spark, listFiles(spark, path))
 
-  def deleteFiles(spark: SparkSession, path: String,
-                  files: Seq[String]): Unit =
-    files.foreach { f =>
-      val p = new Path(f)
-      Store.fs(spark, p).delete(p, false); ()
-    }
-
   /** Apply the mask: drop rows whose id is tombstoned by a delete at or
     * after the row's insertion. Rows from stores predating the seq
     * column (no `ins_seq`) are build-time rows — seq 0. The anti-join's

@@ -891,7 +891,6 @@ class IndexSpec extends SparkSpec {
     Index.delete(spark, path, Seq(31L).toDF("vec_id")) // mid-compaction
     Store.compact(spark, path, Seq(Store.PostingsKind), "cell", Nil, "vec_id",
       consumed)
-    Tombstones.deleteFiles(spark, path, consumed)
     val live = spark.read.parquet(Store.liveDir(spark, path, Store.PostingsKind))
     assert(live.where(col("vec_id") === 21L).count() === 0L) // purged
     assert(live.where(col("vec_id") === 31L).count() === 1L) // still stored…
