@@ -79,8 +79,8 @@ import org.apache.spark.sql.functions._
 object Index {
   import Store.{CentroidsKind, CodewordsKind, MrlCodesKind, PostingsKind,
     PqCodesKind, SqCodesKind, appendMetaCols, committedKinds, dropStoreCommits,
-    exists, fencedAppend, liveDir, prunedToProbes, retireGenerations,
-    generations, snapshotStore, storedMetaCols}
+    exists, fencedAppend, generations, liveDir, prunedToProbes,
+    retireGenerations, snapshotStore, storedMetaCols}
 
   private def centroidsPath(path: String) = s"$path/centroids"
   private def codewordsPath(path: String) = s"$path/codewords"
