@@ -44,8 +44,10 @@ import org.apache.spark.sql.functions._
   * carries raw) shares one set of centroids, so ONE marker owns their
   * `trained` and assignment-mode `flat` fields (the "owns cells" column):
   * `meta` if present, else `sq_meta`, else `ivf_meta`. Appends route by
-  * it ([[storedFlat]]); a rebuild re-trains from it and rewrites a
-  * combined store's `sq_meta` to match.
+  * it ([[storedFlat]]); a rebuild re-trains from it and republishes a
+  * combined store's `sq_meta` to match, as a generation of its own
+  * ([[Store.SqMetaKind]]). Markers, quantizers and schemas are read
+  * through [[Store]]'s driver-side cache.
   *
   * Mutation and publication state beside the data is [[Store]]'s: every
   * kind above (the flat directory is generation 0) is replaced only by
@@ -78,9 +80,10 @@ import org.apache.spark.sql.functions._
   */
 object Index {
   import Store.{CentroidsKind, CodewordsKind, MrlCodesKind, PostingsKind,
-    PqCodesKind, SqCodesKind, appendMetaCols, committedKinds, dropStoreCommits,
-    exists, fencedAppend, generations, liveDir, prunedToProbes,
+    PqCodesKind, SqCodesKind, SqMetaKind, appendMetaCols, committedKinds,
+    dropStoreCommits, fencedAppend, generations, liveDir, prunedToProbes,
     retireGenerations, snapshotStore, storedMetaCols}
+  import org.apache.spark.sql.Row
 
   private def centroidsPath(path: String) = s"$path/centroids"
   private def codewordsPath(path: String) = s"$path/codewords"
@@ -91,23 +94,44 @@ object Index {
   private def scanKind(kinds: Set[String]): Option[String] =
     Seq(PostingsKind, PqCodesKind, SqCodesKind).find(kinds)
 
-  /** LIVE quantizer directories — every read resolves through the
-    * generation machinery (a rebuilt store's quantizers live in
-    * `centroids_v<n>`; a never-rebuilt store falls through to the flat
-    * build dir). Writes keep targeting the flat paths: a fresh build IS
-    * generation 0, and [[rebuild]] renames its staged output into a
-    * versioned dir instead of writing one directly.
+  /** The LIVE quantizers — every read resolves through the generation
+    * machinery (a rebuilt store's quantizers live in `centroids_v<n>`; a
+    * never-rebuilt store falls through to the flat build dir). Writes
+    * keep targeting the flat paths: a fresh build IS generation 0, and
+    * [[rebuild]] renames its staged output into a versioned dir instead
+    * of writing one directly. The DataFrames feed the residual codings'
+    * joins; the driver arrays come from [[Store.table]]'s cache.
     */
-  private def centroidsDir(spark: SparkSession, path: String): String =
-    liveDir(spark, path, CentroidsKind)
-  private def codewordsDir(spark: SparkSession, path: String): String =
-    liveDir(spark, path, CodewordsKind)
+  private def centroids(spark: SparkSession, path: String): DataFrame =
+    Store.read(spark, liveDir(spark, path, CentroidsKind))
+  private def codewords(spark: SparkSession, path: String): DataFrame =
+    Store.read(spark, liveDir(spark, path, CodewordsKind))
+
+  /** The stored centroids as (cid, cv, cn), ordered by cid. */
+  private def centroidArray(spark: SparkSession, path: String)
+      : Array[(Long, Array[Double], Double)] =
+    Store.table(spark, liveDir(spark, path, CentroidsKind), "centroids") { (_, rows) =>
+      rows.map(r => (r.getAs[Long]("cid"), r.getAs[Seq[Double]]("cv").toArray,
+        r.getAs[Double]("cn"))).sortBy(_._1)
+    }.getOrElse(throw new IllegalArgumentException(s"no centroids at $path"))
+
+  /** The stored PQ codebook per subspace, each sorted by code id
+    * (constant-bounded: nSub·nCode rows) — [[encodeCells]]' table.
+    */
+  private def codebook(spark: SparkSession, path: String)
+      : Map[Long, Array[(Long, Array[Double])]] =
+    Store.table(spark, liveDir(spark, path, CodewordsKind), "codebook") { (_, rows) =>
+      rows.map(r => (r.getAs[Long]("sub"), r.getAs[Long]("code"),
+          r.getAs[Seq[Double]]("cw").toArray))
+        .groupBy(_._1)
+        .map { case (m, cws) => m -> cws.map(r => (r._2, r._3)).sortBy(_._1) }
+    }.getOrElse(throw new IllegalArgumentException(s"no PQ codebook at $path"))
 
   /** Whether the store's PQ codes are residual-coded ([[saveIvfPq]]
     * `residual`); stores written before the marker existed are absolute.
     */
   private[graft] def isResidual(spark: SparkSession, path: String): Boolean =
-    new Markers(spark, path).config("meta").residual
+    config(spark, path, "meta").residual
 
   /** A store's build configuration, read back from its marker table —
     * what [[rebuild]] must re-invoke the save with. Markers written
@@ -118,25 +142,20 @@ object Index {
                                nSub: Int, nCode: Int, trainIters: Int,
                                flat: Boolean)
 
-  /** The marker table's one row + column set, from ONE parquet read and
-    * ONE collect job. The naive shape (separate `.select(name).head()`
-    * per field, plus a second `spark.read` wherever the caller also
-    * needs `.columns`) costs up to 7 footer-reads/jobs per metadata
-    * probe — per-op marker reads measurably dominated the round-14
-    * store-lifecycle queries (1.5-1.8× slowdown, VERDICT r14), and at
-    * S3 scale every one is a small-object round-trip.
+  /** A marker table's column set and one row, from [[Store.table]]'s
+    * driver-side cache (the live generation of `sq_meta`, which a
+    * rebuild republishes; the build directory of every other marker).
     */
-  private def readMetaRow(spark: SparkSession, dir: String)
-      : Option[(Set[String], org.apache.spark.sql.Row)] = {
-    if (!exists(spark, dir)) None
-    else {
-      val df = spark.read.parquet(dir)
-      Some((df.columns.toSet, df.head()))
+  private def marker(spark: SparkSession, path: String,
+                     name: String): Option[(Set[String], Row)] =
+    Store.table(spark, liveDir(spark, path, name), "marker") { (schema, rows) =>
+      (schema.fieldNames.toSet, rows.head)
     }
-  }
 
-  private def buildMetaOf(meta: Option[(Set[String],
-                                        org.apache.spark.sql.Row)]): BuildMeta =
+  private def config(spark: SparkSession, path: String, name: String): BuildMeta =
+    buildMetaOf(marker(spark, path, name))
+
+  private def buildMetaOf(meta: Option[(Set[String], Row)]): BuildMeta =
     meta match {
       case None => BuildMeta(false, false, 8, 16, 3, false)
       case Some((cols, row)) =>
@@ -160,13 +179,9 @@ object Index {
     * fixture, SCALING.md). Marker ownership mirrors [[rebuild]]'s:
     * the PQ marker if present, else SQ, else IVF.
     */
-  private def storedFlat(spark: SparkSession, path: String,
-                         markers: Markers): Boolean = {
-    val owner = Seq("meta", "sq_meta").find(m => exists(spark, s"$path/$m"))
-      .getOrElse("ivf_meta")
-    // ONE marker read serves both the legacy-column check and the meta
-    // row, shared with the coding that reads the same marker
-    val meta = markers.row(owner)
+  private def storedFlat(spark: SparkSession, path: String): Boolean = {
+    val meta = Seq("meta", SqMetaKind, "ivf_meta").iterator
+      .map(marker(spark, path, _)).collectFirst { case Some(m) => m }
     // LEGACY-STORE migration warning: markers written before the `flat`
     // column record nothing about the assignment mode, so this defaults
     // to two-level — which is only WRONG if the store was flat-built
@@ -178,8 +193,7 @@ object Index {
     // permanently converts the store to two-level geometry unless the
     // rebuild is re-run with forceFlat via a fresh save).
     if (meta.exists(!_._1.contains("flat")) &&
-        spark.read.parquet(centroidsDir(spark, path)).count() >=
-          Similarity.twoLevelMinCells)
+        centroidArray(spark, path).length >= Similarity.twoLevelMinCells)
       System.err.println(s"[graft.Index] WARNING: store at $path predates " +
         "the `flat` assignment-mode marker and has enough cells for " +
         "two-level routing — if it was built forceFlat = true, appends " +
@@ -212,25 +226,6 @@ object Index {
       .select(col("vec_id"), col("v"), col("norm"),
         element_at(col("cells"), 1).as("cell"))
 
-  /** A store's frozen quantizers, read lazily (a build reads them only
-    * after writing them) and at most once per call.
-    */
-  private final class Quantizers(spark: SparkSession, dir: String) {
-    lazy val cents: DataFrame = spark.read.parquet(centroidsDir(spark, dir))
-    lazy val codewords: DataFrame = spark.read.parquet(codewordsDir(spark, dir))
-  }
-
-  /** A store's marker tables as one call sees them: each read at most
-    * once ([[readMetaRow]]) however many codings consult it.
-    */
-  private final class Markers(spark: SparkSession, val path: String) {
-    private val cache = scala.collection.mutable.Map[String,
-      Option[(Set[String], org.apache.spark.sql.Row)]]()
-    def row(name: String): Option[(Set[String], org.apache.spark.sql.Row)] =
-      cache.getOrElseUpdate(name, readMetaRow(spark, s"$path/$name"))
-    def config(name: String): BuildMeta = buildMetaOf(row(name))
-  }
-
   /** One serve's query side, each part computed once: the quantizers,
     * the normalized queries `qn`, the (query_id, cell) probe pairs from
     * the exact flat scan over the stored centroids (ties and 9-dp
@@ -240,17 +235,28 @@ object Index {
     */
   private final class Serve(val spark: SparkSession, val path: String,
                             val queries: DataFrame, nProbe: Int) {
-    val q = new Quantizers(spark, path)
+    lazy val cents: DataFrame = centroids(spark, path)
+    lazy val codewords: DataFrame = Index.codewords(spark, path)
     val qn: DataFrame = Similarity.normed(queries)
-    val probes: DataFrame = {
-      val cents = Similarity.collectCentroids(q.cents)
+    private val ranked: DataFrame = {
+      val cents = centroidArray(spark, path)
       Similarity.withCellRanks(qn, cents.length, keep = nProbe,
         twoLevelMin = Int.MaxValue, seedArr = cents)
-        .select(col("vec_id").as("query_id"),
-          explode(slice(col("cells"), 1, nProbe)).as("cell"))
     }
-    lazy val cells: Array[Long] =
-      probes.select("cell").distinct().collect().map(_.getLong(0))
+    val probes: DataFrame = ranked.select(col("vec_id").as("query_id"),
+      explode(slice(col("cells"), 1, nProbe)).as("cell"))
+    /** A local query batch (a driver-side Seq) has its probe lists
+      * evaluated on the driver by Spark's own optimizer, the way it folds
+      * any projection of a local relation: the distinct cells cost no
+      * job. Any other batch collects them.
+      */
+    lazy val cells: Array[Long] = {
+      val lists = ranked.select(slice(col("cells"), 1, nProbe))
+      if (lists.queryExecution.optimizedPlan
+          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+        lists.collect().flatMap(_.getSeq[Long](0)).distinct.sorted
+      else probes.select("cell").distinct().collect().map(_.getLong(0))
+    }
     lazy val qv: DataFrame = qn.select(col("vec_id").as("query_id"),
       col("v").as("qv"), col("norm").as("qnorm"))
 
@@ -308,11 +314,12 @@ object Index {
     */
   private sealed abstract class Coding(val kind: String, val core: Set[String],
                                        val marker: String) {
-    def rows(a: DataFrame, q: Quantizers): DataFrame
+    /** `dir` is the store (or stage) whose quantizers code the rows. */
+    def rows(a: DataFrame, dir: String): DataFrame
     /** Build only: train + persist the coding's own quantizer under
       * `dir`, after the assignment and before any rows are derived.
       */
-    def train(emb: DataFrame, a: DataFrame, q: Quantizers, dir: String): Unit = ()
+    def train(emb: DataFrame, a: DataFrame, dir: String): Unit = ()
     /** Build only: derive the rows from the just-written raw postings
       * (which already carry the metadata) instead of the assignment.
       */
@@ -328,7 +335,7 @@ object Index {
 
   /** IVF-Flat: the assignment itself — raw vectors, the refine flavor. */
   private case object Flat extends Coding(PostingsKind, postingsCore, "ivf_meta") {
-    def rows(a: DataFrame, q: Quantizers): DataFrame = a
+    def rows(a: DataFrame, dir: String): DataFrame = a
     def score(c: DataFrame, s: Serve): DataFrame = exact(s.pairs(c), "vec_id", s)
     /** The exact-cosine kernel, shared with [[refine]]: rows carrying
       * (query_id, `id`, v, norm) against the query projection.
@@ -355,15 +362,15 @@ object Index {
     */
   private final case class Sq(residual: Boolean)
       extends Coding(SqCodesKind, sqCodesCore, "sq_meta") {
-    def rows(a: DataFrame, q: Quantizers): DataFrame =
-      if (residual) int8Rows(residuals(a, q.cents), col("v"), col("scale"),
+    def rows(a: DataFrame, dir: String): DataFrame =
+      if (residual) int8Rows(residuals(a, centroids(a.sparkSession, dir)), col("v"), col("scale"),
         Seq(col("vec_id"), col("cell")))
       else int8Rows(a, col("v"), rescale(col("norm")),
         Seq(col("vec_id"), col("cell")))
     override def scoreCol: String = "score"
     def score(c: DataFrame, s: Serve): DataFrame =
       if (residual) {
-        val xh = c.join(broadcast(s.q.cents.select(col("cid").as("cell"), col("cv"))),
+        val xh = c.join(broadcast(s.cents.select(col("cid").as("cell"), col("cv"))),
             "cell")
           .withColumn("xh", VecQuant.reconstruct(col("cv"), col("qb"), col("r")))
         against(s.pairs(xh), s.qv, "vec_id", cosine(col("xh"),
@@ -387,17 +394,18 @@ object Index {
     */
   private final case class Pq(cfg: BuildMeta, atBuild: Boolean = false)
       extends Coding(PqCodesKind, pqCodesCore, "meta") {
-    def rows(a: DataFrame, q: Quantizers): DataFrame =
+    def rows(a: DataFrame, dir: String): DataFrame = {
+      val spark = a.sparkSession
       if (atBuild && !cfg.trained) pqSeedCodesWithCell(a, cfg.nSub, cfg.nCode)
-      else encodeCells(a.sparkSession,
-        if (cfg.residual) residuals(a, q.cents) else a, q.codewords)
-    override def train(emb: DataFrame, a: DataFrame, q: Quantizers,
-                       dir: String): Unit = if (atBuild) {
+      else encodeCells(spark,
+        if (cfg.residual) residuals(a, centroids(spark, dir)) else a, codebook(spark, dir))
+    }
+    override def train(emb: DataFrame, a: DataFrame, dir: String): Unit = if (atBuild) {
       val spark = emb.sparkSession
       import spark.implicits._
       val codebook =
         if (cfg.residual) Similarity.pqTrainCodebook(
-          residuals(a, q.cents).withColumnRenamed("v", "embedding"),
+          residuals(a, centroids(spark, dir)).withColumnRenamed("v", "embedding"),
           cfg.nSub, cfg.nCode, cfg.trainIters)
         else if (cfg.trained)
           Similarity.pqTrainCodebook(emb, cfg.nSub, cfg.nCode, cfg.trainIters)
@@ -427,13 +435,13 @@ object Index {
       val qv = s.qn.select(col("vec_id").as("query_id"), col("v"))
       val (lut, keys) =
         if (cfg.residual) (s.probes
-          .join(broadcast(s.q.cents.select(col("cid").as("cell"), col("cv"))), "cell")
+          .join(broadcast(s.cents.select(col("cid").as("cell"), col("cv"))), "cell")
           .join(qv, "query_id")
           .select(col("query_id"), col("cell"), VecQuant.sub(col("v"), col("cv")).as("rv"))
-          .crossJoin(broadcast(s.q.codewords))
+          .crossJoin(broadcast(s.codewords))
           .select(col("query_id"), col("cell"), col("sub"), col("code"), d2i(col("rv"))),
           Seq("query_id", "cell", "sub", "code"))
-        else (qv.crossJoin(broadcast(s.q.codewords))
+        else (qv.crossJoin(broadcast(s.codewords))
           .select(col("query_id"), col("sub"), col("code"), d2i(col("v"))),
           Seq("query_id", "sub", "code"))
       s.pairs(c.select("vec_id", "sub", "code", "cell"))
@@ -454,7 +462,7 @@ object Index {
   private final case class Mrl(dims: Int, quantized: Boolean) extends Coding(
       MrlCodesKind, if (quantized) sqCodesCore else mrlCodesCore, "mrl_meta") {
     override def fromPostings: Boolean = true
-    def rows(src: DataFrame, q: Quantizers): DataFrame = {
+    def rows(src: DataFrame, dir: String): DataFrame = {
       val keep = Seq(col("vec_id"), col("cell"))
       val meta = src.columns.filterNot(postingsCore.contains).toSeq.map(col)
       val p = src.withColumn("pv", slice(col("v"), 1, dims))
@@ -480,14 +488,14 @@ object Index {
     * marker. MRL markers written before the `quantized` column are
     * raw-prefix.
     */
-  private def codingOf(kind: String, m: Markers): Coding =
+  private def codingOf(kind: String, spark: SparkSession, path: String): Coding =
     kind match {
       case PostingsKind => Flat
-      case PqCodesKind => Pq(m.config("meta"))
-      case SqCodesKind => Sq(m.config("sq_meta").residual)
-      case MrlCodesKind => m.row("mrl_meta") match {
+      case PqCodesKind => Pq(config(spark, path, "meta"))
+      case SqCodesKind => Sq(config(spark, path, SqMetaKind).residual)
+      case MrlCodesKind => marker(spark, path, "mrl_meta") match {
         case None => throw new IllegalArgumentException(
-          s"no MRL marker at ${m.path}/mrl_meta — not an MRL store")
+          s"no MRL marker at $path/mrl_meta — not an MRL store")
         case Some((cols, row)) =>
           Mrl(row.getInt(row.fieldIndex("prefix_dims")),
             cols.contains("quantized") && row.getBoolean(row.fieldIndex("quantized")))
@@ -549,20 +557,18 @@ object Index {
         .orderBy("vec_id").limit(cells)
         .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
     cents.write.mode("overwrite").parquet(centroidsPath(dir))
-    val q = new Quantizers(spark, dir)
     val twoLevelMin = if (forceFlat) Int.MaxValue else Similarity.twoLevelMinCells
     val a =
       if (trained) {
-        val stored = Similarity.collectCentroids(q.cents)
+        val stored = centroidArray(spark, dir)
         assigned(emb, stored.length, twoLevelMin, superProbe, stored)
       } else assigned(emb, cells, twoLevelMin, superProbe)
-    codings.foreach(_.train(emb, a, q, dir))
+    codings.foreach(_.train(emb, a, dir))
     if (insSeq == 0L) Tombstones.clear(spark, dir)
     codings.foreach { c =>
       val rows =
-        if (c.fromPostings)
-          c.rows(spark.read.parquet(liveDir(spark, dir, PostingsKind)), q)
-        else withMeta(c.rows(a, q), emb, metaCols)
+        if (c.fromPostings) c.rows(Store.read(spark, liveDir(spark, dir, PostingsKind)), dir)
+        else withMeta(c.rows(a, dir), emb, metaCols)
       retireGenerations(spark, dir, c.kind)
       writeCells(rows, insSeq, s"$dir/${c.kind}", "overwrite")
     }
@@ -583,21 +589,19 @@ object Index {
                        superProbe: Int, metaCols: Seq[String], kind: String,
                        op: String): Unit =
     Lease.withLease(spark, path, op) {
-      val m = new Markers(spark, path)
-      val q = new Quantizers(spark, path)
-      val cents = Similarity.collectCentroids(q.cents)
+      val cents = centroidArray(spark, path)
       val a = assigned(batch, cents.length,
-        if (storedFlat(spark, path, m)) Int.MaxValue
+        if (storedFlat(spark, path)) Int.MaxValue
         else Similarity.twoLevelMinCells, superProbe, cents)
       val kinds =
         if (kind == PostingsKind) Seq(kind)
         else if (committedKinds(spark, path)(PostingsKind)) Seq(PostingsKind, kind)
         else Seq(kind)
       val coded = kinds.map { k =>
-        val c = codingOf(k, m)
+        val c = codingOf(k, spark, path)
         val meta = appendMetaCols(spark, liveDir(spark, path, k), c.core,
           batch, metaCols)
-        k -> withMeta(c.rows(a, q), batch, meta)
+        k -> withMeta(c.rows(a, path), batch, meta)
       }
       val seq = Tombstones.nextSeq(spark, path)
       coded.foreach { case (k, rows) =>
@@ -704,19 +708,13 @@ object Index {
     * itself, whose `v` IS `normed(emb)`'s column — so the corpus is NOT
     * re-read for the encode and no (vec_id → cell) re-attach join follows.
     * [[Similarity.pqCodes]]' rounding and tie semantics exactly
-    * (9-dp-rounded subspace L2, smaller code id wins ties): the codebook
-    * is grouped per subspace and sorted by code id driver-side
-    * (constant-bounded: nSub·nCode rows) so the linear scan reproduces
-    * the first-smallest-id tie-break. Output (vec_id, sub, code, cell).
+    * (9-dp-rounded subspace L2, smaller code id wins ties): `bySub` is
+    * the [[codebook]], sorted by code id within each subspace, so the
+    * linear scan reproduces the first-smallest-id tie-break. Output
+    * (vec_id, sub, code, cell).
     */
   private def encodeCells(spark: SparkSession, src: DataFrame,
-                          codewords: DataFrame): DataFrame = {
-    val bySub: Map[Long, Array[(Long, Array[Double])]] =
-      codewords
-        .select("sub", "code", "cw").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toArray))
-        .groupBy(_._1)
-        .map { case (m, rows) => m -> rows.map(r => (r._2, r._3)).sortBy(_._1) }
+                          bySub: Map[Long, Array[(Long, Array[Double])]]): DataFrame = {
     val bc = spark.sparkContext.broadcast(bySub)
     codesOf(src, GraftShim.column(graft.functions.PqEncode(
       GraftShim.expression(col("v")), bc, bySub.size)))
@@ -1023,14 +1021,14 @@ object Index {
     serve(spark, path, queries, SqCodesKind, k, nProbe, candWhere, asOfSeq)
 
   /** A DIRECT re-save on an existing store path is an in-place rebuild:
-    * the flat quantizer dirs it writes must become live again, so every
-    * versioned quantizer generation and every store-level `commit_v<n>`
-    * marker from previous [[rebuild]]s is dropped first.
+    * the flat quantizer and marker dirs it writes must become live again,
+    * so every versioned quantizer and `sq_meta` generation and every
+    * store-level `commit_v<n>` marker from previous [[rebuild]]s is
+    * dropped first.
     */
   private def retireQuantizerGenerations(spark: SparkSession,
                                          path: String): Unit = {
-    retireGenerations(spark, path, CentroidsKind)
-    retireGenerations(spark, path, CodewordsKind)
+    Seq(CentroidsKind, CodewordsKind, SqMetaKind).foreach(retireGenerations(spark, path, _))
     dropStoreCommits(spark, path, all = true); ()
   }
 
@@ -1073,12 +1071,12 @@ object Index {
     val kind = scanKind(committedKinds(spark, path)).getOrElse(SqCodesKind)
     // the SERVED corpus: tombstoned rows are invisible to every serve
     // (their dead mass is [[deleteStats]]' column, not this one's)
-    val live = Tombstones.mask(spark.read.parquet(liveDir(spark, path, kind)),
+    val live = Tombstones.mask(Store.read(spark, liveDir(spark, path, kind)),
       Tombstones.readAll(spark, path), "vec_id")
     val n =
       if (kind == PostingsKind) live.count()
       else live.select("vec_id").distinct().count()
-    val nc = spark.read.parquet(centroidsDir(spark, path)).count()
+    val nc = centroidArray(spark, path).length.toLong
     val auto = Similarity.autoCells(n, floorCells).toLong
     Seq((n, nc, auto)).toDF("n_vectors", "n_cells", "auto_cells")
       .withColumn("dilution",
@@ -1153,7 +1151,7 @@ object Index {
     // the rebuild's dominant driver-side cost, and at object-store scale
     // each sweep is one round-trip per file)
     val liveDirPath = liveDir(spark, path, PostingsKind)
-    val stored = spark.read.option("mergeSchema", "true").parquet(liveDirPath)
+    val stored = Store.read(spark, liveDirPath, mergeSchema = true)
     val live = Tombstones.mask(stored, Tombstones.readAll(spark, path),
       "vec_id")
     val meta = stored.schema.map(_.name).filterNot(postingsCore.contains)
@@ -1252,17 +1250,15 @@ object Index {
                             withRaw: Boolean, snap: Store.StoreSnapshot,
                             midHook: () => Unit): Unit = {
     val kinds = committedKinds(spark, path)
-    val markers = new Markers(spark, path)
-    // read every flavor's build config BEFORE any marker is rewritten
-    val pq = markers.config("meta")
-    val sq = markers.config("sq_meta")
+    val pq = config(spark, path, "meta")
+    val sq = config(spark, path, SqMetaKind)
     // the centroids' training AND assignment geometry (a flat-built store
     // re-assigned two-level routes whole families off-macro — recall 0.0
     // on the 1000x family fixture, SCALING.md) belong to the owner marker
     val owner =
       if (kinds(PqCodesKind)) pq
       else if (kinds(SqCodesKind)) sq
-      else markers.config("ivf_meta")
+      else config(spark, path, "ivf_meta")
     // every flavor the store carries, from ONE fresh assignment in its
     // own coding; the store keeps its storage shape (no raw flavor is
     // created where none existed)
@@ -1270,20 +1266,21 @@ object Index {
       (if (kinds(PqCodesKind)) Seq(Pq(pq, atBuild = true)) else Nil) ++
       (if (kinds(SqCodesKind)) Seq(Sq(sq.residual)) else Nil) ++
       (if (withRaw) Seq(Flat) else Nil) ++
-      (if (kinds(MrlCodesKind)) Seq(codingOf(MrlCodesKind, markers)) else Nil)
+      (if (kinds(MrlCodesKind)) Seq(codingOf(MrlCodesKind, spark, path)) else Nil)
     Store.rebuildStaged(spark, path, snap, midHook) { (stage, stampSeq) =>
       // only the CELL budget resets: fresh autoCells over the live corpus
       build(corpus, stage, nCells = 16, owner.flat, Similarity.defaultSuperProbe,
         meta, owner.trained, owner.trainIters, stampSeq, codings, markers = Nil)
       if (kinds(SqCodesKind) && (kinds(PqCodesKind) || withRaw)) {
-        // a combined store's sq_meta is updated IN PLACE at the real path
-        // (markers are coding-preserved — only the `trained`/`flat`
-        // ownership fields can move — and serves read them eagerly at
-        // plan time, so pre-planned serves are unaffected)
+        // a combined store's sq_meta follows the owner marker's `trained`
+        // and `flat` fields (the coding itself is preserved). It is
+        // STAGED: the publish makes it live with the rebuilt kinds under
+        // the one commit marker, and a rebuild that aborts at the fence
+        // leaves the store's marker as it was
         import spark.implicits._
         Seq((sq.residual, owner.trained, sq.trainIters, owner.flat))
           .toDF("residual", "trained", "train_iters", "flat")
-          .write.mode("overwrite").parquet(s"$path/sq_meta")
+          .write.mode("overwrite").parquet(s"$stage/$SqMetaKind")
       }
     }
   }
@@ -1600,7 +1597,7 @@ object Index {
                     asOfSeq: Option[Long] = None,
                     rerank: Option[Int] = None): DataFrame = {
     val s = new Serve(spark, path, queries, nProbe)
-    val c = codingOf(kind, new Markers(spark, path))
+    val c = codingOf(kind, spark, path)
     val top = Similarity.topK(c.score(s.candidates(kind, candWhere, asOfSeq), s),
       rerank.fold(k)(Similarity.autoRerank(k, _)), c.order)
     if (rerank.isEmpty)

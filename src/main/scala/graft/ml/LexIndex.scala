@@ -30,7 +30,8 @@ import org.apache.spark.sql.functions._
   *     frequencies, FROZEN at build time.
   *   - `stats/` one row (n_docs, avgdl, n_buckets, sum_dl), frozen at
   *     build; a fold or rebuild republishes it inside the new terms
-  *     generation ([[statsDir]]).
+  *     generation ([[statsDir]]). A folded terms generation also names
+  *     the sidecar files it folded in, in `_folded/` ([[foldStats]]).
   *   - `df_deltas/`, `doc_deltas/` — the append sidecars [[foldStats]]
   *     consumes.
   * Postings and terms are versioned and published like every store kind
@@ -80,6 +81,35 @@ object LexIndex {
   private[graft] def statsDir(spark: SparkSession, path: String): String = {
     val t = s"${termsDir(spark, path)}/_stats"
     if (Store.exists(spark, t)) t else statsPath(path)
+  }
+
+  /** The live stats row (n_docs, avgdl, n_buckets[, sum_dl]) from
+    * [[Store.table]]'s driver-side cache.
+    */
+  private def statsRow(spark: SparkSession, path: String): org.apache.spark.sql.Row = {
+    val dir = statsDir(spark, path)
+    Store.table(spark, dir, "stats")((_, rows) => rows.head)
+      .getOrElse(spark.read.parquet(dir).head()) // raises Spark's missing-path error
+  }
+
+  /** The sidecar files the LIVE terms generation already folded in, by
+    * [[sidecarName]] — recorded in its `_folded/` directory (one empty
+    * file per folded sidecar) so a fold that died after its publish but
+    * before deleting them is not counted twice.
+    */
+  private def foldedSidecars(spark: SparkSession, path: String): Set[String] = {
+    val dir = new org.apache.hadoop.fs.Path(s"${termsDir(spark, path)}/_folded")
+    val f = Store.fs(spark, dir)
+    if (!f.exists(dir)) Set.empty
+    else f.listStatus(dir).map(_.getPath.getName).toSet
+  }
+
+  /** `<sidecar dir>.<part file>`: unique, since every sidecar write names
+    * its part file with the write's UUID.
+    */
+  private def sidecarName(file: String): String = {
+    val p = new org.apache.hadoop.fs.Path(file)
+    s"${p.getParent.getName}.${p.getName}"
   }
   // per-append accounting sidecars ([[foldStats]]' inputs): df_deltas =
   // (th, df) of each appended batch, doc_deltas = (n_docs, sum_dl)
@@ -212,7 +242,7 @@ object LexIndex {
       .parquet(s"$path/$PostingsKind")
     // df from the JUST-WRITTEN postings — a column-pruned (th-only)
     // re-read beats re-running the corpus tokenize+explode lineage
-    val written = spark.read.parquet(s"$path/$PostingsKind")
+    val written = Store.read(spark, s"$path/$PostingsKind")
     written
       .groupBy("th").agg(count(lit(1)).as("df"))
       .withColumn("bucket", pmod(col("th"), lit(nb.toLong)))
@@ -261,8 +291,7 @@ object LexIndex {
                     newDocs: DataFrame,
                     metaCols: Seq[String] = Nil): Unit =
     Lease.withLease(spark, path, "appendLexical") {
-    val nBuckets = spark.read.parquet(statsDir(spark, path))
-      .select("n_buckets").head().getLong(0)
+    val nBuckets = statsRow(spark, path).getAs[Long]("n_buckets")
     // the store's schema decides the metadata set — a caller-side
     // mismatch fails loudly instead of writing silently-unfilterable
     // rows (the dense-store append contract)
@@ -334,17 +363,22 @@ object LexIndex {
                                midHook: () => Unit): Unit =
     Lease.withLease(spark, path, "foldStats") {
     // the consumption listing: exactly these files are folded in and
-    // exactly these are deleted by the publish
-    val dfFiles = Store.listParquet(spark, dfDeltasPath(path))
-    val docFiles = Store.listParquet(spark, docDeltasPath(path))
+    // exactly these are deleted by the publish. A listed file the live
+    // terms generation already folded (a fold that died between its
+    // commit marker and those deletes) is only deleted
+    val folded = foldedSidecars(spark, path)
+    def listed(dir: String) =
+      Store.listParquet(spark, dir).partition(f => folded(sidecarName(f)))
+    val (doneDf, dfFiles) = listed(dfDeltasPath(path))
+    val (doneDoc, docFiles) = listed(docDeltasPath(path))
+    (doneDf ++ doneDoc).foreach(Store.dropDir(spark, _))
     if (dfFiles.isEmpty && docFiles.isEmpty) return // nothing to fold
     val snap = Store.snapshotStore(spark, path)
-    val st = spark.read.parquet(statsDir(spark, path))
-    require(st.columns.contains("sum_dl"),
+    val row = statsRow(spark, path)
+    require(row.schema.fieldNames.contains("sum_dl"),
       "foldStats needs a store built with the sum_dl stats column " +
         "(older store: run a full saveLexical rebuild instead)")
-    val row = st.select("n_docs", "n_buckets", "sum_dl").head()
-    val nb = row.getLong(1)
+    val nb = row.getAs[Long]("n_buckets")
     // READER-SAFE: the folded terms are STAGED with the stats row riding
     // inside as `_stats/`, so the one publish flips df and stats together;
     // the previous generation stays on disk for any serve planned against it
@@ -358,8 +392,8 @@ object LexIndex {
         _.agg(coalesce(sum("n_docs"), lit(0L)).as("dn"),
           coalesce(sum("sum_dl"), lit(0L)).as("ds")).head()
       }
-    val n2 = row.getLong(0) + dd.getLong(0)
-    val s2 = row.getLong(2) + dd.getLong(1)
+    val n2 = row.getAs[Long]("n_docs") + dd.getLong(0)
+    val s2 = row.getAs[Long]("sum_dl") + dd.getLong(1)
     Seq((n2, s2)).toDF("n_docs", "sum_dl")
       .select(col("n_docs"),
         round(col("sum_dl") / col("n_docs").cast("double"), 6).as("avgdl"),
@@ -367,7 +401,7 @@ object LexIndex {
       .write.mode("overwrite").parquet(s"$staged/_stats")
     // terms: frozen ⊎ listed deltas, summed per term, re-gridded like
     // the build
-    spark.read.parquet(src).select("th", "df")
+    Store.read(spark, src).select("th", "df")
       .unionByName(Tombstones.readFiles(spark, dfFiles)
         .getOrElse(Seq.empty[(Long, Long)].toDF("th", "df")))
       .groupBy("th").agg(sum("df").as("df"))
@@ -381,6 +415,11 @@ object LexIndex {
       .sortWithinPartitions("bucket", "th")
       .write.mode("append").partitionBy("bucket") // append: _stats is in stage
       .parquet(staged)
+    // the record of what this generation folds in, published with it
+    val f = Store.fs(spark, new org.apache.hadoop.fs.Path(staged))
+    (dfFiles ++ docFiles).foreach { c =>
+      f.create(new org.apache.hadoop.fs.Path(s"$staged/_folded/${sidecarName(c)}")).close()
+    }
     midHook()
     // the conflict fence: a mutation since the snapshot means the fold
     // read a superseded sidecar/terms state — abort before publishing
@@ -492,7 +531,7 @@ object LexIndex {
     Lease.withLease(spark, path, "upsertDocs") {
     val ids = docs.select("doc_id").distinct()
     val served = Tombstones.mask(
-      spark.read.parquet(liveDir(spark, path, PostingsKind)),
+      Store.read(spark, liveDir(spark, path, PostingsKind)),
       Tombstones.readAll(spark, path), "doc_id")
       .join(ids, "doc_id")
       .select("doc_id", "th", "dl")
@@ -547,8 +586,8 @@ object LexIndex {
                       dfCapFrac: Double = 0.5,
                       candWhere: Column = lit(true)): DataFrame = {
     require(k > 0 && nQueryTerms > 0 && dfCapFrac > 0)
-    val stats = spark.read.parquet(statsDir(spark, path))
-    val nBuckets = stats.select("n_buckets").head().getLong(0)
+    val stats = Store.read(spark, statsDir(spark, path))
+    val nBuckets = statsRow(spark, path).getAs[Long]("n_buckets")
     // the seed vocabulary: bounded, materialized once, read three times
     // (bucket/term collect below, df weighting, posting join)
     val qterms = Retrieval.seedTerms(queryDocs, nQueryTerms)
@@ -696,14 +735,14 @@ object LexIndex {
     */
   def stats(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val frozen = spark.read.parquet(statsDir(spark, path)).head()
+    val frozen = statsRow(spark, path)
     // the SERVED corpus: tombstoned docs are invisible to every serve,
     // so they don't count as live (their frozen-stats mass is
     // [[deleteStats]]' column, not this one's)
     val live = Tombstones.mask(
-      spark.read.parquet(liveDir(spark, path, PostingsKind)),
+      Store.read(spark, liveDir(spark, path, PostingsKind)),
       Tombstones.readAll(spark, path), "doc_id")
-    val terms = spark.read.parquet(termsDir(spark, path))
+    val terms = Store.read(spark, termsDir(spark, path))
     // ONE pass over the live postings for both counts (was a distinct
     // count + a separate anti-join count, each a full scan): left join
     // the terms side — an unscoreable posting is precisely an unmatched

@@ -521,18 +521,6 @@ object Similarity {
     * super-cell is not probed is missed); [[ivfAssignAgreement]] measures
     * that agreement on any corpus, and the scale sweep records it.
     */
-  /** Collect a stored centroid table once, driver-side — the (id, vec,
-    * norm) array [[withCellRanks]] ranks against. One collect job; the
-    * callers that used to `count()` the table for nCells and then let
-    * withCellRanks collect it AGAIN take the length of this array
-    * instead (two store-table jobs per serve/append → one).
-    */
-  private[ml] def collectCentroids(cents: DataFrame)
-      : Array[(Long, Array[Double], Double)] =
-    cents.orderBy("cid")
-      .select("cid", "cv", "cn").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-
   private[ml] def withCellRanks(e: DataFrame, nCells: Int,
                             keep: Int = 1,
                             seedFrom: DataFrame = null,

@@ -25,12 +25,42 @@ import org.apache.spark.sql.functions._
   * ([[liveDir]]); the generation before it stays on disk as the grace
   * generation a pre-planned serve may still read, until the next publish
   * of that kind or a [[vacuum]] retires it.
+  *
+  * ONE read path serves both stores, and it runs no Spark job before the
+  * answering query plans. Data reads ([[read]], [[readFiles]],
+  * [[prunedToProbes]]) hand Spark the driver's own listing of the
+  * generation and the file schema, so no read pays a schema-inference
+  * job or, past Spark's 32-path threshold, a partition-discovery job
+  * (the session's threshold setting is left as the user set it).
+  * Metadata a committed generation cannot change is cached JVM-wide on
+  * the driver: the marker rows (`meta`, `sq_meta`, `ivf_meta`,
+  * `mrl_meta`) and the lexical stats row ([[table]]), the centroids and
+  * codebooks as driver arrays (the callers' [[table]] decoders), and
+  * each data file's footer schema, from which a kind's schema —
+  * metadata columns included — is derived. The first lookup reads the
+  * entry on the driver with Spark's parquet reader, not through a job.
+  * The KEY is the qualified entry path plus the driver-side listing of
+  * the entry's files (names, lengths): every Spark write names its part
+  * files with the write's UUID, so an overwrite at the same path, a
+  * rebuild, or a publish by another process is a miss, never a stale
+  * hit. [[publish]] is the one place a committed generation changes, so
+  * it is the one invalidation point: it drops the store's entries. The
+  * cache is bounded by [[CacheMaxEntries]] entries and
+  * [[CacheMaxBytes]] of estimated size, least recently used first out;
+  * an entry larger than the byte bound is read but not kept.
   */
 object Store {
+  import org.apache.hadoop.fs.FileStatus
+  import org.apache.spark.sql.Row
+  import org.apache.spark.sql.graft.GraftShim
+  import org.apache.spark.sql.types.StructType
 
   /** The data kinds. Centroids and codewords are the dense build's
     * quantizers (replaced only by a rebuild); postings, the three code
     * kinds and terms are data (compactions and folds replace them too).
+    * `sq_meta` is the one marker a rebuild rewrites (a combined SQ
+    * store's ownership fields), so it is published like a kind: staged
+    * with the rebuild, live only once the rebuild's commit marker is.
     */
   private[graft] val CentroidsKind = "centroids"
   private[graft] val CodewordsKind = "codewords"
@@ -39,8 +69,9 @@ object Store {
   private[graft] val SqCodesKind = "sq_codes"
   private[graft] val MrlCodesKind = "mrl_codes"
   private[graft] val TermsKind = "terms"
+  private[graft] val SqMetaKind = "sq_meta"
   private val AllKinds = Seq(CentroidsKind, CodewordsKind, PostingsKind,
-    PqCodesKind, SqCodesKind, MrlCodesKind, TermsKind)
+    PqCodesKind, SqCodesKind, MrlCodesKind, TermsKind, SqMetaKind)
 
   private val CommitPrefix = "commit_v"
 
@@ -187,51 +218,193 @@ object Store {
     * to the query batch's probed partitions (cells or buckets). The
     * probe list is collected driver-side — bounded by the query batch,
     * never by the corpus. TWO cuts compose: the read names ONLY the
-    * probed partition directories (basePath + explicit paths — full
-    * partition discovery lists every partition before pruning, a driver
-    * cost that grows with the grid; at a 2,500-bucket lexical grid it
-    * quadrupled a 5-seed serve), and the literal isin on the partition
-    * column stays on top, keeping the prune visible in the plan
-    * (PlanSpec pins PartitionFilters).
+    * probed partition directories (basePath + explicit paths — listing
+    * every partition before pruning is a driver cost that grows with the
+    * grid; at a 2,500-bucket lexical grid it quadrupled a 5-seed serve),
+    * and the literal isin on the partition column stays on top, keeping
+    * the prune visible in the plan (PlanSpec pins PartitionFilters).
+    * The probed directories are listed CONCURRENTLY (bounded pool):
+    * serially this is one storage round-trip per probed partition, which
+    * at object-store latency dominates plan time. A probed partition can
+    * be empty (no directory); it is skipped.
     */
   private[graft] def prunedToProbes(spark: SparkSession, dir: String,
                                     probeVals: Array[Long],
                                     partitionCol: String = "cell"): DataFrame = {
     val base = new Path(dir)
     val f = fs(spark, base)
-    // existence-filter the probed dirs: a probed partition can be empty
-    // and parquet refuses missing paths. The probes are checked
-    // CONCURRENTLY (bounded pool): serially this is one storage
-    // round-trip per probed partition, which at object-store latency
-    // dominates plan time. Order-preserving, so the read's path list is
-    // byte-identical to the serial check.
-    val paths = probeVals.map(v => new Path(base, s"$partitionCol=$v"))
-    val dirs: Array[String] =
-      if (paths.length <= 1) paths.filter(f.exists).map(_.toString)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, paths.length))
-        try {
-          val checks = paths.map { p =>
-            pool.submit(new java.util.concurrent.Callable[Boolean] {
-              def call(): Boolean = f.exists(p)
-            })
-          }
-          paths.zip(checks).collect {
-            case (p, c) if c.get() => p.toString
-          }
-        } catch {
-          // the serial path's error shape (an fs.exists IOException
-          // propagated directly), and still-queued checks cancelled
-          case e: java.util.concurrent.ExecutionException =>
-            pool.shutdownNow()
-            throw Option(e.getCause).getOrElse(e)
-        } finally pool.shutdown()
-      }
+    val paths = probeVals.map(v => f.makeQualified(new Path(base, s"$partitionCol=$v"))).toSeq
+    val present = paths.zip(concurrently(paths)(leafFiles(f, _))).collect {
+      case (p, Some(files)) => p -> files
+    }
     val pruned =
-      if (dirs.isEmpty) spark.read.parquet(dir).where(lit(false))
-      else spark.read.option("basePath", dir).parquet(dirs.toSeq: _*)
+      if (present.isEmpty) read(spark, dir).where(lit(false))
+      else scan(spark, present, mergeSchema = false, Map("basePath" -> dir))
+        .getOrElse(spark.read.option("basePath", dir).parquet(present.map(_._1.toString): _*))
     pruned.where(col(partitionCol).isin(probeVals.toSeq: _*))
+  }
+
+  /** `f` over `xs` on a bounded pool, in order; the first failure is
+    * rethrown as itself and the still-queued calls are cancelled.
+    */
+  private def concurrently[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+    if (xs.length <= 1) xs.map(f)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(16, xs.length))
+      try {
+        val calls = xs.map { x =>
+          pool.submit(new java.util.concurrent.Callable[B] { def call(): B = f(x) })
+        }
+        calls.map(_.get())
+      } catch {
+        case e: java.util.concurrent.ExecutionException =>
+          pool.shutdownNow()
+          throw Option(e.getCause).getOrElse(e)
+      } finally pool.shutdown()
+    }
+
+  /** Spark's rule for what a data listing skips: `_`- and `.`-prefixed
+    * names (commit markers, `_stats/`, `_temporary/`, checksums) except
+    * partition directories (`k=v`), and in-flight copies.
+    */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  /** The leaf data files under `root` in Spark's listing order (a
+    * directory's files, then its subdirectories depth-first; a file root
+    * is itself), or None when `root` does not exist.
+    */
+  private def leafFiles(f: FileSystem, root: Path): Option[Array[FileStatus]] = {
+    def walk(sts: Array[FileStatus]): Array[FileStatus] = {
+      val (dirs, files) = sts.filterNot(st => hidden(st.getPath.getName)).partition(_.isDirectory)
+      files ++ dirs.flatMap(d => walk(f.listStatus(d.getPath)))
+    }
+    try Some(walk(f.listStatus(root)))
+    catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** A parquet read of `listed` (qualified root -> its leaf files) with
+    * the schema Spark would infer — the first file's by path, or with
+    * `mergeSchema` the union of all, merged in path order — built
+    * without a job. None when there is no data file to take a schema
+    * from; the caller then lets Spark's own read raise what it always
+    * did.
+    */
+  private def scan(spark: SparkSession, listed: Seq[(Path, Array[FileStatus])],
+                   mergeSchema: Boolean,
+                   options: Map[String, String] = Map.empty): Option[DataFrame] = {
+    val files = listed.flatMap(_._2).sortBy(_.getPath.toString)
+    if (files.isEmpty) None
+    else {
+      val schema =
+        if (mergeSchema || spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean)
+          GraftShim.mergeSchemas(fileSchemas(spark, files))
+        else fileSchemas(spark, files.take(1)).head
+      Some(GraftShim.parquetScan(spark, listed.map(_._1), listed.toMap, schema, options))
+    }
+  }
+
+  /** `spark.read.parquet(dir)` through the listed, schema-given path. */
+  private[graft] def read(spark: SparkSession, dir: String,
+                          mergeSchema: Boolean = false): DataFrame = {
+    val root = new Path(dir)
+    val f = fs(spark, root)
+    val q = f.makeQualified(root)
+    leafFiles(f, q).flatMap(files => scan(spark, Seq(q -> files), mergeSchema))
+      .getOrElse((if (mergeSchema) spark.read.option("mergeSchema", "true")
+                  else spark.read).parquet(dir))
+  }
+
+  /** `spark.read.parquet(files: _*)` of listed data files (tombstones,
+    * fold sidecars) through the same path.
+    */
+  private[graft] def readFiles(spark: SparkSession, files: Seq[String]): DataFrame = {
+    val paths = files.map(new Path(_))
+    val f = fs(spark, paths.head)
+    val qualified = paths.map(f.makeQualified)
+    val listed = concurrently(qualified)(p => leafFiles(f, p))
+    (if (listed.exists(_.isEmpty)) None
+     else scan(spark, qualified.zip(listed.map(_.get)), mergeSchema = false))
+      .getOrElse(spark.read.parquet(files: _*))
+  }
+
+  /** The driver-side metadata cache (see the object doc). */
+  private val CacheMaxEntries = 4096
+  private val CacheMaxBytes: Long = 256L << 20
+
+  private object Cache {
+    /** `path`: the qualified entry (a table directory or a data file);
+      * `files`: its listing; `tag`: which decoding of it.
+      */
+    final case class Key(path: String, files: Seq[String], tag: String)
+    private val lru = new java.util.LinkedHashMap[Key, (AnyRef, Long)](64, 0.75f, true)
+    private var bytes = 0L
+
+    def get[T <: AnyRef](key: Key): Option[T] =
+      synchronized(Option(lru.get(key))).map(_._1.asInstanceOf[T])
+
+    def put(key: Key, v: AnyRef): Unit = {
+      val size = org.apache.spark.util.SizeEstimator.estimate(v)
+      if (size <= CacheMaxBytes) synchronized {
+        Option(lru.put(key, (v, size))).foreach(old => bytes -= old._2)
+        bytes += size
+        val it = lru.entrySet().iterator()
+        while ((lru.size > CacheMaxEntries || bytes > CacheMaxBytes) && it.hasNext) {
+          bytes -= it.next().getValue._2
+          it.remove()
+        }
+      }
+    }
+
+    def apply[T <: AnyRef](key: Key)(load: => T): T =
+      get[T](key).getOrElse { val v = load; put(key, v); v }
+
+    /** Drop every entry under the qualified store root `root`. */
+    def drop(root: String): Unit = synchronized {
+      val it = lru.entrySet().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        if (e.getKey.path == root || e.getKey.path.startsWith(root + "/")) {
+          bytes -= e.getValue._2
+          it.remove()
+        }
+      }
+    }
+  }
+
+  /** Each file's footer schema, cached by (path, length, mtime) — a part
+    * file is never rewritten in place. Uncached footers are read
+    * concurrently.
+    */
+  private def fileSchemas(spark: SparkSession, files: Seq[FileStatus]): Seq[StructType] = {
+    def key(st: FileStatus) = Cache.Key(st.getPath.toString,
+      Seq(st.getLen.toString, st.getModificationTime.toString), "schema")
+    val cached = files.map(st => Cache.get[StructType](key(st)))
+    val missing = files.zip(cached).collect { case (st, None) => st }
+    val read = missing.zip(concurrently(missing)(GraftShim.parquetFileSchema(spark, _))).toMap
+    read.foreach { case (st, schema) => Cache.put(key(st), schema) }
+    files.zip(cached).map { case (st, hit) => hit.getOrElse(read(st)) }
+  }
+
+  /** A small committed table at `dir` — a marker, the stats row, a
+    * quantizer — as (schema, rows), decoded by `decode` and cached under
+    * `tag` and the listing of its files; None when `dir` does not exist.
+    */
+  private[graft] def table[T <: AnyRef](spark: SparkSession, dir: String, tag: String)
+                                      (decode: (StructType, Array[Row]) => T): Option[T] = {
+    val root = new Path(dir)
+    val f = fs(spark, root)
+    val q = f.makeQualified(root)
+    leafFiles(f, q).map { found =>
+      val files = found.sortBy(_.getPath.toString).toSeq
+      if (files.isEmpty) { spark.read.parquet(dir); () } // raises Spark's empty-input error
+      Cache(Cache.Key(q.toString,
+          files.map(st => s"${st.getPath.getName}:${st.getLen}"), tag)) {
+        val schema = fileSchemas(spark, files.take(1)).head
+        decode(schema, GraftShim.readParquetRows(spark, schema, files))
+      }
+    }
   }
 
   /** The metadata columns a store was BUILT with, read from its parquet
@@ -242,8 +415,7 @@ object Store {
     */
   private[graft] def storedMetaCols(spark: SparkSession, dir: String,
                                     core: Set[String]): Seq[String] =
-    spark.read.option("mergeSchema", "true").parquet(dir)
-      .schema.map(_.name).filterNot(core.contains)
+    read(spark, dir, mergeSchema = true).schema.map(_.name).filterNot(core.contains)
 
   /** Validates + derives the effective metadata columns for an append:
     * the STORE's metadata set wins; the incoming batch must carry every
@@ -417,6 +589,7 @@ object Store {
         }
       }
       dropStoreCommits(spark, path)
+      Cache.drop(f.makeQualified(root).toString)
     } else dropDir(spark, stage)
   }
 
@@ -467,7 +640,7 @@ object Store {
     val live = committedKinds(spark, path)
     kinds.filter(live).foreach { kind =>
       val rewritten = Tombstones.mask(
-        spark.read.option("mergeSchema", "true").parquet(liveDir(spark, path, kind)),
+        read(spark, liveDir(spark, path, kind), mergeSchema = true),
         tomb, idCol)
         .repartition(col(partitionCol))
       // sort by (partitionCol, sortCols...): the partition-column prefix
@@ -500,7 +673,7 @@ object Store {
   private[graft] def deleteWhere(spark: SparkSession, path: String, kind: String,
                                  idCol: String, pred: Column, what: String): Unit =
     Lease.withLease(spark, path, what) {
-      val ids = Tombstones.mask(spark.read.parquet(liveDir(spark, path, kind)),
+      val ids = Tombstones.mask(read(spark, liveDir(spark, path, kind)),
         Tombstones.readAll(spark, path), idCol)
         .where(pred).select(idCol).distinct()
       Tombstones.write(spark, path, ids, idCol)
@@ -520,7 +693,7 @@ object Store {
                                  idCol: String, versions: Boolean,
                                  storedName: String): DataFrame = {
     import spark.implicits._
-    val live = spark.read.parquet(liveDir(spark, path, kind))
+    val live = read(spark, liveDir(spark, path, kind))
     val insSeq =
       if (live.columns.contains("ins_seq")) coalesce(col("ins_seq"), lit(0L))
       else lit(0L)

@@ -158,7 +158,7 @@ private[graft] object Tombstones {
     Store.listParquet(spark, tombDir(path).toString)
 
   def readFiles(spark: SparkSession, files: Seq[String]): Option[DataFrame] =
-    if (files.isEmpty) None else Some(spark.read.parquet(files: _*))
+    if (files.isEmpty) None else Some(Store.readFiles(spark, files))
 
   /** Every live tombstone of the store, or None when there are none
     * (the overwhelmingly common case — the serve paths skip the

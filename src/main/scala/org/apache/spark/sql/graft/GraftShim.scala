@@ -1,11 +1,21 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.errors.QueryExecutionErrors
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Column ↔ catalyst Expression bridge. Spark 4 made these conversions
   * `private[sql]` (ExpressionUtils in columnNodeSupport.scala), so
@@ -42,4 +52,68 @@ object GraftShim {
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  private def classicOf(spark: SparkSession): org.apache.spark.sql.classic.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+
+  /** A parquet relation over a listing the caller already holds: `leaves`
+    * maps each of the qualified `roots` to its leaf data files, handed to
+    * the file index as its listing cache, and `dataSchema` is the file
+    * schema. The relation is the one `spark.read.parquet(roots)` resolves
+    * to (the same index class, partition inference from the leaf paths,
+    * a nullable data schema), minus the work that read does before it
+    * plans: no partition-discovery job past the parallel-listing
+    * threshold and no schema-inference job.
+    */
+  def parquetScan(spark: SparkSession, roots: Seq[Path],
+                  leaves: Map[Path, Array[FileStatus]], dataSchema: StructType,
+                  options: Map[String, String]): DataFrame = {
+    val session = classicOf(spark)
+    val listed = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = leaves.get(path)
+      override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(session, roots, options, None, listed)
+    val parts = index.partitionSchema
+    val resolver = session.sessionState.conf.resolver
+    val data = StructType(dataSchema.asNullable.filterNot(f =>
+      parts.exists(p => resolver(p.name, f.name))))
+    session.baseRelationToDataFrame(
+      HadoopFsRelation(index, parts, data, None, new ParquetFileFormat, options)(session))
+  }
+
+  /** The Spark schema of one parquet file, from its footer, read on the
+    * driver — what schema inference computes for that file.
+    */
+  def parquetFileSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
+      new ParquetToSparkSchemaConverter(classicOf(spark).sessionState.conf))
+  }
+
+  /** `mergeSchema`'s union of file schemas, merged in the given order. */
+  def mergeSchemas(schemas: Seq[StructType]): StructType = schemas.reduceLeft(_ merge _)
+
+  /** Every row of the parquet `files` (all of schema `schema`), read on
+    * the driver by Spark's own parquet reader — for the one-row marker
+    * and stats tables and the quantizers, which a job would read no
+    * faster.
+    */
+  def readParquetRows(spark: SparkSession, schema: StructType,
+                      files: Seq[FileStatus]): Array[Row] = {
+    val session = classicOf(spark)
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(session, schema,
+      new StructType(), schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      session.sessionState.newHadoopConf())
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    files.flatMap { f =>
+      // the reader reuses its row: convert each before the next
+      read(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(f), 0L, f.getLen,
+        Array.empty[String], f.getModificationTime, f.getLen))
+        .map(r => toRow(r).asInstanceOf[Row]).toVector
+    }.toArray
+  }
 }

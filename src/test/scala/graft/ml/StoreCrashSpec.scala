@@ -6,15 +6,18 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** A local file system under the `crashfs` scheme that throws at the N-th
   * mutation of a store's PUBLISH step: the mutations a reader can see.
-  * Counted are a rename into a generation directory, the create or delete
-  * of a commit marker (`_SUCCESS`, `commit_v<n>`), and the delete of a
-  * generation directory directly under the store root. Mutations inside a
+  * Counted are a rename into a generation directory (the `sq_meta`
+  * marker's included), the create or delete of a commit marker
+  * (`_SUCCESS`, `commit_v<n>`), the delete of a generation directory
+  * directly under the store root, and the delete of a consumed fold
+  * sidecar file (`df_deltas/`, `doc_deltas/`). Mutations inside a
   * committer's `_temporary` tree or a `_<what>_stage` directory are
   * invisible to readers and are not counted, nor are the writer lease,
-  * the mutation counter, or the tombstone and sidecar files.
+  * the mutation counter, or the tombstone files.
   */
 final class CrashPointFs extends FilterFileSystem(new RawLocalFileSystem {
   override def getUri: java.net.URI = CrashPointFs.Uri
@@ -37,7 +40,7 @@ final class CrashPointFs extends FilterFileSystem(new RawLocalFileSystem {
   }
 
   override def delete(f: Path, recursive: Boolean): Boolean = {
-    if (visible(f) && (isMarker(f.getName) || isGeneration(f)))
+    if (visible(f) && (isMarker(f.getName) || isGeneration(f) || isSidecar(f)))
       step(s"delete $f")
     super.delete(f, recursive)
   }
@@ -47,7 +50,8 @@ object CrashPointFs {
   val Scheme = "crashfs"
   val Uri: java.net.URI = java.net.URI.create(s"$Scheme:///")
 
-  private val GenDir = "(centroids|codewords|postings|pq_codes|sq_codes|mrl_codes|terms)(_v\\d+)?".r
+  private val GenDir =
+    "(centroids|codewords|postings|pq_codes|sq_codes|mrl_codes|terms|sq_meta)(_v\\d+)?".r
 
   @volatile private var root: Option[String] = None
   @volatile private var failAt = Int.MaxValue
@@ -81,6 +85,11 @@ object CrashPointFs {
     Option(p.getParent).exists(d => root.contains(d.toUri.getPath)) &&
       GenDir.matches(p.getName)
 
+  /** A fold sidecar file of the armed store. */
+  private def isSidecar(p: Path): Boolean =
+    Option(p.getParent).exists(d => Seq("df_deltas", "doc_deltas").contains(d.getName) &&
+      Option(d.getParent).exists(r => root.contains(r.toUri.getPath)))
+
   private def inGeneration(p: Path): Boolean =
     Iterator.iterate(p)(_.getParent).takeWhile(_ != null).exists(isGeneration)
 
@@ -96,7 +105,9 @@ object CrashPointFs {
   * Pillai et al., OSDI 2014): for every N, a mutator killed at the N-th
   * publish mutation leaves a store whose fresh serve is bit-equal to the
   * pre-state or the post-state, and the next call of the same mutator
-  * recovers to the post-state.
+  * recovers to the post-state. Each crashed store is served once before
+  * the mutator runs, so the serves after the crash read through a warm
+  * metadata cache ([[Store]]).
   */
 class StoreCrashSpec extends SparkSpec {
   import spark.implicits._
@@ -140,6 +151,9 @@ class StoreCrashSpec extends SparkSpec {
     val post = serve(clean)
     (1 to points).foreach { n =>
       val store = copyOf(template, tag)
+      // serve once first: the serve after the crash runs warm, on
+      // whatever metadata the store's pre-state left cached
+      assert(serve(store) == pre)
       CrashPointFs.arm(store, n)
       val crashed =
         try { mutate(store); false }
@@ -173,6 +187,19 @@ class StoreCrashSpec extends SparkSpec {
   private def lexServe(path: String): Seq[Row] =
     rows(LexIndex.bm25TopKIndexed(spark, path, docs.where(isSeed), k = 5))
 
+  /** The serve plus the frozen df and stats a fold republishes: a fold
+    * that counts a sidecar twice shows here even where the top-5 hides
+    * it.
+    */
+  private def lexFolded(path: String): Seq[Row] =
+    lexServe(path) ++
+      spark.read.parquet(LexIndex.termsDir(spark, path)).orderBy("th").collect() ++
+      spark.read.parquet(LexIndex.statsDir(spark, path)).collect()
+
+  /** The live `sq_meta` marker row. */
+  private def sqMeta(path: String): Seq[Row] =
+    spark.read.parquet(Store.liveDir(spark, path, Store.SqMetaKind)).collect().toSeq
+
   /** A lexical store with appended and deleted rows (a compaction has
     * files to fold and tombstones to consume); `folded` also compacts it
     * once before the deletes (the next compaction retires generation 0)
@@ -202,9 +229,11 @@ class StoreCrashSpec extends SparkSpec {
     assert(points > 0)
   }
 
-  test("LexIndex.foldStats: every publish crash point") {
+  test("LexIndex.foldStats: every publish crash point and consumed-sidecar delete") {
+    // the sidecar deletes come after the commit marker: a fold killed
+    // there must not count the surviving sidecars again on its next call
     val points = enumerate("fold", lexTemplate("fold", folded = false),
-      LexIndex.foldStats(spark, _), lexServe)
+      LexIndex.foldStats(spark, _), lexFolded)
     assert(points > 0)
   }
 
@@ -226,5 +255,35 @@ class StoreCrashSpec extends SparkSpec {
     val points = enumerate("rebuild", dir, Index.rebuildFrom(spark, _, emb),
       p => rows(Index.ivfSqTopKIndexed(spark, p, emb.where(isQ), k = 5)))
     assert(points > 0)
+  }
+
+  test("Index.rebuildFrom on a combined SQ+raw store: every crash point, sq_meta included") {
+    val dir = localDir("rebuildsq").resolve("store")
+    val path = crashUri(dir)
+    Index.saveIvfSq(emb.where(col("vec_id") < 36), path, nCells = 4, withRaw = true)
+    Index.appendIvfSq(spark, path, emb.where(col("vec_id") >= 36))
+    val points = enumerate("rebuildsq", dir, Index.rebuildFrom(spark, _, emb),
+      p => rows(Index.ivfSqRerankTopKIndexed(spark, p, emb.where(isQ), k = 5)) ++ sqMeta(p))
+    assert(points > 0)
+  }
+
+  test("a combined SQ rebuild aborted at its fence leaves sq_meta as it was") {
+    val dir = localDir("sqfence").resolve("store")
+    val path = dir.toString
+    Index.saveIvfSq(emb.where(col("vec_id") < 36), path, nCells = 4, withRaw = true)
+    def markerFiles: Seq[String] = {
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.iterator().asScala.map(dir.relativize(_).toString)
+        .filter(_.startsWith("sq_meta")).toSeq.sorted
+      finally walk.close()
+    }
+    val before = (markerFiles, sqMeta(path))
+    val ex = intercept[IllegalStateException] {
+      Index.rebuildFrom(spark, path, emb,
+        () => Index.delete(spark, path, Seq(1L).toDF("vec_id")))
+    }
+    assert(ex.getMessage.contains("single-writer"))
+    assert((markerFiles, sqMeta(path)) == before,
+      "a rebuild that aborted at its fence rewrote the store's sq_meta")
   }
 }
