@@ -14,7 +14,8 @@ only reads perfbench. For each workload and end-to-end metric of
 `BENCHMARK.json` it prints each side's median and quartiles and the number
 of pairs the head side won (ties count for neither), plus failed
 operations; the last line of standard output is the same summary as JSON. Every run's metrics are
-appended to `<workdir>/runs.jsonl` as they finish.
+appended to `<workdir>/runs.jsonl` as they finish, each with its result
+file's `details` (per-kind latencies) and `cpu_steal_share`.
 """
 import argparse
 import json
@@ -54,7 +55,15 @@ def run(checkout, workload, seed, seconds):
     if p.returncode != 0 or not lines:
         sys.stderr.write(p.stderr[-2000:])
         sys.exit(f"perf_ab: run in {checkout} exited with {p.returncode}")
-    return json.loads(lines[-1])
+    out = json.loads(lines[-1])
+    # the run's result file: per-kind latencies and the host's CPU steal
+    result = os.path.join(checkout, ".bench_build", "results",
+                          f"{workload}-s{seed}-t0.json")
+    with open(result) as f:
+        rec = json.load(f)
+    out["details"] = rec.get("details", {})
+    out["cpu_steal_share"] = rec.get("cpu_steal_share")
+    return out
 
 
 def quartiles(xs):

@@ -110,7 +110,7 @@ object Index {
   /** The stored centroids as (cid, cv, cn), ordered by cid. */
   private def centroidArray(spark: SparkSession, path: String)
       : Array[(Long, Array[Double], Double)] =
-    Store.table(spark, liveDir(spark, path, CentroidsKind), "centroids") { (_, rows) =>
+    Store.table(spark, liveDir(spark, path, CentroidsKind), "centroids") { rows =>
       rows.map(r => (r.getAs[Long]("cid"), r.getAs[Seq[Double]]("cv").toArray,
         r.getAs[Double]("cn"))).sortBy(_._1)
     }.getOrElse(throw new IllegalArgumentException(s"no centroids at $path"))
@@ -120,7 +120,7 @@ object Index {
     */
   private def codebook(spark: SparkSession, path: String)
       : Map[Long, Array[(Long, Array[Double])]] =
-    Store.table(spark, liveDir(spark, path, CodewordsKind), "codebook") { (_, rows) =>
+    Store.table(spark, liveDir(spark, path, CodewordsKind), "codebook") { rows =>
       rows.map(r => (r.getAs[Long]("sub"), r.getAs[Long]("code"),
           r.getAs[Seq[Double]]("cw").toArray))
         .groupBy(_._1)
@@ -148,8 +148,8 @@ object Index {
     */
   private def marker(spark: SparkSession, path: String,
                      name: String): Option[(Set[String], Row)] =
-    Store.table(spark, liveDir(spark, path, name), "marker") { (schema, rows) =>
-      (schema.fieldNames.toSet, rows.head)
+    Store.table(spark, liveDir(spark, path, name), "marker") { rows =>
+      (rows.head.schema.fieldNames.toSet, rows.head)
     }
 
   private def config(spark: SparkSession, path: String, name: String): BuildMeta =

@@ -88,7 +88,7 @@ object LexIndex {
     */
   private def statsRow(spark: SparkSession, path: String): org.apache.spark.sql.Row = {
     val dir = statsDir(spark, path)
-    Store.table(spark, dir, "stats")((_, rows) => rows.head)
+    Store.table(spark, dir, "stats")(_.head)
       .getOrElse(spark.read.parquet(dir).head()) // raises Spark's missing-path error
   }
 

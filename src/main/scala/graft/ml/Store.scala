@@ -235,12 +235,11 @@ object Store {
     val f = fs(spark, base)
     val paths = probeVals.map(v => f.makeQualified(new Path(base, s"$partitionCol=$v"))).toSeq
     val present = paths.zip(concurrently(paths)(leafFiles(f, _))).collect {
-      case (p, Some(files)) => p -> files
+      case (p, Some(files)) if files.nonEmpty => p -> files
     }
     val pruned =
       if (present.isEmpty) read(spark, dir).where(lit(false))
-      else scan(spark, present, mergeSchema = false, Map("basePath" -> dir))
-        .getOrElse(spark.read.option("basePath", dir).parquet(present.map(_._1.toString): _*))
+      else scan(spark, present, mergeSchema = false, Map("basePath" -> dir)).get
     pruned.where(col(partitionCol).isin(probeVals.toSeq: _*))
   }
 
@@ -288,8 +287,7 @@ object Store {
     * the schema Spark would infer — the first file's by path, or with
     * `mergeSchema` the union of all, merged in path order — built
     * without a job. None when there is no data file to take a schema
-    * from; the caller then lets Spark's own read raise what it always
-    * did.
+    * from.
     */
   private def scan(spark: SparkSession, listed: Seq[(Path, Array[FileStatus])],
                    mergeSchema: Boolean,
@@ -307,26 +305,26 @@ object Store {
 
   /** `spark.read.parquet(dir)` through the listed, schema-given path. */
   private[graft] def read(spark: SparkSession, dir: String,
-                          mergeSchema: Boolean = false): DataFrame = {
-    val root = new Path(dir)
-    val f = fs(spark, root)
-    val q = f.makeQualified(root)
-    leafFiles(f, q).flatMap(files => scan(spark, Seq(q -> files), mergeSchema))
-      .getOrElse((if (mergeSchema) spark.read.option("mergeSchema", "true")
-                  else spark.read).parquet(dir))
-  }
+                          mergeSchema: Boolean = false): DataFrame =
+    readRoots(spark, Seq(dir), mergeSchema)
 
   /** `spark.read.parquet(files: _*)` of listed data files (tombstones,
     * fold sidecars) through the same path.
     */
-  private[graft] def readFiles(spark: SparkSession, files: Seq[String]): DataFrame = {
-    val paths = files.map(new Path(_))
+  private[graft] def readFiles(spark: SparkSession, files: Seq[String]): DataFrame =
+    readRoots(spark, files, mergeSchema = false)
+
+  private def readRoots(spark: SparkSession, roots: Seq[String],
+                        mergeSchema: Boolean): DataFrame = {
+    val paths = roots.map(new Path(_))
     val f = fs(spark, paths.head)
     val qualified = paths.map(f.makeQualified)
-    val listed = concurrently(qualified)(p => leafFiles(f, p))
+    val listed = concurrently(qualified)(leafFiles(f, _))
+    // a missing or empty input: Spark's own read raises what it always did
     (if (listed.exists(_.isEmpty)) None
-     else scan(spark, qualified.zip(listed.map(_.get)), mergeSchema = false))
-      .getOrElse(spark.read.parquet(files: _*))
+     else scan(spark, qualified.zip(listed.map(_.get)), mergeSchema))
+      .getOrElse((if (mergeSchema) spark.read.option("mergeSchema", "true")
+                  else spark.read).parquet(roots: _*))
   }
 
   /** The driver-side metadata cache (see the object doc). */
@@ -388,11 +386,12 @@ object Store {
   }
 
   /** A small committed table at `dir` — a marker, the stats row, a
-    * quantizer — as (schema, rows), decoded by `decode` and cached under
-    * `tag` and the listing of its files; None when `dir` does not exist.
+    * quantizer — as rows (each carrying the schema), decoded by `decode`
+    * and cached under `tag` and the listing of its files; None when
+    * `dir` does not exist.
     */
   private[graft] def table[T <: AnyRef](spark: SparkSession, dir: String, tag: String)
-                                      (decode: (StructType, Array[Row]) => T): Option[T] = {
+                                      (decode: Array[Row] => T): Option[T] = {
     val root = new Path(dir)
     val f = fs(spark, root)
     val q = f.makeQualified(root)
@@ -402,7 +401,7 @@ object Store {
       Cache(Cache.Key(q.toString,
           files.map(st => s"${st.getPath.getName}:${st.getLen}"), tag)) {
         val schema = fileSchemas(spark, files.take(1)).head
-        decode(schema, GraftShim.readParquetRows(spark, schema, files))
+        decode(GraftShim.readParquetRows(spark, schema, files))
       }
     }
   }

@@ -158,7 +158,7 @@ class StoreCacheSpec extends SparkSpec {
     seen.toArray(Array.empty[(String, String, Boolean)]).toSeq
   }
 
-  private def checkBudget(what: String, budget: Int)(body: => Unit): Unit = {
+  private def checkBudget(what: String, budget: Int = Int.MaxValue)(body: => Unit): Unit = {
     val jobs = jobsOf(body)
     val listing = jobs.filter(_._1.startsWith("Listing leaf files and directories"))
     // schema inference runs outside any SQL execution, called from a read
@@ -172,9 +172,11 @@ class StoreCacheSpec extends SparkSpec {
     // 40 cells and 64 buckets: both stores have more partition
     // directories than Spark's 32-path parallel-listing threshold
     val ann = localDir("budgetann").resolve("store").toString
-    Index.saveIvfSq(emb(200), ann, nCells = 40)
+    checkBudget("saveIvfSq")(Index.saveIvfSq(emb(200), ann, nCells = 40))
     val lex = localDir("budgetlex").resolve("store").toString
-    LexIndex.saveLexical(docs(240).where(!isSeed), lex, nBuckets = 64)
+    checkBudget("saveLexical") {
+      LexIndex.saveLexical(docs(240).where(!isSeed), lex, nBuckets = 64)
+    }
     val queries = (0L until 24L).map { i =>
       (1000L + i, (0 until 8).map(d => math.cos(i * 0.91 + d * 0.37).toFloat))
     }.toDF("vec_id", "embedding")
@@ -194,5 +196,15 @@ class StoreCacheSpec extends SparkSpec {
     checkBudget("warm ivfSqTopKIndexed", 8) {
       Index.ivfSqTopKIndexed(spark, ann, queries, k = 10, nProbe = 8).collect()
     }
+    // every other store call: no metadata job either
+    checkBudget("appendLexical") {
+      LexIndex.appendLexical(spark, lex, docs(300).where(col("doc_id") >= 240))
+    }
+    checkBudget("foldStats")(LexIndex.foldStats(spark, lex))
+    checkBudget("deleteDocs")(LexIndex.deleteDocs(spark, lex, Seq(7L).toDF("doc_id")))
+    checkBudget("compactLexical")(LexIndex.compactLexical(spark, lex))
+    checkBudget("delete")(Index.delete(spark, ann, Seq(3L).toDF("vec_id")))
+    checkBudget("compact")(Index.compact(spark, ann))
+    checkBudget("rebuildFrom")(Index.rebuildFrom(spark, ann, emb(200, phase = 0.5)))
   }
 }

@@ -229,9 +229,10 @@ class StoreCrashSpec extends SparkSpec {
     assert(points > 0)
   }
 
-  test("LexIndex.foldStats: every publish crash point and consumed-sidecar delete") {
-    // the sidecar deletes come after the commit marker: a fold killed
-    // there must not count the surviving sidecars again on its next call
+  test("LexIndex.foldStats: every publish crash point") {
+    // the crash points include the consumed-sidecar deletes, which come
+    // after the commit marker: a fold killed there must not count the
+    // surviving sidecars again on its next call
     val points = enumerate("fold", lexTemplate("fold", folded = false),
       LexIndex.foldStats(spark, _), lexFolded)
     assert(points > 0)
