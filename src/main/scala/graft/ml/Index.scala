@@ -245,18 +245,14 @@ object Index {
     }
     val probes: DataFrame = ranked.select(col("vec_id").as("query_id"),
       explode(slice(col("cells"), 1, nProbe)).as("cell"))
-    /** A local query batch (a driver-side Seq) has its probe lists
-      * evaluated on the driver by Spark's own optimizer, the way it folds
-      * any projection of a local relation: the distinct cells cost no
-      * job. Any other batch collects them.
+    /** The probed cells, from the probe lists collected on the driver
+      * (nQueries × nProbe values). A local query batch (a driver-side
+      * Seq) runs no job for it: Spark's optimizer folds the projection
+      * of a local relation on the driver.
       */
-    lazy val cells: Array[Long] = {
-      val lists = ranked.select(slice(col("cells"), 1, nProbe))
-      if (lists.queryExecution.optimizedPlan
-          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-        lists.collect().flatMap(_.getSeq[Long](0)).distinct.sorted
-      else probes.select("cell").distinct().collect().map(_.getLong(0))
-    }
+    lazy val cells: Array[Long] =
+      ranked.select(slice(col("cells"), 1, nProbe)).collect()
+        .flatMap(_.getSeq[Long](0)).distinct.sorted
     lazy val qv: DataFrame = qn.select(col("vec_id").as("query_id"),
       col("v").as("qv"), col("norm").as("qnorm"))
 

@@ -30,8 +30,7 @@ import org.apache.spark.sql.functions._
   *     frequencies, FROZEN at build time.
   *   - `stats/` one row (n_docs, avgdl, n_buckets, sum_dl), frozen at
   *     build; a fold or rebuild republishes it inside the new terms
-  *     generation ([[statsDir]]). A folded terms generation also names
-  *     the sidecar files it folded in, in `_folded/` ([[foldStats]]).
+  *     generation ([[statsDir]]).
   *   - `df_deltas/`, `doc_deltas/` — the append sidecars [[foldStats]]
   *     consumes.
   * Postings and terms are versioned and published like every store kind
@@ -92,25 +91,6 @@ object LexIndex {
       .getOrElse(spark.read.parquet(dir).head()) // raises Spark's missing-path error
   }
 
-  /** The sidecar files the LIVE terms generation already folded in, by
-    * [[sidecarName]] — recorded in its `_folded/` directory (one empty
-    * file per folded sidecar) so a fold that died after its publish but
-    * before deleting them is not counted twice.
-    */
-  private def foldedSidecars(spark: SparkSession, path: String): Set[String] = {
-    val dir = new org.apache.hadoop.fs.Path(s"${termsDir(spark, path)}/_folded")
-    val f = Store.fs(spark, dir)
-    if (!f.exists(dir)) Set.empty
-    else f.listStatus(dir).map(_.getPath.getName).toSet
-  }
-
-  /** `<sidecar dir>.<part file>`: unique, since every sidecar write names
-    * its part file with the write's UUID.
-    */
-  private def sidecarName(file: String): String = {
-    val p = new org.apache.hadoop.fs.Path(file)
-    s"${p.getParent.getName}.${p.getName}"
-  }
   // per-append accounting sidecars ([[foldStats]]' inputs): df_deltas =
   // (th, df) of each appended batch, doc_deltas = (n_docs, sum_dl)
   private def dfDeltasPath(path: String) = s"$path/df_deltas"
@@ -363,15 +343,11 @@ object LexIndex {
                                midHook: () => Unit): Unit =
     Lease.withLease(spark, path, "foldStats") {
     // the consumption listing: exactly these files are folded in and
-    // exactly these are deleted by the publish. A listed file the live
-    // terms generation already folded (a fold that died between its
-    // commit marker and those deletes) is only deleted
-    val folded = foldedSidecars(spark, path)
-    def listed(dir: String) =
-      Store.listParquet(spark, dir).partition(f => folded(sidecarName(f)))
-    val (doneDf, dfFiles) = listed(dfDeltasPath(path))
-    val (doneDoc, docFiles) = listed(docDeltasPath(path))
-    (doneDf ++ doneDoc).foreach(Store.dropDir(spark, _))
+    // exactly these are deleted by the publish (sidecars the live terms
+    // generation already consumed, left by a fold or rebuild that died
+    // between its commit marker and its deletes, are left out and deleted)
+    val dfFiles = Store.unconsumed(spark, path, TermsKind, dfDeltasPath(path))
+    val docFiles = Store.unconsumed(spark, path, TermsKind, docDeltasPath(path))
     if (dfFiles.isEmpty && docFiles.isEmpty) return // nothing to fold
     val snap = Store.snapshotStore(spark, path)
     val row = statsRow(spark, path)
@@ -415,11 +391,6 @@ object LexIndex {
       .sortWithinPartitions("bucket", "th")
       .write.mode("append").partitionBy("bucket") // append: _stats is in stage
       .parquet(staged)
-    // the record of what this generation folds in, published with it
-    val f = Store.fs(spark, new org.apache.hadoop.fs.Path(staged))
-    (dfFiles ++ docFiles).foreach { c =>
-      f.create(new org.apache.hadoop.fs.Path(s"$staged/_folded/${sidecarName(c)}")).close()
-    }
     midHook()
     // the conflict fence: a mutation since the snapshot means the fold
     // read a superseded sidecar/terms state — abort before publishing

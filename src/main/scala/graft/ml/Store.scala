@@ -18,6 +18,8 @@ import org.apache.spark.sql.functions._
   *     `_SUCCESS`, which [[isCommitted]] still reads;
   *   - `_<what>_stage/` — a mutator's output before its publish,
   *     invisible to the generation listing;
+  *   - `_consumed` inside a generation — the input files its publish
+  *     consumed ([[unconsumed]]);
   *   - `tombstones/` and `seq/` — [[Tombstones]]; `_writer_lease` —
   *     [[Lease]].
   *
@@ -45,7 +47,9 @@ import org.apache.spark.sql.functions._
   * rebuild, or a publish by another process is a miss, never a stale
   * hit. [[publish]] is the one place a committed generation changes, so
   * it is the one invalidation point: it drops the store's entries. The
-  * cache is bounded by [[CacheMaxEntries]] entries and
+  * schema a footer yields depends on the session's parquet schema
+  * settings (binaryAsString and the like), so they are part of every key
+  * too. The cache is bounded by [[CacheMaxEntries]] entries and
   * [[CacheMaxBytes]] of estimated size, least recently used first out;
   * an entry larger than the byte bound is read but not kept.
   */
@@ -75,6 +79,12 @@ object Store {
 
   private val CommitPrefix = "commit_v"
 
+  /** The record, inside every generation a publish creates, of the input
+    * files that publish consumed: their store-relative paths, one a line
+    * ([[publish]], [[unconsumed]]).
+    */
+  private val ConsumedRecord = "_consumed"
+
   private[graft] def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -101,6 +111,38 @@ object Store {
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .map(_.getPath.toString)
   }
+
+  /** The input files under `dir` (as [[listParquet]]) the LIVE generation
+    * of `kind` has not consumed. [[publish]] deletes what it consumed
+    * only after its commit marker; a publish that died in between left
+    * those files beside a generation that already holds them, and that
+    * generation's record names them: they are deleted here instead of
+    * being returned, so no mutator folds them in twice.
+    */
+  private[graft] def unconsumed(spark: SparkSession, path: String, kind: String,
+                                dir: String): Seq[String] = {
+    val files = listParquet(spark, dir)
+    val root = new Path(path)
+    val f = fs(spark, root)
+    val record = new Path(liveDir(spark, path, kind), ConsumedRecord)
+    if (files.isEmpty || !f.exists(record)) files
+    else {
+      val in = f.open(record)
+      val done =
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSet
+        finally in.close()
+      val rootQ = f.makeQualified(root)
+      val (gone, left) = files.partition(c => done(relativeTo(rootQ, new Path(c))))
+      gone.foreach(c => f.delete(new Path(c), false))
+      left
+    }
+  }
+
+  /** `p`'s path below the store `root` (the record's form: a store read
+    * through another URI of the same file system matches it too).
+    */
+  private def relativeTo(root: Path, p: Path): String =
+    p.toUri.getPath.stripPrefix(root.toUri.getPath.stripSuffix("/") + "/")
 
   /** Version of a directory named `name` as a generation of `kind`. */
   private def versionOf(kind: String, name: String): Option[Int] =
@@ -333,9 +375,10 @@ object Store {
 
   private object Cache {
     /** `path`: the qualified entry (a table directory or a data file);
-      * `files`: its listing; `tag`: which decoding of it.
+      * `files`: its listing; `tag`: which decoding of it; `conf`: the
+      * session settings a footer's schema is derived under.
       */
-    final case class Key(path: String, files: Seq[String], tag: String)
+    final case class Key(path: String, files: Seq[String], tag: String, conf: Seq[Boolean])
     private val lru = new java.util.LinkedHashMap[Key, (AnyRef, Long)](64, 0.75f, true)
     private var bytes = 0L
 
@@ -372,12 +415,13 @@ object Store {
   }
 
   /** Each file's footer schema, cached by (path, length, mtime) — a part
-    * file is never rewritten in place. Uncached footers are read
-    * concurrently.
+    * file is never rewritten in place — and the session's schema
+    * settings. Uncached footers are read concurrently.
     */
   private def fileSchemas(spark: SparkSession, files: Seq[FileStatus]): Seq[StructType] = {
+    val conf = GraftShim.parquetSchemaSettings(spark)
     def key(st: FileStatus) = Cache.Key(st.getPath.toString,
-      Seq(st.getLen.toString, st.getModificationTime.toString), "schema")
+      Seq(st.getLen.toString, st.getModificationTime.toString), "schema", conf)
     val cached = files.map(st => Cache.get[StructType](key(st)))
     val missing = files.zip(cached).collect { case (st, None) => st }
     val read = missing.zip(concurrently(missing)(GraftShim.parquetFileSchema(spark, _))).toMap
@@ -398,8 +442,8 @@ object Store {
     leafFiles(f, q).map { found =>
       val files = found.sortBy(_.getPath.toString).toSeq
       if (files.isEmpty) { spark.read.parquet(dir); () } // raises Spark's empty-input error
-      Cache(Cache.Key(q.toString,
-          files.map(st => s"${st.getPath.getName}:${st.getLen}"), tag)) {
+      Cache(Cache.Key(q.toString, files.map(st => s"${st.getPath.getName}:${st.getLen}"),
+          tag, GraftShim.parquetSchemaSettings(spark))) {
         val schema = fileSchemas(spark, files.take(1)).head
         decode(GraftShim.readParquetRows(spark, schema, files))
       }
@@ -538,11 +582,15 @@ object Store {
     * Crash points: before the marker create, the renamed directories are
     * uncommitted and the store serves its pre-state; the next call of
     * the mutator publishes past them and retires them. After it, the
-    * store serves the post-state. `consumed` — the input files the new
-    * generations folded in (tombstones, append sidecars) — are deleted
-    * right after the marker, then every generation of a published kind
-    * older than the grace generation (the pre-publish live one, which a
-    * pre-planned serve may still read) is retired.
+    * store serves the post-state. `consumed` — the input files or
+    * directories the new generations folded in (tombstones, append
+    * sidecars) — are deleted right after the marker, then every
+    * generation of a published kind older than the grace generation (the
+    * pre-publish live one, which a pre-planned serve may still read) is
+    * retired. Each new generation records the data files `consumed`
+    * named (`_consumed`, written before the renames), so a publish that
+    * died among those deletes cannot have its leftovers consumed again:
+    * [[unconsumed]] skips and deletes what the live generation records.
     *
     * `recheck = Some((snap, stampSeq))` re-verifies the conflict fence
     * after the renames, IMMEDIATELY before the marker create (renames take
@@ -566,8 +614,15 @@ object Store {
           scala.util.Try(name.stripPrefix(CommitPrefix).toInt).toOption
         else versionOfAny(name)
       }.foldLeft(0)(math.max)
+      val rootQ = f.makeQualified(root)
+      val record = consumed.flatMap(c => leafFiles(f, f.makeQualified(new Path(c))).toSeq.flatten)
+        .map(st => relativeTo(rootQ, st.getPath))
       kinds.foreach { k =>
         f.delete(new Path(s"$stage/$k/_SUCCESS"), false)
+        if (record.nonEmpty) {
+          val out = f.create(new Path(s"$stage/$k/$ConsumedRecord"), true)
+          try out.write(record.mkString("\n").getBytes("UTF-8")) finally out.close()
+        }
         require(f.rename(new Path(s"$stage/$k"), new Path(s"$path/${k}_v$n")),
           s"$what publish: rename of $k into generation v$n failed at $path")
       }

@@ -94,6 +94,17 @@ object GraftShim {
       new ParquetToSparkSchemaConverter(classicOf(spark).sessionState.conf))
   }
 
+  /** The session settings [[parquetFileSchema]]'s conversion reads: the
+    * same footer may yield a different schema where any of them differs.
+    */
+  def parquetSchemaSettings(spark: SparkSession): Seq[Boolean] = {
+    val c = classicOf(spark).sessionState.conf
+    Seq(c.isParquetBinaryAsString, c.isParquetINT96AsTimestamp, c.caseSensitiveAnalysis,
+      c.parquetInferTimestampNTZEnabled, c.legacyParquetNanosAsLong,
+      c.parquetFieldIdReadEnabled, c.parquetIgnoreVariantAnnotation,
+      c.parquetReaderRespectUnknownTypeAnnotation)
+  }
+
   /** `mergeSchema`'s union of file schemas, merged in the given order. */
   def mergeSchemas(schemas: Seq[StructType]): StructType = schemas.reduceLeft(_ merge _)
 

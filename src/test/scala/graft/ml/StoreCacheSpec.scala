@@ -135,6 +135,28 @@ class StoreCacheSpec extends SparkSpec {
     }
   }
 
+  test("a cached footer schema follows the reading session's schema settings") {
+    // a file written without Spark's schema metadata: its Spark schema
+    // is derived from the parquet types, under the session's settings
+    val dir = localDir("binary").resolve("table")
+    java.nio.file.Files.createDirectories(dir)
+    val parquetType = org.apache.parquet.schema.MessageTypeParser
+      .parseMessageType("message t { required int64 id; required binary b; }")
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(dir.resolve("part-0.parquet").toString),
+        spark.sparkContext.hadoopConfiguration))
+      .withType(parquetType).build()
+    try writer.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(parquetType)
+      .newGroup().append("id", 1L).append("b", "hi"))
+    finally writer.close()
+    assert(Store.read(spark, dir.toString).schema("b").dataType == org.apache.spark.sql.types.BinaryType)
+    val other = spark.newSession()
+    other.conf.set("spark.sql.parquet.binaryAsString", "true")
+    assert(Store.read(other, dir.toString).schema == other.read.parquet(dir.toString).schema)
+    assert(Store.read(other, dir.toString).schema("b").dataType == org.apache.spark.sql.types.StringType)
+  }
+
   /** Jobs started while `body` runs, as (description, stage name,
     * inside a SQL execution), after the listener bus has drained.
     */

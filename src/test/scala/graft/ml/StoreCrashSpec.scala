@@ -13,8 +13,8 @@ import scala.jdk.CollectionConverters._
   * Counted are a rename into a generation directory (the `sq_meta`
   * marker's included), the create or delete of a commit marker
   * (`_SUCCESS`, `commit_v<n>`), the delete of a generation directory
-  * directly under the store root, and the delete of a consumed fold
-  * sidecar file (`df_deltas/`, `doc_deltas/`). Mutations inside a
+  * directly under the store root, and the delete of a consumed append
+  * sidecar (`df_deltas/`, `doc_deltas/` or a file in them). Mutations inside a
   * committer's `_temporary` tree or a `_<what>_stage` directory are
   * invisible to readers and are not counted, nor are the writer lease,
   * the mutation counter, or the tombstone files.
@@ -85,10 +85,12 @@ object CrashPointFs {
     Option(p.getParent).exists(d => root.contains(d.toUri.getPath)) &&
       GenDir.matches(p.getName)
 
-  /** A fold sidecar file of the armed store. */
-  private def isSidecar(p: Path): Boolean =
-    Option(p.getParent).exists(d => Seq("df_deltas", "doc_deltas").contains(d.getName) &&
-      Option(d.getParent).exists(r => root.contains(r.toUri.getPath)))
+  /** An append sidecar directory of the armed store, or a file in one. */
+  private def isSidecar(p: Path): Boolean = {
+    def isDir(d: Path) = Seq("df_deltas", "doc_deltas").contains(d.getName) &&
+      Option(d.getParent).exists(r => root.contains(r.toUri.getPath))
+    isDir(p) || Option(p.getParent).exists(isDir)
+  }
 
   private def inGeneration(p: Path): Boolean =
     Iterator.iterate(p)(_.getParent).takeWhile(_ != null).exists(isGeneration)
@@ -138,11 +140,13 @@ class StoreCrashSpec extends SparkSpec {
     df.orderBy("query_id", "rank").collect().toSeq
 
   /** Kill `mutate` at each publish mutation in turn; returns how many
-    * crash points it exercised.
+    * crash points it exercised. Where a crash left the post-state, each
+    * of `followUps` must keep it.
     */
   private def enumerate(tag: String, template: java.nio.file.Path,
                         mutate: String => Unit,
-                        serve: String => Seq[Row]): Int = {
+                        serve: String => Seq[Row],
+                        followUps: Seq[String => Unit] = Nil): Int = {
     val pre = serve(crashUri(template))
     val clean = copyOf(template, tag)
     CrashPointFs.arm(clean)
@@ -164,6 +168,11 @@ class StoreCrashSpec extends SparkSpec {
       assert(seen == pre || seen == post,
         s"$tag: a crash at publish mutation #$n left a store that serves " +
           "neither the pre- nor the post-state")
+      if (seen == post) followUps.foreach { call =>
+        call(store)
+        assert(serve(store) == post,
+          s"$tag: after a crash at publish mutation #$n, a later call changed the post-state")
+      }
       mutate(store)
       assert(serve(store) == post,
         s"$tag: the call after a crash at publish mutation #$n did not recover")
@@ -235,6 +244,16 @@ class StoreCrashSpec extends SparkSpec {
     // surviving sidecars again on its next call
     val points = enumerate("fold", lexTemplate("fold", folded = false),
       LexIndex.foldStats(spark, _), lexFolded)
+    assert(points > 0)
+  }
+
+  test("LexIndex.rebuildLexical: every publish crash point, each followed by foldStats") {
+    // the rebuild consumes the append sidecars after its commit marker: a
+    // rebuild killed among those deletes must leave nothing the next fold
+    // counts again
+    val points = enumerate("rebuildfold", lexTemplate("rebuildfold", folded = false),
+      p => LexIndex.rebuildLexical(docs.where(!isSeed), p, nBuckets = 4), lexFolded,
+      followUps = Seq(LexIndex.foldStats(spark, _)))
     assert(points > 0)
   }
 
