@@ -5,6 +5,7 @@ import graft.trend.{MannKendall, SeriesTransforms}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.reflect.runtime.universe.TypeTag
 
 /** Structured-Streaming variant of the trend pipeline (SURVEY.md §2.7,
   * build-plan module 10). The reference's models are point-by-point by
@@ -17,9 +18,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    rows, which never straddle a bin), and densify/zero-trim are
   *    meaningless over an unbounded stream — untouched bins simply never
   *    materialize;
-  *  - the analyze scan ⇒ `flatMapGroupsWithState` keyed by counter, whose
-  *    state is exactly the reference model's mutable members (Poisson lc:
-  *    the previous bin's count, models.py:274-282).
+  *  - the analyze scan ⇒ one keyed-state scorer (`flatMapGroupsWithState`
+  *    keyed by counter) shared by every model; each model is a zero state
+  *    plus a per-bin step, and its state is exactly the reference model's
+  *    mutable members (Poisson lc: the previous bin's count,
+  *    models.py:274-282).
   *
   * The two stages are separate streaming jobs composed through a sink
   * (parquet/Kafka/memory), mirroring the reference's stage files — Spark
@@ -27,10 +30,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * aggregation in one query, and the checkpoint boundary is where the
   * reference's CSV handoff sat anyway.
   *
-  * Scale: both stages shuffle once on `counter`; state per key is O(1)
-  * (one double) for the scorer and one window aggregate per open bin for
-  * rebin, bounded by watermark slack × counters, independent of event
-  * volume.
+  * Scale: both stages shuffle once on `counter`. Rebin state is one window
+  * aggregate per open bin, bounded by watermark slack × counters. Scorer
+  * state per counter: O(1) for lc (the previous count); O(period keys)
+  * for cycle (e.g. 24 for hour-of-day); O(avgWindow + regWindow) for
+  * linReg (O(avgWindow) when expanding); O(referenceLength) for WDT;
+  * O(windowSize) for windowed MK, and the series so far (bounded by grid
+  * bins) for expanding MK. None grows with event volume.
   */
 object StreamingTrend {
 
@@ -38,18 +44,21 @@ object StreamingTrend {
                           duration_sec: Double, count: Double)
   final case class Scored(counter: String, ts: java.sql.Timestamp,
                           count: Double, eta: Double)
+  /** What every scorer state holds: epoch micros of the latest bin folded in. */
+  sealed trait ScorerState { def lastTsUs: Long }
   /** Scorer state: epoch micros + count of the latest bin folded in. */
-  final case class LcState(lastTsUs: Long, lastCount: Double)
+  final case class LcState(lastTsUs: Long, lastCount: Double) extends ScorerState
   /** Cycle-mode state: per period-key running (num, denom) accumulators —
     * exactly the reference's periodic_data dict (models.py:284-298); size
     * bounded by the period-key cardinality (e.g. 24 for hour-of-day).
     */
-  final case class CycleState(lastTsUs: Long, keys: Map[String, (Double, Long)])
+  final case class CycleState(lastTsUs: Long, keys: Map[String, (Double, Long)]) extends ScorerState
   /** Count-buffer state for MK / WDT: the trailing window (bounded when a
     * window/reference length applies; otherwise the series so far, which
     * is bounded by grid bins, not event volume).
     */
   final case class BufState(lastTsUs: Long, counts: List[Double], runsum: Double)
+      extends ScorerState
 
   private val unitSeconds = Map(
     "minutes" -> 60L, "hours" -> 3600L, "days" -> 86400L, "weeks" -> 604800L)
@@ -171,8 +180,7 @@ object StreamingTrend {
     def emit(counter: String, originUs: Long, idx: Long, accum: Double): Binned =
       Binned(counter, new java.sql.Timestamp((originUs + idx * coarseUs) / 1000L),
         binSecOut, Rounding.stableIntTruncScalar(accum))
-    binned.selectExpr("counter", "ts", "CAST(duration_sec AS DOUBLE) AS duration_sec",
-        "CAST(count AS DOUBLE) AS count").as[Binned]
+    binnedRows(binned)
       .withWatermark("ts", slack)
       .groupByKey(_.counter)
       .flatMapGroupsWithState[CoarseState, Binned](
@@ -217,30 +225,34 @@ object StreamingTrend {
       }
   }
 
-  /** Stateful point-by-point Poisson-lc scorer over a stream of finalized
-    * bins. Out-of-order bins older than the folded state are dropped (the
-    * upstream watermark makes them impossible in the composed pipeline).
-    */
-  def poissonLcStream(binned: DataFrame, alpha: Double = 0.99): Dataset[Scored] = {
-    val spark = binned.sparkSession
-    import spark.implicits._
+  /** The typed view of a finalized bin stream, every stateful stage's input. */
+  private def binnedRows(binned: DataFrame): Dataset[Binned] = {
+    import binned.sparkSession.implicits._
     binned.selectExpr("counter", "ts", "CAST(duration_sec AS DOUBLE) AS duration_sec",
-        "CAST(count AS DOUBLE) AS count").as[Binned]
+      "CAST(count AS DOUBLE) AS count").as[Binned]
+  }
+
+  private def tsUs(b: Binned): Long = b.ts.getTime * 1000L
+
+  /** The one keyed-state operator behind every scorer: per counter, the
+    * micro-batch's bins in ts order, minus those not after the state's
+    * `lastTsUs` (replays and out-of-order bins; the upstream watermark
+    * makes them impossible in the composed pipeline), each folded into
+    * the state by `step`, which also returns the bin's raw eta.
+    */
+  private def scorer[S <: ScorerState with Product : TypeTag](binned: DataFrame, zero: S)(
+      step: (S, Binned) => (S, Double)): Dataset[Scored] = {
+    import binned.sparkSession.implicits._
+    binnedRows(binned)
       .groupByKey(_.counter)
-      .flatMapGroupsWithState[LcState, Scored](OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (counter, rows, state: GroupState[LcState]) =>
-          var st = state.getOption.getOrElse(LcState(Long.MinValue, -1.0))
+      .flatMapGroupsWithState[S, Scored](OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (counter, rows, state: GroupState[S]) =>
+          var st = state.getOption.getOrElse(zero)
           val out = rows.toArray.sortBy(_.ts.getTime).iterator
-            .filter(_.ts.getTime * 1000L > st.lastTsUs)
+            .filter(tsUs(_) > st.lastTsUs)
             .map { b =>
-              val mean = st.lastCount
-              val eta =
-                if (mean <= 0.0) 0.0 // no previous bin, or zero mean (models.py:306)
-                else {
-                  val w = PoissonCi.width(alpha, mean)
-                  if (w == 0.0) 0.0 else math.abs(b.count - mean) / w
-                }
-              st = LcState(b.ts.getTime * 1000L, b.count)
+              val (next, eta) = step(st, b)
+              st = next
               Scored(counter, b.ts, b.count, Rounding.trim2Scalar(eta))
             }.toVector
           state.update(st)
@@ -248,33 +260,33 @@ object StreamingTrend {
       }
   }
 
-  /** Generic buffer-state scorer: folds each finalized bin into the
-    * per-counter count buffer (trimmed to `keep` when bounded) and scores
-    * it with `etaOf(buffer, runsum)`.
+  /** Poisson eta |c − ν| / CI width; 0 for a zero mean or width (models.py:306,331-340). */
+  private def poissonEta(alpha: Double, count: Double, mean: Double): Double = {
+    val w = if (mean <= 0.0) 0.0 else PoissonCi.width(alpha, mean)
+    if (w == 0.0) 0.0 else math.abs(count - mean) / w
+  }
+
+  /** Stateful point-by-point Poisson-lc scorer over a stream of finalized
+    * bins: the background mean is the previous bin's count (none before
+    * the first bin, which scores 0).
+    */
+  def poissonLcStream(binned: DataFrame, alpha: Double = 0.99): Dataset[Scored] =
+    scorer(binned, LcState(Long.MinValue, -1.0)) { (st, b) =>
+      (LcState(tsUs(b), b.count), poissonEta(alpha, b.count, st.lastCount))
+    }
+
+  /** Buffer-state scorer: folds each finalized bin into the per-counter
+    * count buffer (trimmed to `keep` when bounded) and scores it with
+    * `etaOf(buffer, runsum)`.
     */
   private def bufferedScorer(binned: DataFrame, keep: Option[Int])(
-      etaOf: (List[Double], Double) => Double): Dataset[Scored] = {
-    val spark = binned.sparkSession
-    import spark.implicits._
-    binned.selectExpr("counter", "ts", "CAST(duration_sec AS DOUBLE) AS duration_sec",
-        "CAST(count AS DOUBLE) AS count").as[Binned]
-      .groupByKey(_.counter)
-      .flatMapGroupsWithState[BufState, Scored](OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (counter, rows, state: GroupState[BufState]) =>
-          var st = state.getOption.getOrElse(BufState(Long.MinValue, Nil, 0.0))
-          val out = rows.toArray.sortBy(_.ts.getTime).iterator
-            .filter(_.ts.getTime * 1000L > st.lastTsUs)
-            .map { b =>
-              val grown = st.counts :+ b.count
-              val kept = keep.fold(grown)(k => grown.takeRight(k))
-              st = BufState(b.ts.getTime * 1000L, kept, st.runsum + b.count)
-              Scored(counter, b.ts, b.count,
-                Rounding.trim2Scalar(etaOf(kept, st.runsum)))
-            }.toVector
-          state.update(st)
-          out.iterator
-      }
-  }
+      etaOf: (List[Double], Double) => Double): Dataset[Scored] =
+    scorer(binned, BufState(Long.MinValue, Nil, 0.0)) { (st, b) =>
+      val grown = st.counts :+ b.count
+      val kept = keep.fold(grown)(k => grown.takeRight(k))
+      val runsum = st.runsum + b.count
+      (BufState(tsUs(b), kept, runsum), etaOf(kept, runsum))
+    }
 
   /** Stateful Mann-Kendall scorer: z over the (windowed) count history at
     * every bin. State is the trailing `windowSize` counts when given,
@@ -309,81 +321,54 @@ object StreamingTrend {
   final case class LinRegState(lastTsUs: Long, rn: Long,
                                recent: List[Double], avgBuf: List[Double],
                                n: Long, xAvg: Double, yAvg: Double,
-                               ck: Double, xM2: Double, ySum: Double)
+                               ck: Double, xM2: Double, ySum: Double) extends ScorerState
+
+  /** One (x, y) point into the regression accumulators, in the update
+    * order of Spark's Covariance / CentralMomentAgg / Average.
+    */
+  private def regAdd(a: LinRegState, x: Double, y: Double): LinRegState = {
+    val n = a.n + 1
+    val dx = x - a.xAvg
+    val dy = y - a.yAvg
+    val xAvg = a.xAvg + dx / n
+    val yAvg = a.yAvg + dy / n
+    a.copy(n = n, xAvg = xAvg, yAvg = yAvg, ck = a.ck + dx * (y - yAvg),
+      xM2 = a.xM2 + dx * (x - xAvg), ySum = a.ySum + y)
+  }
 
   /** Stateful linear-regression scorer, bit-identical to the batch
-    * `Models.linReg`: the accumulators replicate Spark's Covariance /
-    * CentralMomentAgg / Average update order over rows in ts order, so
-    * expanding-frame results match exactly; bounded regression windows
-    * recompute over the buffer in frame order like a sliding
-    * WindowFunctionFrame does.
+    * `Models.linReg`: the accumulators replicate Spark's update order over
+    * rows in ts order. The expanding frame adds each row once; a bounded
+    * regression window re-adds the buffer in frame order from zero, like
+    * a sliding WindowFunctionFrame does.
     */
   def linRegStream(binned: DataFrame, minPoints: Int, avgWindow: Int = 1,
                    regWindow: Option[Int] = None,
                    normByMean: Boolean = false): Dataset[Scored] = {
-    val spark = binned.sparkSession
-    import spark.implicits._
-    binned.selectExpr("counter", "ts", "CAST(duration_sec AS DOUBLE) AS duration_sec",
-        "CAST(count AS DOUBLE) AS count").as[Binned]
-      .groupByKey(_.counter)
-      .flatMapGroupsWithState[LinRegState, Scored](OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (counter, rows, state: GroupState[LinRegState]) =>
-          var st = state.getOption.getOrElse(
-            LinRegState(Long.MinValue, 0L, Nil, Nil, 0L, 0.0, 0.0, 0.0, 0.0, 0.0))
-          val out = rows.toArray.sortBy(_.ts.getTime).iterator
-            .filter(_.ts.getTime * 1000L > st.lastTsUs)
-            .map { b =>
-              val rn = st.rn + 1
-              val recent = (st.recent :+ b.count).takeRight(avgWindow)
-              // Average agg over the trailing frame: ordered sum, then /count
-              val averaged =
-                if (rn >= avgWindow) recent.foldLeft(0.0)(_ + _) / avgWindow.toDouble
-                else 0.0
-              val x = rn.toDouble
-              val (slope, meanY, st2) = regWindow match {
-                case None =>
-                  // expanding frame: one Welford/co-moment step per row
-                  val n2 = st.n + 1
-                  val dx = x - st.xAvg
-                  val dxN = dx / n2
-                  val dy = averaged - st.yAvg
-                  val dyN = dy / n2
-                  val xAvg2 = st.xAvg + dxN
-                  val yAvg2 = st.yAvg + dyN
-                  val ck2 = st.ck + dx * (averaged - yAvg2)
-                  val xM22 = st.xM2 + dx * (x - xAvg2)
-                  val ySum2 = st.ySum + averaged
-                  val sl = (ck2 / n2) / (xM22 / n2)
-                  (sl, ySum2 / n2, st.copy(n = n2, xAvg = xAvg2, yAvg = yAvg2,
-                    ck = ck2, xM2 = xM22, ySum = ySum2))
-                case Some(w) =>
-                  // sliding frame: recompute over the buffer in frame order
-                  val buf = (st.avgBuf :+ averaged).takeRight(w)
-                  var (n2, xa, ya, ck2, m2, ys) = (0L, 0.0, 0.0, 0.0, 0.0, 0.0)
-                  var xi = x - buf.length + 1
-                  buf.foreach { y =>
-                    n2 += 1
-                    val dx = xi - xa
-                    val dy = y - ya
-                    xa += dx / n2
-                    ya += dy / n2
-                    ck2 += dx * (y - ya)
-                    m2 += dx * (xi - xa)
-                    ys += y
-                    xi += 1
-                  }
-                  ((ck2 / n2) / (m2 / n2), ys / n2, st.copy(avgBuf = buf))
-              }
-              val slopeNormed = if (normByMean) slope / meanY else slope
-              val eta =
-                if (rn >= minPoints && math.abs(slopeNormed) >= 1e-12) slopeNormed
-                else 0.0
-              st = st2.copy(lastTsUs = b.ts.getTime * 1000L, rn = rn, recent = recent)
-              Scored(counter, b.ts, b.count, Rounding.trim2Scalar(eta))
-            }.toVector
-          state.update(st)
-          out.iterator
+    val zero = LinRegState(Long.MinValue, 0L, Nil, Nil, 0L, 0.0, 0.0, 0.0, 0.0, 0.0)
+    scorer(binned, zero) { (st, b) =>
+      val rn = st.rn + 1
+      val recent = (st.recent :+ b.count).takeRight(avgWindow)
+      // Average agg over the trailing frame: ordered sum, then /count
+      val averaged =
+        if (rn >= avgWindow) recent.foldLeft(0.0)(_ + _) / avgWindow.toDouble
+        else 0.0
+      val x = rn.toDouble
+      val (acc, next) = regWindow match {
+        case None => val a = regAdd(st, x, averaged); (a, a)
+        case Some(w) =>
+          val buf = (st.avgBuf :+ averaged).takeRight(w)
+          val fromZero = buf.foldLeft((zero, x - buf.length + 1)) {
+            case ((a, xi), y) => (regAdd(a, xi, y), xi + 1) }
+          (fromZero._1, st.copy(avgBuf = buf))
       }
+      val slope = (acc.ck / acc.n) / (acc.xM2 / acc.n)
+      val slopeNormed = if (normByMean) slope / (acc.ySum / acc.n) else slope
+      val eta =
+        if (rn >= minPoints && math.abs(slopeNormed) >= 1e-12) slopeNormed
+        else 0.0
+      (next.copy(lastTsUs = tsUs(b), rn = rn, recent = recent), eta)
+    }
   }
 
   /** Stateful cycle-mode Poisson scorer: the background mean is the
@@ -395,9 +380,7 @@ object StreamingTrend {
     */
   def poissonCycleStream(binned: DataFrame, alpha: Double = 0.99,
                          periodList: Seq[String] = Seq("hour")): Dataset[Scored] = {
-    val spark = binned.sparkSession
-    import spark.implicits._
-    val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
+    val zone = java.time.ZoneId.of(binned.sparkSession.sessionState.conf.sessionLocalTimeZone)
     def pkey(ts: java.sql.Timestamp): String = {
       val t = ts.toInstant.atZone(zone)
       periodList.map {
@@ -412,30 +395,11 @@ object StreamingTrend {
         case p => throw new IllegalArgumentException(s"unsupported period attr $p")
       }.mkString(":")
     }
-    binned.selectExpr("counter", "ts", "CAST(duration_sec AS DOUBLE) AS duration_sec",
-        "CAST(count AS DOUBLE) AS count").as[Binned]
-      .groupByKey(_.counter)
-      .flatMapGroupsWithState[CycleState, Scored](OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (counter, rows, state: GroupState[CycleState]) =>
-          var st = state.getOption.getOrElse(CycleState(Long.MinValue, Map.empty))
-          val out = rows.toArray.sortBy(_.ts.getTime).iterator
-            .filter(_.ts.getTime * 1000L > st.lastTsUs)
-            .map { b =>
-              val k = pkey(b.ts)
-              val (num, denom) = st.keys.getOrElse(k, (0.0, 0L))
-              val (n2, d2) = (num + b.count, denom + 1)
-              st = CycleState(b.ts.getTime * 1000L, st.keys.updated(k, (n2, d2)))
-              val mean = n2 / d2
-              val eta =
-                if (mean <= 0.0) 0.0
-                else {
-                  val w = PoissonCi.width(alpha, mean)
-                  if (w == 0.0) 0.0 else math.abs(b.count - mean) / w
-                }
-              Scored(counter, b.ts, b.count, Rounding.trim2Scalar(eta))
-            }.toVector
-          state.update(st)
-          out.iterator
-      }
+    scorer(binned, CycleState(Long.MinValue, Map.empty)) { (st, b) =>
+      val k = pkey(b.ts)
+      val (num, denom) = st.keys.getOrElse(k, (0.0, 0L))
+      val (n2, d2) = (num + b.count, denom + 1)
+      (CycleState(tsUs(b), st.keys.updated(k, (n2, d2))), poissonEta(alpha, b.count, n2 / d2))
+    }
   }
 }

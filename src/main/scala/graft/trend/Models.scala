@@ -25,20 +25,22 @@ object Models {
     df.withColumn("eta", Rounding.trim2(rawEta))
       .select("counter", "ts", "count", "eta")
 
+  // Poisson eta = sensitivity / relative-CI = |c − ν| / CI_width
+  // (models.py:331-340); null/0 mean or null/0 width → 0
+  // (models.py:306,316,338-339). Shared by the lc and cycle modes.
+  private def poissonEta(ciw: Column): Column =
+    when(col("mean").isNull || col("mean") === 0.0 || ciw.isNull || ciw === 0.0, lit(0.0))
+      .otherwise(abs(col("count") - col("mean")) / ciw)
+
   // ------------------------------------------------------------------
   // Poisson, mode "lc": background mean = previous count (models.py:274-282).
-  // eta = sensitivity / relative-CI = |c − ν| / CI_width (models.py:331-340);
-  // null/0 mean or 0 width → 0 (models.py:306,316,338-339).
   // ------------------------------------------------------------------
   def poissonLc(binned: DataFrame, alpha: Double = 0.99): DataFrame = {
     val ciw = PoissonCi.widthUdf(alpha)
     val df = binned
       .withColumn("mean", lag("count", 1).over(w))
       .withColumn("ci_w", ciw(col("mean")))
-    val eta = when(col("mean").isNull || col("mean") === 0.0 ||
-                   col("ci_w").isNull || col("ci_w") === 0.0, lit(0.0))
-      .otherwise(abs(col("count") - col("mean")) / col("ci_w"))
-    analyzed(df, eta)
+    analyzed(df, poissonEta(col("ci_w")))
   }
 
   /** Alpha-sensitivity sweep of the lc-Poisson detector — detections per
@@ -62,12 +64,8 @@ object Models {
       d.withColumn(s"ci_w_$i", PoissonCi.widthUdf(alphas(i))(col("mean")))
     }
     val branches = alphas.zipWithIndex.map { case (a, i) =>
-      val ciw = col(s"ci_w_$i")
-      val eta = when(col("mean").isNull || col("mean") === 0.0 ||
-                     ciw.isNull || ciw === 0.0, lit(0.0))
-        .otherwise(abs(col("count") - col("mean")) / ciw)
       struct(lit(math.round(a * 1000)).as("alpha_mil"),
-        Rounding.trim2(eta).as("eta"))
+        Rounding.trim2(poissonEta(col(s"ci_w_$i"))).as("eta"))
     }
     df.select(explode(array(branches: _*)).as("ae"))
       .groupBy(col("ae.alpha_mil").as("alpha_mil"))
@@ -104,10 +102,7 @@ object Models {
       .withColumn("pkey", periodKey(col("ts"), periodList))
       .withColumn("mean", sum("count").over(wp) / count(lit(1)).over(wp))
       .withColumn("ci_w", ciw(col("mean")))
-    val eta = when(col("mean") === 0.0 || col("ci_w").isNull ||
-                   col("ci_w") === 0.0, lit(0.0))
-      .otherwise(abs(col("count") - col("mean")) / col("ci_w"))
-    analyzed(df, eta)
+    analyzed(df, poissonEta(col("ci_w")))
   }
 
   // ------------------------------------------------------------------

@@ -74,19 +74,10 @@ object SeriesTransforms {
   def testChain(s: Array[Double], cfg: Config): Array[Double] =
     smoothing(logarithmicScaling(unitNormalization(addOne(s), cfg)), cfg)
 
-  /** L1 distance, reference's (mis-)named "euclidean" (models.py:232-236;
-    * the paper says squared-Euclidean, trends.tex:417-419 — code wins).
-    */
-  def l1(a: Array[Double], b: Array[Double]): Double = {
-    val n = math.min(a.length, b.length)
-    var s = 0.0
-    var i = 0
-    while (i < n) { s += math.abs(a(i) - b(i)); i += 1 }
-    s
-  }
-
-  /** min over all `len`-sized subwindows of ref of L1(sub, test)
-    * (models.py:206-211, library.py:12-19).
+  /** min over all `len`-sized subwindows of ref of the L1 distance to
+    * test — the reference's (mis-)named "euclidean" (models.py:206-211,
+    * 232-236, library.py:12-19; the paper says squared-Euclidean,
+    * trends.tex:417-419 — code wins).
     */
   def minSlidingL1(ref: Array[Double], test: Array[Double]): Double = {
     val len = test.length

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import graft.trend.{Models, Rebin}
 import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -360,5 +361,75 @@ class StreamingTrendSpec extends SparkSpec {
     val streamed = spark.table("swdt")
     assert(streamed.count() === 12)
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+  }
+
+  /** Every scorer entry point beside its batch twin over the hourly bins:
+    * (name, streaming scorer, batch output).
+    */
+  private def scorerTwins = {
+    val binned = Rebin(eventsAsRaw, "hours", 1)
+    val cfg = graft.trend.SeriesTransforms.Config(seriesLength = 3,
+      referenceLength = 5, nSmooth = 2, baselineOffset = 1, lambda = 0.1)
+    val lib = graft.trend.Wdt.buildLibrary(binned, length($"counter") === 1, cfg)
+    val libArr = graft.trend.Wdt.collectLibrary(lib)
+    Seq[(String, DataFrame => Dataset[StreamingTrend.Scored], DataFrame)](
+      ("lc", StreamingTrend.poissonLcStream(_, alpha = 0.99),
+        Models.poissonLc(binned, alpha = 0.99)),
+      ("cycle", StreamingTrend.poissonCycleStream(_, alpha = 0.99, periodList = Seq("hour")),
+        Models.poissonCycle(binned, alpha = 0.99, periodList = Seq("hour"))),
+      ("mk", StreamingTrend.mannKendallStream(_, windowSize = Some(4)),
+        graft.trend.MannKendall(binned, Some(4))),
+      ("linreg_exp", StreamingTrend.linRegStream(_, minPoints = 3, avgWindow = 2),
+        Models.linReg(binned, minPoints = 3, avgWindow = 2)),
+      ("linreg_win", StreamingTrend.linRegStream(_, minPoints = 3, avgWindow = 2,
+          regWindow = Some(5), normByMean = true),
+        Models.linReg(binned, minPoints = 3, avgWindow = 2, regWindow = Some(5),
+          normByMean = true)),
+      ("wdt", StreamingTrend.wdtStream(_, libArr, cfg), graft.trend.Wdt.score(binned, lib, cfg)))
+  }
+
+  private def assertTwin(name: String, streamed: DataFrame, batch: DataFrame): Unit = {
+    assert(streamed.count() === 12, s"$name row count")
+    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
+      s"$name differs from its batch twin")
+  }
+
+  test("every scorer drops replayed and out-of-order bins") {
+    val Seq(c1, c2, c3) = binnedChunks(3)
+    // an older bin with a count no batch row has, after newer ones
+    val stale = c1.head.copy(count = 999.0)
+    for ((name, score, batch) <- scorerTwins) {
+      val input = MemoryStream[StreamingTrend.Binned]
+      val q = score(input.toDF())
+        .writeStream.format("memory").queryName(s"sreplay_$name")
+        .outputMode("append").start()
+      try {
+        // c1 replayed in its own micro-batch, c2 duplicated within one,
+        // and the stale bin beside c3
+        Seq(c1, c1, c2 ++ c2, stale +: c3).foreach { c =>
+          input.addData(c.toSeq); q.processAllAvailable()
+        }
+      } finally q.stop()
+      assertTwin(name, spark.table(s"sreplay_$name"), batch)
+    }
+  }
+
+  test("every scorer state resumes from its checkpoint after a restart") {
+    val chunks = binnedChunks(3)
+    for ((name, score, batch) <- scorerTwins) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_srestart_$name").toString
+      val input = MemoryStream[StreamingTrend.Binned]
+      // a file sink keeps the first run's rows across the restart
+      def start() = score(input.toDF()).writeStream.format("parquet")
+        .option("path", s"$dir/out").option("checkpointLocation", s"$dir/ck")
+        .outputMode("append").start()
+      val first = start()
+      try { input.addData(chunks.head.toSeq); first.processAllAvailable() }
+      finally first.stop()
+      val second = start()
+      try chunks.tail.foreach { c => input.addData(c.toSeq); second.processAllAvailable() }
+      finally second.stop()
+      assertTwin(name, spark.read.parquet(s"$dir/out"), batch)
+    }
   }
 }
