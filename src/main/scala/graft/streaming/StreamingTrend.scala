@@ -260,7 +260,7 @@ object StreamingTrend {
       }
   }
 
-  /** Poisson eta |c − ν| / CI width; 0 for a zero mean or width (models.py:306,331-340). */
+  /** Poisson eta |c − ν| / CI width; 0 for a mean ≤ 0 or a zero width (models.py:306,331-340). */
   private def poissonEta(alpha: Double, count: Double, mean: Double): Double = {
     val w = if (mean <= 0.0) 0.0 else PoissonCi.width(alpha, mean)
     if (w == 0.0) 0.0 else math.abs(count - mean) / w
