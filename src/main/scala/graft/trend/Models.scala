@@ -131,7 +131,11 @@ object Models {
     val slope =
       covar_pop(col("rn").cast("double"), col("averaged")).over(wReg) /
         var_pop(col("rn").cast("double")).over(wReg)
-    val slopeNormed = if (normByMean) slope / avg(col("averaged")).over(wReg) else slope
+    // an all-zero window has no mean to divide by: its eta is 0, as in the
+    // stream scorer and the oracle (whose division yields NULL), instead
+    // of a DIVIDE_BY_ZERO under ANSI
+    val meanY = avg(col("averaged")).over(wReg)
+    val slopeNormed = if (normByMean) when(meanY =!= 0.0, slope / meanY) else slope
     // the slope is materialized once: a window expression repeated through
     // when() and trim2 is not deduplicated, so each copy ran in the
     // WindowExec. The rn guard stays inside — unguarded, the first rows'
