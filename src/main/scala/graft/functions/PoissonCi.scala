@@ -16,14 +16,15 @@ import org.apache.spark.sql.Column
   * the JVM and DuckDB.
   *
   * Scale note: O(μ + 40√μ) per *distinct* (alpha, mean), and computed
-  * once per JVM: [[width]] is backed by one bounded memo shared by every
-  * [[PoissonCiWidth]] instance in every plan and by the streaming
-  * scorers' scalar calls. Means repeat (they are lagged integer counts or
-  * running averages of them), so after warm-up a row costs one map
-  * lookup. The bound clears the memo when it passes `MemoMax` entries.
-  * It covers every concurrent task and every alpha together (a
-  * `poissonLcSweep` fills four alphas at once), and a clear drops the
-  * entries other tasks are still reading. The largest measured workloads
+  * once per JVM: [[width]] is backed by one bounded memo shared by the
+  * Poisson model steps (`graft.trend.Steps`, folded by the batch models
+  * and the streaming scorers) and by every [[PoissonCiWidth]] instance
+  * (the `poisson_ci_width` SQL function). Means repeat (they are lagged
+  * integer counts or running averages of them), so after warm-up a bin
+  * costs one map lookup. The bound clears the memo when it passes
+  * `MemoMax` entries. It covers every concurrent task and every alpha
+  * together (the `poissonLcSweep` step asks for four alphas at each bin),
+  * and a clear drops the entries other tasks are still reading. The largest measured workloads
   * stay far below it: the perfbench `trend` workload (batch and stream)
   * computes 1717 distinct (alpha, μ) and the 30 `trend_*` queries at
   * sf0.1 compute 1259 over four alphas, so 65536 entries (~6 MB) never

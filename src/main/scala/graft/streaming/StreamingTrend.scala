@@ -1,7 +1,8 @@
 package graft.streaming
 
-import graft.functions.{PoissonCi, Rounding}
-import graft.trend.{MannKendall, SeriesTransforms}
+import graft.functions.Rounding
+import graft.trend.{SeriesTransforms, Steps}
+import graft.trend.Steps.{Model, ScorerState}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -19,10 +20,11 @@ import scala.reflect.runtime.universe.TypeTag
   *    meaningless over an unbounded stream — untouched bins simply never
   *    materialize;
   *  - the analyze scan ⇒ one keyed-state scorer (`flatMapGroupsWithState`
-  *    keyed by counter) shared by every model; each model is a zero state
-  *    plus a per-bin step, and its state is exactly the reference model's
-  *    mutable members (Poisson lc: the previous bin's count,
-  *    models.py:274-282).
+  *    keyed by counter) shared by every model. Each model is its
+  *    [[graft.trend.Steps]] zero state plus per-bin step — the same step
+  *    the batch model folds over a counter's sorted bins — and its state
+  *    is exactly the reference model's mutable members (Poisson lc: the
+  *    previous bin's count, models.py:274-282).
   *
   * The two stages are separate streaming jobs composed through a sink
   * (parquet/Kafka/memory), mirroring the reference's stage files — Spark
@@ -36,7 +38,17 @@ import scala.reflect.runtime.universe.TypeTag
   * for cycle (e.g. 24 for hour-of-day); O(avgWindow + regWindow) for
   * linReg (O(avgWindow) when expanding); O(referenceLength) for WDT;
   * O(windowSize) for windowed MK, and the series so far (bounded by grid
-  * bins) for expanding MK. None grows with event volume.
+  * bins) for expanding MK. None grows with event volume. Per bin, MK
+  * counts in O(log n) and copies its sorted window in O(n).
+  *
+  * Checkpoints: a scorer's state schema is its state class's fields. The
+  * lc, cycle, linReg and WDT state classes kept theirs when they moved to
+  * [[graft.trend.Steps]], so checkpoints written before the move resume.
+  * The MK state changed from the count buffer (`counts`, `runsum`) to
+  * `MkState` (S, the tie sum and the sorted window): an MK checkpoint
+  * written before that change fails at query start, in Spark's state
+  * schema check, and is never scored with the wrong state. Restart such a
+  * query on a new checkpoint.
   */
 object StreamingTrend {
 
@@ -44,22 +56,6 @@ object StreamingTrend {
                           duration_sec: Double, count: Double)
   final case class Scored(counter: String, ts: java.sql.Timestamp,
                           count: Double, eta: Double)
-  /** What every scorer state holds: epoch micros of the latest bin folded in. */
-  sealed trait ScorerState { def lastTsUs: Long }
-  /** Scorer state: epoch micros + count of the latest bin folded in. */
-  final case class LcState(lastTsUs: Long, lastCount: Double) extends ScorerState
-  /** Cycle-mode state: per period-key running (num, denom) accumulators —
-    * exactly the reference's periodic_data dict (models.py:284-298); size
-    * bounded by the period-key cardinality (e.g. 24 for hour-of-day).
-    */
-  final case class CycleState(lastTsUs: Long, keys: Map[String, (Double, Long)]) extends ScorerState
-  /** Count-buffer state for MK / WDT: the trailing window (bounded when a
-    * window/reference length applies; otherwise the series so far, which
-    * is bounded by grid bins, not event volume).
-    */
-  final case class BufState(lastTsUs: Long, counts: List[Double], runsum: Double)
-      extends ScorerState
-
   private val unitSeconds = Map(
     "minutes" -> 60L, "hours" -> 3600L, "days" -> 86400L, "weeks" -> 604800L)
 
@@ -238,20 +234,20 @@ object StreamingTrend {
     * micro-batch's bins in ts order, minus those not after the state's
     * `lastTsUs` (replays and out-of-order bins; the upstream watermark
     * makes them impossible in the composed pipeline), each folded into
-    * the state by `step`, which also returns the bin's raw eta.
+    * the state by the model's step, whose raw eta is trimmed.
     */
-  private def scorer[S <: ScorerState with Product : TypeTag](binned: DataFrame, zero: S)(
-      step: (S, Binned) => (S, Double)): Dataset[Scored] = {
+  private def scorer[S <: ScorerState with Product : TypeTag](binned: DataFrame,
+                                                              model: Model[S, Double]): Dataset[Scored] = {
     import binned.sparkSession.implicits._
     binnedRows(binned)
       .groupByKey(_.counter)
       .flatMapGroupsWithState[S, Scored](OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (counter, rows, state: GroupState[S]) =>
-          var st = state.getOption.getOrElse(zero)
+          var st = state.getOption.getOrElse(model.zero)
           val out = rows.toArray.sortBy(_.ts.getTime).iterator
             .filter(tsUs(_) > st.lastTsUs)
             .map { b =>
-              val (next, eta) = step(st, b)
+              val (next, eta) = model.step(st, tsUs(b), b.count)
               st = next
               Scored(counter, b.ts, b.count, Rounding.trim2Scalar(eta))
             }.toVector
@@ -260,146 +256,45 @@ object StreamingTrend {
       }
   }
 
-  /** Poisson eta |c − ν| / CI width; 0 for a mean ≤ 0 or a zero width (models.py:306,331-340). */
-  private def poissonEta(alpha: Double, count: Double, mean: Double): Double = {
-    val w = if (mean <= 0.0) 0.0 else PoissonCi.width(alpha, mean)
-    if (w == 0.0) 0.0 else math.abs(count - mean) / w
-  }
-
   /** Stateful point-by-point Poisson-lc scorer over a stream of finalized
     * bins: the background mean is the previous bin's count (none before
     * the first bin, which scores 0).
     */
   def poissonLcStream(binned: DataFrame, alpha: Double = 0.99): Dataset[Scored] =
-    scorer(binned, LcState(Long.MinValue, -1.0)) { (st, b) =>
-      (LcState(tsUs(b), b.count), poissonEta(alpha, b.count, st.lastCount))
-    }
+    scorer(binned, Steps.lc(alpha))
 
-  /** Buffer-state scorer: folds each finalized bin into the per-counter
-    * count buffer (trimmed to `keep` when bounded) and scores it with
-    * `etaOf(buffer, runsum)`.
-    */
-  private def bufferedScorer(binned: DataFrame, keep: Option[Int])(
-      etaOf: (List[Double], Double) => Double): Dataset[Scored] =
-    scorer(binned, BufState(Long.MinValue, Nil, 0.0)) { (st, b) =>
-      val grown = st.counts :+ b.count
-      val kept = keep.fold(grown)(k => grown.takeRight(k))
-      val runsum = st.runsum + b.count
-      (BufState(tsUs(b), kept, runsum), etaOf(kept, runsum))
-    }
-
-  /** Stateful Mann-Kendall scorer: z over the (windowed) count history at
-    * every bin. State is the trailing `windowSize` counts when given,
-    * else the whole series so far (bounded by grid bins). Per-update cost
-    * is O(|buffer|²) — the streaming analogue of the reference's
-    * per-point recompute; the batch path keeps its O(n log n) Fenwick.
+  /** Stateful Mann-Kendall scorer: z over the count history at every bin,
+    * or over the trailing `windowSize` counts when given.
     */
   def mannKendallStream(binned: DataFrame,
                         windowSize: Option[Int] = None): Dataset[Scored] =
-    bufferedScorer(binned, windowSize) { (buf, _) =>
-      MannKendall.windowZ(buf.toArray)
-    }
+    scorer(binned, Steps.mk(windowSize))
 
   /** Stateful WeightedDataTemplates scorer: the trailing referenceLength
     * counts (bounded state) scored against the broadcast library with the
     * exact batch kernel, including the warm-up gates (models.py:158-161).
     */
   def wdtStream(binned: DataFrame, library: Array[(Boolean, Array[Double])],
-                cfg: graft.trend.SeriesTransforms.Config): Dataset[Scored] = {
-    val libB = binned.sparkSession.sparkContext.broadcast(library)
-    bufferedScorer(binned, Some(cfg.referenceLength)) { (buf, runsum) =>
-      if (buf.length < cfg.referenceLength || runsum == 0.0) 0.0
-      else graft.trend.Wdt.windowEta(buf.toArray, libB.value, cfg)
-    }
-  }
-
-  /** LinReg scorer state: row counter, the trailing `avgWindow` raw
-    * counts, and either the Welford/co-moment accumulators (expanding
-    * regression) or the trailing `regWindow` averaged values (bounded
-    * regression, recomputed per row exactly like Spark's sliding frame).
-    */
-  final case class LinRegState(lastTsUs: Long, rn: Long,
-                               recent: List[Double], avgBuf: List[Double],
-                               n: Long, xAvg: Double, yAvg: Double,
-                               ck: Double, xM2: Double, ySum: Double) extends ScorerState
-
-  /** One (x, y) point into the regression accumulators, in the update
-    * order of Spark's Covariance / CentralMomentAgg / Average.
-    */
-  private def regAdd(a: LinRegState, x: Double, y: Double): LinRegState = {
-    val n = a.n + 1
-    val dx = x - a.xAvg
-    val dy = y - a.yAvg
-    val xAvg = a.xAvg + dx / n
-    val yAvg = a.yAvg + dy / n
-    a.copy(n = n, xAvg = xAvg, yAvg = yAvg, ck = a.ck + dx * (y - yAvg),
-      xM2 = a.xM2 + dx * (x - xAvg), ySum = a.ySum + y)
-  }
+                cfg: SeriesTransforms.Config): Dataset[Scored] =
+    scorer(binned, Steps.wdt(binned.sparkSession.sparkContext.broadcast(library), cfg))
 
   /** Stateful linear-regression scorer, bit-identical to the batch
-    * `Models.linReg`: the accumulators replicate Spark's update order over
-    * rows in ts order. The expanding frame adds each row once; a bounded
-    * regression window re-adds the buffer in frame order from zero, like
-    * a sliding WindowFunctionFrame does.
+    * `Models.linReg`: both fold the same step.
     */
   def linRegStream(binned: DataFrame, minPoints: Int, avgWindow: Int = 1,
                    regWindow: Option[Int] = None,
-                   normByMean: Boolean = false): Dataset[Scored] = {
-    val zero = LinRegState(Long.MinValue, 0L, Nil, Nil, 0L, 0.0, 0.0, 0.0, 0.0, 0.0)
-    scorer(binned, zero) { (st, b) =>
-      val rn = st.rn + 1
-      val recent = (st.recent :+ b.count).takeRight(avgWindow)
-      // Average agg over the trailing frame: ordered sum, then /count
-      val averaged =
-        if (rn >= avgWindow) recent.foldLeft(0.0)(_ + _) / avgWindow.toDouble
-        else 0.0
-      val x = rn.toDouble
-      val (acc, next) = regWindow match {
-        case None => val a = regAdd(st, x, averaged); (a, a)
-        case Some(w) =>
-          val buf = (st.avgBuf :+ averaged).takeRight(w)
-          val fromZero = buf.foldLeft((zero, x - buf.length + 1)) {
-            case ((a, xi), y) => (regAdd(a, xi, y), xi + 1) }
-          (fromZero._1, st.copy(avgBuf = buf))
-      }
-      val slope = (acc.ck / acc.n) / (acc.xM2 / acc.n)
-      val slopeNormed = if (normByMean) slope / (acc.ySum / acc.n) else slope
-      val eta =
-        if (rn >= minPoints && math.abs(slopeNormed) >= 1e-12) slopeNormed
-        else 0.0
-      (next.copy(lastTsUs = tsUs(b), rn = rn, recent = recent), eta)
-    }
-  }
+                   normByMean: Boolean = false): Dataset[Scored] =
+    scorer(binned, Steps.linReg(minPoints, avgWindow, regWindow, normByMean))
 
   /** Stateful cycle-mode Poisson scorer: the background mean is the
     * running average of counts sharing the current bin's period key,
     * INCLUDING the current point (models.py:284-298). Period keys are
-    * evaluated in the SESSION timezone — the same zone batch
-    * `hour(ts)`/`dayofmonth(ts)` use — so streaming and batch agree in
-    * any deployment, not just UTC sessions.
+    * evaluated in the SESSION timezone, as the batch model's are, so
+    * streaming and batch agree in any deployment, not just UTC sessions.
     */
   def poissonCycleStream(binned: DataFrame, alpha: Double = 0.99,
                          periodList: Seq[String] = Seq("hour")): Dataset[Scored] = {
     val zone = java.time.ZoneId.of(binned.sparkSession.sessionState.conf.sessionLocalTimeZone)
-    def pkey(ts: java.sql.Timestamp): String = {
-      val t = ts.toInstant.atZone(zone)
-      periodList.map {
-        case "hour" => t.getHour.toString
-        case "day" => t.getDayOfMonth.toString
-        case "month" => t.getMonthValue.toString
-        case "minute" => t.getMinute.toString
-        case "second" => t.getSecond.toString
-        case "year" => t.getYear.toString
-        // Monday = 0 .. Sunday = 6, like batch Models.periodKey
-        case "weekday" => (t.getDayOfWeek.getValue - 1).toString
-        case p => throw new IllegalArgumentException(s"unsupported period attr $p")
-      }.mkString(":")
-    }
-    scorer(binned, CycleState(Long.MinValue, Map.empty)) { (st, b) =>
-      val k = pkey(b.ts)
-      val (num, denom) = st.keys.getOrElse(k, (0.0, 0L))
-      val (n2, d2) = (num + b.count, denom + 1)
-      (CycleState(tsUs(b), st.keys.updated(k, (n2, d2))), poissonEta(alpha, b.count, n2 / d2))
-    }
+    scorer(binned, Steps.cycle(alpha, periodList, zone))
   }
 }

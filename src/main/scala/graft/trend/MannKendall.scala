@@ -1,178 +1,28 @@
 package graft.trend
 
 import graft.functions.Rounding
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Mann-Kendall trend test, scored per point over the history seen so far —
   * the reference recomputes mk_test over the full count list at every
   * update (models.py:25-45, mk_test.py:14-77) and returns z only
-  * (`mk_test(x, alpha)[3]`).
+  * (`mk_test(x, alpha)[3]`). An optional window_size scores the trailing
+  * window instead (models.py:42-44).
   *
-  * Per-point, for the prefix x_1..x_n:
-  *   S      = Σ_{k<j} sign(x_j − x_k)                      (mk_test.py:41-44)
-  *   var(S) = (n(n−1)(2n+5) − Σ_g t_g(t_g−1)(2t_g+5)) / 18 (mk_test.py:46-57)
-  *   z      = (S−1)/√var  if S>0;  0 if S=0;  (S+1)/√var   (mk_test.py:59-64)
-  *
-  * The reference is O(n²) per point ⇒ O(n³) per series. Here each counter's
-  * series is processed once with a Fenwick tree over value ranks:
-  * ΔS_i = #{k<i: x_k<x_i} − #{k<i: x_k>x_i} and the tie correction updates
-  * incrementally as f(c+1)−f(c) for f(t)=t(t−1)(2t+5) — O(n log n) per
-  * series total.
-  *
-  * Distribution: groupByKey(counter) + flatMapGroups; one shuffle, state is
-  * one series (≤ grid-bin count, bounded by time range / resolution, NOT by
-  * raw data volume — safe at 100 TB of events). An optional window_size
-  * recomputes over the trailing window per point (models.py:42-44),
-  * O(n·w log w).
+  * The reference is O(n²) per point ⇒ O(n³) per series. Here the
+  * [[Steps.mk]] step carries S and the tie sum and updates them from the
+  * sorted window as each value arrives (and, windowed, as the oldest
+  * leaves), so a series costs O(n log n) comparisons. It is folded over
+  * each counter's bins in ts order, one exchange by counter; the
+  * streaming scorer folds the same step. State is one window, bounded by
+  * the grid bins, not by raw data volume.
   */
 object MannKendall {
 
-  // not `private`: Spark's encoder codegen needs public access to these
-  final case class Pt(counter: String, ts: java.sql.Timestamp, count: Double)
-  final case class Scored(counter: String, ts: java.sql.Timestamp,
-                          count: Double, z: Double)
-
-  private def fTie(t: Long): Double = t.toDouble * (t - 1) * (2 * t + 5)
-
-  private final class Fenwick(n: Int) {
-    private val a = new Array[Int](n + 1)
-    def add(i: Int, delta: Int = 1): Unit = {
-      var x = i + 1; while (x <= n) { a(x) += delta; x += x & -x }
-    }
-    /** count of inserted ranks <= i */
-    def cumLe(i: Int): Int = { var x = i + 1; var s = 0; while (x > 0) { s += a(x); x -= x & -x }; s }
-  }
-
-  private def zOf(s: Double, varS: Double): Double =
-    if (s > 0) (s - 1) / math.sqrt(varS)
-    else if (s < 0) (s + 1) / math.sqrt(varS)
-    else 0.0
-
-  /** z per prefix (expanding history) for one time-ordered value array. */
-  private[trend] def expandingZ(xs: Array[Double]): Array[Double] = {
-    val n = xs.length
-    val sorted = xs.distinct.sorted
-    val rank = sorted.zipWithIndex.toMap
-    val bit = new Fenwick(sorted.length)
-    val tieCount = scala.collection.mutable.HashMap.empty[Double, Long]
-    val out = new Array[Double](n)
-    var s = 0.0
-    var tieSum = 0.0
-    var i = 0
-    while (i < n) {
-      val r = rank(xs(i))
-      val less = if (r == 0) 0 else bit.cumLe(r - 1)
-      val leq = bit.cumLe(r)
-      val greater = i - leq
-      s += (less - greater)
-      val c = tieCount.getOrElse(xs(i), 0L)
-      tieSum += fTie(c + 1) - fTie(c)
-      tieCount.update(xs(i), c + 1)
-      bit.add(r)
-      val nn = (i + 1).toDouble
-      val varS = (nn * (nn - 1) * (2 * nn + 5) - tieSum) / 18.0
-      out(i) = if (varS <= 0) 0.0 else zOf(s, varS)
-      i += 1
-    }
-    out
-  }
-
-  /** z per point over the trailing `w` values — incremental sliding
-    * window: one Fenwick insert, one delete, and O(1) tie-sum deltas per
-    * step ⇒ O(n log n) per series, vs the O(n·w²) of recomputing every
-    * window (a real scale-killer at large window_size). All S/tie terms
-    * are exact integers in doubles, so results are bit-identical to the
-    * per-window recompute.
-    */
-  private[trend] def slidingZ(xs: Array[Double], w: Int): Array[Double] = {
-    val n = xs.length
-    val sorted = xs.distinct.sorted
-    val rank = sorted.zipWithIndex.toMap
-    val bit = new Fenwick(sorted.length)
-    val tieCount = scala.collection.mutable.HashMap.empty[Double, Long]
-    val out = new Array[Double](n)
-    var s = 0.0
-    var tieSum = 0.0
-    var i = 0
-    while (i < n) {
-      if (i >= w) { // evict the element leaving the window
-        val o = xs(i - w)
-        val r = rank(o)
-        bit.add(r, -1)
-        val c = tieCount(o)
-        tieSum += fTie(c - 1) - fTie(c)
-        tieCount.update(o, c - 1)
-        // o was the EARLIEST element: every pair it joined had it first,
-        // contributing sign(x_j - o) — count over the remaining w-1
-        val less = if (r == 0) 0 else bit.cumLe(r - 1)
-        val leq = bit.cumLe(r)
-        val greater = (w - 1) - leq
-        s -= (greater - less)
-      }
-      val r = rank(xs(i))
-      val inWindow = math.min(i, w) - (if (i >= w) 1 else 0) // size before insert
-      val less = if (r == 0) 0 else bit.cumLe(r - 1)
-      val leq = bit.cumLe(r)
-      val greater = inWindow - leq
-      s += (less - greater)
-      val c = tieCount.getOrElse(xs(i), 0L)
-      tieSum += fTie(c + 1) - fTie(c)
-      tieCount.update(xs(i), c + 1)
-      bit.add(r, 1)
-      val nn = math.min(i + 1, w).toDouble
-      val varS = (nn * (nn - 1) * (2 * nn + 5) - tieSum) / 18.0
-      out(i) = if (varS <= 0) 0.0 else zOf(s, varS)
-      i += 1
-    }
-    out
-  }
-
-  /** Naive mk z over one window (used by the streaming scorer's bounded
-    * buffers and as the test cross-check for [[slidingZ]]).
-    */
-  private[graft] def windowZ(xs: Array[Double]): Double = {
-    val n = xs.length
-    var s = 0.0
-    var k = 0
-    while (k < n - 1) {
-      var j = k + 1
-      while (j < n) { s += math.signum(xs(j) - xs(k)); j += 1 }
-      k += 1
-    }
-    val ties = xs.groupBy(identity).values.map(g => fTie(g.length.toLong)).sum
-    val varS = (n.toDouble * (n - 1) * (2 * n + 5) - ties) / 18.0
-    if (varS <= 0) 0.0 else zOf(s, varS)
-  }
-
-  /** Raw signed z per point — the shared kernel behind the model contract
-    * ([[apply]], which trims through the analyze-stage convention) and the
-    * standalone test surface ([[fullTest]], which must keep the sign).
-    * z is hash-exact across engines: S and var(S) are integers held in
-    * doubles, and sqrt/divide are correctly-rounded IEEE ops.
-    */
-  private def scoredZ(binned: DataFrame, windowSize: Option[Int]): DataFrame = {
-    val spark = binned.sparkSession
-    import spark.implicits._
-    binned.select($"counter", $"ts", $"count".cast("double").as("count"))
-      .as[Pt]
-      .groupByKey(_.counter)
-      .flatMapGroups { (counter, it) =>
-        val pts = it.toArray.sortBy(_.ts.getTime)
-        val xs = pts.map(_.count)
-        val zs = windowSize match {
-          case None => expandingZ(xs)
-          case Some(ws) => slidingZ(xs, ws)
-        }
-        pts.indices.iterator.map(i => Scored(counter, pts(i).ts, pts(i).count, zs(i)))
-      }
-      .toDF()
-  }
-
+  /** The model contract: z trimmed through the analyze-stage convention. */
   def apply(binned: DataFrame, windowSize: Option[Int] = None): DataFrame =
-    scoredZ(binned, windowSize)
-      .withColumn("eta", Rounding.trim2(col("z")))
-      .select("counter", "ts", "count", "eta")
+    Steps.analyzed(binned, Steps.mk(windowSize))
 
   /** Full standalone-test surface: `(eta, p6, trend)` per point — the
     * reference's `mk_test` returns `(trend, h, p, z)` (mk_test.py:67-75:
@@ -201,7 +51,7 @@ object MannKendall {
       k * (lit(1.781477937) + k * (lit(-1.821255978) + k * lit(1.330274429)))))
     val phi = exp(az * az * lit(-0.5)) / lit(2.5066282746310002)
     val p = least(lit(2.0) * phi * poly, lit(1.0)) // two-tail 2·(1−cdf(|z|))
-    scoredZ(binned, windowSize)
+    Steps.fold(binned, Steps.mk(windowSize)).withColumnRenamed("eta", "z")
       .withColumn("p6", round(p, 6))
       .withColumn("trend",
         when(col("p6") < alpha && col("z") < 0, "decreasing")
@@ -233,7 +83,7 @@ object MannKendall {
 
   /** DuckDB oracle: O(n²) prefix-pair formulation over
     * `rebinned(counter, ts, duration_sec, count)` → `scored(...)`. Feasible
-    * at oracle scale (sf0.01); the engine itself uses the O(n log n) path.
+    * at oracle scale (sf0.01); the engine itself updates S incrementally.
     */
   def oracleCtes: String =
     s"""mk_idx AS (
@@ -272,7 +122,7 @@ object MannKendall {
 
   /** Windowed variant (models.py:42-44: mk_test over the trailing
     * `windowSize` counts at every point). O(n·w²) pair enumeration —
-    * oracle-scale only; the engine recomputes per trailing slice.
+    * oracle-scale only; the engine slides S over the window.
     */
   def windowedOracleCtes(windowSize: Int): String = {
     val w1 = windowSize - 1

@@ -1,73 +1,45 @@
 package graft.trend
 
 import graft.functions.{PoissonCi, Rounding}
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import java.time.ZoneId
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Trend-scoring models over a rebinned series table
-  * (counter, ts, duration_sec, count). Each model emits the reference's
-  * "analyzed" shape (analysis.py:159-201): (counter, ts, count,
-  * eta) with eta trimmed to 2 significant digits when positive, else 0.
+  * (counter, ts, count[, duration_sec]). Each model emits the reference's
+  * "analyzed" shape (analysis.py:159-201): (counter, ts, count, eta) with
+  * eta trimmed to 2 significant digits when positive, else 0.
   *
   * The reference drives a mutable model object point-by-point per counter
-  * (analysis.py:176-186); in batch each model is a pure column pipeline
-  * over Window.partitionBy(counter).orderBy(ts) — no state, and fully
-  * whole-stage-codegen'd: the Poisson CI width and the eta trim are
-  * native expressions ([[graft.functions.PoissonCiWidth]],
-  * [[graft.functions.Trim2]]). Each model materializes the columns its
-  * eta reads more than once, so every kernel runs once per row.
+  * (analysis.py:176-186), and so does each model here: its [[Steps]]
+  * step is folded over each counter's bins in ts order, one exchange by
+  * counter, and the streaming scorers fold the same step. The raw eta is
+  * trimmed by the native [[graft.functions.Trim2]].
   */
 object Models {
-  private def w = Window.partitionBy("counter").orderBy("ts")
-
-  private def analyzed(df: DataFrame, rawEta: Column): DataFrame =
-    df.withColumn("eta", Rounding.trim2(rawEta))
-      .select("counter", "ts", "count", "eta")
-
-  // Poisson eta = sensitivity / relative-CI = |c − ν| / CI_width
-  // (models.py:331-340); null/0 mean or null/0 width → 0
-  // (models.py:306,316,338-339). Shared by the lc and cycle modes.
-  private def poissonEta(ciw: Column): Column =
-    when(col("mean").isNull || col("mean") === 0.0 || ciw.isNull || ciw === 0.0, lit(0.0))
-      .otherwise(abs(col("count") - col("mean")) / ciw)
 
   // ------------------------------------------------------------------
   // Poisson, mode "lc": background mean = previous count (models.py:274-282).
   // ------------------------------------------------------------------
-  def poissonLc(binned: DataFrame, alpha: Double = 0.99): DataFrame = {
-    val ciw = PoissonCi.widthUdf(alpha)
-    val df = binned
-      .withColumn("mean", lag("count", 1).over(w))
-      .withColumn("ci_w", ciw(col("mean")))
-    analyzed(df, poissonEta(col("ci_w")))
-  }
+  def poissonLc(binned: DataFrame, alpha: Double = 0.99): DataFrame =
+    Steps.analyzed(binned, Steps.lc(alpha))
 
   /** Alpha-sensitivity sweep of the lc-Poisson detector — detections per
     * confidence level, the evaluation a deployment runs to pick
     * config.cfg's `alpha` (the reference exposes it as tuning config,
-    * config.cfg:38). ONE pass: the lag background is computed once and
-    * every alpha's CI width/eta evaluates in the same projection (the
-    * memoized CI expression makes each added alpha a near-free column).
+    * config.cfg:38). ONE pass: one lc fold scores every alpha at each bin.
     * Output per alpha: (alpha_mil = α·1000 exact, n_scored, n_detected)
     * with detections = trimmed eta > theta.
     */
   def poissonLcSweep(binned: DataFrame,
                      alphas: Seq[Double] = Seq(0.9, 0.95, 0.99, 0.999),
                      theta: Double = 1.0): DataFrame = {
-    val withMean = binned.withColumn("mean", lag("count", 1).over(w))
-    // materialize each alpha's CI width via withColumn (as poissonLc does)
-    // so the O(mu) CDF loop runs once per row per alpha — inlined inside
-    // when() branches, conditional evaluation can defeat whole-stage
-    // codegen's subexpression elimination and evaluate it twice
-    val df = alphas.indices.foldLeft(withMean) { (d, i) =>
-      d.withColumn(s"ci_w_$i", PoissonCi.widthUdf(alphas(i))(col("mean")))
-    }
     val branches = alphas.zipWithIndex.map { case (a, i) =>
       struct(lit(math.round(a * 1000)).as("alpha_mil"),
-        Rounding.trim2(poissonEta(col(s"ci_w_$i"))).as("eta"))
+        Rounding.trim2(col("eta")(i)).as("eta"))
     }
-    df.select(explode(array(branches: _*)).as("ae"))
+    Steps.fold(binned, Steps.lcSweep(alphas))
+      .select(explode(array(branches: _*)).as("ae"))
       .groupBy(col("ae.alpha_mil").as("alpha_mil"))
       .agg(count(lit(1)).as("n_scored"),
         sum(when(col("ae.eta") > theta, 1L).otherwise(0L)).as("n_detected"))
@@ -75,78 +47,25 @@ object Models {
 
   // ------------------------------------------------------------------
   // Poisson, mode "a": background mean = running average of counts sharing
-  // the same period key (e.g. hour-of-day), INCLUDING the current point —
-  // update() adds the count before computing the mean (models.py:284-298).
-  // Period key = ':' -joined datetime attributes per period_list
-  // (models.py:287); we support the attributes the reference's configs use.
+  // the same period key (e.g. hour-of-day), INCLUDING the current point
+  // (models.py:284-298), keyed in the session timezone.
   // ------------------------------------------------------------------
-  def periodKey(ts: Column, periodList: Seq[String]): Column =
-    concat_ws(":", periodList.map {
-      case "hour"  => hour(ts).cast("string")
-      case "day"   => dayofmonth(ts).cast("string")
-      case "month" => month(ts).cast("string")
-      case "minute" => minute(ts).cast("string")
-      case "second" => second(ts).cast("string")
-      case "year"  => year(ts).cast("string")
-      // Python datetime convention: Monday = 0 .. Sunday = 6
-      case "weekday" => weekday(ts).cast("string")
-      case p => throw new IllegalArgumentException(s"unsupported period attr $p")
-    }: _*)
-
   def poissonCycle(binned: DataFrame, alpha: Double = 0.99,
                    periodList: Seq[String] = Seq("hour")): DataFrame = {
-    val ciw = PoissonCi.widthUdf(alpha)
-    val wp = Window.partitionBy(col("counter"), col("pkey")).orderBy("ts")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val df = binned
-      .withColumn("pkey", periodKey(col("ts"), periodList))
-      .withColumn("mean", sum("count").over(wp) / count(lit(1)).over(wp))
-      .withColumn("ci_w", ciw(col("mean")))
-    analyzed(df, poissonEta(col("ci_w")))
+    val zone = ZoneId.of(binned.sparkSession.sessionState.conf.sessionLocalTimeZone)
+    Steps.analyzed(binned, Steps.cycle(alpha, periodList, zone))
   }
 
   // ------------------------------------------------------------------
-  // LinearRegression slope model (models.py:47-90). Per point:
-  //   averaged[i] = mean of trailing `avgWindow` counts once that many have
-  //                 been seen, else 0 (models.py:70-74);
-  //   eta = OLS slope of averaged[-regWindow:] (or the full history) vs
-  //         0..n−1, gated to 0 until minPoints rows (models.py:79-90);
-  //   normByMean divides y by mean(y) first ⇒ slope/mean(y).
-  // Closed form: slope = covar_pop(idx, y)/var_pop(idx) — identical math to
-  // sklearn's single-feature OLS fit, no MLlib needed.
+  // LinearRegression slope model (models.py:47-90), see [[Steps.linReg]]:
+  // the OLS slope of the trailing averaged counts, optionally over their
+  // mean, gated to 0 until minPoints rows.
   // ------------------------------------------------------------------
   def linReg(binned: DataFrame, minPoints: Int,
              avgWindow: Int = 1,
              regWindow: Option[Int] = None,
-             normByMean: Boolean = false): DataFrame = {
-    val wAvg = w.rowsBetween(-(avgWindow - 1), 0)
-    val wReg = regWindow match {
-      case Some(k) => w.rowsBetween(-(k - 1), 0)
-      case None    => w.rowsBetween(Window.unboundedPreceding, 0)
-    }
-    val df = binned
-      .withColumn("rn", row_number().over(w))
-      .withColumn("averaged",
-        when(col("rn") >= avgWindow, avg("count").over(wAvg)).otherwise(0.0))
-    val slope =
-      covar_pop(col("rn").cast("double"), col("averaged")).over(wReg) /
-        var_pop(col("rn").cast("double")).over(wReg)
-    // an all-zero window has no mean to divide by: its eta is 0, as in the
-    // stream scorer and the oracle (whose division yields NULL), instead
-    // of a DIVIDE_BY_ZERO under ANSI
-    val meanY = avg(col("averaged")).over(wReg)
-    val slopeNormed = if (normByMean) when(meanY =!= 0.0, slope / meanY) else slope
-    // the slope is materialized once: a window expression repeated through
-    // when() and trim2 is not deduplicated, so each copy ran in the
-    // WindowExec. The rn guard stays inside — unguarded, the first rows'
-    // zero var_pop divides by zero under ANSI. Epsilon floor: a perfectly
-    // flat window yields slope ~1e-17 instead of 0 from fp accumulation,
-    // and the exact residue differs per engine; real slopes at any data
-    // scale are many orders above 1e-12
-    val sloped = df.withColumn("slope", when(col("rn") >= minPoints, slopeNormed))
-    val eta = when(abs(col("slope")) >= 1e-12, col("slope")).otherwise(lit(0.0))
-    analyzed(sloped, eta)
-  }
+             normByMean: Boolean = false): DataFrame =
+    Steps.analyzed(binned, Steps.linReg(minPoints, avgWindow, regWindow, normByMean))
 
   // ------------------------------- oracle SQL -------------------------------
 

@@ -1,9 +1,10 @@
 package graft.trend
 
 import graft.functions.Rounding
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** WeightedDataTemplates — the Nikolov data-driven nearest-template model
   * (models.py:92-236, library.py). Every point of every series is scored by
@@ -15,30 +16,34 @@ import org.apache.spark.sql.functions._
   * subwindows of the reference series (models.py:206-211).
   *
   * Spark design (SURVEY.md §2.4 A14): the library is tiny (O(100) series,
-  * trends.tex:409) → collected and broadcast; test windows come from a
-  * trailing collect_list window per counter; the sliding-min-L1 kernel runs
-  * vectorized in Scala inside one whole-stage-adjacent projection. Memory
-  * is O(rows × referenceLength) in the window operator — bounded by grid
-  * resolution per counter, not by raw event volume, so safe at 100 TB.
+  * trends.tex:409), so it is built and transformed on the driver and
+  * broadcast at score time. Scoring folds the [[Steps.wdt]] step over each
+  * counter's bins in ts order, one exchange by counter; its state is the
+  * trailing `referenceLength` counts, bounded by grid resolution, not by
+  * raw event volume. The streaming scorer folds the same step.
   */
 object Wdt {
   import SeriesTransforms.Config
 
   /** Build a reference library from binned series: one reference series per
     * counter, labeled by `isTrend`, transformed with the reference chain
-    * (library.py:39-47,56-66). Output: (series_id, is_trend, points).
+    * (library.py:39-47,56-66). The grouped series are collected and
+    * transformed on the driver. Output: a local (series_id, is_trend,
+    * points) DataFrame.
     */
   def buildLibrary(binned: DataFrame, isTrend: Column, cfg: Config): DataFrame = {
-    val spark = binned.sparkSession
-    val chain = udf((pts: Seq[Double]) =>
-      SeriesTransforms.referenceChain(pts.toArray, cfg).toSeq)
-    binned
+    val grouped = binned
       .withColumn("is_trend", isTrend)
-      .groupBy("counter", "is_trend")
+      .groupBy(col("counter").as("series_id"), col("is_trend"))
       .agg(transform(array_sort(collect_list(struct(col("ts"), col("count")))),
         s => s.getField("count").cast("double")).as("raw_points"))
-      .select(col("counter").as("series_id"), col("is_trend"),
-        chain(col("raw_points")).as("points"))
+    val rows = grouped.collect().map { r =>
+      Row(r.get(0), r.get(1),
+        SeriesTransforms.referenceChain(r.getSeq[Double](2).toArray, cfg).toSeq)
+    }
+    val schema = StructType(grouped.schema.fields.take(2) :+
+      StructField("points", ArrayType(DoubleType, containsNull = false)))
+    binned.sparkSession.createDataFrame(rows.toSeq.asJava, schema)
   }
 
   /** Merge two libraries with the reference's no-duplicate rule: for each
@@ -67,19 +72,12 @@ object Wdt {
   def loadLibrary(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Score every point of every binned series against the library.
-    * Warm-up: eta 0 until `referenceLength` points seen AND the running
-    * count sum is nonzero (models.py:158-161); SMALL_NUMBER floor for a
-    * zero non-trend weight (models.py:189-190).
-    */
   /** Collect a (tiny) library DataFrame to the broadcastable array form. */
   def collectLibrary(library: DataFrame): Array[(Boolean, Array[Double])] =
     library.select("is_trend", "points").collect()
       .map(r => (r.getBoolean(0), r.getSeq[Double](1).toArray))
 
-  /** Scalar eta for one trailing count window against a collected library
-    * (shared by the batch UDF and the streaming scorer).
-    */
+  /** Scalar eta for one trailing count window against a collected library. */
   def windowEta(window: Array[Double], lib: Array[(Boolean, Array[Double])],
                 cfg: Config): Double = {
     val test = SeriesTransforms.testChain(window, cfg).takeRight(cfg.seriesLength)
@@ -94,27 +92,14 @@ object Wdt {
     trendW / nonTrendW
   }
 
+  /** Score every point of every binned series against the library.
+    * Warm-up: eta 0 until `referenceLength` points seen AND the running
+    * count sum is nonzero (models.py:158-161); SMALL_NUMBER floor for a
+    * zero non-trend weight (models.py:189-190).
+    */
   def score(binned: DataFrame, library: DataFrame, cfg: Config): DataFrame = {
-    val spark = binned.sparkSession
-    val lib = collectLibrary(library)
-    val libB = spark.sparkContext.broadcast(lib)
-
-    val w = Window.partitionBy("counter").orderBy("ts")
-    val wTrail = w.rowsBetween(-(cfg.referenceLength - 1), 0)
-    val etaUdf = udf((window: Seq[Double]) =>
-      windowEta(window.toArray, libB.value, cfg))
-
-    val df = binned
-      .withColumn("rn", row_number().over(w))
-      .withColumn("runsum", sum("count").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("trail", collect_list(col("count").cast("double")).over(wTrail))
-    // the raw eta is its own column and the native trim reads it once, so
-    // the filter Detect pushes down runs the template kernel once per row
-    df.withColumn("eta_raw",
-        when(col("rn") < cfg.referenceLength || col("runsum") === 0.0, lit(0.0))
-          .otherwise(etaUdf(col("trail"))))
-      .withColumn("eta", Rounding.trim2(col("eta_raw")))
-      .select("counter", "ts", "count", "eta")
+    val lib = binned.sparkSession.sparkContext.broadcast(collectLibrary(library))
+    Steps.analyzed(binned, Steps.wdt(lib, cfg))
   }
 
   // ------------------------------- oracle SQL -------------------------------

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
@@ -70,15 +71,45 @@ class PlanSpec extends SparkSpec {
     assert(shuffles.size == 1, s"expected the rebin's one exchange:\n${writes.head}")
   }
 
-  test("linReg computes each regression aggregate once, in the Window") {
-    // the slope is materialized once; repeated through when() and trim2
-    // each copy of the window aggregates ran again in the WindowExec
-    for (q <- Seq("trend_linreg", "trend_linreg_windowed"); f <- Seq("covar_pop", "var_pop")) {
+  test("the batch models fold each counter's bins: no Window, no more exchanges") {
+    // each model folds its step over a counter's sorted bins. The window
+    // pipelines the folds replaced planned two exchanges per query (the
+    // rebin's and the model's); the fold keeps it at two
+    val exchangesBefore = Map("trend_poisson_lc" -> 2, "trend_poisson_cycle" -> 2,
+      "trend_linreg" -> 2, "trend_linreg_windowed" -> 2, "trend_mk" -> 2,
+      "trend_mk_windowed" -> 2, "trend_wdt" -> 2)
+    for ((q, n) <- exchangesBefore) {
       val p = plan(q)
-      val hits = p.split("\n").toSeq.flatMap(l => s"\\b$f\\(".r.findAllIn(l).map(_ => l))
-      assert(hits.size == 1 && hits.head.contains("Window ["),
-        s"$q: expected one $f in the Window:\n$p")
+      assert("""\bWindow\b""".r.findFirstIn(p).isEmpty, s"$q windows:\n$p")
+      assert("Exchange".r.findAllIn(p).size <= n, s"$q: expected at most $n exchanges:\n$p")
     }
+  }
+
+  test("no trend query runs a Scala UDF, in its plan or in the jobs that build it") {
+    // the WDT library is transformed on the driver and every model is a
+    // typed fold, so no plan a trend query runs (its own, or a job that
+    // builds it, like the library collect) holds a ScalaUDF
+    val plans = scala.collection.mutable.ArrayBuffer.empty[(String, SparkPlan)]
+    var current = ""
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized { plans += current -> qe.executedPlan }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      for (q <- SparkEntry.queries.keys.toSeq.filter(_.startsWith("trend_")).sorted) {
+        current = q
+        val df = SparkEntry.queries(q)(spark, sf)
+        org.apache.spark.sql.graft.GraftShim.drainListenerBus(spark.sparkContext)
+        plans.synchronized { plans += q -> df.queryExecution.executedPlan }
+      }
+    } finally spark.listenerManager.unregister(l)
+    object H extends AdaptiveSparkPlanHelper
+    val udfs = plans.synchronized(plans.toList).flatMap { case (q, p) =>
+      H.collect(p) { case n if n.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])) => q }
+    }
+    assert(plans.nonEmpty && udfs.isEmpty, s"Scala UDFs in ${udfs.distinct.mkString(", ")}")
   }
 
   test("dedup candidate generators stay free of cross joins") {

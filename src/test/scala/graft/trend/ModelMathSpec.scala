@@ -11,6 +11,32 @@ import java.sql.Timestamp
 class ModelMathSpec extends SparkSpec {
   import spark.implicits._
 
+  /** z per point from the Mann-Kendall step, folded over `xs` in order. */
+  private def mkZ(xs: Array[Double], windowSize: Option[Int] = None): Array[Double] = {
+    val m = Steps.mk(windowSize)
+    xs.indices.scanLeft((m.zero, 0.0)) { case ((st, _), i) => m.step(st, i.toLong, xs(i)) }
+      .tail.map(_._2).toArray
+  }
+
+  /** Naive mk z over one window: every pair's sign and every tie group. */
+  private def windowZ(xs: Array[Double]): Double = {
+    val n = xs.length
+    var s = 0.0
+    var k = 0
+    while (k < n - 1) {
+      var j = k + 1
+      while (j < n) { s += math.signum(xs(j) - xs(k)); j += 1 }
+      k += 1
+    }
+    val ties = xs.groupBy(identity).values
+      .map(g => g.length.toDouble * (g.length - 1) * (2 * g.length + 5)).sum
+    val varS = (n.toDouble * (n - 1) * (2 * n + 5) - ties) / 18.0
+    if (varS <= 0) 0.0
+    else if (s > 0) (s - 1) / math.sqrt(varS)
+    else if (s < 0) (s + 1) / math.sqrt(varS)
+    else 0.0
+  }
+
   test("poisson ci width matches scipy-convention equal-tail intervals") {
     // vectors from an independent pure-python summation (ppf = min k with
     // cdf(k) >= q), matching dists.poisson.interval (models.py:308)
@@ -23,7 +49,7 @@ class ModelMathSpec extends SparkSpec {
   }
 
   test("mann-kendall z matches mk_test.py on hand vectors (incl. ties)") {
-    def last(xs: Array[Double]): Double = MannKendall.expandingZ(xs).last
+    def last(xs: Array[Double]): Double = mkZ(xs).last
     assert(math.abs(last(Array(1, 2, 3, 4, 5)) - 2.2045407685048604) < 1e-12)
     assert(math.abs(last(Array(5, 4, 3, 2, 1)) + 2.2045407685048604) < 1e-12)
     assert(math.abs(last(Array(1, 1, 2, 2, 3)) - 1.8278153875348273) < 1e-12)
@@ -35,12 +61,12 @@ class ModelMathSpec extends SparkSpec {
     val xs = Array(1.0, 3.0, 2.0, 2.0, 5.0, 4.0, 4.0, 7.0)
     val expected = Array(0.0, 0.0, 0.0, 0.0, 1.0105823053, 1.3389110974,
       1.5369465587, 2.1361549323)
-    val got = MannKendall.expandingZ(xs)
+    val got = mkZ(xs)
     expected.indices.foreach { i =>
       assert(math.abs(got(i) - expected(i)) < 1e-9, s"prefix $i")
     }
     // windowed variant over full length equals expanding last point
-    assert(MannKendall.windowZ(xs) == got.last)
+    assert(windowZ(xs) == got.last)
   }
 
   test("mk full test: two-tail p matches erfc truth at 6dp, labels by sign+alpha") {
@@ -74,9 +100,9 @@ class ModelMathSpec extends SparkSpec {
     val rnd = new scala.util.Random(7)
     for (trial <- 0 until 5; w <- Seq(1, 3, 8, 20)) {
       val xs = Array.fill(60)(rnd.nextInt(9).toDouble) // heavy ties
-      val fast = MannKendall.slidingZ(xs, w)
+      val fast = mkZ(xs, Some(w))
       xs.indices.foreach { i =>
-        val naive = MannKendall.windowZ(xs.slice(math.max(0, i + 1 - w), i + 1))
+        val naive = windowZ(xs.slice(math.max(0, i + 1 - w), i + 1))
         assert(fast(i) === naive, s"trial $trial w $w i $i")
       }
     }
