@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.commons.math3.special.Gamma
-import org.apache.spark.sql.Column
 
 /** Equal-tail Poisson confidence-interval width, scipy-convention
   * (reference: `dists.poisson.interval(alpha, mean)[1] - [0]`,
@@ -80,16 +79,6 @@ object PoissonCi {
     advanceTo(qHi)
     (k - kLo).toDouble
   }
-
-  /** Null-safe column form: null/≤0 mean → null (callers map to eta 0,
-    * matching models.py:306-307). Backed by the codegen'd
-    * [[PoissonCiWidth]] expression — inside whole-stage codegen this is a
-    * static Java call, not a Scala-function UDF invocation per row.
-    */
-  def widthUdf(alpha: Double): Column => Column =
-    (c: Column) => org.apache.spark.sql.graft.GraftShim.column(
-      PoissonCiWidth(
-        org.apache.spark.sql.graft.GraftShim.expression(c.cast("double")), alpha))
 
   /** DuckDB SQL fragment computing (mean → ci_width) for all distinct
     * positive means of `srcRel.meanCol`; yields relation (mean, ci_width).

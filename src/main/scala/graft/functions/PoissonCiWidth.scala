@@ -22,9 +22,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
 case class PoissonCiWidth(child: Expression, alpha: Double)
   extends UnaryExpression {
 
-  // callers cast the child to double (see PoissonCi.widthUdf and the
-  // GraftExtensions SQL builder) — ImplicitCastInputTypes is private[sql],
-  // so a direct construction over another type fails analysis here
+  // callers cast the child to double (see the GraftExtensions SQL
+  // builder) — ImplicitCastInputTypes is private[sql], so a direct
+  // construction over another type fails analysis here
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "poisson_ci_width"

@@ -39,13 +39,13 @@ import scala.reflect.runtime.universe.TypeTag
   * linReg (O(avgWindow) when expanding); O(referenceLength) for WDT;
   * O(windowSize) for windowed MK, and the series so far (bounded by grid
   * bins) for expanding MK. None grows with event volume. Per bin, MK
-  * counts in O(log n) and copies its sorted window in O(n).
+  * updates its window's order-statistics tree in O(log n) expected.
   *
   * Checkpoints: a scorer's state schema is its state class's fields. The
   * lc, cycle, linReg and WDT state classes kept theirs when they moved to
   * [[graft.trend.Steps]], so checkpoints written before the move resume.
   * The MK state changed from the count buffer (`counts`, `runsum`) to
-  * `MkState` (S, the tie sum and the sorted window): an MK checkpoint
+  * `MkState` (S, the tie sum and the window's tree): an MK checkpoint
   * written before that change fails at query start, in Spark's state
   * schema check, and is never scored with the wrong state. Restart such a
   * query on a new checkpoint.

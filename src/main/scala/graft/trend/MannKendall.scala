@@ -11,18 +11,25 @@ import org.apache.spark.sql.functions._
   * window instead (models.py:42-44).
   *
   * The reference is O(n²) per point ⇒ O(n³) per series. Here the
-  * [[Steps.mk]] step carries S and the tie sum and updates them from the
-  * sorted window as each value arrives (and, windowed, as the oldest
-  * leaves), so a series costs O(n log n) comparisons. It is folded over
-  * each counter's bins in ts order, one exchange by counter; the
+  * [[Steps.mk]] step carries S and the tie sum and updates them from an
+  * order-statistics tree of the window as each value arrives (and,
+  * windowed, as the oldest leaves), so a series costs O(n log n). It is
+  * folded over each counter's bins in ts order, one exchange by counter; the
   * streaming scorer folds the same step. State is one window, bounded by
   * the grid bins, not by raw data volume.
   */
 object MannKendall {
 
+  /** Raw signed z per point, (counter, ts, count, z); ts is declared
+    * nullable, as MK's output has always declared it.
+    */
+  private def scoredZ(binned: DataFrame, windowSize: Option[Int]): DataFrame =
+    Steps.nullable(Steps.fold(binned, Steps.mk(windowSize)), "ts").withColumnRenamed("eta", "z")
+
   /** The model contract: z trimmed through the analyze-stage convention. */
   def apply(binned: DataFrame, windowSize: Option[Int] = None): DataFrame =
-    Steps.analyzed(binned, Steps.mk(windowSize))
+    scoredZ(binned, windowSize).select(col("counter"), col("ts"), col("count"),
+      Rounding.trim2(col("z")).as("eta"))
 
   /** Full standalone-test surface: `(eta, p6, trend)` per point — the
     * reference's `mk_test` returns `(trend, h, p, z)` (mk_test.py:67-75:
@@ -51,7 +58,7 @@ object MannKendall {
       k * (lit(1.781477937) + k * (lit(-1.821255978) + k * lit(1.330274429)))))
     val phi = exp(az * az * lit(-0.5)) / lit(2.5066282746310002)
     val p = least(lit(2.0) * phi * poly, lit(1.0)) // two-tail 2·(1−cdf(|z|))
-    Steps.fold(binned, Steps.mk(windowSize)).withColumnRenamed("eta", "z")
+    scoredZ(binned, windowSize)
       .withColumn("p6", round(p, 6))
       .withColumn("trend",
         when(col("p6") < alpha && col("z") < 0, "decreasing")

@@ -4,8 +4,10 @@ import graft.functions.{PoissonCi, Rounding}
 import java.time.{ZoneId, ZonedDateTime}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftShim
 import scala.reflect.runtime.universe.TypeTag
 
 /** The paper's five models, each written once as the reference runs it:
@@ -39,11 +41,15 @@ object Steps {
   /** WDT: the trailing `referenceLength` counts and the running count sum. */
   final case class BufState(lastTsUs: Long, counts: List[Double], runsum: Double)
       extends ScorerState
-  /** Mann-Kendall: S and the tie sum Σ t(t−1)(2t+5) over the window, its
-    * values sorted, and (windowed mode only) in arrival order.
+  /** Mann-Kendall: S and the tie sum Σ t(t−1)(2t+5) over the window, the
+    * number of values seen, and the window as a treap in arrays ([[MkTree]]):
+    * slot i holds the value that arrived i-th (modulo the window size),
+    * its children (−1 for none) and its subtree's size. The step updates
+    * the arrays in place, so each state is stepped at most once.
     */
-  final case class MkState(lastTsUs: Long, s: Double, tieSum: Double,
-                           sorted: Array[Double], arrived: Array[Double]) extends ScorerState
+  final case class MkState(lastTsUs: Long, s: Double, tieSum: Double, n: Long, root: Int,
+                           key: Array[Double], left: Array[Int], right: Array[Int],
+                           size: Array[Int]) extends ScorerState
   /** LinReg: row counter, the trailing `avgWindow` raw counts, and either
     * the co-moment accumulators (expanding regression) or the trailing
     * `regWindow` averaged values (bounded regression).
@@ -89,12 +95,21 @@ object Steps {
       }(Encoders.product[Folded[E]])
       .select(col("counter"), timestamp_micros(col("t")).as("ts"), col("count"), col("eta"))
 
+  /** `df` with the named columns declared nullable; values untouched. */
+  private[trend] def nullable(df: DataFrame, names: String*): DataFrame =
+    df.select(df.columns.toSeq.map { c =>
+      if (names.contains(c)) GraftShim.column(KnownNullable(GraftShim.expression(col(c)))).as(c)
+      else col(c)
+    }: _*)
+
   /** The reference's "analyzed" shape (analysis.py:159-201): (counter, ts,
     * count, eta), eta trimmed to 2 significant digits when positive, else 0.
+    * ts and count keep the nullability `binned` declares for them.
     */
   private[trend] def analyzed[S <: ScorerState](binned: DataFrame,
                                                 model: Model[S, Double]): DataFrame =
-    fold(binned, model).withColumn("eta", Rounding.trim2(col("eta")))
+    nullable(fold(binned, model), Seq("ts", "count").filter(binned.schema(_).nullable): _*)
+      .withColumn("eta", Rounding.trim2(col("eta")))
 
   // ----------------------------------- Poisson -----------------------------------
 
@@ -210,15 +225,52 @@ object Steps {
 
   private def fTie(t: Long): Double = t.toDouble * (t - 1) * (2 * t + 5)
 
-  /** Index of the first value of `xs` (sorted) not below `x`, or above it. */
-  private def bound(xs: Array[Double], x: Double, above: Boolean): Int = {
-    var lo = 0
-    var hi = xs.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (xs(mid) < x || (above && xs(mid) == x)) lo = mid + 1 else hi = mid
+  /** The window of an [[MkState]] as an order-statistics treap over its
+    * slots, ordered by (value, slot); a slot's heap priority is a hash of
+    * the slot number, so the expected depth is O(log n) whatever the values.
+    */
+  private final class MkTree(st: MkState) {
+    import st.{key, left, right, size}
+    var root: Int = st.root
+    private def pri(i: Int): Int = scala.util.hashing.byteswap32(i)
+    private def sz(i: Int): Int = if (i < 0) 0 else size(i)
+    private def fix(i: Int): Unit = size(i) = sz(left(i)) + sz(right(i)) + 1
+    private def before(i: Int, j: Int): Boolean =
+      key(i) < key(j) || (key(i) == key(j) && i < j)
+
+    /** The subtrees of `t` before and after slot `j`. */
+    private def split(t: Int, j: Int): (Int, Int) =
+      if (t < 0) (-1, -1)
+      else if (before(t, j)) { val (a, b) = split(right(t), j); right(t) = a; fix(t); (t, b) }
+      else { val (a, b) = split(left(t), j); left(t) = b; fix(t); (a, t) }
+    private def merge(a: Int, b: Int): Int =
+      if (a < 0) b
+      else if (b < 0) a
+      else if (pri(a) > pri(b)) { right(a) = merge(right(a), b); fix(a); a }
+      else { left(b) = merge(a, left(b)); fix(b); b }
+
+    def insert(j: Int): Unit = {
+      left(j) = -1; right(j) = -1; size(j) = 1
+      val (a, b) = split(root, j)
+      root = merge(merge(a, j), b)
     }
-    lo
+    def remove(j: Int): Unit = {
+      def go(t: Int): Int =
+        if (t == j) merge(left(t), right(t))
+        else {
+          if (before(j, t)) left(t) = go(left(t)) else right(t) = go(right(t))
+          size(t) -= 1; t
+        }
+      root = go(root)
+    }
+    /** How many values lie below `x` and how many not above it. */
+    def ranks(x: Double): (Int, Int) = {
+      var (t, lo, hi) = (root, 0, 0)
+      while (t >= 0) if (key(t) < x) { lo += sz(left(t)) + 1; t = right(t) } else t = left(t)
+      t = root
+      while (t >= 0) if (key(t) <= x) { hi += sz(left(t)) + 1; t = right(t) } else t = left(t)
+      (lo, hi)
+    }
   }
 
   /** Mann-Kendall z (mk_test.py:14-77) over the history so far, or over
@@ -228,41 +280,55 @@ object Steps {
     *   z      = (S−1)/√var  if S>0;  0 if S=0;  (S+1)/√var   (mk_test.py:59-64)
     * The raw z keeps its sign. Incremental: a new value adds the earlier
     * values below it minus those above it to S, and t(t+1)(2t+7) −
-    * t(t−1)(2t+5) to the tie sum for the t equal ones, both counted by
-    * binary search in the sorted window. In windowed mode the oldest value
-    * leaves first: it was the earlier one in every pair it joined, so S
-    * loses the later values above it minus those below. Per bin: O(log n)
-    * to count and O(n) to copy the sorted window. S and var(S) are
-    * integers held in doubles, so z equals the per-window recomputation's
-    * bit for bit, and sqrt/divide are correctly-rounded IEEE ops, so the
-    * oracle reproduces it.
+    * t(t−1)(2t+5) to the tie sum for the t equal ones, both counted in the
+    * window's treap. In windowed mode the oldest value leaves first, from
+    * the slot the new one takes: it was the earlier one in every pair it
+    * joined, so S loses the later values above it minus those below.
+    * Per bin O(log n) expected, so a series costs O(n log n). S and var(S)
+    * are integers held in doubles, so z equals the per-window
+    * recomputation's bit for bit, and sqrt/divide are correctly-rounded
+    * IEEE ops, so the oracle reproduces it.
     */
-  private[graft] def mk(windowSize: Option[Int]): Model[MkState, Double] =
-    model(MkState(NoBin, 0.0, 0.0, Array.emptyDoubleArray, Array.emptyDoubleArray)) { (st, t, x) =>
-      var (s, tieSum, sorted, arrived) = (st.s, st.tieSum, st.sorted, st.arrived)
-      if (windowSize.exists(_ <= sorted.length)) {
-        val o = arrived(0)
-        arrived = arrived.drop(1)
-        val at = bound(sorted, o, above = false)
-        sorted = sorted.patch(at, Nil, 1)
-        val (lo, hi) = (at, bound(sorted, o, above = true))
-        s -= (sorted.length - hi) - lo
-        tieSum += fTie(hi - lo) - fTie(hi - lo + 1)
-      }
-      val (lo, hi) = (bound(sorted, x, above = false), bound(sorted, x, above = true))
-      s += lo - (sorted.length - hi)
-      tieSum += fTie(hi - lo + 1) - fTie(hi - lo)
-      sorted = sorted.patch(hi, Array(x), 0)
-      if (windowSize.isDefined) arrived = arrived :+ x
-      val n = sorted.length.toDouble
-      val varS = (n * (n - 1) * (2 * n + 5) - tieSum) / 18.0
-      val z =
-        if (varS <= 0) 0.0
-        else if (s > 0) (s - 1) / math.sqrt(varS)
-        else if (s < 0) (s + 1) / math.sqrt(varS)
-        else 0.0
-      (MkState(t, s, tieSum, sorted, arrived), z)
+  private[graft] def mk(windowSize: Option[Int]): Model[MkState, Double] = {
+    val w = windowSize.getOrElse(Int.MaxValue)
+    val none = Array.emptyIntArray
+    model(MkState(NoBin, 0.0, 0.0, 0L, -1, Array.emptyDoubleArray, none, none, none)) {
+      (st0, t, x) =>
+        val slot = (st0.n % w).toInt
+        val st =
+          if (slot < st0.key.length) st0
+          else { // grow; the zero state's empty arrays are never written
+            val cap = math.min(math.max(16, 2 * st0.key.length), w)
+            st0.copy(key = java.util.Arrays.copyOf(st0.key, cap),
+              left = java.util.Arrays.copyOf(st0.left, cap),
+              right = java.util.Arrays.copyOf(st0.right, cap),
+              size = java.util.Arrays.copyOf(st0.size, cap))
+          }
+        val tree = new MkTree(st)
+        var (s, tieSum) = (st.s, st.tieSum)
+        if (st.n >= w) {
+          val o = st.key(slot)
+          tree.remove(slot)
+          val (lo, hi) = tree.ranks(o)
+          s -= (w - 1 - hi) - lo
+          tieSum += fTie(hi - lo) - fTie(hi - lo + 1)
+        }
+        val live = math.min(st.n, w - 1L)
+        val (lo, hi) = tree.ranks(x)
+        s += lo - (live - hi)
+        tieSum += fTie(hi - lo + 1) - fTie(hi - lo)
+        st.key(slot) = x
+        tree.insert(slot)
+        val n = (live + 1).toDouble
+        val varS = (n * (n - 1) * (2 * n + 5) - tieSum) / 18.0
+        val z =
+          if (varS <= 0) 0.0
+          else if (s > 0) (s - 1) / math.sqrt(varS)
+          else if (s < 0) (s + 1) / math.sqrt(varS)
+          else 0.0
+        (st.copy(lastTsUs = t, s = s, tieSum = tieSum, n = st.n + 1, root = tree.root), z)
     }
+  }
 
   // ------------------------------------ WDT ------------------------------------
 

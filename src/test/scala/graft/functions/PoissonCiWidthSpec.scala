@@ -9,10 +9,14 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 class PoissonCiWidthSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The width expression over a mean column, cast as the SQL builder casts. */
+  private def width(mean: Column): Column =
+    GraftShim.column(PoissonCiWidth(GraftShim.expression(mean.cast("double")), 0.99))
+
   test("expression equals the scalar kernel, null-safe") {
     val out = Seq(Some(5.0), Some(0.0), None, Some(123.0))
       .toDF("mean")
-      .select(PoissonCi.widthUdf(0.99)(col("mean")).as("w"))
+      .select(width(col("mean")).as("w"))
       .as[Option[Double]].collect()
     assert(out(0) === Some(PoissonCi.width(0.99, 5.0)))
     assert(out(1) === None) // zero mean -> null (models.py:306)
@@ -33,7 +37,7 @@ class PoissonCiWidthSpec extends SparkSpec {
     // a local Seq would be constant-folded into a LocalTableScan; range
     // scans go through codegen, so the projection must fuse with it
     val df = spark.range(1, 100)
-      .select(PoissonCi.widthUdf(0.99)(col("id").cast("double")).as("w"))
+      .select(width(col("id")).as("w"))
     // the "*(n)" prefix marks a WholeStageCodegen stage in plan strings
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*(1) Project [poisson_ci_width("))
@@ -49,7 +53,7 @@ class PoissonCiWidthSpec extends SparkSpec {
   }
 
   test("poisson_ci_width rejects a non-double input at analysis time") {
-    // the SQL builder and widthUdf cast; a direct construction over a
+    // the SQL builder casts; a direct construction over a
     // string must fail the plan, not an executor task
     val df = Seq(("x", 1)).toDF("s", "i")
     val e = intercept[AnalysisException](df.select(

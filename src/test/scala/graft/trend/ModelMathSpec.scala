@@ -108,6 +108,44 @@ class ModelMathSpec extends SparkSpec {
     }
   }
 
+  test("MK step on long series equals recomputation: growth, sorted runs, distinct values") {
+    val rnd = new scala.util.Random(11)
+    val series = Seq(
+      Array.tabulate(1500)(_.toDouble),                          // rising: one long right spine
+      Array.tabulate(1500)(i => ((1500 - i) / 7).toDouble),      // falling, runs of ties
+      Array.fill(1500)(rnd.nextGaussian()),                      // all distinct
+      Array.fill(1500)(rnd.nextInt(40).toDouble))                // heavy ties
+    for ((xs, k) <- series.zipWithIndex) {
+      val expanding = mkZ(xs)
+      (0 until xs.length by 149).foreach { i =>
+        assert(expanding(i) === windowZ(xs.take(i + 1)), s"series $k prefix $i")
+      }
+      for (w <- Seq(17, 64)) {
+        val fast = mkZ(xs, Some(w))
+        xs.indices.foreach { i =>
+          assert(fast(i) === windowZ(xs.slice(math.max(0, i + 1 - w), i + 1)), s"series $k w $w i $i")
+        }
+      }
+    }
+  }
+
+  test("batch models keep the input's ts and count nullability; MK declares ts nullable") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rows = spark.sparkContext.parallelize(
+      (0 until 4).map(i => Row("a", new Timestamp(i * 3600000L), 3600.0, i.toLong)))
+    for (tsNull <- Seq(true, false); countNull <- Seq(true, false)) {
+      val in = spark.createDataFrame(rows, StructType(Seq(
+        StructField("counter", StringType), StructField("ts", TimestampType, tsNull),
+        StructField("duration_sec", DoubleType), StructField("count", LongType, countNull))))
+      def flags(df: org.apache.spark.sql.DataFrame) = Seq("ts", "count").map(df.schema(_).nullable)
+      Seq(Models.poissonLc(in), Models.poissonCycle(in), Models.linReg(in, 2))
+        .foreach(df => assert(flags(df) == Seq(tsNull, countNull), df.schema))
+      Seq(MannKendall(in), MannKendall.fullTest(in))
+        .foreach(df => assert(flags(df) == Seq(true, false), df.schema))
+    }
+  }
+
   test("linreg slope column math equals closed-form OLS") {
     val rows = Seq(0.0, 0.0, 2.0, 3.0, 5.0, 4.0).zipWithIndex.map { case (c, i) =>
       (new Timestamp(i * 3600000L), c, "a")
