@@ -56,6 +56,26 @@ object PoissonCi {
     }
   }
 
+  // ln k! as Gamma.logGamma(k + 1.0) gives it, tabulated: most of a width's
+  // cost is this call, and every width sums the same k = 1, 2, … terms.
+  // The table grows by doubling up to LnFactMax entries (1 MiB); a racing
+  // grow publishes equal values, so any published table is right.
+  private val LnFactMax = 1 << 17
+  @volatile private var lnFacts = Array.emptyDoubleArray
+
+  private def lnFact(k: Long): Double = {
+    val t = lnFacts
+    if (k < t.length) t(k.toInt)
+    else if (k >= LnFactMax) Gamma.logGamma(k + 1.0)
+    else {
+      val n = math.min(LnFactMax.toLong, math.max(1024L, java.lang.Long.highestOneBit(k) << 1)).toInt
+      val g = java.util.Arrays.copyOf(t, n)
+      for (i <- t.length until n) g(i) = Gamma.logGamma(i + 1.0)
+      lnFacts = g
+      g(k.toInt)
+    }
+  }
+
   /** ppf(qHi) − ppf(qLo) in one CDF accumulation: ppf(q) = the smallest
     * k with CDF(k) ≥ q − tol (capped at kMax). qLo < qHi, so the upper
     * quantile's search continues from where the lower one stopped over
@@ -72,7 +92,7 @@ object PoissonCi {
     def advanceTo(q: Double): Unit =
       while (cdf < q - Tol && k < kMax) {
         k += 1
-        cdf += math.exp(k * lnMu - mu - Gamma.logGamma(k + 1.0))
+        cdf += math.exp(k * lnMu - mu - lnFact(k))
       }
     advanceTo(qLo)
     val kLo = k

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftShim
+import org.apache.spark.sql.types.DoubleType
 
 /** Numeric trimming helpers mirroring the reference's output conventions. */
 object Rounding {
@@ -25,7 +26,7 @@ object Rounding {
     * r = pow(10, 1 − floor(log10 x)).
     */
   def trim2(x: Column): Column =
-    GraftShim.column(Trim2(GraftShim.expression(x.cast("double"))))
+    GraftShim.column(Trim2(GraftShim.expression(x.cast(DoubleType))))
 
   /** Scalar twin of [[trim2]] (used by the streaming scorers), step for
     * step the [[Trim2]] kernel: `StrictMath` log10/pow as Spark's
@@ -50,7 +51,7 @@ object Rounding {
     * analysis.py:147). Rounding to 9 decimals first makes Spark and DuckDB
     * agree even though they sum partial counts in different orders.
     */
-  def stableIntTrunc(x: Column): Column = floor(round(x, 9)).cast("double")
+  def stableIntTrunc(x: Column): Column = floor(round(x, 9)).cast(DoubleType)
 
   def stableIntTruncSql(x: String): String = s"floor(round($x, 9))"
 

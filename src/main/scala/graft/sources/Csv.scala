@@ -54,8 +54,8 @@ object Csv {
         // field-level trim mirrors Python's whitespace-tolerant float()/
         // dt parse (example.csv has ", 3600," with a leading space)
         permissiveTs(trim(col("c0"))).as("ts"),
-        try_to_number(trim(col("c1")), lit("999999999.999999")).cast("long").as("duration_sec"),
-        trim(col("c2")).cast("double").as("count"),
+        try_to_number(trim(col("c1")), lit("999999999.999999")).cast(LongType).as("duration_sec"),
+        trim(col("c2")).cast(DoubleType).as("count"),
         col("c3").as("counter"))
       .where(col("ts").isNotNull && col("count").isNotNull &&
         col("duration_sec").isNotNull)

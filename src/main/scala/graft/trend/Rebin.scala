@@ -5,6 +5,7 @@ import java.time.ZoneId
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Re-grid irregular (ts, duration_sec, count, counter) intervals onto a
@@ -95,12 +96,13 @@ object Rebin {
     val binUsec = binSec * 1000000L
     val zone = DateTimeUtils.getZoneId(raw.sparkSession.conf.get("spark.sql.session.timeZone"))
     val level = DateTimeUtils.parseTruncLevel(UTF8String.fromString(binningUnit.stripSuffix("s")))
+    def micros(name: String, t: String): Long =
+      DateTimeUtils.stringToTimestamp(UTF8String.fromString(t), zone)
+        .getOrElse(throw new IllegalArgumentException(s"unparseable $name time '$t'"))
+    val (startUs, stopUs) = (micros("start", startTime), micros("stop", stopTime))
     // config mode: the same (origin, last bin index) for every counter
     val configGrid =
-      if (gridFromConfig)
-        Some((DateTimeUtils.stringToTimestamp(UTF8String.fromString(startTime), zone)
-          .getOrElse(throw new IllegalArgumentException(s"unparseable start time '$startTime'")),
-          lastConfigBin(startTime, stopTime, binSec)))
+      if (gridFromConfig) Some((startUs, lastConfigBin(startTime, stopTime, binSec)))
       else None
 
     // range filter drops whole straddling rows (analysis.py:65-68);
@@ -109,15 +111,20 @@ object Rebin {
     // identically in the oracle CTE so both engines agree on such input.
     // A null counter forms no series: the oracle's equi join on counter
     // drops it, while the grouping below would treat null as one more
-    // counter
+    // counter. The range filter reads the micros in a typed filter, which
+    // the optimizer keeps above the projection: pushed below it as a
+    // column filter, each condition would parse the row's ts once more.
+    // Casts take types and make_interval its function form: the string
+    // forms go through the SQL parser, whose first use in a JVM costs a
+    // cold batch job about half a second.
+    val secs = make_interval(lit(0), lit(0), lit(0), lit(0), lit(0), lit(0), col("duration_sec"))
     raw
-      .withColumn("stop_ts", col("ts") + expr("make_interval(0,0,0,0,0,0,duration_sec)"))
-      .where(col("stop_ts") <= lit(stopTime).cast("timestamp") &&
-             col("ts") >= lit(startTime).cast("timestamp") &&
-             col("stop_ts") > col("ts") &&
-             col("counter").isNotNull)
+      .where(col("counter").isNotNull)
       .select(col("counter"), unix_micros(col("ts")).as("t0"),
-        unix_micros(col("stop_ts")).as("t1"), col("count").cast("double").as("count"))
+        unix_micros(col("ts") + secs).as("t1"), col("count").cast(DoubleType).as("count"))
+      .as[Span](Encoders.product[Span])
+      .filter((s: Span) => s.t0.exists(t0 => s.t1.exists(t1 => t0 >= startUs && t1 <= stopUs && t1 > t0)))
+      .toDF()
       .groupBy(col("counter")).as[String, Interval](Encoders.STRING, Encoders.product[Interval])
       .flatMapSortedGroups(col("t0"), col("t1"), col("count")) { (counter, rows) =>
         val sweep = new Sweep(counter, binUsec, level, zone, configGrid)
@@ -127,6 +134,11 @@ object Rebin {
         lit(binSec.toDouble).as("duration_sec"),
         Rounding.stableIntTrunc(col("fcount")).as("count"))
   }
+
+  /** A raw row's start and stop in micros, as the range filter reads them;
+    * None where the row's ts or duration is null.
+    */
+  private[trend] case class Span(t0: Option[Long], t1: Option[Long])
 
   /** One raw row of a counter, in micros; `count` is null where the input's is. */
   private[trend] case class Interval(t0: Long, t1: Long, count: Option[Double])

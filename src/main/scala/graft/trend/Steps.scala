@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftShim
+import org.apache.spark.sql.types.DoubleType
 import scala.reflect.runtime.universe.TypeTag
 
 /** The paper's five models, each written once as the reference runs it:
@@ -83,7 +84,7 @@ object Steps {
   private[trend] def fold[S <: ScorerState, E: TypeTag](binned: DataFrame,
                                                         model: Model[S, E]): DataFrame =
     binned.select(col("counter"), unix_micros(col("ts")).as("t"),
-        col("count").cast("double").as("count"))
+        col("count").cast(DoubleType).as("count"))
       .groupBy(col("counter")).as[String, Pt](Encoders.STRING, Encoders.product[Pt])
       .flatMapSortedGroups(col("t")) { (counter, pts) =>
         var st = model.zero
